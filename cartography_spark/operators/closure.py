@@ -12,8 +12,12 @@ cycles terminate. The reference caps at 6 hops; we default the same.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from cartography_spark.operators.fixpoint import fixpoint
 
 
 def transitive_closure(
@@ -36,32 +40,25 @@ def transitive_closure(
     job: one job per hop, total materialized bytes O(result), not
     O(result x hops).
     """
-    from functools import reduce
-
-    from pyspark.sql import Observation
-
     base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     base = base.localCheckpoint(eager=True)  # probed every round (join + anti)
-    chunks = [base.withColumn("hops", F.lit(1))]
-    frontier = chunks[0]
+    chunks = []  # every chunk a round expanded, starting with the 1-hop edges
 
-    for hop in range(2, max_hops + 1):
+    def _hop(frontier: DataFrame, r: int) -> DataFrame:
+        chunks.append(frontier)
         grown = (
             frontier.alias("f")
             .join(base.alias("b"), F.col("f.dst") == F.col("b.src"))
             .select(F.col("f.src").alias("src"), F.col("b.dst").alias("dst"))
             .distinct()
-            .withColumn("hops", F.lit(hop))
+            .withColumn("hops", F.lit(r + 2))
         )
         seen = reduce(DataFrame.unionByName, [c.select("src", "dst") for c in chunks])
-        new_pairs = grown.join(seen, ["src", "dst"], "left_anti")
-        obs = Observation()
-        new_pairs = new_pairs.observe(obs, F.count("*").alias("n")).localCheckpoint(eager=True)
-        if obs.get["n"] == 0:
-            break
-        chunks.append(new_pairs)
-        frontier = new_pairs
+        return grown.join(seen, ["src", "dst"], "left_anti")
 
+    last, converged = fixpoint(_hop, base.withColumn("hops", F.lit(1)), max_hops - 1, F.count("*"))
+    if not converged:  # the hop bound stopped the loop before ``last`` was expanded
+        chunks.append(last)
     reached = reduce(DataFrame.unionByName, chunks)
 
     if include_zero:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.fixpoint import fixpoint
 from cartography_spark.session import shuffle_partition_count
 
 
@@ -84,59 +85,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
             F.col("g.group_size").alias("group_size"),
         )
     )
-
-
-def shingle_word_sets(
-    sh: DataFrame, id_col: str = "doc_id", max_words: int = 128
-) -> tuple[DataFrame | None, int]:
-    """Per-doc exact shingle BITSET for candidate verification: returns
-    ``(sets, nwords)`` where ``sets`` has (id_col, __sz, __w0..__w{n-1})
-    — the doc's distinct-shingle count and its shingle set packed into
-    ``nwords`` scalar long columns over a dense shingle-id space (any
-    deterministic order; only id-compactness matters). Exact:
-    sum_j bit_count(a_wj & b_wj) == |A ∩ B|. Scalar long columns keep the
-    per-pair popcount in whole-stage codegen (array/HOF encodings of the
-    same predicate measured ~2.7 µs/pair interpreted — r9 ngram note).
-
-    Returns ``(None, 0)`` when the distinct vocabulary exceeds
-    ``max_words * 64`` — the caller keeps its array-set verification
-    (a bitset over an unbounded word-n-gram vocab would waste
-    vocab/8 bytes per doc and a giant unrolled expression)."""
-    from pyspark.sql import Window
-
-    sh = sh.localCheckpoint(eager=True)  # consumed by the vocab + the sets
-    vocab = sh.select("shingle").distinct()
-    vocab = vocab.localCheckpoint(eager=True)
-    vocab_size = vocab.count()
-    nwords = (vocab_size + 63) // 64
-    if vocab_size == 0 or nwords > max_words:
-        return None, 0
-    if vocab_size <= 1_000_000:
-        ided_vocab = vocab.withColumn(
-            "__sid", F.row_number().over(Window.orderBy("shingle")) - 1
-        )
-    else:  # unreachable under max_words=128, kept for safety with big caps
-        ided_vocab = ordered_dense_ids(vocab, ["shingle"], "__sid")
-    ided = sh.join(F.broadcast(ided_vocab), "shingle")
-    word_bits = ided.groupBy(id_col, (F.col("__sid") / 64).cast("int").alias("__w")).agg(
-        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__sid % 64 AS INT))")).alias("__bits"),
-        F.count("*").alias("__n"),
-    )
-    sets = (
-        word_bits.groupBy(id_col)
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("__w", "__bits"))).alias("__m"),
-            F.sum("__n").alias("__sz"),
-        )
-        .select(
-            id_col, "__sz",
-            *[
-                F.coalesce(F.col("__m")[j], F.lit(0).cast("bigint")).alias(f"__w{j}")
-                for j in range(nwords)
-            ],
-        )
-    )
-    return sets, nwords
 
 
 def _ngram_jaccard_dense(
@@ -662,12 +610,43 @@ def simhash(
     )
 
 
+def _min_label_clusters(
+    hop, static: DataFrame, key: str, vertices: DataFrame, max_iter: int, id_col: str
+) -> DataFrame:
+    """The loop of both clusterings: ``hop(static, labels)`` lowers each
+    (v, lbl) to the minimum label one pair-graph hop away. The previous
+    label rides along so the changed-count is a row-local predicate; a
+    round that changes nothing is the fixed point, so stopping there keeps
+    results identical to the fixed-round oracle. Returns (id, cluster, keep)."""
+    labels = vertices.select(F.col(id_col).alias("v")).distinct().withColumn(
+        "lbl", F.col("v")
+    )
+    # Static side persisted hash-partitioned on the round join ``key``
+    # (localCheckpoint would lose the partitioning; persist keeps it), so
+    # the round joins read the cache without an exchange. Repartition FIRST,
+    # dedup second: HashPartitioning(key) satisfies the distinct's
+    # clustering, so one exchange serves both (guide §2.4).
+    static = static.repartition(shuffle_partition_count(static.sparkSession), key).dropDuplicates()
+    static.persist()
+
+    def _round(state: DataFrame, _r: int) -> DataFrame:
+        lbls = state.drop("prev")
+        return hop(static, lbls).join(lbls.select("v", F.col("lbl").alias("prev")), "v")
+
+    changed = F.count_if(F.col("lbl") != F.col("prev"))
+    labels, _ = fixpoint(_round, labels, max_iter, changed, release=[static])
+    return labels.select(
+        F.col("v").alias(id_col),
+        F.col("lbl").alias("cluster"),
+        (F.col("v") == F.col("lbl")).alias("keep"),
+    )
+
+
 def cluster_min_label(
     pairs: DataFrame,
     vertices: DataFrame,
     max_iter: int = 6,
     id_col: str = "doc_id",
-    hop_fusion: bool = False,
 ) -> DataFrame:
     """Near-dup pair sets -> clusters: bounded min-label propagation.
 
@@ -679,26 +658,11 @@ def cluster_min_label(
     Each round is one shuffle (join + min-agg); lineage is checkpointed per
     round. Returns (id, cluster, keep) — keep marks the canonical doc.
     """
-    from pyspark.sql import Observation
-
     und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    # static side of every round: persist it hash-partitioned on the
-    # per-round join key so the round joins consume the cache without an
-    # exchange (localCheckpoint would lose the partitioning info; persist
-    # keeps it — same pattern as graph._persist_copartitioned)
-    n_part = shuffle_partition_count(und.sparkSession)
-    # repartition first, dedup second: HashPartitioning(dst) satisfies the
-    # (src, dst) clustering of the distinct, so one exchange serves both
-    # (guide §2.4; same rewrite as cluster_min_label_bipartite)
-    und = und.repartition(n_part, "dst").dropDuplicates(["src", "dst"])
-    und.persist()
-    labels = vertices.select(F.col(id_col).alias("v")).distinct().withColumn(
-        "lbl", F.col("v")
-    )
 
-    def _hop(lbls: DataFrame) -> DataFrame:
+    def _hop(und: DataFrame, lbls: DataFrame) -> DataFrame:
         neighbor_min = (
             und.join(lbls, und.dst == lbls.v)
             .groupBy(F.col("src").alias("v"))
@@ -709,53 +673,7 @@ def cluster_min_label(
             F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
         )
 
-    # Hop fusion, shallow-graph-aware: the label after hop k is min over
-    # the k-hop neighborhood either way, and each checkpoint+observe is a
-    # full Spark job whose fixed scheduling cost dominates the small label
-    # frame. The FIRST block runs a single hop — near-dup components are
-    # usually stars that converge in one hop, and a fused first block
-    # would burn a second hop just to observe stability. Blocks after the
-    # first fuse two hops, halving the job count on deep chains while the
-    # per-hop semantics (and the max_iter-hop truncation the oracle\'s
-    # recursive CTE states) stay bit-identical.
-    remaining = max_iter
-    n_block = 0
-    while remaining > 0:
-        # Default schedule is PER-HOP (1,1,1,...): interleaved A/Bs at
-        # sf0.1 AND sf1 measured the r4 fused 1,1,2,2 schedule 15-20%
-        # SLOWER with non-overlapping run ranges — the dup graphs need
-        # ~3 hops, so every fused block past the front runs one wasted
-        # full-data hop after the fixed point, and per-hop's extra
-        # barrier is cheaper than that hop (see SCALE.md round-5).
-        # hop_fusion=True keeps the fused shape available for graphs
-        # whose barrier cost dominates per-hop data cost.
-        step = 1 if (n_block < 2 or not hop_fusion) else min(2, remaining)
-        n_block += 1
-        block = labels
-        for _ in range(step):
-            block = _hop(block)
-        remaining -= step
-        stepped = block.join(
-            labels.select("v", F.col("lbl").alias("prev")), "v"
-        )
-        # convergence via observe: the changed-count aggregates during the
-        # SAME job that materializes the checkpoint (one job per block, no
-        # extra count() action); no change across a whole block means the
-        # fixed point was reached, so breaking keeps results identical to
-        # the fixed-round oracle
-        obs = Observation()
-        stepped = stepped.observe(
-            obs, F.count_if(F.col("lbl") != F.col("prev")).alias("changed")
-        ).localCheckpoint(eager=True)
-        labels = stepped.drop("prev")
-        if obs.get["changed"] == 0:
-            break
-    und.unpersist()  # labels is checkpointed per block — safe to release
-    return labels.select(
-        F.col("v").alias(id_col),
-        F.col("lbl").alias("cluster"),
-        (F.col("v") == F.col("lbl")).alias("keep"),
-    )
+    return _min_label_clusters(_hop, und, "dst", vertices, max_iter, id_col)
 
 
 def cluster_min_label_bipartite(
@@ -764,7 +682,6 @@ def cluster_min_label_bipartite(
     max_iter: int = 6,
     id_col: str = "doc_id",
     bucket_col: str = "bucket",
-    hop_fusion: bool = False,
 ) -> DataFrame:
     """Min-label clustering over BUCKET MEMBERSHIPS instead of pairs —
     star contraction on the hypergraph whose hyperedges are LSH buckets.
@@ -785,25 +702,9 @@ def cluster_min_label_bipartite(
     convergence read from a Dataset.observe metric during the round's
     checkpoint job (one job per round).
     """
-    from pyspark.sql import Observation
+    mem = memberships.select(F.col(id_col).alias("mv"), F.col(bucket_col).alias("mb"))
 
-    n_part = shuffle_partition_count(memberships.sparkSession)
-    # repartition FIRST, dedup second: HashPartitioning(mv) satisfies the
-    # (mv, mb) clustering the dedup aggregate needs, so the distinct runs
-    # on the repartition's exchange instead of adding its own — one
-    # shuffle of the membership rows, not two (guide §2.4), and the cached
-    # blocks keep the mv partitioning every round's first join wants.
-    mem = (
-        memberships.select(F.col(id_col).alias("mv"), F.col(bucket_col).alias("mb"))
-        .repartition(n_part, "mv")
-        .dropDuplicates(["mv", "mb"])
-    )
-    mem.persist()
-    labels = vertices.select(F.col(id_col).alias("v")).distinct().withColumn(
-        "lbl", F.col("v")
-    )
-
-    def _hop(lbls: DataFrame) -> DataFrame:
+    def _hop(mem: DataFrame, lbls: DataFrame) -> DataFrame:
         bmin = (
             mem.join(lbls, mem.mv == lbls.v)
             .groupBy("mb")
@@ -819,40 +720,7 @@ def cluster_min_label_bipartite(
             F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
         )
 
-    # Shallow-aware hop fusion (see cluster_min_label): single-hop first
-    # block — stars converge in one hop and must not pay a fused second —
-    # then two pair-graph hops per materialized block on deep chains.
-    remaining = max_iter
-    n_block = 0
-    while remaining > 0:
-        # Default schedule is PER-HOP (1,1,1,...): interleaved A/Bs at
-        # sf0.1 AND sf1 measured the r4 fused 1,1,2,2 schedule 15-20%
-        # SLOWER with non-overlapping run ranges — the dup graphs need
-        # ~3 hops, so every fused block past the front runs one wasted
-        # full-data hop after the fixed point, and per-hop's extra
-        # barrier is cheaper than that hop (see SCALE.md round-5).
-        # hop_fusion=True keeps the fused shape available for graphs
-        # whose barrier cost dominates per-hop data cost.
-        step = 1 if (n_block < 2 or not hop_fusion) else min(2, remaining)
-        n_block += 1
-        block = labels
-        for _ in range(step):
-            block = _hop(block)
-        remaining -= step
-        stepped = block.join(labels.select("v", F.col("lbl").alias("prev")), "v")
-        obs = Observation()
-        stepped = stepped.observe(
-            obs, F.count_if(F.col("lbl") != F.col("prev")).alias("changed")
-        ).localCheckpoint(eager=True)
-        labels = stepped.drop("prev")
-        if obs.get["changed"] == 0:
-            break
-    mem.unpersist()
-    return labels.select(
-        F.col("v").alias(id_col),
-        F.col("lbl").alias("cluster"),
-        (F.col("v") == F.col("lbl")).alias("keep"),
-    )
+    return _min_label_clusters(_hop, mem, "mv", vertices, max_iter, id_col)
 
 
 def embedding_near_dup_pairs(
@@ -1023,7 +891,6 @@ def minhash_cluster_collapsed(
     max_iter: int = 6,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hop_fusion: bool = False,
 ) -> DataFrame:
     """The 100 TB-sane MinHash dedup contract: (id, cluster, keep) — O(N)
     output — instead of the O(pairs) candidate list.
@@ -1058,7 +925,6 @@ def minhash_cluster_collapsed(
         idmap.select(F.col("rep").alias(id_col)),
         max_iter=max_iter,
         id_col=id_col,
-        hop_fusion=hop_fusion,
     )
     return (
         idmap.join(

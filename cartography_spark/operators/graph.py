@@ -31,34 +31,22 @@ Scale notes (100 TB / 1000 executors):
   job, so no separate count() action runs per round.
 
 Every operator that persists its static edge side releases the cache
-before returning (after a final localCheckpoint bounds the returned
-plan), so caches don't accumulate across a long session.
+before returning, so caches don't accumulate across a long session: the
+checkpointed loops through ``fixpoint.fixpoint`` (also when a round
+raises), the lazy ones through ``finalize_iterative``.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.fixpoint import _persist_copartitioned, fixpoint
 from cartography_spark.session import finalize_iterative, shuffle_partition_count
 
 PR_SCALE = 1_000_000_000_000  # rank fixed-point scale (1e12)
-
-
-def _persist_copartitioned(df: DataFrame, key: str) -> DataFrame:
-    """Persist an iterative algorithm's static (edge) side HASH-PARTITIONED
-    on its per-round join key, sized to spark.sql.shuffle.partitions.
-
-    The cached blocks then already satisfy every round's join
-    distribution, so Catalyst elides the exchange on the big static side
-    each iteration — only the small evolving side (ranks/labels) shuffles.
-    At cluster scale this is the difference between shuffling the edge
-    list once vs once-per-round (measured ~2x cold wall-clock on the
-    sf0.1 trade graph for 3-round LPA)."""
-    n = shuffle_partition_count(df.sparkSession)
-    out = df.repartition(n, key)
-    out.persist()
-    return out
 
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -156,30 +144,28 @@ def bfs_distances(edges: DataFrame, source: int, max_depth: int = 6) -> DataFram
     # re-executing the whole upstream edge build once per level — 6x the
     # trade-graph source joins at max_depth=6)
     edges = _persist_copartitioned(edges.select("src", "dst"), "src")
-    labels = edges.sparkSession.createDataFrame(
+    start = edges.sparkSession.createDataFrame(
         [(source, 0)], "node BIGINT, distance BIGINT"
     )
-    frontier = labels.select("node")
-    for d in range(1, max_depth + 1):
+    levels = []  # every level a round expanded, starting with the source
+
+    def _level(frontier: DataFrame, r: int) -> DataFrame:
+        levels.append(frontier)
+        labels = reduce(DataFrame.unionByName, levels)
+        nodes = frontier.select("node")
         reached = (
-            edges.join(frontier, edges.src == frontier.node)
+            edges.join(nodes, edges.src == nodes.node)
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        new = reached.join(labels, "node", "left_anti").select(
-            "node", F.lit(d).cast("long").alias("distance")
+        return reached.join(labels, "node", "left_anti").select(
+            "node", F.lit(r + 1).cast("long").alias("distance")
         )
-        # frontier size from an observe metric gathered during the same
-        # checkpoint job — no separate count action per level
-        from pyspark.sql import Observation
 
-        obs = Observation()
-        new = new.observe(obs, F.count("*").alias("n")).localCheckpoint(eager=True)
-        if obs.get["n"] == 0:
-            break
-        labels = labels.unionByName(new)
-        frontier = new.select("node")
-    return finalize_iterative(labels, edges)
+    last, converged = fixpoint(_level, start, max_depth, F.count("*"), release=[edges])
+    if not converged:  # the depth cap stopped the loop before ``last`` was expanded
+        levels.append(last)
+    return finalize_iterative(reduce(DataFrame.unionByName, levels))
 
 
 def bellman_ford(edges: DataFrame, source: int, rounds: int) -> DataFrame:
@@ -195,21 +181,15 @@ def bellman_ford(edges: DataFrame, source: int, rounds: int) -> DataFrame:
     """
     edges = _persist_copartitioned(edges, "src")
     dist = edges.sparkSession.createDataFrame([(source, 0)], "node BIGINT, cost BIGINT")
-    for _ in range(rounds):
+
+    def _relax(dist: DataFrame, _r: int) -> DataFrame:
         relaxed = (
             edges.join(dist, edges.src == dist.node)
             .select(F.col("dst").alias("node"), (F.col("cost") + F.col("w")).alias("cost"))
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-        )
-        # dist feeds BOTH branches of next round's union: without lineage
-        # truncation the plan doubles per round (exponential task binaries).
-        dist = dist.localCheckpoint(eager=True)
-    edges.unpersist()
-    return dist
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("cost").alias("cost"))
+
+    return fixpoint(_relax, dist, rounds, release=[edges])[0]
 
 
 def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
@@ -223,42 +203,33 @@ def connected_components(edges: DataFrame, max_iterations: int = 50) -> DataFram
     ONE job — no separate driver-synchronized count() action (the
     at-scale fix for the extra job per round a recompute-based check
     would cost)."""
-    from pyspark.sql import Observation
-
     sym = _persist_copartitioned(symmetrize(edges, "u", "v"), "src")
     labels = sym.select("src").distinct().select(F.col("src").alias("node"), F.col("src").alias("comp"))
-    try:
-        for _ in range(max_iterations):
-            # Min over neighbours' labels (and own); carry the previous
-            # label through so the changed-count is a row-local predicate.
-            nbr = (
-                sym.join(labels, sym.src == labels.node)
-                .groupBy("dst")
-                .agg(F.min("comp").alias("nmin"))
-                .select(F.col("dst").alias("node"), "nmin")
-            )
-            stepped = labels.join(nbr, "node", "left").select(
-                "node",
-                F.least("comp", F.coalesce("nmin", "comp")).alias("newc"),
-                F.col("comp").alias("prev"),
-            )
-            # Path-halving: jump each label through its parent's label.
-            parent = stepped.select(F.col("node").alias("p_node"), F.col("newc").alias("p_comp"))
-            halved = (
-                stepped.join(parent, stepped.newc == parent.p_node, "left")
-                .select("node", F.least("newc", F.coalesce("p_comp", "newc")).alias("comp"), "prev")
-            )
-            obs = Observation()
-            halved = halved.observe(
-                obs, F.count_if(F.col("comp") != F.col("prev")).alias("changed")
-            )
-            halved = halved.localCheckpoint(eager=True)  # one job: materialize + metric
-            labels = halved.drop("prev")
-            if obs.get["changed"] == 0:
-                break
-    finally:
-        sym.unpersist()
-    return labels
+
+    def _round(state: DataFrame, _r: int) -> DataFrame:
+        labels = state.drop("prev")
+        # Min over neighbours' labels (and own); carry the previous
+        # label through so the changed-count is a row-local predicate.
+        nbr = (
+            sym.join(labels, sym.src == labels.node)
+            .groupBy("dst")
+            .agg(F.min("comp").alias("nmin"))
+            .select(F.col("dst").alias("node"), "nmin")
+        )
+        stepped = labels.join(nbr, "node", "left").select(
+            "node",
+            F.least("comp", F.coalesce("nmin", "comp")).alias("newc"),
+            F.col("comp").alias("prev"),
+        )
+        # Path-halving: jump each label through its parent's label.
+        parent = stepped.select(F.col("node").alias("p_node"), F.col("newc").alias("p_comp"))
+        return (
+            stepped.join(parent, stepped.newc == parent.p_node, "left")
+            .select("node", F.least("newc", F.coalesce("p_comp", "newc")).alias("comp"), "prev")
+        )
+
+    changed = F.count_if(F.col("comp") != F.col("prev"))
+    return fixpoint(_round, labels, max_iterations, changed, release=[sym])[0].drop("prev")
 
 
 def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -278,19 +249,19 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     Returns (node, deg) for nodes in the core with their in-core degree.
     """
     sym = symmetrize(edges, "u", "v").localCheckpoint(eager=True)
-    for _ in range(rounds):
+
+    def _peel(sym: DataFrame, _r: int) -> DataFrame:
         deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
-        sym = (
+        return (
             sym.join(keep, "src")
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
         )
-        # the filtered edge set feeds next round's degree AND both join
-        # sides — truncate lineage or the plan doubles per round
-        sym = sym.localCheckpoint(eager=True)
+
     return (
-        sym.groupBy("src")
+        fixpoint(_peel, sym, rounds)[0]
+        .groupBy("src")
         .agg(F.count("*").alias("deg"))
         .filter(F.col("deg") >= k)
         .select(F.col("src").alias("node"), F.col("deg").cast("long").alias("deg"))
@@ -533,20 +504,16 @@ def temporal_reachability(
     arr = edges.sparkSession.createDataFrame(
         [(source, 0)], "node BIGINT, arrival BIGINT"
     )
-    for _ in range(rounds):
+
+    def _relax(arr: DataFrame, _r: int) -> DataFrame:
         relaxed = (
             edges.join(arr, edges.src == arr.node)
             .filter(F.col("t") >= F.col("arrival"))
             .select(F.col("dst").alias("node"), F.col("t").alias("arrival"))
         )
-        arr = (
-            arr.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("arrival").alias("arrival"))
-        )
-        arr = arr.localCheckpoint(eager=True)
-    edges.unpersist()
-    return arr
+        return arr.unionByName(relaxed).groupBy("node").agg(F.min("arrival").alias("arrival"))
+
+    return fixpoint(_relax, arr, rounds, release=[edges])[0]
 
 
 HITS_SCALE = 100_000  # hub/authority fixed-point scale (1e5)

@@ -11,13 +11,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 
 
 def test_resolve_variants_registry_and_file(tmp_path):
-    from ab_bench import VARIANTS, resolve
-
-    # named variant wins over everything
-    label, fn = resolve("minhash_collapsed_perhop")
-    assert label == "minhash_collapsed_perhop" and fn is VARIANTS["minhash_collapsed_perhop"]
-    # both loop shapes stay reproducible
-    assert "minhash_collapsed_fused" in VARIANTS
+    from ab_bench import resolve
 
     # registry query name resolves to its builder
     label, fn = resolve("agg_pricing_summary")

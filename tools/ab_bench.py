@@ -13,13 +13,7 @@ Usage (from the repo root):
 
 A SPEC is one of
   * a registry query name            (e.g. ``dedup_minhash_collapsed``)
-  * a named variant from VARIANTS    (e.g. ``minhash_collapsed_perhop``)
   * ``path/to/file.py:function``     (fn(spark, sf_dir) -> DataFrame)
-
-The canonical example — the r3 per-hop vs r4 fused cluster loop that
-settled the round-4 "regression" (SCALE.md):
-
-    python tools/ab_bench.py dedup_minhash_collapsed minhash_collapsed_perhop --sf /root/testdata/sf1
 
 Each run materializes through the noop sink (full distributed compute, no
 driver Row materialization). One unmeasured warmup per side, then A,B
@@ -42,40 +36,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def _minhash_variant(hop_fusion: bool):
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from cartography_spark.operators import dedup as dd
-        from cartography_spark.sources.parquet import load_table
-
-        docs = load_table(spark, sf_dir, "documents")
-        copies = docs.filter(F.col("doc_id") < 50).withColumn(
-            "doc_id", F.col("doc_id") + 1000000
-        )
-        return dd.minhash_cluster_collapsed(
-            docs.unionByName(copies),
-            num_perm=32, n=3, bands=4, max_iter=6, hop_fusion=hop_fusion,
-        )
-
-    return run
-
-
-VARIANTS = {
-    # the r3 cluster-loop shape — per-hop schedule (1,1,1,...). As of
-    # round 5 this IS the registry default (the round-5 interleaved A/Bs
-    # at sf0.1 and sf1 measured it 15-20% faster than the fused form,
-    # non-overlapping ranges — see SCALE.md).
-    "minhash_collapsed_perhop": _minhash_variant(hop_fusion=False),
-    # the r4 fused 1,1,2,2 schedule, kept reproducible for the record
-    "minhash_collapsed_fused": _minhash_variant(hop_fusion=True),
-}
-
-
 def resolve(spec: str):
     """SPEC -> (label, fn(spark, sf_dir) -> DataFrame)."""
-    if spec in VARIANTS:
-        return spec, VARIANTS[spec]
     if ":" in spec and (spec.split(":")[0].endswith(".py") or "/" in spec):
         path, _, fn_name = spec.rpartition(":")
         mod_spec = importlib.util.spec_from_file_location("_ab_variant", path)
@@ -86,7 +48,7 @@ def resolve(spec: str):
 
     all_queries()
     if spec not in REGISTRY:
-        sys.exit(f"unknown spec {spec!r}: not a registry query, VARIANTS entry, or file.py:fn")
+        sys.exit(f"unknown spec {spec!r}: not a registry query or file.py:fn")
     return spec, REGISTRY[spec].spark
 
 

@@ -57,7 +57,10 @@ def cmd_sync(args: argparse.Namespace) -> int:
             print(f"stage {name} failed: {exc}", file=sys.stderr)
         return 1
     cat.save(args.warehouse)
-    summary = {label: cat.node(label).count() for label in sorted(cat.nodes)}
+    # count the written tables: parquet counts read footers, while counting
+    # ``cat`` would recompute every label's merge lineage
+    saved = GraphCatalog.load(spark, args.warehouse)
+    summary = {label: saved.node(label).count() for label in sorted(cat.nodes)}
     print(json.dumps({"update_tag": update_tag, "nodes": summary, "stages": sync.metrics}))
     return 0
 

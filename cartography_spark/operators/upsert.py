@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
 from cartography_spark.schema import LinkDirection, NodeSchema, PropertyRef, RelSchema
+from cartography_spark.sources.rows import local_frame
 
 
 def project_batch(
@@ -183,8 +184,8 @@ def upsert_rel(
     rows, tx.py:846-921) — so a partial sync that loads a label before
     its relationship targets creates no edges rather than failing."""
     if rel.target_node_label not in catalog.nodes:
-        return batch.sparkSession.createDataFrame(
-            [], "src_id string, dst_id string, lastupdated long, firstseen long"
+        return local_frame(
+            batch.sparkSession, [], "src_id string, dst_id string, lastupdated long, firstseen long"
         )
     target = catalog.node(rel.target_node_label)
     src_id = schema.properties[schema.id_property].expr(params).cast("string")

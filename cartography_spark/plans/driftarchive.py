@@ -28,8 +28,10 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from cartography_spark.plans.drift import DriftState, compare_states, snapshot
+from cartography_spark.sources.rows import local_frame
 
 
 def _write_json(data: dict, path: str) -> None:
@@ -116,9 +118,8 @@ def load_state(spark: SparkSession, root: str, name: str, alias_or_file: str) ->
     fname = resolve_shortcut(qdir, alias_or_file)
     payload = _load_json(os.path.join(qdir, fname))
     props = payload["properties"]
-    schema = ", ".join(f"`{p}` string" for p in props)
-    rows = [tuple(r) for r in payload["results"]]
-    df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
+    schema = StructType([StructField(p, StringType()) for p in props])
+    df = local_frame(spark, payload["results"], schema)
     return DriftState(
         name=payload["name"],
         properties=tuple(props),

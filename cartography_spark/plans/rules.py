@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
+from cartography_spark.session import run_concurrently
+from cartography_spark.sources.rows import local_frame
 
 
 @dataclass(frozen=True)
@@ -288,6 +290,8 @@ def run_rules_batched(
         # (a NULL asset_id is one set element) — countDistinct drops NULLs, so
         # count distinct groups instead: groupBy collapses all NULLs into one
         # group, and both aggregates are map-side combinable
+        if tagged is None:
+            return {}
         return {
             r["__fact"]: r["n"]
             for r in tagged.groupBy("__fact", "__asset")
@@ -298,6 +302,8 @@ def run_rules_batched(
         }
 
     def _collect_totals() -> dict[str, int]:
+        if counts is None:
+            return {}
         return {r["__lbl"]: r["n"] for r in counts.collect()}
 
     # Overlap the two independent collect jobs (guide §2.6): the counts job
@@ -306,27 +312,9 @@ def run_rules_batched(
     # paying their scheduling latency sequentially after it. Results are
     # byte-identical — the jobs share no state and the dicts are merged
     # the same way afterwards.
-    failing: dict[str, int] = {}
-    merged_total: dict[str, int] = {}
-    jobs = [
-        j for j in (
-            ("failing", _collect_failing) if tagged is not None else None,
-            ("totals", _collect_totals) if counts is not None else None,
-        ) if j is not None
-    ]
-    if len(jobs) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            done = {name: pool.submit(fn) for name, fn in jobs}
-        failing = done["failing"].result() if "failing" in done else {}
-        merged_total = done["totals"].result() if "totals" in done else {}
-    elif jobs:
-        name, fn = jobs[0]
-        if name == "failing":
-            failing = fn()
-        else:
-            merged_total = fn()
+    failing, merged_total = (
+        f.result() for f in run_concurrently(catalog.spark, [_collect_failing, _collect_totals])
+    )
     label_total = {
         k.removeprefix("label:"): v
         for k, v in merged_total.items()
@@ -403,7 +391,8 @@ def framework_rollup(results: list[RuleResult]) -> DataFrame:
         for rr in results
         for fwk in rr.rule_frameworks
     ]
-    flat = spark.createDataFrame(
+    flat = local_frame(
+        spark,
         rows,
         "framework string, requirement string, rule_id string, failing long, total long",
     )
@@ -427,4 +416,4 @@ def compliance_summary(results: list[FactResult]) -> DataFrame:
     rows = [
         (r.fact.fact_id, r.failing_assets, r.passing_assets, r.total_assets) for r in results
     ]
-    return spark.createDataFrame(rows, "fact_id string, failing long, passing long, total long")
+    return local_frame(spark, rows, "fact_id string, failing long, passing long, total long")

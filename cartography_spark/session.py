@@ -8,7 +8,11 @@ handling), adaptive broadcast selection, and Arrow for any Pandas-UDF path.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import Future, ThreadPoolExecutor
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -54,6 +58,26 @@ def shuffle_partition_count(spark: SparkSession) -> int:
         return int(raw)
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+# ThreadPoolExecutor's own default ceiling; the calls are small Spark jobs
+# waiting on the scheduler, not Python work.
+MAX_CALL_THREADS = 32
+
+
+def run_concurrently(spark: SparkSession, calls: Sequence[Callable[[], Any]]) -> list[Future]:
+    """Run each call on its own thread (at most ``MAX_CALL_THREADS``) and
+    return their futures, in call order, once every call has finished.
+
+    Each call runs with the caller's local properties (job group, scheduler
+    pool) and session tags, so its jobs are attributed and cancelled with the
+    caller's. Spark's FIFO scheduler then fills the cores one small job's
+    stages leave idle with the next call's tasks. Nothing is still running
+    when this returns, whether or not a call failed; ``result()`` on a
+    future re-raises its failure.
+    """
+    with ThreadPoolExecutor(max_workers=max(1, min(len(calls), MAX_CALL_THREADS))) as pool:
+        return [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
 
 
 def get_spark(app_name: str = "cartography-spark", shuffle_partitions: int | None = None) -> SparkSession:

@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
+
 from tests.conftest import SF_SMOKE
 
 
@@ -18,6 +20,13 @@ def test_cli_full_lifecycle(tmp_path, capsys):
     assert main(["sync", "--sf-dir", SF_SMOKE, "--warehouse", wh, "--update-tag", "100"]) == 0
     out = json.loads(capsys.readouterr().out.strip())
     assert out["update_tag"] == 100
+    # every label's id is its source table's key, so counts equal row counts
+    sources = {"Region": "region", "Nation": "nation", "Supplier": "supplier",
+               "Customer": "customer", "Order": "orders"}
+    assert out["nodes"] == {
+        label: pq.ParquetFile(f"{SF_SMOKE}/{table}.parquet").metadata.num_rows
+        for label, table in sources.items()
+    }
     assert out["nodes"]["Region"] == 5
 
     assert main(["query", "--warehouse", wh, "--sql",

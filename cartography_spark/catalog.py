@@ -139,9 +139,6 @@ class GraphCatalog:
     # -- test helpers (ports of reference integration-test asserts,
     #    tests/integration/util.py:11-80) -----------------------------------
 
-    def check_nodes(self, label: str, attrs: list[str]) -> set[tuple]:
-        return {tuple(r) for r in self.node(label).select(*attrs).collect()}
-
     def check_rels(
         self,
         src_label: str,

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
-from cartography_spark.operators.upsert import _merge_edges
+from cartography_spark.operators.upsert import merge
 from cartography_spark.schema import PropertyRef, TargetNodeMatcher
 
 
@@ -59,18 +59,13 @@ def match_link(
     for out_name, ref in (properties or {}).items():
         cols.append(ref.expr(params).alias(out_name))
     edges = resolved.select(*cols).dropDuplicates(["src_id", "dst_id"])
-    edges = edges.withColumn("lastupdated", F.lit(update_tag).cast("long")).withColumn(
-        "firstseen", F.lit(update_tag).cast("long")
-    )
     if sub_resource_label is not None:
         edges = edges.withColumn("_sub_resource_label", F.lit(sub_resource_label)).withColumn(
             "_sub_resource_id", F.lit(str(sub_resource_id))
         )
 
     key = (src_label, rel_label, dst_label)
-    existing = catalog.edges.get(key)
-    merged = edges if existing is None else _merge_edges(existing, edges)
-    catalog.edges[key] = merged
+    catalog.edges[key] = merged = merge(catalog.edges.get(key), edges, ["src_id", "dst_id"], update_tag)
     return merged
 
 
@@ -110,14 +105,7 @@ def cartesian_link(
         src = src.filter(src_filter)
     if dst_filter is not None:
         dst = dst.filter(dst_filter)
-    edges = (
-        src.select(F.col("id").alias("src_id"))
-        .crossJoin(dst.select(F.col("id").alias("dst_id")))
-        .withColumn("lastupdated", F.lit(update_tag).cast("long"))
-        .withColumn("firstseen", F.lit(update_tag).cast("long"))
-    )
+    edges = src.select(F.col("id").alias("src_id")).crossJoin(dst.select(F.col("id").alias("dst_id")))
     key = (src_label, rel_label, dst_label)
-    existing = catalog.edges.get(key)
-    merged = edges if existing is None else _merge_edges(existing, edges)
-    catalog.edges[key] = merged
+    catalog.edges[key] = merged = merge(catalog.edges.get(key), edges, ["src_id", "dst_id"], update_tag)
     return merged

@@ -25,7 +25,7 @@ def _partials():
     )
 
 
-def _merge():
+def _combined_partials():
     return (
         F.sum("n_events").cast("bigint").alias("n_events"),
         F.sum("sum_value").alias("sum_value"),
@@ -49,7 +49,7 @@ def rollup_level(finer: DataFrame, unit: str) -> DataFrame:
     return (
         finer.withColumn("bucket", F.date_trunc(unit, F.col("bucket")))
         .groupBy("bucket")
-        .agg(*_merge())
+        .agg(*_combined_partials())
     )
 
 

@@ -11,16 +11,22 @@ Reference semantics (cartography/graph/querybuilder.py:1219-1317, template at
 plus conditional extra labels (:486-575) and relationship attachment through
 the four matcher modes (:632-666, 711-736).
 
-Spark-first design: one set-based snapshot rewrite per batch —
+Every graph write — node upserts, schema relationships, matchlinks,
+cartesian links, analysis-derived edges and sync metadata — goes through
+one set-based MERGE, :func:`merge`, keyed by a column list (``["id"]`` for
+node tables, ``["src_id", "dst_id"]`` for edge tables):
 
-1. project the batch through the schema's PropertyRefs (dedup on id);
-2. full-outer-join with the existing node table on id;
+1. stamp the batch with ``lastupdated = firstseen = update_tag``;
+2. full-outer-join it with the existing table on the key columns;
 3. matched rows take the batch's property values but keep ``firstseen``;
-   unmatched existing rows pass through untouched; new rows get
-   ``firstseen = lastupdated = update_tag``.
+   unmatched existing rows pass through untouched; new rows keep the stamp.
+
+Deduplication stays with the caller: each one drops duplicate keys from its
+batch before merging (MERGE processes a batch row by row, so one row per key
+is its set-based equivalent), and the merge assumes a batch with unique keys.
 
 This is exactly Delta's ``MERGE INTO`` decomposed into vanilla DataFrame
-ops, so it runs anywhere. At scale the join shuffles on ``id`` once; with a
+ops, so it runs anywhere. At scale the join shuffles on the key once; with a
 tenant-partitioned table and a tenant filter pushed down, only the touched
 partitions rewrite (partition pruning replaces Neo4j's index seek).
 
@@ -32,24 +38,25 @@ OPTIONAL MATCH + null-filter.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
-from cartography_spark.schema import LinkDirection, NodeSchema, PropertyRef, RelSchema
+from cartography_spark.schema import LinkDirection, NodeSchema, RelSchema
 from cartography_spark.sources.rows import local_frame
 
 
 def project_batch(
     batch: DataFrame,
     schema: NodeSchema,
-    update_tag: int,
     params: dict[str, Any] | None = None,
 ) -> DataFrame:
     """Project raw batch rows into the node-table shape declared by the
-    schema: id + declared properties + labels + engine columns."""
+    schema: id + declared properties + labels, one row per id."""
     cols: list[Column] = [schema.properties[schema.id_property].expr(params).cast("string").alias("id")]
     for out_name, ref in schema.properties.items():
         if out_name == schema.id_property:
@@ -64,8 +71,7 @@ def project_batch(
         cols.append(labels.alias("labels"))
     projected = batch.select(*cols).filter(F.col("id").isNotNull())
     # MERGE processes per-id sequentially; set-based equivalent: one row per id
-    projected = projected.dropDuplicates(["id"])
-    return projected.withColumn("lastupdated", F.lit(update_tag).cast("long"))
+    return projected.dropDuplicates(["id"])
 
 
 def upsert_nodes(
@@ -89,35 +95,42 @@ def upsert_nodes(
     syncing one account at a time against Neo4j indexes
     (intel/aws/__init__.py:598-684 per-account loop).
     """
-    incoming = project_batch(batch, schema, update_tag, params).withColumn(
-        "firstseen", F.lit(update_tag).cast("long")
-    )
+    incoming = project_batch(batch, schema, params)
     existing = catalog.nodes.get(schema.label)
-    if existing is None:
-        merged = incoming
-    elif scope_col is not None and scope_col in existing.columns:
+    if existing is not None and scope_col is not None and scope_col in existing.columns:
         touched = existing.filter(F.col(scope_col).eqNullSafe(F.lit(scope_value)))
         untouched = existing.filter(~F.col(scope_col).eqNullSafe(F.lit(scope_value)))
-        merged = untouched.unionByName(_merge(touched, incoming), allowMissingColumns=True)
+        merged = untouched.unionByName(merge(touched, incoming, ["id"], update_tag), allowMissingColumns=True)
     else:
-        merged = _merge(existing, incoming)
+        merged = merge(existing, incoming, ["id"], update_tag)
     catalog.nodes[schema.label] = merged
     return merged
 
 
-def _merge(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Full-outer merge keyed on id. Batch wins on every declared property;
-    ``firstseen`` survives from the existing row (ON CREATE SET semantics);
-    existing-only rows pass through with all their columns."""
-    e = existing.alias("e")
-    i = incoming.alias("i")
-    joined = e.join(i, F.col("e.id") == F.col("i.id"), "full_outer")
+def merge(existing: DataFrame | None, rows: DataFrame, keys: list[str], update_tag: int) -> DataFrame:
+    """MERGE ``rows`` (unique on ``keys``) into ``existing`` stamped with
+    ``update_tag``; with no existing table the stamped rows are the table.
 
-    in_batch = F.col("i.id").isNotNull()
-    out_cols: list[Column] = [F.coalesce(F.col("i.id"), F.col("e.id")).alias("id")]
-    all_props = [c for c in dict.fromkeys(existing.columns + incoming.columns) if c != "id"]
-    for c in all_props:
-        has_e, has_i = c in existing.columns, c in incoming.columns
+    Full-outer merge on ``keys``: the batch wins on every property, even a
+    null one (SET overwrites); ``firstseen`` survives from the existing row
+    (ON CREATE SET semantics); columns the batch lacks are nulled on batch
+    rows; existing-only rows pass through unchanged. Columns: the keys, then
+    the existing table's, then the batch's new ones."""
+    tag = F.lit(update_tag).cast("long")
+    rows = rows.withColumn("lastupdated", tag).withColumn("firstseen", tag)
+    if existing is None:
+        return rows
+    e = existing.alias("e")
+    i = rows.alias("i")
+    on = reduce(operator.and_, [F.col(f"e.{k}") == F.col(f"i.{k}") for k in keys])
+    joined = e.join(i, on, "full_outer")
+
+    in_batch = F.col(f"i.{keys[0]}").isNotNull()
+    out_cols: list[Column] = [F.coalesce(F.col(f"i.{k}"), F.col(f"e.{k}")).alias(k) for k in keys]
+    for c in dict.fromkeys(existing.columns + rows.columns):
+        if c in keys:
+            continue
+        has_e, has_i = c in existing.columns, c in rows.columns
         if c == "firstseen":
             out_cols.append(F.coalesce(F.col("e.firstseen"), F.col("i.firstseen")).alias("firstseen"))
         elif has_e and has_i:
@@ -213,42 +226,9 @@ def upsert_rel(
     else:
         key = (schema.label, rel.rel_label, rel.target_node_label)
 
-    edges = edges.dropDuplicates(["src_id", "dst_id"]).withColumn(
-        "lastupdated", F.lit(update_tag).cast("long")
-    ).withColumn("firstseen", F.lit(update_tag).cast("long"))
-
-    existing = catalog.edges.get(key)
-    if existing is None:
-        merged = edges
-    else:
-        merged = _merge_edges(existing, edges)
-    catalog.edges[key] = merged
+    edges = edges.dropDuplicates(["src_id", "dst_id"])
+    catalog.edges[key] = merged = merge(catalog.edges.get(key), edges, ["src_id", "dst_id"], update_tag)
     return merged
-
-
-def _merge_edges(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    e = existing.alias("e")
-    i = incoming.alias("i")
-    on = (F.col("e.src_id") == F.col("i.src_id")) & (F.col("e.dst_id") == F.col("i.dst_id"))
-    joined = e.join(i, on, "full_outer")
-    in_batch = F.col("i.src_id").isNotNull()
-    cols = [
-        F.coalesce(F.col("i.src_id"), F.col("e.src_id")).alias("src_id"),
-        F.coalesce(F.col("i.dst_id"), F.col("e.dst_id")).alias("dst_id"),
-    ]
-    for c in dict.fromkeys(existing.columns + incoming.columns):
-        if c in ("src_id", "dst_id"):
-            continue
-        has_e, has_i = c in existing.columns, c in incoming.columns
-        if c == "firstseen":
-            cols.append(F.coalesce(F.col("e.firstseen"), F.col("i.firstseen")).alias("firstseen"))
-        elif has_e and has_i:
-            cols.append(F.when(in_batch, F.col(f"i.{c}")).otherwise(F.col(f"e.{c}")).alias(c))
-        elif has_i:
-            cols.append(F.col(f"i.{c}").alias(c))
-        else:
-            cols.append(F.when(in_batch, F.lit(None)).otherwise(F.col(f"e.{c}")).alias(c))
-    return joined.select(*cols)
 
 
 def load(

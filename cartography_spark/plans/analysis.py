@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
-from cartography_spark.operators.upsert import _merge_edges
+from cartography_spark.operators.upsert import merge
 
 Matcher = Callable[[GraphCatalog], DataFrame]
 
@@ -253,16 +253,10 @@ class AddRelationship:
         return (self.src_label, self.rel_label, self.dst_label)
 
     def apply(self, catalog: GraphCatalog, matched: DataFrame, update_tag: int) -> None:
-        edges = (
-            matched.select(
-                F.col(self.src_col).alias("src_id"), F.col(self.dst_col).alias("dst_id")
-            )
-            .dropDuplicates(["src_id", "dst_id"])
-            .withColumn("lastupdated", F.lit(update_tag).cast("long"))
-            .withColumn("firstseen", F.lit(update_tag).cast("long"))
-        )
-        existing = catalog.edges.get(self.key())
-        catalog.edges[self.key()] = edges if existing is None else _merge_edges(existing, edges)
+        edges = matched.select(
+            F.col(self.src_col).alias("src_id"), F.col(self.dst_col).alias("dst_id")
+        ).dropDuplicates(["src_id", "dst_id"])
+        catalog.edges[self.key()] = merge(catalog.edges.get(self.key()), edges, ["src_id", "dst_id"], update_tag)
 
     def cleanup(
         self, catalog: GraphCatalog, update_tag: int, scope_ids: DataFrame | None = None

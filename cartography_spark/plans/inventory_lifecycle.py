@@ -1337,7 +1337,7 @@ def q_analysis_azure_lb_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     "applies_to_all_users, applies_to_all_devices — whose edge sets "
     "OVERLAP; the engine must union-dedup them into one edge table "
     "(same (src,dst) from two statements merges, firstseen preserved "
-    "from the first write, upsert.py _merge_edges). Every statement "
+    "from the first write, upsert.py merge). Every statement "
     "carries the reference's incremental_on=('policy','device') gate "
     "(run with incremental=True, so only entities refreshed this sync "
     "act), and the whole job is ScopeById(EntraTenant->Region 2, "

@@ -24,6 +24,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from cartography_spark.catalog import GraphCatalog
+from cartography_spark.operators.upsert import merge
+from cartography_spark.sources.rows import local_frame
 
 
 # (application, session id, view name) -> the DataFrame object currently
@@ -188,25 +190,9 @@ def merge_sync_metadata(
 ) -> None:
     """Record sync provenance (reference util.py merge_module_sync_metadata
     :363+): one row per (group_type, group_id, synced_type)."""
-    spark = catalog.spark
-    row = spark.createDataFrame(
-        [
-            (
-                f"{group_type}:{group_id}:{synced_type}",
-                group_type,
-                str(group_id),
-                synced_type,
-                update_tag,
-                update_tag,
-            )
-        ],
-        "id string, grouptype string, groupid string, syncedtype string, "
-        "firstseen long, lastupdated long",
+    row = local_frame(
+        catalog.spark,
+        [(f"{group_type}:{group_id}:{synced_type}", group_type, str(group_id), synced_type)],
+        "id string, grouptype string, groupid string, syncedtype string",
     )
-    existing = catalog.nodes.get("SyncMetadata")
-    if existing is None:
-        catalog.nodes["SyncMetadata"] = row
-    else:
-        from cartography_spark.operators.upsert import _merge
-
-        catalog.nodes["SyncMetadata"] = _merge(existing, row)
+    catalog.nodes["SyncMetadata"] = merge(catalog.nodes.get("SyncMetadata"), row, ["id"], update_tag)

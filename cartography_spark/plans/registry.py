@@ -41,160 +41,6 @@ def query(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = 
     return wrap
 
 
-# Verification priority: the driver's oracle gate walks ``queries()`` in
-# insertion order under a ~50-query budget (r01–r03 each recorded exactly the
-# first 50 entries), so we optimize for CUMULATIVE driver-green coverage.
-#
-# ROTATION PROCEDURE (do this at the START of each round, never mid-round —
-# the driver snapshots CORRECTNESS with whatever order exists at round end):
-# move every query with no CORRECTNESS row in ANY prior round to the front of
-# PRIORITY, keeping already-driver-green queries behind them.
-#
-# r08 rotation (this file): r01-r07 certified 300 distinct queries, all
-# green. The front 31 below are exactly
-# PRIORITY - (CORRECTNESS_r01 u ... u CORRECTNESS_r07); the driver's
-# ~50-query window certifies all 31 this round (-> 331/331 cumulative) with
-# ~19 slots left for new r08 queries, which are appended directly after the
-# unverified block. The demoted 300 stay re-verified every round by the
-# local full gate (tools/oracle_check.py).
-# The rotation is SELF-ENFORCING: tests/test_registry_rotation.py fails if any
-# driver-unverified query sorts after any driver-verified one.
-PRIORITY: tuple[str, ...] = (
-    # --- r08 rotation (executed at round-8 START per the procedure above):
-    # positions 1-31 are EVERY query with no CORRECTNESS row in r01-r07
-    # (the 17 leftovers of the r07 67-query rotation that fell outside the
-    # ~50-query driver window, plus the 14 r07 additions). Flagships first
-    # per VERDICT r7 item 1. New r8 queries are appended right after this
-    # block (the driver window has ~19 spare slots this round). ---
-    "streaming_psi_drift", "conformal_mondrian_coverage", "text_kn_bigram_logprob",
-    "job_feed_retirement_cleanup", "job_ontology_label_strip", "job_tenant_node_materialization",
-    "text_query_likelihood_topk", "unigram_viterbi_segmentation", "multimodal_mjpeg_sample",
-    "sketch_hll_rollup_merge", "ratio_to_report_revenue", "table_checksum_blocks",
-    "event_transition_matrix", "argmax_mergeable_top1", "interval_overlap_pairs",
-    "classifier_ranking_auc", "chi2_feature_selection", "privacy_t_closeness", "pareto_skyline",
-    "bootstrap_mean_ci", "ks_drift_two_sample", "psi_drift_binned", "conformal_interval_coverage",
-    "psi_drift_windowed", "ks_drift_by_source", "psi_drift_by_lang", "stats_spearman_corr",
-    "drift_js_divergence", "stats_cramers_v", "timeseries_acf", "text_hapax_ratio",
-    # --- new in r08: inserted after the unverified block so this round's
-    # driver window certifies them; next rotation pulls forward any missed ---
-    "analysis_aibom_runs_on", "job_principal_orphan_stale_cleanup",
-    "job_s3_details_property_remove", "job_okta_group_membership_cleanup",
-    "streaming_ks_drift", "sketch_quantile_bottomk", "classifier_pr_auc",
-    "robust_median_of_means", "stats_mann_whitney", "sampling_weighted_bottomk",
-    # positions 43-50: the driver window holds ~50, and 60 queries are
-    # unverified this round — the LAST 8 in-window slots go to the most
-    # DISTINCTIVE new operators (novel algorithm families), while
-    # same-family siblings of already-windowed tests (ANOVA next to
-    # Kruskal-Wallis, Ljung-Box next to acf, TOST next to Welch) queue
-    # for the r9 rotation, which pulls any leftover to the front.
-    "stats_kendall_tau_b", "stats_kruskal_wallis", "survival_nelson_aalen",
-    "shard_rendezvous_hashing", "text_stupid_backoff_trigram",
-    "classifier_brier_decomposition", "events_markov_stationary",
-    "embedding_top_pc_power", "embedding_effective_rank",
-    # --- queue for r9 (outside this round's ~50 window; all pass the
-    # local full gate and rotate to the front next round) ---
-    "stats_bh_fdr_rates", "privacy_dp_laplace_counts",
-    "stats_brown_forsythe", "stats_two_proportion_z",
-    "events_ohlc_bars", "events_user_rfm_segments", "stats_oneway_anova",
-    "timeseries_ljung_box", "stats_effect_sizes", "stats_tost_equivalence",
-    "skew_shuffle_audit", "weighted_quantiles_by_source",
-    "events_markov_entropy_rate", "similarity_ivf_recall_audit",
-    "text_length_hill_tail", "events_fano_burstiness",
-    # --- below: 300 queries already driver-green in r01-r07, kept
-    # re-verified every round by the local full gate (tools/oracle_check.py) ---
-    "rules_framework_rollup", "job_resource_edge_backfill", "job_guarded_relabel_migration",
-    "job_property_remove_cleanup", "job_ip_label_migration_sweep", "streaming_cdc_latest_state",
-    "eval_bleu_ngram_precision", "eval_chrf_char_ngram", "eval_token_f1_pairs",
-    "dedup_cluster_provenance", "streaming_session_window", "streaming_minute_rollup",
-    "text_phrase_search", "text_blockmax_index", "graph_adamic_adar", "graph_degree_assortativity",
-    "text_cdc_chunking", "text_pmi_collocations", "record_linkage_fs_scores",
-    "timeseries_cusum_changepoint", "stats_welch_ttest", "survival_kaplan_meier",
-    "timeseries_seasonal_decompose", "theil_sen_trend_robust", "classifier_mcc",
-    "classifier_cohens_kappa", "retrieval_rbo_rankings", "similarity_matryoshka_eval",
-    "similarity_int8_distortion", "source_ablation_stats", "embedding_dim_stats",
-    "corpus_zipf_fit", "doc_ngram_novelty", "text_rake_keywords", "dq_benford_first_digit",
-    "revenue_gini_concentration", "robust_trimmed_mean", "sampling_neyman_allocation",
-    "markov_next_event_accuracy", "source_lang_diversity", "events_sliding_distinct_users",
-    "batch_length_buckets", "contrastive_hard_negatives", "throttle_dedup",
-    "disjunctive_predicate_revenue", "outlier_mad_robust", "window_first_last_nth",
-    "events_gaps_islands", "timeseries_time_weighted_avg", "division_full_coverage",
-    "rollup_pricing", "pivot_status_by_priority", "skew_salted_agg", "streaming_stateful_totals",
-    "asof_join_attribution", "bloom_prefilter_join", "streaming_stream_stream_join",
-    "streaming_hll_distinct", "streaming_countmin_counts", "text_repetition_stats",
-    "sequence_packing", "lang_temperature_weights", "sketch_kmv_difference",
-    "text_blocklist_filter", "mixture_apportionment", "budget_token_trim",
-    "graph_shortest_path_weighted", "events_funnel", "graph_kcore", "graph_neighbor_jaccard",
-    "graph_modularity", "graph_pagerank_personalized", "graph_temporal_reachability",
-    "graph_neighbor_features", "events_cooccurrence_lift", "graph_harmonic_2hop",
-    "entity_resolution_fuzzy", "layout_zorder", "cube_pricing", "window_ntile_quartiles",
-    "correlated_subquery_above_avg", "join_null_safe", "timeseries_gap_fill", "retention_cohorts",
-    "tfidf_quantized", "timeseries_ewma_exact", "events_pattern_count", "join_size_estimate",
-    "order_count_distribution", "big_spender_orders", "supplier_wait_chain", "idle_rich_customers",
-    "promo_parts_share", "top_supplied_parts_nested_in", "window_percent_rank",
-    "window_range_frame", "median_value_by_type", "unpivot_lineitem_metrics",
-    "outlier_zscore_exact", "linear_trend_exact", "analysis_azure_lb_exposure",
-    "analysis_intune_policy_union", "analysis_identity_projection", "analysis_semgrep_risk_matrix",
-    "multimodal_gif_decode", "privacy_l_diversity", "shard_assignment_balanced",
-    "layout_skipping_stats", "job_label_swap_migration", "job_orphan_node_cleanup",
-    "text_char_entropy", "dedup_shingle_containment", "unicode_nfc_dedup",
-    "similarity_binary_hamming", "curriculum_global_order", "retrieval_eval_ndcg",
-    "similarity_mmr_rerank", "streaming_dedup_watermark", "layout_compaction_plan",
-    "layout_overlap_depth", "embedding_random_projection", "text_inverted_index",
-    "graph_clustering_coefficient", "classifier_calibration_bins", "multimodal_jpeg_decode",
-    "multimodal_ulaw_audio", "asof_join_forward_next", "graph_bfs_distances",
-    "sketch_kmv_intersection", "dq_expectations", "table_profile", "grouping_sets_revenue",
-    "dedup_simhash_pairs", "pipeline_llm_prep", "text_top_terms", "similarity_token_cosine_pairs",
-    "segment_dedup", "dedup_minhash_estimate", "similarity_ann_multiprobe",
-    "sampling_kcenter_diverse", "text_bigram_logprob", "similarity_ivf_pq", "text_vocab_growth",
-    "quality_decile_weights", "dedup_canonical_longest", "source_dup_rates",
-    "embedding_label_centroids", "dedup_minhash_verified", "events_moving_avg", "agg_percentiles",
-    "analysis_k8s_exposure", "client_read_sinks", "analysis_gcp_ontology_projection",
-    "multimodal_png_decode", "url_canonical_dedup", "logreg_train_exact",
-    "api_source_paged_ingest", "events_variant_semistructured", "dedup_minhash_collapsed",
-    "dedup_embedding_collapsed", "dataset_split_leakage_safe", "hybrid_search_rrf",
-    "bpe_merge_table", "bpe_segmentation", "text_pii_scrub", "doc_chunking",
-    "contamination_ngram_overlap", "dataset_split_hash", "weighted_sample", "stratified_sample",
-    "dsir_importance_resample", "text_nb_classifier", "semdedup_within_cluster",
-    "range_join_error_clicks", "scd2_history", "rollup_continuous_aggregate",
-    "incremental_agg_maintenance", "cdc_apply_changelog", "job_edge_direction_migration",
-    "multimodal_phash_near_dup", "dedup_lsh_incremental", "tpch_q2_min_cost_offer",
-    "tpch_q3_shipping_priority", "tpch_q5_local_supplier_revenue", "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share", "tpch_q9_product_profit",
-    "tpch_q10_returned_items", "tpch_q11_important_stock", "tpch_q12_late_shipment_priority",
-    "tpch_q15_top_supplier", "tpch_q16_supplier_part_counts", "tpch_q17_small_qty_revenue",
-    "graph_hits_authorities", "text_bm25_topk", "topk_per_group_salted", "privacy_k_anonymity",
-    "analysis_scoped_set_property", "asof_join_tolerance", "undirected_any_rel",
-    "closure_multi_rel_zero", "ontology_field_mapping", "events_session_window",
-    "cleanup_rel_only", "matchlink_scoped_cleanup", "analysis_add_to_set",
-    "analysis_set_rel_property", "permission_statement_eval", "permission_wildcard_eval",
-    "graph_job_json_roundtrip", "sync_metadata_merge", "rows_ingest_transform",
-    "analysis_exposure_chain", "analysis_ontology_owns", "rules_library_run", "rules_extended_run",
-    "rules_corpus_run", "introspection_schema_reflect", "ontology_semantic_catalog",
-    "ontology_mapping_compile", "dedup_minhash_lsh", "dedup_simhash", "dedup_clusters",
-    "dedup_substring_spans", "dedup_embedding_cosine", "similarity_cosine_topk",
-    "similarity_ann_lsh", "similarity_ann_ivf", "similarity_pq_adc", "similarity_int8_scan",
-    "sketch_kmv_distinct", "sketch_hll_distinct", "sketch_countmin_heavy_hitters",
-    "sketch_histogram_quantiles", "graph_pagerank", "graph_connected_components",
-    "graph_triangle_count", "graph_label_propagation", "text_token_stats", "text_quality_score",
-    "text_language_id", "text_fingerprint", "text_unigram_logprob", "embedding_kmeans_exact",
-    "embedding_kmeans", "multimodal_decode_meta", "multimodal_audio_features", "asof_join_nearest",
-    "incremental_join_maintenance", "projection", "filter_eq", "filter_bool_null",
-    "coalesce_default", "list_membership_in", "string_match_filters", "exists_semijoin",
-    "not_exists_antijoin", "higher_order_list_predicates", "conditional_label", "equi_join_1hop",
-    "multihop_join_revenue", "optional_match_outer", "case_insensitive_join",
-    "fuzzy_contains_join", "one_to_many_membership_join", "matchlink_edges",
-    "cartesian_product_link", "agg_pricing_summary", "count_distinct_assets",
-    "collect_group_members", "list_fold_reduce", "minmax_stats", "distinct_dedup",
-    "order_by_limit", "top1_per_group", "lag_window_delta", "union_dedup", "drift_set_difference",
-    "intersect_sets", "scalar_string_functions", "scalar_datetime_functions", "scalar_casts",
-    "case_when_mapping", "events_tumbling_window", "events_sliding_window", "json_extraction",
-    "scalar_array_functions", "upsert_lifecycle", "cleanup_scoped", "cleanup_unscoped",
-    "cleanup_cascade", "analysis_set_property", "analysis_add_relationship",
-    "rule_compliance_counts", "drift_detect_states", "variable_length_closure",
-    "pattern_multihop_read", "dedup_exact", "dedup_ngram_jaccard",
-)
-
-
 def driver_verified() -> set[str]:
     """Names with a row in ANY CORRECTNESS_r*.json artifact at the repo root.
 
@@ -242,14 +88,10 @@ def _ordered() -> dict[str, QuerySpec]:
     # AUTO-ROTATION: the driver's oracle gate walks queries() in insertion
     # order under a ~50-query budget, so cumulative coverage requires every
     # driver-unverified query to sort before every driver-verified one. The
-    # hand-maintained PRIORITY tuple gives the stable base order; here we
-    # stably partition it on the CORRECTNESS artifacts so the ordering
-    # updates itself the moment a new round's artifact lands — no manual
-    # rotation commit, no window where the suite is red.
+    # stable partition of REGISTRY's insertion order on the CORRECTNESS
+    # artifacts updates itself the moment a new round's artifact lands.
     verified = driver_verified()
-    base = [n for n in PRIORITY if n in REGISTRY]
-    base += [n for n in REGISTRY if n not in PRIORITY]
-    rotated = [n for n in base if n not in verified] + [n for n in base if n in verified]
+    rotated = [n for n in REGISTRY if n not in verified] + [n for n in REGISTRY if n in verified]
     return {name: REGISTRY[name] for name in rotated}
 
 

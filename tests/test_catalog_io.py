@@ -15,6 +15,7 @@ from cartography_spark.operators.upsert import upsert_rel
 from cartography_spark.plans import driftarchive as da
 from cartography_spark.plans.graph_fixture import SUPPLIER_SCHEMA, build_catalog
 from cartography_spark.plans.inventory_lifecycle import base_catalog
+from cartography_spark.plans.job import merge_sync_metadata
 from cartography_spark.plans.rules import compliance_summary, framework_rollup, run_rules_batched
 from cartography_spark.plans.rules_corpus import build_corpus_rules
 
@@ -104,3 +105,6 @@ def test_driver_frames_are_local_relations(spark, sf_dir, tmp_path):
     _assert_local(missing)
     assert missing.collect() == []
     assert missing.columns == ["src_id", "dst_id", "lastupdated", "firstseen"]
+
+    merge_sync_metadata(cat, "Region", "0", "Supplier", 1)
+    _assert_local(cat.nodes["SyncMetadata"])

@@ -12,6 +12,7 @@ from cartography_spark.catalog import GraphCatalog
 from cartography_spark.operators.cleanup import cleanup_nodes
 from cartography_spark.operators.closure import transitive_closure
 from cartography_spark.operators.upsert import load
+from cartography_spark.plans.analysis import AddRelationship
 from cartography_spark.schema import NodeSchema, PropertyRef
 
 SCHEMA = NodeSchema(
@@ -53,6 +54,32 @@ def test_upsert_merge_semantics(spark, b1, b2):
     expect = {k: (v, 1, 1) for k, v in first1.items()}
     for k, v in first2.items():
         expect[k] = (v, 1 if k in first1 else 2, 2)
+    assert got == expect
+
+
+pairs_strategy = st.lists(
+    st.tuples(st.integers(0, 5), st.integers(0, 5)), min_size=0, max_size=20
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(b1=pairs_strategy, b2=pairs_strategy)
+def test_edge_merge_semantics(spark, b1, b2):
+    """The edge half of the MERGE contract across two tags: after derived-
+    edge batches at T1 then T2 over arbitrary (src, dst) pairs, duplicates
+    included, every pair is stored exactly once, firstseen=T1 iff the pair
+    was in batch 1, and lastupdated is the tag of the last touching batch."""
+    cat = GraphCatalog(spark)
+    rel = AddRelationship("A", "R", "B", "s", "d")
+    for tag, rows in ((1, b1), (2, b2)):
+        batch = spark.createDataFrame(rows or [(None, None)], "s int, d int")
+        rel.apply(cat, batch.filter(F.col("s").isNotNull()), tag)
+    stored = cat.edges[rel.key()].collect()
+    got = {(r.src_id, r.dst_id): (r.firstseen, r.lastupdated) for r in stored}
+    assert len(got) == len(stored)
+
+    expect = {p: (1, 1) for p in b1}
+    expect.update({p: (1 if p in expect else 2, 2) for p in b2})
     assert got == expect
 
 

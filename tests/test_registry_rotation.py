@@ -7,9 +7,10 @@ Round 6 lost its entire driver budget re-verifying the round-5 window because
 the rotation procedure was a comment, not a test; round 7 made it a test but
 the suite went red whenever a new artifact landed before the next manual
 rotation commit (ADVICE r7, medium). Since round 8 the rotation is AUTOMATIC:
-``registry._ordered()`` stably partitions PRIORITY on the artifact set at
-import time, so the ordering updates itself the moment the driver writes
-``CORRECTNESS_r{N}.json``. These tests pin that mechanism.
+``registry._ordered()`` stably partitions REGISTRY's insertion order on the
+artifact set at import time, so the ordering updates itself the moment a new
+``CORRECTNESS_r{N}.json`` artifact lands; no hand-ordered list exists to
+keep in sync. These tests pin that mechanism.
 """
 
 from __future__ import annotations
@@ -59,14 +60,3 @@ def test_rotation_helper_matches_local_scan():
 
     assert driver_verified() == _driver_verified()
 
-
-def test_priority_matches_registry_exactly():
-    from cartography_spark.plans.registry import PRIORITY, all_queries
-
-    names = set(all_queries())
-    assert len(PRIORITY) == len(set(PRIORITY)), "duplicate names in PRIORITY"
-    assert set(PRIORITY) == names, (
-        f"PRIORITY out of sync with REGISTRY: "
-        f"missing={sorted(names - set(PRIORITY))[:5]} "
-        f"extra={sorted(set(PRIORITY) - names)[:5]}"
-    )

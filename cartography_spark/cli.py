@@ -16,6 +16,7 @@ temp views ``n_<Label>``, edge tables as ``e_<src>__<rel>__<dst>``.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
@@ -79,7 +80,7 @@ def cmd_rules_run(args: argparse.Namespace) -> int:
     """Run the built-in rule library against a loaded warehouse and emit
     the reference-shaped text/JSON report (rules/cli.py:328-477 run_cmd;
     formatters.py:122+)."""
-    from cartography_spark.plans.rules import run_rules
+    from cartography_spark.plans.rules import run_rules_batched
     from cartography_spark.plans.rules_formatters import format_json, format_text
     from cartography_spark.plans.rules_library import CATALOG_RULES
 
@@ -102,14 +103,11 @@ def cmd_rules_run(args: argparse.Namespace) -> int:
         rules = [r for r in rules if r.rule_id == args.rule]
     if getattr(args, "fact", None):
         rules = [r for r in rules if r.get_fact_by_id(args.fact) is not None]
-        rules = [
-            type(r)(**{**r.__dict__, "facts": (r.get_fact_by_id(args.fact),)})
-            for r in rules
-        ]
+        rules = [dataclasses.replace(r, facts=(r.get_fact_by_id(args.fact),)) for r in rules]
     if not rules:
         print("no rules matched the filter", file=sys.stderr)
         return 1
-    results = run_rules(rules, cat)
+    results = run_rules_batched(rules, cat)
     if args.format == "json":
         print(format_json(results, max_findings=args.max_findings))
     else:

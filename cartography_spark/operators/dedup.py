@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 from cartography_spark.operators.fixpoint import fixpoint
 from cartography_spark.session import shuffle_partition_count
 
+# Broadcast budget of ngram_jaccard_pairs' dense strategy: the per-doc
+# shingle bitset table must fit it.
+DENSE_JACCARD_BROADCAST_BYTES = 64 * 1024 * 1024
+
 
 def portable_hash32(col: Column, salt: Column | str | int | None = None) -> Column:
     """Unsigned-32-bit hash derived from md5, reproducible in any engine
@@ -199,11 +203,11 @@ def ngram_jaccard_pairs(
       work: each pair is enumerated once, filtered in-stream — no
       occurrence blowup, no distinct, no verification join. Chosen only
       when (a) the per-doc word table fits the broadcast budget
-      (``spark.cartography.dedup.denseJaccardBroadcastBytes``, default
-      64 MB) and (b) the blocked pair count × word count is below the
-      inverted-index occurrence bound Σ_s n_s·(n_s-1)/2 — both computed
-      from aggregates already needed by P, so the at-scale path pays
-      nothing for the check. Interleaved A/B at sf0.1: 11.4 -> ~1.5 s.
+      (``DENSE_JACCARD_BROADCAST_BYTES``, 64 MB) and (b) the blocked pair
+      count × word count is below the inverted-index occurrence bound
+      Σ_s n_s·(n_s-1)/2 — both computed from aggregates already needed by
+      P, so the at-scale path pays nothing for the check. Interleaved A/B
+      at sf0.1: 11.4 -> ~1.5 s.
     """
     from pyspark.sql import Window
 
@@ -244,13 +248,6 @@ def ngram_jaccard_pairs(
     # action above.
     nwords = (vocab_size + 63) // 64
     if 0 < vocab_size and nwords <= 128:
-        spark = docs.sparkSession
-        budget = int(
-            spark.conf.get(
-                "spark.cartography.dedup.denseJaccardBroadcastBytes",
-                str(64 * 1024 * 1024),
-            )
-        )
         if block_cols:
             counts = [
                 r["__c"]
@@ -263,7 +260,10 @@ def ngram_jaccard_pairs(
         # nwords multiplies D's per-pair cost; P's per-occurrence cost is
         # O(1) — comparing cross_pairs*nwords against the occurrence bound
         # biases the choice TOWARD the at-scale prefix path
-        if n_docs * (nwords + 3) * 8 <= budget and cross_pairs * nwords <= inv_index_pairs:
+        if (
+            n_docs * (nwords + 3) * 8 <= DENSE_JACCARD_BROADCAST_BYTES
+            and cross_pairs * nwords <= inv_index_pairs
+        ):
             return _ngram_jaccard_dense(sh, vocab, nwords, threshold, id_col, block_cols)
 
     w = Window.partitionBy(id_col, *block_cols).orderBy("__sid")

@@ -192,6 +192,35 @@ class SetProperties:
             part.cleanup(catalog, update_tag, scope_ids=scope_ids)
 
 
+def _add_to_set(catalog: GraphCatalog, label: str, prop: str, vals: DataFrame) -> None:
+    """Append each node's matched values (``vals``: id, __v) to the array
+    property ``prop`` of ``label``, dedup'd — the coalesce(n.p, []) + filter
+    idiom of AddToSet and AddValuesToSet (analysisbuilder.py:285-307)."""
+    vals = vals.groupBy("id").agg(F.collect_set("__v").alias("__vs"))
+    table = catalog.node(label)
+    has = prop in table.columns
+    joined = table.join(vals, "id", "left")
+    # never-set base is a typed NULL (not an empty array: unmatched
+    # nodes must keep the property NULL); the cast matches the VALUE's
+    # element type so concat typechecks for e.g. int sets
+    base = (
+        F.col(prop)
+        if has
+        else F.lit(None).cast(vals.schema["__vs"].dataType.simpleString())
+    )
+    # SET only fires on MATCHED nodes (reference analysisbuilder.py:
+    # 285-307 compiles MATCH ... SET): unmatched nodes — and matches
+    # contributing only NULL values — keep their previous property
+    # (NULL if never set); they do NOT gain an empty array. Surfaced
+    # by the one orderless customer at sf0.1.
+    appended = F.array_distinct(F.concat(F.coalesce(base, F.array()), F.col("__vs")))
+    newcol = F.when(F.size(F.col("__vs")) > 0, appended).otherwise(base)
+    out = joined.withColumn("__new", newcol).drop("__vs")
+    if has:
+        out = out.drop(prop)
+    catalog.nodes[label] = out.withColumnRenamed("__new", prop)
+
+
 @dataclass(frozen=True)
 class AddToSet:
     """Append ``value`` to the array property ``prop``, dedup'd —
@@ -203,33 +232,8 @@ class AddToSet:
     value: Any
 
     def apply(self, catalog: GraphCatalog, matched: DataFrame, update_tag: int) -> None:
-        vals = (
-            matched.select(F.col(self.id_col).alias("id"), _as_col(self.value).alias("__v"))
-            .groupBy("id")
-            .agg(F.collect_set("__v").alias("__vs"))
-        )
-        table = catalog.node(self.target_label)
-        has = self.prop in table.columns
-        joined = table.join(vals, "id", "left")
-        # never-set base is a typed NULL (not an empty array: unmatched
-        # nodes must keep the property NULL); the cast matches the VALUE's
-        # element type so concat typechecks for e.g. int sets
-        base = (
-            F.col(self.prop)
-            if has
-            else F.lit(None).cast(vals.schema["__vs"].dataType.simpleString())
-        )
-        # SET only fires on MATCHED nodes (reference analysisbuilder.py:
-        # 285-307 compiles MATCH ... SET): unmatched nodes — and matches
-        # contributing only NULL values — keep their previous property
-        # (NULL if never set); they do NOT gain an empty array. Surfaced
-        # by the one orderless customer at sf0.1.
-        appended = F.array_distinct(F.concat(F.coalesce(base, F.array()), F.col("__vs")))
-        newcol = F.when(F.size(F.col("__vs")) > 0, appended).otherwise(base)
-        out = joined.withColumn("__new", newcol).drop("__vs")
-        if has:
-            out = out.drop(self.prop)
-        catalog.nodes[self.target_label] = out.withColumnRenamed("__new", self.prop)
+        vals = matched.select(F.col(self.id_col).alias("id"), _as_col(self.value).alias("__v"))
+        _add_to_set(catalog, self.target_label, self.prop, vals)
 
     def cleanup(
         self, catalog: GraphCatalog, update_tag: int, scope_ids: DataFrame | None = None
@@ -336,35 +340,11 @@ class AddValuesToSet:
     values: tuple[Any, ...]
 
     def apply(self, catalog: GraphCatalog, matched: DataFrame, update_tag: int) -> None:
-        vals = (
-            matched.select(
-                F.col(self.id_col).alias("id"),
-                F.explode(F.array(*[_as_col(v) for v in self.values])).alias("__v"),
-            )
-            .groupBy("id")
-            .agg(F.collect_set("__v").alias("__vs"))
+        vals = matched.select(
+            F.col(self.id_col).alias("id"),
+            F.explode(F.array(*[_as_col(v) for v in self.values])).alias("__v"),
         )
-        table = catalog.node(self.target_label)
-        has = self.prop in table.columns
-        joined = table.join(vals, "id", "left")
-        # typed-NULL base: unmatched nodes keep the property NULL (see
-        # AddToSet above)
-        base = (
-            F.col(self.prop)
-            if has
-            else F.lit(None).cast(vals.schema["__vs"].dataType.simpleString())
-        )
-        # SET only fires on MATCHED nodes (reference analysisbuilder.py:
-        # 285-307 compiles MATCH ... SET): unmatched nodes — and matches
-        # contributing only NULL values — keep their previous property
-        # (NULL if never set); they do NOT gain an empty array. Surfaced
-        # by the one orderless customer at sf0.1.
-        appended = F.array_distinct(F.concat(F.coalesce(base, F.array()), F.col("__vs")))
-        newcol = F.when(F.size(F.col("__vs")) > 0, appended).otherwise(base)
-        out = joined.withColumn("__new", newcol).drop("__vs")
-        if has:
-            out = out.drop(self.prop)
-        catalog.nodes[self.target_label] = out.withColumnRenamed("__new", self.prop)
+        _add_to_set(catalog, self.target_label, self.prop, vals)
 
     def cleanup(
         self, catalog: GraphCatalog, update_tag: int, scope_ids: DataFrame | None = None

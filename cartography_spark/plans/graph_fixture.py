@@ -21,6 +21,7 @@ from cartography_spark.schema import (
     TargetNodeMatcher,
 )
 from cartography_spark.sources.parquet import load_table
+from cartography_spark.sync import build_staged_sync
 
 REGION_SCHEMA = NodeSchema(
     label="Region",
@@ -174,14 +175,7 @@ def stage_fns(spark: SparkSession, sf_dir: str):
 
 def build_catalog(spark: SparkSession, sf_dir: str, update_tag: int = 100) -> GraphCatalog:
     """Run the real load pipeline over region/nation/customer/supplier/orders."""
-    from cartography_spark.sync import Sync
-
     cat = GraphCatalog(spark)
     cat.partition_cols["Supplier"] = "region_id"
-    sync = Sync()
-    for name, fn in stage_fns(spark, sf_dir).items():
-        sync.add_stage(name, fn)
-    errors = sync.run(cat, {"UPDATE_TAG": update_tag})
-    if errors:
-        raise next(iter(errors.values()))
+    build_staged_sync(stage_fns(spark, sf_dir)).run(cat, {"UPDATE_TAG": update_tag})
     return cat

@@ -658,7 +658,7 @@ def q_permission_statement_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "field, inactive-principal-with-live-grants, NOT-EXISTS anti-join, "
     "count-threshold HAVING, multi-hop tenancy scope, temporal threshold, "
     "static deny-list, weak-string settings, cross-tenant trust) run "
-    "through the Fact/Rule engine (plans/rules.py run_rules) with "
+    "through the Fact/Rule engine (plans/rules.py run_rules_batched) with "
     "compliance math per fact (runners.py:121-134).",
     tags=("engine", "rules"),
 )

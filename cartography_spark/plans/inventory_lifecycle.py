@@ -765,7 +765,7 @@ def q_analysis_gcp_ontology_projection(spark: SparkSession, sf_dir: str) -> Data
     tags=("engine", "rules"),
 )
 def q_rule_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cartography_spark.plans.rules import Fact, compliance_summary
+    from cartography_spark.plans.rules import Fact, Rule, compliance_summary, run_rules_batched
 
     cat = base_catalog(spark, sf_dir)
     fact = Fact(
@@ -777,7 +777,8 @@ def q_rule_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
         asset_label="Customer",
         asset_id_field="asset_id",
     )
-    return compliance_summary([fact.run(cat)])
+    rule = Rule(rule_id=fact.fact_id, name=fact.name, facts=(fact,))
+    return compliance_summary(run_rules_batched([rule], cat)[0].facts)
 
 
 @query(

@@ -675,9 +675,8 @@ def q_rules_framework_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.plans.rules_corpus import build_corpus_rules
 
     cat = base_catalog(spark, sf_dir)
-    # batched runner: one unioned findings job + one cached count per
-    # distinct label, instead of the reference's ~2-actions-per-rule
-    # sequential loop (results identical — run_rules is the parity form)
+    # one unioned findings job + one unioned counts job, instead of the
+    # reference's two queries per fact
     results = run_rules_batched(build_corpus_rules(spark, sf_dir), cat)
     return framework_rollup(results)
 

@@ -28,6 +28,11 @@ from cartography_spark.operators.upsert import merge
 from cartography_spark.sources.rows import local_frame
 
 
+# A write statement whose analyzed plan has at least this many leaf
+# relations is checkpointed at the statement boundary (GraphStatement.run).
+CHECKPOINT_LEAF_THRESHOLD = 12
+
+
 # (application, session id, view name) -> the DataFrame object currently
 # registered under that view BY THIS FUNCTION (held by reference, compared
 # with `is`, so a garbage-collected frame can never alias a live one).
@@ -98,11 +103,8 @@ class GraphStatement:
             # leaf-relation count — self-regulating, since a barriered
             # statement becomes a single leaf for everything downstream,
             # capping every later statement's plan near the threshold.
-            threshold = int(
-                catalog.spark.conf.get("spark.cartography.job.checkpointLeafThreshold", "12")
-            )
             leaves = result._jdf.queryExecution().analyzed().collectLeaves().size()
-            if leaves >= threshold:
+            if leaves >= CHECKPOINT_LEAF_THRESHOLD:
                 # Spark 4.1 can fail attribute rebinding when planning a
                 # lazy checkpoint over some MERGE-shaped unions whose
                 # branches read a just-swapped view

@@ -6,14 +6,15 @@ failing = distinct asset_id_field values :121-125; passing = count_query
 total - failing :127-134).
 
 Spark-native: a Fact's query is a function ``(catalog) -> DataFrame`` whose
-result must expose the declared ``asset_id_field``; the compliance math is
-two aggregates over DataFrames.
+result must expose the declared ``asset_id_field``, and its counter is a
+one-row DataFrame. :func:`run_rules_batched` is the one runner: it computes
+every fact's failing count in one unioned job and every total in another.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,40 +26,18 @@ from cartography_spark.sources.rows import local_frame
 
 @dataclass(frozen=True)
 class Fact:
-    """A single detection query (reference model.py:363-462)."""
+    """A single detection query (reference model.py:363-462).
+
+    ``count_query`` computes the fact's total assets as a one-row frame with
+    a bigint column ``n``; when None the total is the row count of the
+    ``asset_label`` node table."""
 
     fact_id: str
     name: str
     query: Callable[[GraphCatalog], DataFrame]
     asset_label: str
     asset_id_field: str
-    # total-asset counter; defaults to counting the asset label's node table
-    count_query: Callable[[GraphCatalog], int] | None = None
-    # optional DataFrame form of count_query — a 1-row (n BIGINT) frame
-    # computing the SAME total. When present, run_rules_batched folds it
-    # into the single unioned counts job instead of paying a separate
-    # driver action per custom counter (guide §2.4: one job, not N).
-    count_df: Callable[[GraphCatalog], DataFrame] | None = None
-
-    def run(self, catalog: GraphCatalog) -> FactResult:
-        df = self.query(catalog)
-        if self.asset_id_field not in df.columns:
-            raise ValueError(
-                f"fact {self.fact_id}: result is missing asset_id_field "
-                f"{self.asset_id_field!r} (schema validation, model.py:414-462)"
-            )
-        failing = df.select(self.asset_id_field).distinct().count()
-        if self.count_query is not None:
-            total = self.count_query(catalog)
-        else:
-            total = catalog.node(self.asset_label).count()
-        return FactResult(
-            fact=self,
-            findings=df,
-            failing_assets=failing,
-            total_assets=total,
-            passing_assets=max(total - failing, 0),
-        )
+    count_query: Callable[[GraphCatalog], DataFrame] | None = None
 
 
 @dataclass(frozen=True)
@@ -144,9 +123,6 @@ class Rule:
                 return fact
         return None
 
-    def run(self, catalog: GraphCatalog) -> list[FactResult]:
-        return [f.run(catalog) for f in self.facts]
-
 
 @dataclass
 class RuleResult:
@@ -181,26 +157,11 @@ class RuleResult:
         return sum(r.failing_assets for r in self.facts)
 
 
-def run_rules(rules: list[Rule] | tuple[Rule, ...], catalog: GraphCatalog) -> list[RuleResult]:
-    """Execute rules sequentially (reference rules/runners.py:188-340)."""
-    return [
-        RuleResult(
-            rule_id=rule.rule_id,
-            rule_name=rule.name,
-            rule_description=rule.description,
-            facts=rule.run(catalog),
-            rule_tags=rule.tags,
-            rule_frameworks=rule.frameworks,
-        )
-        for rule in rules
-    ]
-
-
 def run_rules_batched(
     rules: list[Rule] | tuple[Rule, ...], catalog: GraphCatalog
 ) -> list[RuleResult]:
-    """Spark-first batched rule execution: identical results to
-    :func:`run_rules`, a fraction of the driver round-trips.
+    """Run rules: the engine's one rule runner, with the reference's
+    per-fact results in a fraction of the driver round-trips.
 
     The reference runner (rules/runners.py:188-340) executes rules
     sequentially — each fact is its own query plus its own count query,
@@ -208,11 +169,10 @@ def run_rules_batched(
     tagged with their fact_id, unioned into ONE plan, and every fact's
     distinct-failing count comes back from a single groupBy job; total-
     asset counts are computed once per DISTINCT asset label / count
-    query (rules share labels, the sequential form re-counts them per
-    rule). 23 corpus rules: ~50 sequential actions -> 1 union job + ~7
-    cached counts. At scale the union job reads each fact's inputs in
-    one pass and the per-fact aggregate is map-side combinable on the
-    (fact_id, asset) pairs.
+    query in a second unioned job (rules share labels, the reference
+    re-counts them per rule). At scale the union job reads each fact's
+    inputs in one pass and the per-fact aggregate is map-side combinable
+    on the (fact_id, asset) pairs.
 
     Validation contract preserved: every fact's result frame must carry
     its declared ``asset_id_field`` (model.py:414-462), enforced before
@@ -257,18 +217,21 @@ def run_rules_batched(
             for i in range(0, len(parts), 2)
         ]
     tagged = parts[0] if parts else None
-    # totals: label counts AND DataFrame-form custom counters (count_df) in
-    # ONE unioned job — previously each custom count_query was its own
-    # driver action (3 extra jobs over the corpus). Opaque int-returning
-    # count_query callables without a count_df stay sequential, cached per
-    # callable identity.
+
+    # totals: one count per distinct asset label and one per distinct
+    # counter callable (keyed by identity, first-use order), all in ONE
+    # unioned job
+    def total_key(fact: Fact) -> str:
+        if fact.count_query is not None:
+            return f"fn:{id(fact.count_query)}"
+        return f"label:{fact.asset_label}"
+
     labels_needed = sorted(
         {f.asset_label for _, f in facts if f.count_query is None}
     )
-    custom_dfs: dict[int, Callable[[GraphCatalog], DataFrame]] = {}
-    for _, f_ in facts:
-        if f_.count_query is not None and f_.count_df is not None:
-            custom_dfs.setdefault(id(f_.count_query), f_.count_df)
+    counters = {
+        total_key(f): f.count_query for _, f in facts if f.count_query is not None
+    }
     count_parts: list[DataFrame] = [
         catalog.node(lbl)
         .agg(F.count(F.lit(1)).alias("n"))
@@ -276,8 +239,8 @@ def run_rules_batched(
         for lbl in labels_needed
     ]
     count_parts.extend(
-        fn(catalog).select(F.lit(f"fn:{key}").alias("__lbl"), F.col("n"))
-        for key, fn in custom_dfs.items()
+        fn(catalog).select(F.lit(key).alias("__lbl"), F.col("n"))
+        for key, fn in counters.items()
     )
     counts = None
     if count_parts:
@@ -310,34 +273,15 @@ def run_rules_batched(
     # is a handful of tiny per-label aggregates whose stages back-fill
     # executors left idle by the union job's straggler tail instead of
     # paying their scheduling latency sequentially after it. Results are
-    # byte-identical — the jobs share no state and the dicts are merged
-    # the same way afterwards.
-    failing, merged_total = (
+    # byte-identical — the jobs share no state.
+    failing, totals = (
         f.result() for f in run_concurrently(catalog.spark, [_collect_failing, _collect_totals])
     )
-    label_total = {
-        k.removeprefix("label:"): v
-        for k, v in merged_total.items()
-        if k.startswith("label:")
-    }
-    fn_total: dict[int, int] = {
-        int(k.removeprefix("fn:")): v
-        for k, v in merged_total.items()
-        if k.startswith("fn:")
-    }
-
-    def total_of(fact: Fact) -> int:
-        if fact.count_query is not None:
-            key = id(fact.count_query)
-            if key not in fn_total:
-                fn_total[key] = fact.count_query(catalog)
-            return fn_total[key]
-        return label_total[fact.asset_label]
 
     by_rule: dict[str, list[FactResult]] = {}
     for (rule, fact), fact_df in zip(facts, fact_dfs):
         n_fail = failing.get(fact.fact_id, 0)
-        total = total_of(fact)
+        total = totals[total_key(fact)]
         by_rule.setdefault(rule.rule_id, []).append(
             FactResult(
                 fact=fact,

@@ -39,26 +39,13 @@ def build_corpus_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
     events = lambda: load_table(spark, sf_dir, "events")  # noqa: E731
     docs = lambda: load_table(spark, sf_dir, "documents")  # noqa: E731
 
-    def n_parts(c: GraphCatalog) -> int:
-        return part().count()
-
-    def n_docs(c: GraphCatalog) -> int:
-        return docs().count()
-
-    def n_event_users(c: GraphCatalog) -> int:
-        return events().select("user_id").distinct().count()
-
-    # DataFrame forms of the custom counters (same totals): run_rules_batched
-    # folds these into its single unioned counts job instead of paying one
-    # driver action per counter (rules.py: merged counts collect).
-
-    def n_parts_df(c: GraphCatalog) -> DataFrame:
+    def n_parts(c: GraphCatalog) -> DataFrame:
         return part().agg(F.count(F.lit(1)).alias("n"))
 
-    def n_docs_df(c: GraphCatalog) -> DataFrame:
+    def n_docs(c: GraphCatalog) -> DataFrame:
         return docs().agg(F.count(F.lit(1)).alias("n"))
 
-    def n_event_users_df(c: GraphCatalog) -> DataFrame:
+    def n_event_users(c: GraphCatalog) -> DataFrame:
         return events().select("user_id").distinct().agg(F.count(F.lit(1)).alias("n"))
 
     # --- per-file fixture facts -------------------------------------------
@@ -385,7 +372,7 @@ def build_corpus_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
             "(public bucket): oversized high-value parts in the open "
             "catalog.",
             tags=("fixture", "cis", "storage"),
-            facts=(Fact("cis-aws-storage-public-large", "Oversized high-value public parts", _public_large_parts, "Part", "asset_id", count_query=n_parts, count_df=n_parts_df),),
+            facts=(Fact("cis-aws-storage-public-large", "Oversized high-value public parts", _public_large_parts, "Part", "asset_id", count_query=n_parts),),
             references=(_cis_ref("AWS Storage 2.1"),),
             frameworks=(fw("cis", "2.1.4"), fw("soc2", "CC6.1")),
         ),
@@ -485,7 +472,7 @@ def build_corpus_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
             description="Fixture port of rules/data/rules/"
             "guardduty_active_threat.py: users emitting an error burst.",
             tags=("fixture", "threat"),
-            facts=(Fact("guardduty-active-threat", "Users with >= 20 error events", _guardduty_threat, "EventUser", "asset_id", count_query=n_event_users, count_df=n_event_users_df),),
+            facts=(Fact("guardduty-active-threat", "Users with >= 20 error events", _guardduty_threat, "EventUser", "asset_id", count_query=n_event_users),),
             references=(RuleReference("GuardDuty findings", "https://docs.aws.amazon.com/guardduty/latest/ug/guardduty_findings.html"),),
             frameworks=(fw("soc2", "CC7.2"),),
         ),
@@ -529,7 +516,7 @@ def build_corpus_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
             "public_snapshots.py: cut-rate PROMO parts visible in the open "
             "catalog.",
             tags=("fixture", "exposure"),
-            facts=(Fact("public-snapshots", "Cut-rate PROMO parts", _public_snapshots, "Part", "asset_id", count_query=n_parts, count_df=n_parts_df),),
+            facts=(Fact("public-snapshots", "Cut-rate PROMO parts", _public_snapshots, "Part", "asset_id", count_query=n_parts),),
             references=(_cis_ref("EBS/RDS snapshots"),),
             frameworks=(fw("cis", "2.2.2"), fw("soc2", "CC6.1")),
         ),
@@ -540,7 +527,7 @@ def build_corpus_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
             "security_monitoring_gaps.py: users with purchases but no "
             "signup telemetry.",
             tags=("fixture", "monitoring"),
-            facts=(Fact("monitoring-gap-users", "Purchasers with no signup event", _monitoring_gap, "EventUser", "asset_id", count_query=n_event_users, count_df=n_event_users_df),),
+            facts=(Fact("monitoring-gap-users", "Purchasers with no signup event", _monitoring_gap, "EventUser", "asset_id", count_query=n_event_users),),
             references=(RuleReference("Monitoring coverage", "https://attack.mitre.org/tactics/TA0005/"),),
             frameworks=(fw("soc2", "CC7.2"), fw("iso27001", "A.8.16")),
         ),
@@ -584,7 +571,7 @@ def build_corpus_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
             "(GOVERN/MAP data-governance facts): documents with missing "
             "source or sub-minimal content.",
             tags=("fixture", "ai", "governance"),
-            facts=(Fact("nist-ai-data-provenance", "Documents lacking provenance or content", _ai_provenance, "Document", "asset_id", count_query=n_docs, count_df=n_docs_df),),
+            facts=(Fact("nist-ai-data-provenance", "Documents lacking provenance or content", _ai_provenance, "Document", "asset_id", count_query=n_docs),),
             references=(RuleReference("NIST AI RMF 1.0", "https://www.nist.gov/itl/ai-risk-management-framework"),),
             frameworks=(fw("nist-ai-rmf", "GOVERN-1.2"), fw("nist-ai-rmf", "MAP-2.3")),
         ),

@@ -344,7 +344,9 @@ def watchlist_rule(spark: SparkSession, sf_dir: str) -> Rule:
                 query=_watchlist_parts,
                 asset_label="Part",
                 asset_id_field="asset_id",
-                count_query=lambda c: load_table(spark, sf_dir, "part").count(),
+                count_query=lambda c: load_table(spark, sf_dir, "part").agg(
+                    F.count(F.lit(1)).alias("n")
+                ),
             ),
         ),
         references=(RuleReference("Supply-chain watchlists", "https://owasp.org"),),

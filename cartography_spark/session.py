@@ -80,6 +80,26 @@ def run_concurrently(spark: SparkSession, calls: Sequence[Callable[[], Any]]) ->
         return [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
 
 
+# Driver heap ceiling, and the default when the host's memory is unknown.
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else 60%
+    of the host's MemTotal, at most ``MAX_DRIVER_MEM_MB``. Local mode runs
+    every executor inside the driver JVM, so a heap larger than the host
+    lets the OOM killer take the JVM instead of Spark spilling."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(total_kb * 6 // 10 // 1024, MAX_DRIVER_MEM_MB)}m"
+
+
 def get_spark(app_name: str = "cartography-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -102,7 +122,7 @@ def get_spark(app_name: str = "cartography-spark", shuffle_partitions: int | Non
         # cluster with TB-scale inputs raise this back to 128-256MB.
         .config("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

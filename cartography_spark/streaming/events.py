@@ -27,6 +27,9 @@ _STREAM_SETUP_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
 # state-store partition count from the input (setup metadata only).
 _SOURCE_BYTES: dict[str, dict[str, int]] = {}
 
+# Source bytes per state-store partition (_stream_state_partitions).
+BYTES_PER_STATE_PARTITION = 64 * 1024 * 1024
+
 
 def _path_bytes(path: str) -> int:
     import os
@@ -57,8 +60,7 @@ def _stream_state_partitions(spark: SparkSession) -> int | None:
     this can only COALESCE relative to today's behavior, exactly like AQE,
     and grows with the input until the configured ceiling takes over (at
     cluster scale the ceiling is the deliberately-sized shuffle partition
-    count). Bytes-per-partition is parameterised via
-    ``spark.cartography.streaming.bytesPerStatePartition`` (default 64 MB,
+    count). Bytes per partition is ``BYTES_PER_STATE_PARTITION`` (64 MB,
     AQE's advisory default). Returns None when no source probe was
     recorded (caller keeps the session default).
 
@@ -78,18 +80,9 @@ def _stream_state_partitions(spark: SparkSession) -> int | None:
     if not sizes:
         return None
     total = sum(sizes.values())
-    try:
-        bpp = int(
-            spark.conf.get(
-                "spark.cartography.streaming.bytesPerStatePartition",
-                str(64 * 1024 * 1024),
-            )
-        )
-    except (TypeError, ValueError):
-        bpp = 64 * 1024 * 1024
     ceiling = shuffle_partition_count(spark)
     floor = min(ceiling, spark.sparkContext.defaultParallelism)
-    return max(floor, min(ceiling, -(-total // bpp)))
+    return max(floor, min(ceiling, -(-total // BYTES_PER_STATE_PARTITION)))
 
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:

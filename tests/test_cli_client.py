@@ -41,6 +41,16 @@ def test_cli_full_lifecycle(tmp_path, capsys):
     assert f["failing"] + f["passing"] == f["total"]
     assert any(rule["rule_frameworks"] for rule in report)
 
+    # the whole ported corpus (--sf-dir): every fact's counters equal the
+    # DuckDB oracles of the three rules registry queries over the same tables
+    assert main(["rules", "run", "--warehouse", wh, "--sf-dir", SF_SMOKE,
+                 "--format", "json"]) == 0
+    corpus = json.loads(capsys.readouterr().out)
+    got = {f["fact_id"]: (f["failing"], f["passing"], f["total"])
+           for rule in corpus for f in rule["facts"]}
+    assert len(got) == 36
+    assert got == _rules_oracle(("rules_library_run", "rules_extended_run", "rules_corpus_run"))
+
     # text report carries the reference summary block
     assert main(["rules", "run", "--warehouse", wh, "--format", "text"]) == 0
     text = capsys.readouterr().out
@@ -74,6 +84,25 @@ def test_cli_full_lifecycle(tmp_path, capsys):
     assert main(["drift", "detect", "--state-dir", states, "--name", "cust",
                  "--start", f1, "--end", "most-recent"]) == 0
     assert capsys.readouterr().out.strip() == ""
+
+
+def _rules_oracle(queries) -> dict[str, tuple[int, int, int]]:
+    """fact_id -> (failing, passing, total) from the registry queries' DuckDB
+    oracle SQL over the SF_SMOKE parquet tables."""
+    import duckdb
+
+    from cartography_spark.plans.registry import REGISTRY, all_queries
+
+    all_queries()
+    con = duckdb.connect()
+    for f in os.listdir(SF_SMOKE):
+        if f.endswith(".parquet"):
+            con.sql(f"CREATE VIEW {f[:-8]} AS SELECT * FROM '{SF_SMOKE}/{f}'")
+    want = {}
+    for q in queries:
+        for r in con.sql(REGISTRY[q].oracle).fetchdf().itertuples():
+            want[r.fact_id] = (int(r.failing), int(r.passing), int(r.total))
+    return want
 
 
 def test_client_read_sinks(spark):

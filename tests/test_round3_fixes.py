@@ -1,6 +1,7 @@
 """Round-3 fixes: session-mode cache hygiene gating, the IVF
 index-build/probe split, fractional as-of tolerance axes, hits_exact
-argument validation, and shuffle-partition conf fallback."""
+argument validation, shuffle-partition conf fallback, and the host-sized
+driver heap."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cartography_spark.session import (
+    driver_memory,
     finalize_iterative,
     session_mode,
     set_session_mode,
@@ -38,6 +40,28 @@ def test_shuffle_partition_count_non_numeric_falls_back():
         sparkContext = _SC()
 
     assert shuffle_partition_count(_Spark()) == 12
+
+
+def test_driver_memory_sized_to_host(tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    meminfo = tmp_path / "meminfo"
+    # a 15.7 GB host: 60% of MemTotal, in MiB
+    meminfo.write_text("MemTotal:       16479424 kB\nMemFree:         1024 kB\n")
+    assert driver_memory(str(meminfo)) == "9655m"
+    # a 128 GB host is capped at 24g
+    meminfo.write_text("MemTotal:      134217728 kB\n")
+    assert driver_memory(str(meminfo)) == "24576m"
+    # unreadable or unparsable meminfo falls back to the 24g ceiling
+    assert driver_memory(str(tmp_path / "missing")) == "24576m"
+    meminfo.write_text("MemFree: 1024 kB\n")
+    assert driver_memory(str(meminfo)) == "24576m"
+
+
+def test_driver_memory_override(tmp_path, monkeypatch):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16479424 kB\n")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert driver_memory(str(meminfo)) == "2g"
 
 
 def test_set_session_mode_rejects_unknown():

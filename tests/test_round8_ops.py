@@ -1006,12 +1006,13 @@ def test_markov_plan_collapses_behind_domain_barrier(spark):
         )
 
 
-def test_job_statement_barrier_gated_on_plan_growth(spark, sf_dir):
+def test_job_statement_barrier_gated_on_plan_growth(spark, sf_dir, monkeypatch):
     """r8 opt §30: a write statement's frame gets a lazy localCheckpoint
-    barrier only when its analyzed plan has accumulated >= the configured
+    barrier only when its analyzed plan has accumulated >= the
     leaf-relation threshold — deep chains truncate (the barriered frame is
     a single leaf downstream), shallow statements skip the barrier's
     per-statement RDD + stage overhead. Results are identical either way."""
+    from cartography_spark.plans import job as job_module
     from cartography_spark.plans.inventory_lifecycle import base_catalog
     from cartography_spark.plans.job import GraphJob, GraphStatement
 
@@ -1029,30 +1030,22 @@ def test_job_statement_barrier_gated_on_plan_growth(spark, sf_dir):
     def leaves(df):
         return df._jdf.queryExecution().analyzed().collectLeaves().size()
 
-    key = "spark.cartography.job.checkpointLeafThreshold"
-    old = spark.conf.get(key, None)
-    try:
-        # threshold high: no barrier — the 3rd statement's plan holds the
-        # doubled-per-statement self-join chain (the base catalog frame is
-        # 2 leaves, so 4 -> 8 -> 16)
-        spark.conf.set(key, str(10**9))
-        cat_hi = base_catalog(spark, sf_dir)
-        job.run(cat_hi, {})
-        assert leaves(cat_hi.node("Supplier")) == 16
-        # threshold 3: any statement reaching 4 leaves barriers, so every
-        # written frame downstream is a checkpoint leaf and growth is capped
-        spark.conf.set(key, "3")
-        cat_lo = base_catalog(spark, sf_dir)
-        job.run(cat_lo, {})
-        assert leaves(cat_lo.node("Supplier")) == 1
-        a = sorted(cat_hi.node("Supplier").select("id").toPandas()["id"])
-        b = sorted(cat_lo.node("Supplier").select("id").toPandas()["id"])
-        assert a == b
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    # threshold high: no barrier — the 3rd statement's plan holds the
+    # doubled-per-statement self-join chain (the base catalog frame is
+    # 2 leaves, so 4 -> 8 -> 16)
+    monkeypatch.setattr(job_module, "CHECKPOINT_LEAF_THRESHOLD", 10**9)
+    cat_hi = base_catalog(spark, sf_dir)
+    job.run(cat_hi, {})
+    assert leaves(cat_hi.node("Supplier")) == 16
+    # threshold 3: any statement reaching 4 leaves barriers, so every
+    # written frame downstream is a checkpoint leaf and growth is capped
+    monkeypatch.setattr(job_module, "CHECKPOINT_LEAF_THRESHOLD", 3)
+    cat_lo = base_catalog(spark, sf_dir)
+    job.run(cat_lo, {})
+    assert leaves(cat_lo.node("Supplier")) == 1
+    a = sorted(cat_hi.node("Supplier").select("id").toPandas()["id"])
+    b = sorted(cat_lo.node("Supplier").select("id").toPandas()["id"])
+    assert a == b
 
 
 def test_harmonic_2hop_bitset_hand_computed(spark):

@@ -8,8 +8,6 @@ from pyspark.sql import functions as F
 
 from cartography_spark.operators import dedup as dd
 
-BUDGET_KEY = "spark.cartography.dedup.denseJaccardBroadcastBytes"
-
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -38,26 +36,19 @@ def overlapping_docs(spark):
     return spark.createDataFrame(texts, "doc_id long, text string, lang string")
 
 
-def test_ngram_dense_and_prefix_strategies_identical(spark, overlapping_docs):
-    prior = spark.conf.get(BUDGET_KEY, None)
-    try:
-        spark.conf.set(BUDGET_KEY, "0")  # force the prefix path
-        p = dd.ngram_jaccard_pairs(
-            overlapping_docs, n=3, threshold=0.5, block_cols=("lang",)
-        )
-        p_plan = _plan(p)
-        p_rows = _rows(p)
-        spark.conf.set(BUDGET_KEY, str(64 * 1024 * 1024))
-        d = dd.ngram_jaccard_pairs(
-            overlapping_docs, n=3, threshold=0.5, block_cols=("lang",)
-        )
-        d_plan = _plan(d)
-        d_rows = _rows(d)
-    finally:
-        if prior is None:
-            spark.conf.unset(BUDGET_KEY)
-        else:
-            spark.conf.set(BUDGET_KEY, prior)
+def test_ngram_dense_and_prefix_strategies_identical(spark, overlapping_docs, monkeypatch):
+    monkeypatch.setattr(dd, "DENSE_JACCARD_BROADCAST_BYTES", 0)  # force the prefix path
+    p = dd.ngram_jaccard_pairs(
+        overlapping_docs, n=3, threshold=0.5, block_cols=("lang",)
+    )
+    p_plan = _plan(p)
+    p_rows = _rows(p)
+    monkeypatch.setattr(dd, "DENSE_JACCARD_BROADCAST_BYTES", 64 * 1024 * 1024)
+    d = dd.ngram_jaccard_pairs(
+        overlapping_docs, n=3, threshold=0.5, block_cols=("lang",)
+    )
+    d_plan = _plan(d)
+    d_rows = _rows(d)
     # identical output...
     assert p_rows == d_rows and len(p_rows) > 0
     # ...from genuinely different physical strategies: the prefix path
@@ -79,22 +70,16 @@ def test_ngram_dense_cost_check_prefers_prefix_on_disjoint_docs(spark):
     assert df.count() == 0
 
 
-def test_ngram_positional_filter_keeps_boundary_pair(spark):
+def test_ngram_positional_filter_keeps_boundary_pair(spark, monkeypatch):
     # shingle sets {abc,bcd,cde} vs {bcd,cde,def}: |inter|=2, |union|=4,
     # jaccard exactly 0.5 — the PPJoin positional filter must not prune it
     docs = spark.createDataFrame(
         [(1, "abcde", "en"), (2, "bcdef", "en")],
         "doc_id long, text string, lang string",
     )
-    prior = spark.conf.get(BUDGET_KEY, None)
-    try:
-        spark.conf.set(BUDGET_KEY, "0")  # prefix path (where the filter lives)
-        rows = _rows(dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5, block_cols=("lang",)))
-    finally:
-        if prior is None:
-            spark.conf.unset(BUDGET_KEY)
-        else:
-            spark.conf.set(BUDGET_KEY, prior)
+    # prefix path (where the filter lives)
+    monkeypatch.setattr(dd, "DENSE_JACCARD_BROADCAST_BYTES", 0)
+    rows = _rows(dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5, block_cols=("lang",)))
     assert rows == [(1, 2, 0.5)]
 
 

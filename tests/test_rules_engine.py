@@ -8,7 +8,7 @@ import json
 from pyspark.sql import functions as F
 
 from cartography_spark.plans.frameworks import framework_coverage, fw
-from cartography_spark.plans.rules import Framework, run_rules
+from cartography_spark.plans.rules import Framework, run_rules_batched
 from cartography_spark.plans.rules_formatters import format_json, format_text
 from cartography_spark.plans.rules_library import CATALOG_RULES, build_rules
 from cartography_spark.plans.inventory_lifecycle import base_catalog
@@ -36,7 +36,7 @@ def test_run_rules_and_formatters(spark, sf_dir):
     cat = base_catalog(spark, sf_dir)
     rules = build_rules(spark, sf_dir)
     assert len(rules) == 10
-    results = run_rules(rules[:2], cat)
+    results = run_rules_batched(rules[:2], cat)
     payload = json.loads(format_json(results, max_findings=3))
     assert len(payload) == 2
     for rule in payload:
@@ -59,7 +59,7 @@ def test_extended_rule_shapes(spark, sf_dir):
     assert [r.rule_id for r in rules] == [
         "watchlist-parts", "module-coverage-gaps", "chain-default-exposure",
     ]
-    results = run_rules(rules, cat)
+    results = run_rules_batched(rules, cat)
     by_id = {r.facts[0].fact.fact_id: r.facts[0] for r in results}
     # coverage gap: exactly ASIA and AFRICA match unconfigured modules
     cov = by_id["module-coverage-gaps"]
@@ -97,7 +97,7 @@ def test_corpus_rules_fire_on_fixture(spark, sf_dir):
     from cartography_spark.plans.rules_corpus import build_corpus_rules
 
     cat = base_catalog(spark, sf_dir)
-    results = run_rules(build_corpus_rules(spark, sf_dir), cat)
+    results = run_rules_batched(build_corpus_rules(spark, sf_dir), cat)
     frs = [fr for r in results for fr in r.facts]
     assert len(frs) == 23
     for fr in frs:
@@ -128,11 +128,11 @@ def test_framework_mapping_oracle_literal_matches_rules():
 def test_framework_rollup_math(spark, sf_dir):
     """Rollup invariants: every mapped control appears once; n_failing_rules
     <= n_rules; a control mapped by two rules sums both rules' counts."""
-    from cartography_spark.plans.rules import framework_rollup, run_rules
+    from cartography_spark.plans.rules import framework_rollup, run_rules_batched
     from cartography_spark.plans.rules_corpus import build_corpus_rules
 
     cat = base_catalog(spark, sf_dir)
-    results = run_rules(build_corpus_rules(spark, sf_dir), cat)
+    results = run_rules_batched(build_corpus_rules(spark, sf_dir), cat)
     rows = {(r.framework, r.requirement): r for r in framework_rollup(results).collect()}
     live_controls = {
         (fwk.short_name, fwk.requirement) for r in results for fwk in r.rule_frameworks
@@ -146,24 +146,29 @@ def test_framework_rollup_math(spark, sf_dir):
 
 
 def test_batched_runner_equals_sequential(spark, sf_dir):
-    """run_rules_batched must produce the exact per-fact counters the
-    sequential reference-parity runner does, rule by rule."""
-    from cartography_spark.plans.rules import run_rules, run_rules_batched
+    """run_rules_batched must produce the exact per-fact counters of the
+    reference's per-fact definition (rules/runners.py:121-134), computed
+    here one fact at a time: failing = distinct asset ids of the findings,
+    total = the label's row count or the counter frame's n."""
     from cartography_spark.plans.rules_corpus import build_corpus_rules
 
     cat = base_catalog(spark, sf_dir)
     rules = build_corpus_rules(spark, sf_dir)
-    seq = {
-        fr.fact.fact_id: (fr.failing_assets, fr.passing_assets, fr.total_assets)
-        for r in run_rules(rules, cat)
-        for fr in r.facts
-    }
+    ref = {}
+    for rule in rules:
+        for fact in rule.facts:
+            failing = fact.query(cat).select(fact.asset_id_field).distinct().count()
+            if fact.count_query is not None:
+                total = fact.count_query(cat).first()["n"]
+            else:
+                total = cat.node(fact.asset_label).count()
+            ref[fact.fact_id] = (failing, max(total - failing, 0), total)
     bat = {
         fr.fact.fact_id: (fr.failing_assets, fr.passing_assets, fr.total_assets)
         for r in run_rules_batched(rules, cat)
         for fr in r.facts
     }
-    assert seq == bat
+    assert ref == bat
 
 
 def _null_asset_catalog(spark):
@@ -184,10 +189,10 @@ def _null_asset_catalog(spark):
 
 def test_batched_counts_null_asset_ids_like_sequential(spark):
     """A finding frame with NULL asset ids: reference semantics (Python set)
-    count NULL as ONE failing asset; the batched distinct-group count must
-    agree with the sequential distinct().count() — the ADVICE-flagged
+    count NULL as ONE failing asset, as distinct().count() does; the
+    batched distinct-group count must agree — the ADVICE-flagged
     F.countDistinct would silently drop the NULLs."""
-    from cartography_spark.plans.rules import Fact, Rule, run_rules, run_rules_batched
+    from cartography_spark.plans.rules import Fact, Rule
 
     cat = _null_asset_catalog(spark)
 
@@ -202,12 +207,9 @@ def test_batched_counts_null_asset_ids_like_sequential(spark):
         facts=(Fact(fact_id="f-null", name="n", query=findings,
                     asset_label="Thing", asset_id_field="id"),),
     )
-    seq = run_rules([rule], cat)[0].facts[0]
     bat = run_rules_batched([rule], cat)[0].facts[0]
     # 2 non-null distinct + the NULL group = 3 failing of 6 total
-    assert (seq.failing_assets, seq.total_assets) == (3, 6)
-    assert (bat.failing_assets, bat.passing_assets, bat.total_assets) == (
-        seq.failing_assets, seq.passing_assets, seq.total_assets)
+    assert (bat.failing_assets, bat.passing_assets, bat.total_assets) == (3, 3, 6)
 
 
 def test_batched_rejects_duplicate_fact_ids(spark):
@@ -237,7 +239,7 @@ def test_framework_rollup_skips_empty_facts_result(spark):
     import pytest
 
     from cartography_spark.plans.rules import (
-        Fact, Framework, Rule, RuleResult, framework_rollup, run_rules,
+        Fact, Framework, Rule, RuleResult, framework_rollup, run_rules_batched,
     )
 
     cat = _null_asset_catalog(spark)
@@ -252,7 +254,7 @@ def test_framework_rollup_skips_empty_facts_result(spark):
         frameworks=(Framework(name="SOC 2", short_name="soc2",
                               requirement="cc1.1"),),
     )
-    real = run_rules([rule], cat)[0]
+    real = run_rules_batched([rule], cat)[0]
     empty = RuleResult(rule_id="r-empty", rule_name="e", rule_description="",
                        facts=[])
     rows = framework_rollup([empty, real]).collect()

@@ -356,7 +356,7 @@ def test_value_count_stream_equals_batch(spark, sf_dir):
     )
 
 
-def test_stream_state_partitions_derived_and_restored(spark, sf_dir):
+def test_stream_state_partitions_derived_and_restored(spark, sf_dir, monkeypatch):
     """The state-store partition count is derived from the probed source
     size (AQE-style coalesce: ceil(bytes/bpp) clamped to the configured
     shuffle-partition ceiling), applied only for the stream's lifetime,
@@ -378,12 +378,10 @@ def test_stream_state_partitions_derived_and_restored(spark, sf_dir):
     # byte-derived single partition 4x'd the session-window merge)
     assert floor <= derived <= ceiling
 
-    # the bytes-per-partition knob is honoured (tiny bpp -> ceiling clamp)
-    spark.conf.set("spark.cartography.streaming.bytesPerStatePartition", "1")
-    try:
+    # the bytes-per-partition constant is honoured (tiny bpp -> ceiling clamp)
+    with monkeypatch.context() as mp:
+        mp.setattr(ev, "BYTES_PER_STATE_PARTITION", 1)
         assert ev._stream_state_partitions(spark) == ceiling
-    finally:
-        spark.conf.unset("spark.cartography.streaming.bytesPerStatePartition")
 
     # run_available_now applies the derived value only while the stream runs
     prior = spark.conf.get("spark.sql.shuffle.partitions")

@@ -21,20 +21,18 @@ import json
 import os
 import sys
 import time
-from typing import Any
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
+from cartography_spark.plans.job import register_catalog_views
 from cartography_spark.session import get_spark
 
 
 def _register_views(spark: SparkSession, cat: GraphCatalog) -> None:
-    for label, df in cat.nodes.items():
-        df.createOrReplaceTempView(f"n_{label}")
-    for (sl, rl, dl), df in cat.edges.items():
-        df.createOrReplaceTempView(f"e_{sl}__{rl}__{dl}")
+    """Expose ``cat`` as ``n_*``/``e_*`` SQL views; ``spark`` is unused and
+    kept for existing callers (perfbench/workloads.py)."""
+    register_catalog_views(cat)
 
 
 def cmd_sync(args: argparse.Namespace) -> int:
@@ -52,10 +50,12 @@ def cmd_sync(args: argparse.Namespace) -> int:
     except ValueError as exc:
         print(str(exc), file=sys.stderr)
         return 1
-    errors = sync.run(cat, {"UPDATE_TAG": update_tag})
-    if errors:
-        for name, exc in errors.items():
-            print(f"stage {name} failed: {exc}", file=sys.stderr)
+    try:
+        sync.run(cat, {"UPDATE_TAG": update_tag})
+    except RuntimeError as exc:
+        # Sync.run records the failing stage last, then raises from its cause
+        cause = str(exc.__cause__).partition("\n")[0]
+        print(f"stage {sync.metrics[-1]['stage']} failed: {cause}", file=sys.stderr)
         return 1
     cat.save(args.warehouse)
     # count the written tables: parquet counts read footers, while counting

@@ -86,22 +86,16 @@ def cleanup_cascade(
     child_schema: NodeSchema,
     child_edge: tuple[str, str, str],
     update_tag: int,
-    tenant_id: str | None = None,
-    child_is_src: bool = True,
 ) -> None:
     """Cascade delete (cleanupbuilder.py:309-334): delete stale parents,
-    then stale children attached to those parents through ``child_edge``."""
+    then stale children attached to those parents through ``child_edge``
+    (stored child -> parent). Unscoped: every tenant's stale parents."""
     parents = catalog.node(parent_schema.label)
     stale_parents = parents.filter(F.col("lastupdated") != F.lit(update_tag)).select("id")
     edges = catalog.edge(*child_edge)
-    if child_is_src:
-        child_ids = edges.join(
-            stale_parents.select(F.col("id").alias("dst_id")), "dst_id", "left_semi"
-        ).select(F.col("src_id").alias("id"))
-    else:
-        child_ids = edges.join(
-            stale_parents.select(F.col("id").alias("src_id")), "src_id", "left_semi"
-        ).select(F.col("dst_id").alias("id"))
+    child_ids = edges.join(
+        stale_parents.select(F.col("id").alias("dst_id")), "dst_id", "left_semi"
+    ).select(F.col("src_id").alias("id"))
 
     children = catalog.node(child_schema.label)
     doomed_children = (
@@ -111,26 +105,18 @@ def cleanup_cascade(
     )
     catalog.nodes[child_schema.label] = children.join(doomed_children, "id", "left_anti")
     _detach_edges(catalog, child_schema.label, doomed_children)
-    cleanup_nodes(catalog, parent_schema, update_tag, tenant_id)
+    cleanup_nodes(catalog, parent_schema, update_tag)
 
 
 def cleanup_rels(
     catalog: GraphCatalog,
     edge_key: tuple[str, str, str],
     update_tag: int,
-    tenant_ids: DataFrame | None = None,
-    tenant_side: str = "dst_id",
 ) -> DataFrame:
     """Rel-only cleanup (cleanupbuilder.py:123-180,454-515): delete stale
-    edges, keep nodes. Optionally scoped to edges touching a tenant set."""
+    edges, keep nodes."""
     edges = catalog.edge(*edge_key)
     stale = F.col("lastupdated") != F.lit(update_tag)
-    if tenant_ids is not None:
-        doomed = edges.filter(stale).join(
-            tenant_ids.select(F.col(tenant_ids.columns[0]).alias(tenant_side)), tenant_side, "left_semi"
-        )
-        kept = edges.exceptAll(doomed)
-    else:
-        kept = edges.filter(~stale)
+    kept = edges.filter(~stale)
     catalog.edges[edge_key] = kept
     return kept

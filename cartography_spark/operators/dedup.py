@@ -7,10 +7,10 @@ All set-based and JVM-side (no Python UDFs in the hot path):
 - ngram_jaccard_pairs: exact Jaccard over shingle sets via an inverted-index
                     self-join — blocked by (lang, length-bucket) so the pair
                     space stays bounded at scale.
-- minhash_signatures / lsh_candidate_pairs: MinHash + banded LSH. Hashes are
+- minhash_wide / lsh_candidate_pairs: MinHash + banded LSH. Hashes are
   derived from md5 (portable: the DuckDB oracle reproduces them bit-exactly)
   instead of Scala murmur, so correctness is externally checkable. At 100 TB
-  the only shuffles are (doc, perm) -> min and the band-bucket join, both
+  the only shuffles are doc -> per-perm mins and the band-bucket join, both
   map-side combinable.
 - simhash:          token-hash bit-vote fingerprint; near-dup = small
                     hamming distance via bit_count(xor).
@@ -434,20 +434,6 @@ def minhash_wide(
     return hashed.groupBy(id_col).agg(*aggs)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    num_perm: int = 16,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, perm, minhash): the signature in long format (one row per
-    permutation) — a posexplode view over :func:`minhash_wide`."""
-    wide = minhash_wide(docs, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col)
-    sig = F.array(*[F.col(f"mh{i}") for i in range(num_perm)])
-    return wide.select(F.col(id_col), F.posexplode(sig).alias("perm", "minhash"))
-
-
 def band_signatures(
     wide: DataFrame,
     bands: int = 4,
@@ -485,28 +471,12 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
     id_col: str = "doc_id",
-    wide: bool = False,
 ) -> DataFrame:
-    """Band the signature (rows_per_band = num_perm / bands), bucket-join on
+    """Band the :func:`minhash_wide` signature (rows_per_band = num_perm /
+    bands) through :func:`band_signatures`, bucket-join on
     (band, band_signature): docs sharing any band are candidate pairs.
-
-    ``signatures`` is long format (id, perm, minhash) by default; pass
-    ``wide=True`` with a :func:`minhash_wide` frame to skip the regroup
-    shuffle entirely.
     """
-    if wide:
-        band_sig = band_signatures(signatures, bands=bands, id_col=id_col)
-    else:
-        sig = signatures.withColumn("band", F.col("perm") % F.lit(bands))
-        band_sig = sig.groupBy(id_col, "band").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("perm", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-                "_",
-            ).alias("bsig")
-        )
+    band_sig = band_signatures(signatures, bands=bands, id_col=id_col)
     # materialize once: the a/b self-join would otherwise recompute the
     # whole shingle->hash->min pipeline twice (docs x bands rows — small)
     band_sig = band_sig.localCheckpoint(eager=True)

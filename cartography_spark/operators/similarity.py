@@ -11,16 +11,10 @@ Two paths, both set-based:
   precompute a broadcast matrix — same plan shape). Vectors sharing the
   query's signature bucket get exact re-ranking; the scan is pruned by the
   bucket equality filter, which pushes down to the signature column.
-
-``pandas_cosine_topk`` is the Arrow-vectorized variant (mapInPandas +
-numpy) for when the built-ins become the bottleneck at very high dims.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -197,34 +191,6 @@ def ivf_ann_topk(
         F.col(id_col), F.round(cosine_similarity(F.col("__v"), q), round_digits).alias("cosine")
     )
     return out.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
-def pandas_cosine_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Arrow-vectorized brute force: numpy batch dot products via
-    mapInPandas, then a global top-k. Per-partition top-k bounds the
-    shuffle to k rows per task."""
-    import numpy as np
-
-    qv = None
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q = np.asarray(query_vec, dtype=np.float64)
-        qn = np.linalg.norm(q)
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].map(lambda x: np.asarray(x, dtype=np.float64)).values)
-            sims = mat @ q / (np.linalg.norm(mat, axis=1) * qn)
-            out = pd.DataFrame({id_col: pdf[id_col], "cosine": np.round(sims, 4)})
-            yield out.nlargest(k, "cosine")
-
-    schema = f"{id_col} long, cosine double"
-    scored = embeddings.select(id_col, vec_col).mapInPandas(score, schema)
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
 def sparse_token_cosine_pairs(

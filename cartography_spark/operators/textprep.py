@@ -271,52 +271,6 @@ def contamination_overlap(
     )
 
 
-def chunk_documents_udtf(
-    docs: DataFrame,
-    chunk_tokens: int = 20,
-    stride: int = 15,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Python-UDTF twin of :func:`chunk_documents` — one input document
-    row expands to N chunk rows via a LATERAL table function (Spark 4's
-    arrow-optimized ``@udtf``). Same contract and output columns.
-
-    This exists to cover the UDTF API surface and as the escape hatch
-    for chunkers that NEED Python (a real BPE tokenizer, sentence
-    splitters); the expression-based chunk_documents is the production
-    path — per-row Python generators cannot beat a JVM slice/posexplode
-    (the repo's UDF-policy: pyspark_guide.md), and the equality test in
-    tests/test_textprep.py pins both to the same semantics.
-    """
-    import hashlib
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_id int, n_chunk_tokens int, chunk_md5 string", useArrow=True)
-    class Chunker:
-        def eval(self, text: str, size: int, step: int):
-            toks = (text or "").strip().lower().split()
-            n = max(len(toks), 1)
-            for idx, start in enumerate(range(0, n, step)):
-                chunk = toks[start : start + size]
-                yield idx, len(chunk), hashlib.md5(" ".join(chunk).encode()).hexdigest()
-
-    import uuid
-
-    spark = docs.sparkSession
-    # uuid-suffixed names: concurrent/nested invocations in one session
-    # must not clobber each other's registered function or input view
-    tag = uuid.uuid4().hex[:12]
-    fn_name, view_name = f"__chunk_udtf_{tag}", f"__chunk_in_{tag}"
-    spark.udtf.register(fn_name, Chunker)
-    docs.select(F.col(id_col), F.col(text_col)).createOrReplaceTempView(view_name)
-    return spark.sql(
-        f"SELECT t.{id_col}, c.chunk_id, c.n_chunk_tokens, c.chunk_md5 "
-        f"FROM {view_name} t, LATERAL {fn_name}({text_col}, {chunk_tokens}, {stride}) c"
-    )
-
-
 def unicode_nfc_normalize(
     df: DataFrame,
     text_col: str,

@@ -57,9 +57,9 @@ def project_batch(
 ) -> DataFrame:
     """Project raw batch rows into the node-table shape declared by the
     schema: id + declared properties + labels, one row per id."""
-    cols: list[Column] = [schema.properties[schema.id_property].expr(params).cast("string").alias("id")]
+    cols: list[Column] = [schema.properties["id"].expr(params).cast("string").alias("id")]
     for out_name, ref in schema.properties.items():
-        if out_name == schema.id_property:
+        if out_name == "id":
             continue
         cols.append(ref.expr(params).alias(out_name))
     # conditional extra labels -> labels array column (reference nodes.py:88-147)
@@ -201,7 +201,7 @@ def upsert_rel(
             batch.sparkSession, [], "src_id string, dst_id string, lastupdated long, firstseen long"
         )
     target = catalog.node(rel.target_node_label)
-    src_id = schema.properties[schema.id_property].expr(params).cast("string")
+    src_id = schema.properties["id"].expr(params).cast("string")
     rows = batch.withColumn("__src_id", src_id).filter(F.col("__src_id").isNotNull())
 
     cond = _matcher_condition(rel, target, params)

@@ -51,7 +51,6 @@ class ScopeById:
 
     label: str
     id_param: str
-    id_property: str = "id"
     rel_label: str = "RESOURCE"
     scope_on: str | tuple[str, ...] | None = None
     # The reference leans on Neo4j's globally-unique node ids (ARNs); in a

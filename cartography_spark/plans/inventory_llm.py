@@ -120,7 +120,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = dd.minhash_wide(_docs(spark, sf_dir), num_perm=16, n=3)
-    return dd.lsh_candidate_pairs(wide, bands=4, wide=True)
+    return dd.lsh_candidate_pairs(wide, bands=4)
 
 
 @query(
@@ -923,7 +923,7 @@ _MINHASH_SQL = """
 def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = dd.minhash_wide(_docs(spark, sf_dir), num_perm=16, n=3)
     wide = wide.localCheckpoint(eager=True)
-    pairs = dd.lsh_candidate_pairs(wide, bands=4, wide=True)
+    pairs = dd.lsh_candidate_pairs(wide, bands=4)
     wa = wide.select(F.col("doc_id").alias("a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(16)])
     wb = wide.select(F.col("doc_id").alias("b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(16)])
     agree = sum(
@@ -2367,7 +2367,7 @@ def q_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than the old stream join's 450M narrow rows.
     docs = _docs(spark, sf_dir)
     wide = dd.minhash_wide(docs, num_perm=16, n=3)
-    cand = dd.lsh_candidate_pairs(wide, bands=4, wide=True).select("a", "b")
+    cand = dd.lsh_candidate_pairs(wide, bands=4).select("a", "b")
     sh = dd.doc_shingles(docs, n=3)
     ss = (
         sh.groupBy("doc_id")

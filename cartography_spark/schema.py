@@ -47,7 +47,6 @@ class PropertyRef:
     ignore_case: bool = False
     fuzzy_and_ignore_case: bool = False
     one_to_many: bool = False
-    extra_index: bool = False
 
     def expr(self, params: dict[str, Any] | None = None) -> Column:
         if self.set_in_kwargs:
@@ -101,8 +100,8 @@ class RelSchema:
 class NodeSchema:
     """Node declaration (reference nodes.py:176-284).
 
-    ``properties`` maps output column name -> PropertyRef;
-    ``id`` is mandatory and used as the upsert key;
+    ``properties`` maps output column name -> PropertyRef; its ``"id"``
+    entry is mandatory and is the upsert key;
     ``sub_resource_relationship`` is the tenant edge (nodes.py:215-235);
     ``scoped_cleanup`` controls whether stale-deletes are tenant-scoped
     (nodes.py:265-284).
@@ -110,7 +109,6 @@ class NodeSchema:
 
     label: str
     properties: dict[str, PropertyRef]
-    id_property: str = "id"
     sub_resource_relationship: RelSchema | None = None
     other_relationships: tuple[RelSchema, ...] = ()
     extra_node_labels: tuple[ExtraNodeLabel, ...] = ()

@@ -1,4 +1,4 @@
-from cartography_spark.sources.parquet import TPCH_TABLES, load_tables, register_views
+from cartography_spark.sources.parquet import TPCH_TABLES
 from cartography_spark.sources.rows import rows_to_df
 
-__all__ = ["TPCH_TABLES", "load_tables", "register_views", "rows_to_df"]
+__all__ = ["TPCH_TABLES", "rows_to_df"]

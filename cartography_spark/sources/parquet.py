@@ -63,15 +63,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _TABLE_MEMO[key] = df
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TPCH_TABLES) -> dict[str, DataFrame]:
-    """Load the driver-generated synthetic tables as DataFrames."""
-    return {name: load_table(spark, sf_dir, name) for name in tables}
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TPCH_TABLES) -> dict[str, DataFrame]:
-    """Load tables and register them as temp views for ``spark.sql``."""
-    dfs = load_tables(spark, sf_dir, tables)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -362,63 +362,6 @@ def countmin_cell_stream(
     )
 
 
-EVENT_TYPE_BITS = {"click": 1, "error": 2, "purchase": 4, "signup": 8, "view": 16}
-
-
-def stateful_user_activity(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via Spark 4's ``transformWithStateInPandas``
-    (the successor API to applyInPandasWithState used above): per-user
-    event count plus a bitmask of distinct event types, kept in a typed
-    ValueState across micro-batches.
-
-    State is one (long, long) tuple per user; the bitmask makes distinct-
-    type tracking O(1) per event and order/batch-insensitive, so the
-    final emission equals the batch aggregate exactly.
-
-    Runtime dependency: the transformWithState Python runner needs
-    ``google.protobuf`` (not shipped in every environment — this repo's
-    test gates on it); ``stateful_user_totals`` above is the
-    applyInPandasWithState fallback with no such dependency.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    bits = EVENT_TYPE_BITS
-
-    class UserActivity(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("acc", "n LONG, mask LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, mask = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                for t in pdf["event_type"]:
-                    mask |= bits.get(t, 0)
-            self._state.update((n, mask))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "type_mask": [mask],
-                    "n_types": [bin(mask).count("1")],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserActivity(),
-        outputStructType="user_id long, n_events long, type_mask long, n_types long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def cdc_latest_state(
     changelog: DataFrame,
     key_col: str,

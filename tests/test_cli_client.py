@@ -105,6 +105,26 @@ def _rules_oracle(queries) -> dict[str, tuple[int, int, int]]:
     return want
 
 
+def test_cli_sync_reports_failed_stage(tmp_path, capsys):
+    """A stage whose source table is missing fails the sync with one
+    stderr line naming the stage, exit code 1, and no warehouse write."""
+    import shutil
+
+    from cartography_spark.cli import main
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for table in ("region", "nation"):
+        shutil.copy(f"{SF_SMOKE}/{table}.parquet", sf / f"{table}.parquet")
+    wh = tmp_path / "wh"
+
+    assert main(["sync", "--sf-dir", str(sf), "--warehouse", str(wh)]) == 1
+    err = capsys.readouterr().err
+    assert "stage supplier failed: " in err
+    assert "Traceback" not in err
+    assert not wh.exists()
+
+
 def test_client_read_sinks(spark):
     from cartography_spark import client
 

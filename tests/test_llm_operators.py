@@ -21,14 +21,6 @@ def _qvec(spark, sf_dir):
     return [float(x) for x in row[0]]
 
 
-def test_pandas_topk_matches_builtin(spark, sf_dir):
-    """The Arrow-vectorized top-k must agree with the JVM-side exact path."""
-    q = _qvec(spark, sf_dir)
-    a = sim.cosine_topk(_emb(spark, sf_dir), q, k=10).collect()
-    b = sim.pandas_cosine_topk(_emb(spark, sf_dir), q, k=10).collect()
-    assert [(r.vec_id, r.cosine) for r in a] == [(r.vec_id, r.cosine) for r in b]
-
-
 def test_ann_subset_of_exact_scores(spark, sf_dir):
     """ANN results re-rank exactly: every returned cosine matches the
     brute-force score for that id."""
@@ -472,7 +464,7 @@ def test_lsh_delta_equals_full_minus_base(spark):
     got = {(r.a, r.b) for r in lsh_delta_pairs(base, delta).collect()}
     full = {
         (r.a, r.b)
-        for r in lsh_candidate_pairs(minhash_wide(docs), bands=4, wide=True).collect()
+        for r in lsh_candidate_pairs(minhash_wide(docs), bands=4).collect()
     }
     want = {(a, b) for a, b in full if a % 5 == 0 or b % 5 == 0}
     assert got == want

@@ -57,7 +57,6 @@ _NESTED_LOOP_ALLOWED = {
     "permission_wildcard_eval",     # principals x resources wildcard match
     "permission_statement_eval",
     "similarity_cosine_topk",       # brute-force baseline (documented O(n))
-    "pandas_cosine_topk",
     "stats_kendall_tau_b",          # non-equi cell-pair self-join on the
                                     # domain-bounded |X|x|Y| contingency frame
                                     # (<= (50*7)^2 pairs at ANY data size)
@@ -150,6 +149,13 @@ _SCALAR_ATTACH = {
     "similarity_ivf_recall_audit",  # exact arm's documented O(n) 1-row query-vec attach + IVF centroid/LUT attaches
     "text_length_hill_tail",        # x broadcast(1-row tail threshold) on the 65-row order-stat frame
 }
+
+
+def test_plan_allowlists_name_registry_queries():
+    """Every allowlisted name is a registry query: a stale entry would
+    silently allow a nested loop to whatever later takes its name."""
+    reg = _registry()
+    assert not (_NESTED_LOOP_ALLOWED | _SCALAR_ATTACH) - set(reg)
 
 
 def test_no_accidental_cartesian_anywhere(spark):

@@ -200,45 +200,6 @@ def test_streaming_countmin_cells_equal_batch(spark, sf_dir):
     }
 
 
-def test_transform_with_state_activity(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas: per-user count + event-type
-    bitmask state equals the batch aggregate. Skipped where the
-    transformWithState runner's protobuf dependency is absent."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from cartography_spark.sources.parquet import load_table
-    from cartography_spark.streaming.events import (
-        EVENT_TYPE_BITS,
-        stateful_user_activity,
-    )
-
-    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    got = {
-        tuple(r)
-        for r in run_available_now(
-            stateful_user_activity(stream), "tws_activity", output_mode="update"
-        ).collect()
-    }
-    mask_expr = F.sum_distinct(
-        F.create_map(
-            *[x for t, b in EVENT_TYPE_BITS.items() for x in (F.lit(t), F.lit(b))]
-        )[F.col("event_type")]
-    ).cast("long")
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            mask_expr.alias("type_mask"),
-            F.countDistinct("event_type").alias("n_types"),
-        )
-    )
-    assert got == {tuple(r) for r in batch.collect()}
-
-
 def test_stream_lsh_dedup_matches_batch(spark, sf_dir, tmp_path):
     """Streaming near-dup detection == the one-shot batch delta run: every
     pair is discovered exactly once, when its later member arrives."""

@@ -86,21 +86,6 @@ def test_contamination_boundaries(spark):
     assert out[2].n_matched == 0 and not out[2].contaminated and out[2].contam_frac == 0.0
 
 
-def test_udtf_chunker_matches_jvm_chunker(spark, sf_dir):
-    """The Python-UDTF chunker and the expression-based chunker must be
-    row-for-row identical (same ids, sizes, md5s) on real documents."""
-    from cartography_spark.operators.textprep import (
-        chunk_documents,
-        chunk_documents_udtf,
-    )
-    from cartography_spark.sources.parquet import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(100)
-    jvm = {tuple(r) for r in chunk_documents(docs).collect()}
-    py = {tuple(r) for r in chunk_documents_udtf(docs).collect()}
-    assert jvm == py and jvm
-
-
 def test_length_bucket_batches_boundaries(spark):
     """Exact powers of two stay in their own bucket (no pad); min_bucket
     floors tiny docs; waste is integer permille of the padded total."""

@@ -14,18 +14,9 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from cartography_spark.sources.parquet import TPCH_TABLES  # noqa: E402
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -57,7 +48,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = [a for a in sys.argv[1:] if "/" not in a]
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     from cartography_spark.plans.registry import REGISTRY, all_queries
     from cartography_spark.session import get_spark
 
@@ -65,7 +55,7 @@ def main() -> int:
     spark = get_spark("oracle-check")
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TPCH_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     names = only or list(REGISTRY)

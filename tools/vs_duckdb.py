@@ -27,9 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from cartography_spark.sources.parquet import TPCH_TABLES  # noqa: E402
 
 DEFAULT_QUERIES = [
     "multihop_join_revenue",
@@ -68,7 +66,7 @@ def main() -> None:
 
     con = duckdb.connect()
     con.execute(f"SET threads={os.environ.get('SPARK_GRAFT_CPUS', '32')}")
-    for t in TABLES:
+    for t in TPCH_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

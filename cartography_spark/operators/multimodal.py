@@ -1,6 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed by Arrow-batched pandas functions
-over ``mapInPandas``.
+columns with typed metadata.
+
+Every operator here is a plain per-row Python function run by one driver,
+``_map_rows``: it selects the input columns, makes one Arrow-batched
+``mapInPandas`` pass, calls the row function on each row and collects the
+zero, one or many output tuples it yields. A synthesizer is an
+``encode(md5(text)) -> bytes`` function (``_synthesize``); the three
+grayscale decoders share one stats body (``_gray_meta``).
 
 The decoders are REAL parsers of real containers:
 
@@ -16,9 +22,9 @@ The decoders are REAL parsers of real containers:
 
 No codec library is needed: BMP/WAV are byte-layout formats and PNG's
 DEFLATE comes from stdlib zlib. Formats whose codecs are not in the
-stdlib (JPEG/MP3/H.264) would slot into the same ``mapInPandas`` batch
-loop via e.g. Pillow/ffmpeg; the Spark-side plan (narrow transformation,
-Arrow transport, no shuffle) is identical.
+stdlib (MP3/H.264) would slot into the same row driver via e.g. ffmpeg;
+the Spark-side plan (narrow transformation, Arrow transport, no shuffle)
+is identical.
 
 The synthesizers emit pixel/sample payloads tiled from ``md5(text)`` so
 every decoded feature (dims, mean/std pixel, duration, mean |amplitude|,
@@ -37,13 +43,35 @@ the SURVEY "beyond-reference" training-data-pipeline requirements.
 
 from __future__ import annotations
 
+import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def _map_rows(
+    df: DataFrame,
+    cols: list[str],
+    fn: Callable[..., Iterable[tuple]],
+    schema: str | StructType,
+) -> DataFrame:
+    """The module's one Python pass: select ``cols``, run one
+    ``mapInPandas`` over them, call ``fn(*values)`` on each row and collect
+    the output tuples it yields (none, one or many), laid out as
+    ``schema``."""
+    names = (schema if isinstance(schema, StructType) else StructType.fromDDL(schema)).names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for row in zip(*(pdf[c].tolist() for c in cols)) for out in fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -276,12 +304,17 @@ IMG_WIDTH = 4  # 12 bytes/row -> stride 12, no padding; 12*H is a multiple
 AUDIO_RATE = 16000
 
 
-def _digest_frame(pdf: pd.DataFrame, text_col: str, id_col: str):
-    import hashlib
+def _synthesize(
+    docs: DataFrame, text_col: str, id_col: str, out_col: str, encode: Callable[[bytes], bytes]
+) -> DataFrame:
+    """One ``(id, out_col)`` row per doc, payload = ``encode(md5(text))``;
+    a NULL text hashes as the empty string."""
 
-    for _, r in pdf.iterrows():
-        text = r[text_col] if r[text_col] is not None else ""
-        yield r[id_col], hashlib.md5(str(text).encode("utf-8")).digest()
+    def row(doc_id, text):
+        text = text if text is not None else ""
+        yield doc_id, encode(hashlib.md5(str(text).encode("utf-8")).digest())
+
+    return _map_rows(docs, [id_col, text_col], row, f"{id_col} long, {out_col} binary")
 
 
 def synthesize_image_column(
@@ -291,18 +324,12 @@ def synthesize_image_column(
     md5(text) byte), pixel bytes = the md5 digest tiled. Every decoded
     feature then has a closed form over the digest bytes."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                h = 4 * (1 + dig[0] % 4)
-                tile = np.frombuffer(dig, dtype=np.uint8)
-                px = np.tile(tile, IMG_WIDTH * 3 * h // 16).reshape(h, IMG_WIDTH, 3)
-                ids.append(doc_id)
-                blobs.append(bmp_encode(px))
-            yield pd.DataFrame({id_col: ids, "image": blobs})
+    def encode(dig: bytes) -> bytes:
+        h = 4 * (1 + dig[0] % 4)
+        tile = np.frombuffer(dig, dtype=np.uint8)
+        return bmp_encode(np.tile(tile, IMG_WIDTH * 3 * h // 16).reshape(h, IMG_WIDTH, 3))
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, image binary")
+    return _synthesize(docs, text_col, id_col, "image", encode)
 
 
 def synthesize_audio_column(
@@ -311,17 +338,11 @@ def synthesize_audio_column(
     """Real PCM16 mono WAV per doc: the md5 digest as 8 little-endian int16
     samples, tiled R = 2*(1 + b0 % 4) times (16..64 samples @ 16 kHz)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                base = np.frombuffer(dig, dtype="<i2")
-                reps = 2 * (1 + dig[0] % 4)
-                ids.append(doc_id)
-                blobs.append(wav_encode(np.tile(base, reps), AUDIO_RATE))
-            yield pd.DataFrame({id_col: ids, "audio": blobs})
+    def encode(dig: bytes) -> bytes:
+        base = np.frombuffer(dig, dtype="<i2")
+        return wav_encode(np.tile(base, 2 * (1 + dig[0] % 4)), AUDIO_RATE)
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, audio binary")
+    return _synthesize(docs, text_col, id_col, "audio", encode)
 
 
 def synthesize_video_column(
@@ -331,20 +352,14 @@ def synthesize_video_column(
     back-to-back (frame f's pixels = digest rolled by f bytes). The demuxer
     walks the declared BMP file sizes — a real (if minimal) container walk."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                tile = np.frombuffer(dig, dtype=np.uint8)
-                frames = []
-                for fno in range(n_frames):
-                    px = np.tile(np.roll(tile, fno), IMG_WIDTH * 3 * 4 // 16).reshape(4, IMG_WIDTH, 3)
-                    frames.append(bmp_encode(px))
-                ids.append(doc_id)
-                blobs.append(b"".join(frames))
-            yield pd.DataFrame({id_col: ids, "video": blobs})
+    def encode(dig: bytes) -> bytes:
+        tile = np.frombuffer(dig, dtype=np.uint8)
+        return b"".join(
+            bmp_encode(np.tile(np.roll(tile, fno), IMG_WIDTH * 3 * 4 // 16).reshape(4, IMG_WIDTH, 3))
+            for fno in range(n_frames)
+        )
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, video binary")
+    return _synthesize(docs, text_col, id_col, "video", encode)
 
 
 def synthesize_png_column(
@@ -356,56 +371,40 @@ def synthesize_png_column(
     Decoded stats then have the same closed form over digest bytes as the
     BMP path — but only if inflate + filter reconstruction are correct."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                h = 4 * (1 + dig[0] % 4)
-                tile = np.frombuffer(dig, dtype=np.uint8)
-                px = np.tile(tile, 8 * h // 16).reshape(h, 8)
-                ids.append(doc_id)
-                blobs.append(png_encode(px))
-            yield pd.DataFrame({id_col: ids, "image": blobs})
+    def encode(dig: bytes) -> bytes:
+        h = 4 * (1 + dig[0] % 4)
+        return png_encode(np.tile(np.frombuffer(dig, dtype=np.uint8), 8 * h // 16).reshape(h, 8))
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, image binary")
+    return _synthesize(docs, text_col, id_col, "image", encode)
 
 
-def decode_png_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
-    """Real PNG decode via Arrow-batched mapInPandas: (width, height,
-    sum_pixel, min_pixel, max_pixel, mean_pixel, valid). Integer sums,
-    exact in float64 — oracle-reproducible from the digest bytes."""
+def _gray_meta(
+    images: DataFrame, bin_col: str, id_col: str, decode: Callable[[bytes], np.ndarray | None]
+) -> DataFrame:
+    """Grayscale decode stats: (width, height, sum_pixel, min_pixel,
+    max_pixel, mean_pixel, valid), all zero and ``valid`` false where
+    ``decode`` returns None. Integer sums, exact in float64 —
+    oracle-reproducible from the digest bytes."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                k: []
-                for k in (id_col, "width", "height", "sum_pixel", "min_pixel", "max_pixel", "mean_pixel", "valid")
-            }
-            for _, r in pdf.iterrows():
-                px = png_decode(r[bin_col])
-                out[id_col].append(r[id_col])
-                if px is None:
-                    for k in ("width", "height", "sum_pixel", "min_pixel", "max_pixel"):
-                        out[k].append(0)
-                    out["mean_pixel"].append(0.0)
-                    out["valid"].append(False)
-                    continue
-                h, w = px.shape
-                s = int(px.sum(dtype=np.int64))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_pixel"].append(s)
-                out["min_pixel"].append(int(px.min()))
-                out["max_pixel"].append(int(px.max()))
-                out["mean_pixel"].append(s / (h * w))
-                out["valid"].append(True)
-            yield pd.DataFrame(out)
+    def meta(doc_id, payload):
+        px = decode(payload)
+        if px is None:
+            yield doc_id, 0, 0, 0, 0, 0, 0.0, False
+            return
+        h, w = px.shape
+        s = int(px.sum(dtype=np.int64))
+        yield doc_id, w, h, s, int(px.min()), int(px.max()), s / (h * w), True
 
     schema = (
         f"{id_col} long, width int, height int, sum_pixel long, min_pixel int, "
         "max_pixel int, mean_pixel double, valid boolean"
     )
-    return images.mapInPandas(extract, schema)
+    return _map_rows(images, [id_col, bin_col], meta, schema)
+
+
+def decode_png_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
+    """Real PNG decode: the ``_gray_meta`` stats of each image."""
+    return _gray_meta(images, bin_col, id_col, png_decode)
 
 
 # ---------------------------------------------------------------------------
@@ -413,144 +412,99 @@ def decode_png_meta(images: DataFrame, bin_col: str = "image", id_col: str = "do
 # ---------------------------------------------------------------------------
 
 def decode_image_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
-    """Real BMP decode via Arrow-batched mapInPandas: (width, height,
-    n_bytes, channels, mean_pixel, std_pixel, valid).
+    """Real BMP decode: (width, height, n_bytes, channels, mean_pixel,
+    std_pixel, valid).
 
     mean/std are computed with integer sums (exact in float64) so the
     DuckDB oracle can reproduce them bit-for-bit from the digest bytes.
     """
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (id_col, "width", "height", "n_bytes", "channels", "mean_pixel", "std_pixel", "valid")}
-            for _, r in pdf.iterrows():
-                payload = r[bin_col]
-                px = bmp_decode(payload)
-                out[id_col].append(r[id_col])
-                out["n_bytes"].append(0 if payload is None else len(payload))
-                if px is None:
-                    out["width"].append(0)
-                    out["height"].append(0)
-                    out["channels"].append(0)
-                    out["mean_pixel"].append(0.0)
-                    out["std_pixel"].append(0.0)
-                    out["valid"].append(False)
-                    continue
-                h, w, c = px.shape
-                n = int(h * w * c)
-                s = int(px.sum(dtype=np.int64))
-                ss = int((px.astype(np.int64) ** 2).sum())
-                mean = s / n
-                var = ss / n - mean * mean
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(c)
-                out["mean_pixel"].append(mean)
-                out["std_pixel"].append(float(np.sqrt(max(var, 0.0))))
-                out["valid"].append(True)
-            yield pd.DataFrame(out)
+    def meta(doc_id, payload):
+        n_bytes = 0 if payload is None else len(payload)
+        px = bmp_decode(payload)
+        if px is None:
+            yield doc_id, 0, 0, n_bytes, 0, 0.0, 0.0, False
+            return
+        h, w, c = px.shape
+        n = int(h * w * c)
+        mean = int(px.sum(dtype=np.int64)) / n
+        var = int((px.astype(np.int64) ** 2).sum()) / n - mean * mean
+        yield doc_id, w, h, n_bytes, c, mean, float(np.sqrt(max(var, 0.0))), True
 
     schema = (
         f"{id_col} long, width int, height int, n_bytes int, channels int, "
         "mean_pixel double, std_pixel double, valid boolean"
     )
-    return images.mapInPandas(extract, schema)
+    return _map_rows(images, [id_col, bin_col], meta, schema)
 
 
 def extract_audio_features(audio: DataFrame, bin_col: str = "audio", id_col: str = "doc_id") -> DataFrame:
-    """Real WAV PCM16 decode through Arrow-batched mapInPandas:
-    (sample_rate, n_samples, duration_ms, mean_amplitude, rms).
+    """Real WAV PCM16 decode: (sample_rate, n_samples, duration_ms,
+    mean_amplitude, rms).
 
     mean_amplitude = mean(|sample|); rms = sqrt(mean(sample^2)); both via
     integer sums, exact in float64 — oracle-reproducible."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (id_col, "sample_rate", "n_samples", "duration_ms", "mean_amplitude", "rms")}
-            for _, r in pdf.iterrows():
-                dec = wav_decode(r[bin_col])
-                out[id_col].append(r[id_col])
-                if dec is None or len(dec[1]) == 0:
-                    out["sample_rate"].append(0)
-                    out["n_samples"].append(0)
-                    out["duration_ms"].append(0.0)
-                    out["mean_amplitude"].append(0.0)
-                    out["rms"].append(0.0)
-                    continue
-                rate, samples = dec
-                s64 = samples.astype(np.int64)
-                n = int(len(samples))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(n)
-                out["duration_ms"].append(n * 1000.0 / rate)
-                out["mean_amplitude"].append(int(np.abs(s64).sum()) / n)
-                out["rms"].append(float(np.sqrt(int((s64 * s64).sum()) / n)))
-            yield pd.DataFrame(out)
+    def features(doc_id, payload):
+        dec = wav_decode(payload)
+        if dec is None or len(dec[1]) == 0:
+            yield doc_id, 0, 0, 0.0, 0.0, 0.0
+            return
+        rate, samples = dec
+        s64 = samples.astype(np.int64)
+        n = int(len(samples))
+        yield (
+            doc_id, int(rate), n, n * 1000.0 / rate,
+            int(np.abs(s64).sum()) / n, float(np.sqrt(int((s64 * s64).sum()) / n)),
+        )
 
     schema = (
         f"{id_col} long, sample_rate int, n_samples int, duration_ms double, "
         "mean_amplitude double, rms double"
     )
-    return audio.mapInPandas(extract, schema)
+    return _map_rows(audio, [id_col, bin_col], features, schema)
 
 
 def resize_images(images: DataFrame, target_w: int, target_h: int, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
     """Real nearest-neighbor BMP resize: decode pixels, index-sample rows and
-    columns, re-encode. Invalid payloads pass through as NULL."""
+    columns, re-encode. Every other column passes through; invalid payloads
+    become NULL."""
+    at = images.columns.index(bin_col)
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys = None
-        for pdf in batches:
-            out = pdf.copy()
-            blobs = []
-            for b in out[bin_col]:
-                px = bmp_decode(b)
-                if px is None:
-                    blobs.append(None)
-                    continue
-                h, w, _ = px.shape
-                yi = (np.arange(target_h) * h) // target_h
-                xi = (np.arange(target_w) * w) // target_w
-                blobs.append(bmp_encode(px[yi][:, xi]))
-            out[bin_col] = blobs
-            yield out
+    def resize(*row):
+        px, blob = bmp_decode(row[at]), None
+        if px is not None:
+            h, w, _ = px.shape
+            yi = (np.arange(target_h) * h) // target_h
+            xi = (np.arange(target_w) * w) // target_w
+            blob = bmp_encode(px[yi][:, xi])
+        yield row[:at] + (blob,) + row[at + 1 :]
 
-    return images.mapInPandas(resize, images.schema)
-
-
-# Back-compat alias (pre-round-2 name).
-resize_stub = resize_images
+    return _map_rows(images, images.columns, resize, images.schema)
 
 
 def frame_sample(videos: DataFrame, every_n: int, bin_col: str = "video", id_col: str = "doc_id") -> DataFrame:
     """Demux a concatenated-BMP video by walking each frame's declared file
     size, keep every ``every_n``-th frame, emit one row per sampled frame
-    with the frame's decoded mean pixel (explode-shaped mapInPandas)."""
+    with the frame's decoded mean pixel."""
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                payload = r[bin_col] or b""
-                pos = fno = 0
-                while pos + 6 <= len(payload) and payload[pos : pos + 2] == b"BM":
-                    (fsize,) = struct.unpack("<I", payload[pos + 2 : pos + 6])
-                    if fsize < 54 or pos + fsize > len(payload):
-                        break
-                    if fno % every_n == 0:
-                        frame = payload[pos : pos + fsize]
-                        px = bmp_decode(frame)
-                        mean = float(px.sum(dtype=np.int64) / px.size) if px is not None else 0.0
-                        rows.append({id_col: r[id_col], "frame_no": fno, "mean_pixel": mean, "frame": frame})
-                    pos += fsize
-                    fno += 1
-            yield pd.DataFrame(rows, columns=[id_col, "frame_no", "mean_pixel", "frame"])
+    def sample(doc_id, payload):
+        payload = payload or b""
+        pos = fno = 0
+        while pos + 6 <= len(payload) and payload[pos : pos + 2] == b"BM":
+            (fsize,) = struct.unpack("<I", payload[pos + 2 : pos + 6])
+            if fsize < 54 or pos + fsize > len(payload):
+                break
+            if fno % every_n == 0:
+                frame = payload[pos : pos + fsize]
+                px = bmp_decode(frame)
+                mean = float(px.sum(dtype=np.int64) / px.size) if px is not None else 0.0
+                yield doc_id, fno, mean, frame
+            pos += fsize
+            fno += 1
 
-    return videos.mapInPandas(sample, f"{id_col} long, frame_no int, mean_pixel double, frame binary")
-
-
-# Back-compat alias (pre-round-2 name/shape changed: adds mean_pixel column).
-frame_sample_stub = frame_sample
+    schema = f"{id_col} long, frame_no int, mean_pixel double, frame binary"
+    return _map_rows(videos, [id_col, bin_col], sample, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -573,34 +527,19 @@ def image_ahash(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id
     shuffle; the hash (not the pixels) is what downstream joins carry.
     """
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (id_col, "ahash", "band_hi", "band_lo", "valid")}
-            for _, r in pdf.iterrows():
-                px = bmp_decode(r[bin_col])
-                out[id_col].append(r[id_col])
-                if px is None or px.size % 16 != 0:
-                    out["ahash"].append(0)
-                    out["band_hi"].append(0)
-                    out["band_lo"].append(0)
-                    out["valid"].append(False)
-                    continue
-                flat = px.reshape(-1).astype(np.int64)
-                pos_sum = flat.reshape(-1, 16).sum(axis=0)
-                total = int(flat.sum())
-                reps = flat.size // 16
-                # bit i: pos_mean_i > overall_mean  <=>  16*pos_sum_i > total
-                bits = 16 * pos_sum > total
-                ah = int(sum(1 << i for i in range(16) if bits[i]))
-                out["ahash"].append(ah)
-                out["band_hi"].append(ah >> 8)
-                out["band_lo"].append(ah & 0xFF)
-                out["valid"].append(True)
-            yield pd.DataFrame(out)
+    def ahash(doc_id, payload):
+        px = bmp_decode(payload)
+        if px is None or px.size % 16 != 0:
+            yield doc_id, 0, 0, 0, False
+            return
+        flat = px.reshape(-1).astype(np.int64)
+        # bit i: pos_mean_i > overall_mean  <=>  16*pos_sum_i > total
+        bits = 16 * flat.reshape(-1, 16).sum(axis=0) > int(flat.sum())
+        ah = int(sum(1 << i for i in range(16) if bits[i]))
+        yield doc_id, ah, ah >> 8, ah & 0xFF, True
 
-    return images.mapInPandas(
-        extract, f"{id_col} long, ahash long, band_hi long, band_lo long, valid boolean"
-    )
+    schema = f"{id_col} long, ahash long, band_hi long, band_lo long, valid boolean"
+    return _map_rows(images, [id_col, bin_col], ahash, schema)
 
 
 def ahash_near_dup_pairs(
@@ -839,55 +778,16 @@ def synthesize_gif_column(
     b3 = fourth md5(text) byte), pixel bytes = the md5 digest tiled. Same
     closed-form stats contract as the BMP/PNG paths."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                h = 2 * (1 + dig[3] % 8)
-                tile = np.frombuffer(dig, dtype=np.uint8)
-                px = np.tile(tile, 8 * h // 16).reshape(h, 8)
-                ids.append(doc_id)
-                blobs.append(gif_encode(px))
-            yield pd.DataFrame({id_col: ids, "image": blobs})
+    def encode(dig: bytes) -> bytes:
+        h = 2 * (1 + dig[3] % 8)
+        return gif_encode(np.tile(np.frombuffer(dig, dtype=np.uint8), 8 * h // 16).reshape(h, 8))
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, image binary")
+    return _synthesize(docs, text_col, id_col, "image", encode)
 
 
 def decode_gif_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
-    """Real GIF decode via Arrow-batched mapInPandas — same output contract
-    as decode_png_meta."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                k: []
-                for k in (id_col, "width", "height", "sum_pixel", "min_pixel", "max_pixel", "mean_pixel", "valid")
-            }
-            for _, r in pdf.iterrows():
-                px = gif_decode(r[bin_col])
-                out[id_col].append(r[id_col])
-                if px is None:
-                    for k in ("width", "height", "sum_pixel", "min_pixel", "max_pixel"):
-                        out[k].append(0)
-                    out["mean_pixel"].append(0.0)
-                    out["valid"].append(False)
-                    continue
-                h, w = px.shape
-                s = int(px.sum(dtype=np.int64))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_pixel"].append(s)
-                out["min_pixel"].append(int(px.min()))
-                out["max_pixel"].append(int(px.max()))
-                out["mean_pixel"].append(s / (h * w))
-                out["valid"].append(True)
-            yield pd.DataFrame(out)
-
-    schema = (
-        f"{id_col} long, width int, height int, sum_pixel long, min_pixel int, "
-        "max_pixel int, mean_pixel double, valid boolean"
-    )
-    return images.mapInPandas(extract, schema)
+    """Real GIF decode: the ``_gray_meta`` stats of each image."""
+    return _gray_meta(images, bin_col, id_col, gif_decode)
 
 
 # ---------------------------------------------------------------------------
@@ -1147,7 +1047,7 @@ def _jpeg_decode_scan(payload: bytes):
     blocks: (blocks, w, h) or None. Handles arbitrary DQT/DHT content,
     skips APPn/COM, rejects progressive and multi-component scans."""
     data = payload
-    if len(data) < 4 or data[:2] != b"\xff\xd8":
+    if data is None or len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
     i = 2
     qtables: dict[int, list[int]] = {}
@@ -1281,6 +1181,17 @@ def jpeg_decode(payload: bytes) -> np.ndarray | None:
     return out
 
 
+def _block_jpeg(dig: bytes, shift: int) -> bytes:
+    """16 x 8*(1 + b1 % 3) baseline JPEG of 8x8-constant blocks: block k
+    holds digest byte (k + shift) % 16."""
+    hh = 8 * (1 + dig[1] % 3)
+    px = np.zeros((hh, 16), dtype=np.uint8)
+    for k in range(2 * (hh // 8)):
+        by, bx = divmod(k, 2)
+        px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = dig[(k + shift) % 16]
+    return jpeg_encode(px)
+
+
 def synthesize_jpeg_column(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1289,59 +1200,12 @@ def synthesize_jpeg_column(
     DC-only blocks round-trip losslessly, so decoded stats have the same
     closed form over digest bytes as the other codecs — but only if the
     Huffman entropy decode, dezigzag and IDCT are all correct."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                hh = 8 * (1 + dig[1] % 3)
-                n_blocks = 2 * (hh // 8)
-                px = np.zeros((hh, 16), dtype=np.uint8)
-                for k in range(n_blocks):
-                    by, bx = divmod(k, 2)
-                    px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = dig[k % 16]
-                ids.append(doc_id)
-                blobs.append(jpeg_encode(px))
-            yield pd.DataFrame({id_col: ids, "image": blobs})
-
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, image binary")
+    return _synthesize(docs, text_col, id_col, "image", lambda dig: _block_jpeg(dig, 0))
 
 
 def decode_jpeg_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
-    """Real JPEG decode via Arrow-batched mapInPandas: (width, height,
-    sum_pixel, min_pixel, max_pixel, mean_pixel, valid)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                k: []
-                for k in (id_col, "width", "height", "sum_pixel", "min_pixel", "max_pixel", "mean_pixel", "valid")
-            }
-            for _, r in pdf.iterrows():
-                px = jpeg_decode(r[bin_col])
-                out[id_col].append(r[id_col])
-                if px is None:
-                    for k in ("width", "height", "sum_pixel", "min_pixel", "max_pixel"):
-                        out[k].append(0)
-                    out["mean_pixel"].append(0.0)
-                    out["valid"].append(False)
-                    continue
-                h, w = px.shape
-                s = int(px.sum(dtype=np.int64))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_pixel"].append(s)
-                out["min_pixel"].append(int(px.min()))
-                out["max_pixel"].append(int(px.max()))
-                out["mean_pixel"].append(s / (h * w))
-                out["valid"].append(True)
-            yield pd.DataFrame(out)
-
-    schema = (
-        f"{id_col} long, width int, height int, sum_pixel long, min_pixel int, "
-        "max_pixel int, mean_pixel double, valid boolean"
-    )
-    return images.mapInPandas(extract, schema)
+    """Real JPEG decode: the ``_gray_meta`` stats of each image."""
+    return _gray_meta(images, bin_col, id_col, jpeg_decode)
 
 
 # ---------------------------------------------------------------------------
@@ -1416,17 +1280,11 @@ def synthesize_ulaw_column(
     """Real mu-law WAV per doc: the md5 digest as 8 little-endian int16
     samples, tiled (1 + b0 % 4) times, companded to 8-bit G.711."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                base = np.frombuffer(dig, dtype="<i2").astype(np.int16)
-                smp = np.tile(base, 1 + dig[0] % 4)
-                ids.append(doc_id)
-                blobs.append(wav_ulaw_encode(smp))
-            yield pd.DataFrame({id_col: ids, "audio": blobs})
+    def encode(dig: bytes) -> bytes:
+        base = np.frombuffer(dig, dtype="<i2").astype(np.int16)
+        return wav_ulaw_encode(np.tile(base, 1 + dig[0] % 4))
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, audio binary")
+    return _synthesize(docs, text_col, id_col, "audio", encode)
 
 
 def decode_ulaw_meta(audio: DataFrame, bin_col: str = "audio", id_col: str = "doc_id") -> DataFrame:
@@ -1434,28 +1292,17 @@ def decode_ulaw_meta(audio: DataFrame, bin_col: str = "audio", id_col: str = "do
     (sample_rate, n_samples, sum_abs, sum_sq, valid) over the EXPANDED
     samples — any mis-expanded segment/mantissa anywhere breaks the sums."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (id_col, "sample_rate", "n_samples", "sum_abs", "sum_sq", "valid")}
-            for _, r in pdf.iterrows():
-                parsed = wav_ulaw_decode(r[bin_col])
-                out[id_col].append(r[id_col])
-                if parsed is None:
-                    for k in ("sample_rate", "n_samples", "sum_abs", "sum_sq"):
-                        out[k].append(0)
-                    out["valid"].append(False)
-                    continue
-                rate, smp = parsed
-                s64 = smp.astype(np.int64)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(smp))
-                out["sum_abs"].append(int(np.abs(s64).sum()))
-                out["sum_sq"].append(int((s64 * s64).sum()))
-                out["valid"].append(True)
-            yield pd.DataFrame(out)
+    def meta(doc_id, payload):
+        parsed = wav_ulaw_decode(payload)
+        if parsed is None:
+            yield doc_id, 0, 0, 0, 0, False
+            return
+        rate, smp = parsed
+        s64 = smp.astype(np.int64)
+        yield doc_id, rate, len(smp), int(np.abs(s64).sum()), int((s64 * s64).sum()), True
 
     schema = f"{id_col} long, sample_rate int, n_samples long, sum_abs long, sum_sq long, valid boolean"
-    return audio.mapInPandas(extract, schema)
+    return _map_rows(audio, [id_col, bin_col], meta, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1491,26 +1338,10 @@ def synthesize_mjpeg_column(
     block-constant baseline JPEGs; frame f's block k holds digest byte
     (k + f) % 16, so every frame differs and the oracle can recompute any
     sampled subset."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, dig in _digest_frame(pdf, text_col, id_col):
-                hh = 8 * (1 + dig[1] % 3)
-                n_frames = 2 + dig[2] % 3
-                n_blocks = 2 * (hh // 8)
-                clip = bytearray()
-                for f in range(n_frames):
-                    px = np.zeros((hh, 16), dtype=np.uint8)
-                    for k in range(n_blocks):
-                        by, bx = divmod(k, 2)
-                        px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = dig[(k + f) % 16]
-                    clip += jpeg_encode(px)
-                ids.append(doc_id)
-                blobs.append(bytes(clip))
-            yield pd.DataFrame({id_col: ids, "video": blobs})
-
-    return docs.select(id_col, text_col).mapInPandas(gen, f"{id_col} long, video binary")
+    return _synthesize(
+        docs, text_col, id_col, "video",
+        lambda dig: b"".join(_block_jpeg(dig, f) for f in range(2 + dig[2] % 3)),
+    )
 
 
 def mjpeg_frame_stats(
@@ -1521,39 +1352,24 @@ def mjpeg_frame_stats(
     MJPEG frames are independently decodable) and report exact pixel
     stats over the SAMPLED frames."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                k: []
-                for k in (id_col, "n_frames", "n_sampled", "width", "height", "sum_pixel", "valid")
-            }
-            for _, r in pdf.iterrows():
-                frames = mjpeg_split(r[bin_col])
-                out[id_col].append(r[id_col])
-                if not frames:
-                    for k in ("n_frames", "n_sampled", "width", "height", "sum_pixel"):
-                        out[k].append(0)
-                    out["valid"].append(False)
-                    continue
-                total, w, h, ok, n_sampled = 0, 0, 0, True, 0
-                for f in range(0, len(frames), every_n):
-                    px = jpeg_decode(frames[f])
-                    if px is None:
-                        ok = False
-                        break
-                    h, w = px.shape
-                    total += int(px.sum(dtype=np.int64))
-                    n_sampled += 1
-                out["n_frames"].append(len(frames))
-                out["n_sampled"].append(n_sampled)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_pixel"].append(total)
-                out["valid"].append(ok)
-            yield pd.DataFrame(out)
+    def stats(doc_id, payload):
+        frames = mjpeg_split(payload)
+        if not frames:
+            yield doc_id, 0, 0, 0, 0, 0, False
+            return
+        total, w, h, ok, n_sampled = 0, 0, 0, True, 0
+        for f in range(0, len(frames), every_n):
+            px = jpeg_decode(frames[f])
+            if px is None:
+                ok = False
+                break
+            h, w = px.shape
+            total += int(px.sum(dtype=np.int64))
+            n_sampled += 1
+        yield doc_id, len(frames), n_sampled, w, h, total, ok
 
     schema = (
         f"{id_col} long, n_frames int, n_sampled int, width int, height int, "
         "sum_pixel long, valid boolean"
     )
-    return videos.mapInPandas(extract, schema)
+    return _map_rows(videos, [id_col, bin_col], stats, schema)

@@ -43,9 +43,6 @@ def _rev_cents() -> F.Column:
     return F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("bigint")
 
 
-_REV_SQL = "CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
-
-
 @query(
     "tpch_q2_min_cost_offer",
     oracle="""

@@ -531,19 +531,3 @@ def build_rules(spark: SparkSession, sf_dir: str) -> tuple[Rule, ...]:
     """All ten ported rules (the nine catalog rules + the lineitem-backed
     cross-region trust rule)."""
     return CATALOG_RULES + (cross_region_rule(spark, sf_dir),)
-
-
-# Back-compat export: the original 4-fact hygiene bundle, now composed from
-# the split rules' facts.
-ACCOUNT_HYGIENE = Rule(
-    rule_id="account-hygiene",
-    name="Account balance and activity hygiene",
-    description="Aggregate hygiene bundle (the original round-1 rule).",
-    facts=(
-        PUBLIC_EXPOSURE.facts[0],
-        REGIONAL_EXPOSURE.facts[0],
-        ADMIN_PRIVILEGES.facts[0],
-        UNMANAGED_ACCOUNTS.facts[0],
-    ),
-    frameworks=(fw("cis", "1.12"), fw("soc2", "CC6.1")),
-)

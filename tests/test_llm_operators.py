@@ -1,12 +1,12 @@
-"""LLM-data operator tests beyond the oracle-checked inventory: Arrow/pandas
-paths, multimodal stubs, simhash near-pairs, wildcard translation."""
+"""LLM-data operator tests beyond the oracle-checked inventory: ANN and
+vector search, simhash near-pairs, wildcard translation, data selection and
+corpus statistics. The multimodal codecs are tested in test_multimodal.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from cartography_spark.functions.permissions import wildcard_match
-from cartography_spark.operators import multimodal as mm
 from cartography_spark.operators import similarity as sim
 from cartography_spark.operators.dedup import simhash, simhash_near_pairs
 from cartography_spark.sources.parquet import load_table
@@ -30,81 +30,6 @@ def test_ann_subset_of_exact_scores(spark, sf_dir):
     assert ann, "query vector must at least match itself in its own bucket"
     for r in ann:
         assert abs(exact[r.vec_id] - r.cosine) < 1e-9
-
-
-def test_bmp_codec_roundtrip_exact():
-    """bmp_encode -> bmp_decode is lossless, including stride padding."""
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    for w, h in [(1, 1), (3, 5), (4, 8), (7, 2)]:  # w=3,7 exercise padding
-        px = rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
-        out = mm.bmp_decode(mm.bmp_encode(px))
-        assert out is not None and (out == px).all()
-    assert mm.bmp_decode(b"JUNKJUNKJUNK" * 10) is None
-
-
-def test_wav_codec_roundtrip_exact():
-    import numpy as np
-
-    s = (np.arange(-5, 37) * 911).astype(np.int16)
-    dec = mm.wav_decode(mm.wav_encode(s, rate=8000))
-    assert dec is not None
-    rate, out = dec
-    assert rate == 8000 and (out == s).all()
-    assert mm.wav_decode(b"RIFFxxxxNOPE") is None
-
-
-def test_multimodal_roundtrip(spark, sf_dir):
-    import hashlib
-
-    docs = load_table(spark, sf_dir, "documents")
-    images = mm.synthesize_image_column(docs)
-    meta = mm.decode_image_meta(images)
-    rows = meta.collect()
-    assert rows and all(
-        r.valid and r.width == 4 and r.height % 4 == 0 and r.channels == 3
-        and r.n_bytes == 54 + 12 * r.height
-        for r in rows
-    )
-    # spot-check decoded stats against the digest closed form
-    texts = {r.doc_id: r.text for r in docs.limit(5).collect()}
-    by_id = {r.doc_id: r for r in rows}
-    for doc_id, text in texts.items():
-        dig = hashlib.md5(text.encode()).digest()
-        assert by_id[doc_id].mean_pixel == sum(dig) / 16
-    # real nearest-neighbor resize: dims change, payload re-decodes
-    resized = mm.decode_image_meta(mm.resize_images(images, 64, 64))
-    assert all(r.width == 64 and r.height == 64 and r.valid for r in resized.collect())
-    # corrupt payloads are flagged invalid, not crashed
-    bad = images.withColumn("image", F.lit(b"JUNK"))
-    assert all(not r.valid for r in mm.decode_image_meta(bad).collect())
-
-
-def test_audio_features_real_wav(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    feats = mm.extract_audio_features(mm.synthesize_audio_column(docs)).collect()
-    assert feats and all(
-        r.sample_rate == 16000 and r.n_samples in (16, 32, 48, 64)
-        and abs(r.duration_ms - r.n_samples / 16.0) < 1e-12
-        and r.rms >= r.mean_amplitude  # Cauchy-Schwarz
-        for r in feats
-    )
-
-
-def test_frame_sample_real_demux(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(5)
-    vids = mm.synthesize_video_column(docs, n_frames=6)
-    frames = mm.frame_sample(vids, every_n=2)
-    rows = frames.collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r.doc_id, []).append(r.frame_no)
-    assert all(sorted(v) == [0, 2, 4] for v in by_id.values())
-    # each emitted frame is itself a valid BMP with the declared mean
-    r0 = rows[0]
-    px = mm.bmp_decode(r0.frame)
-    assert px is not None and abs(float(px.mean()) - r0.mean_pixel) < 1e-9
 
 
 def test_simhash_near_pairs_self(spark, sf_dir):
@@ -425,32 +350,6 @@ def test_semdedup_collapse_exact_twins(spark, sf_dir):
     c = semdedup_prune(emb, k=2, rounds=2, threshold=0.9, collapse_exact=False)
     rc = {r.vec_id: (r.cluster, r.pruned) for r in c.collect()}
     assert rc == {v: s for v, s in ra.items() if v < 1000000}
-
-
-def test_ahash_identical_and_inverted_images(spark, sf_dir):
-    """An exact image copy pairs at Hamming 0; an inverted image (255-px)
-    flips every hash bit and must NOT pair at max_hamming=2. Invalid
-    payloads hash to valid=false."""
-    from cartography_spark.operators import multimodal as mm
-    from cartography_spark.sources.parquet import load_table
-    import pyspark.sql.functions as SF
-
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    images = mm.synthesize_image_column(docs)
-    twin = images.filter(SF.col("doc_id") == 0).select(
-        (SF.col("doc_id") + 1000000).alias("doc_id"), "image"
-    )
-    hashes = mm.image_ahash(images.unionByName(twin))
-    assert hashes.filter(~SF.col("valid")).count() == 0
-    pairs = {
-        (r.a, r.b): r.hamming
-        for r in mm.ahash_near_dup_pairs(hashes, max_hamming=2).collect()
-    }
-    assert pairs[(0, 1000000)] == 0
-    bad = mm.image_ahash(
-        spark.createDataFrame([(5, bytearray(b"notabmp"))], "doc_id long, image binary")
-    ).collect()[0]
-    assert not bad.valid and bad.ahash == 0
 
 
 def test_lsh_delta_equals_full_minus_base(spark):

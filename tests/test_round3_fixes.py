@@ -1,7 +1,8 @@
 """Round-3 fixes: session-mode cache hygiene gating, the IVF
 index-build/probe split, fractional as-of tolerance axes, hits_exact
-argument validation, shuffle-partition conf fallback, and the host-sized
-driver heap."""
+argument validation, shuffle-partition conf fallback, the host-sized
+driver heap, and the analysis, layout and statistics operators of that
+round. Its multimodal codec tests live in test_multimodal.py."""
 
 from __future__ import annotations
 
@@ -198,27 +199,6 @@ def test_analysis_gcp_case_projection_total(spark):
     )
 
 
-def test_png_roundtrip_all_filters():
-    """PNG encode/decode round-trips across every scanline filter type and
-    rejects corrupted CRCs and foreign bytes."""
-    import numpy as np
-
-    from cartography_spark.operators.multimodal import png_decode, png_encode
-
-    rng = np.random.RandomState(7)
-    for _ in range(8):
-        h, w = int(rng.randint(1, 16)), int(rng.randint(1, 16))
-        px = rng.randint(0, 256, (h, w)).astype(np.uint8)
-        for filters in (None, np.zeros(h, dtype=int), np.full(h, 4), rng.randint(0, 5, h)):
-            dec = png_decode(png_encode(px, filters))
-            assert dec is not None and (dec == px).all()
-    blob = bytearray(png_encode(np.arange(64, dtype=np.uint8).reshape(8, 8)))
-    blob[-5] ^= 0xFF
-    assert png_decode(bytes(blob)) is None
-    assert png_decode(b"notapng") is None
-    assert png_decode(None) is None
-
-
 def test_url_canonicalization_edges(spark):
     from cartography_spark.functions.urls import canonicalize_url, registrable_domain, split_url
 
@@ -334,35 +314,6 @@ def test_l_diversity_flags_homogeneous_groups(spark):
     assert by_nation[0] == 3 and by_nation[1] == 1
 
 
-def test_gif_lzw_roundtrip():
-    """Exact round-trip across the LZW regimes: width growth past the
-    9->10->11->12-bit boundaries, the 4096 dictionary reset (64x80 random
-    = 5120 symbols > 4096-258 entries), the cScSc repeated-run case, and
-    corruption -> None."""
-    import numpy as np
-
-    from cartography_spark.operators.multimodal import gif_decode, gif_encode
-
-    rng = np.random.RandomState(7)
-    for shape in [(1, 1), (7, 13), (16, 8), (64, 80)]:
-        px = rng.randint(0, 256, shape).astype(np.uint8)
-        dec = gif_decode(gif_encode(px))
-        assert dec is not None and (dec == px).all(), shape
-    runs = np.zeros((64, 80), np.uint8)  # constant image: cScSc-heavy
-    dec = gif_decode(gif_encode(runs))
-    assert dec is not None and (dec == runs).all()
-    blob = gif_encode(rng.randint(0, 256, (8, 8)).astype(np.uint8))
-    assert gif_decode(b"GIF89a") is None
-    assert gif_decode(blob[:40]) is None
-    assert gif_decode(None) is None
-    # flip one LZW data byte: decode must fail closed, never mis-decode
-    # silently into a wrong-size index stream
-    corrupt = bytearray(blob)
-    corrupt[-10] ^= 0x55
-    out = gif_decode(bytes(corrupt))
-    assert out is None or out.shape == (8, 8)
-
-
 def test_analysis_azure_exposure_backfill_and_antipattern(spark):
     """The Azure exposure battery (reference analysis/azure/analysis.py:9-90)
     leaves exposed_internet TOTAL on Suppliers (null-backfill statements),
@@ -443,121 +394,6 @@ def test_layout_overlap_depth_separates_layouts(spark):
     d = {r.layout: r for r in q_layout_overlap_depth(spark, "/root/testdata/sf0.01").collect()}
     assert d["hash"].avg_depth == d["hash"].max_depth  # fully interleaved
     assert d["range"].avg_depth < d["hash"].avg_depth / 10
-
-
-def test_jpeg_coefficient_roundtrip_property():
-    """Full JPEG entropy-coder property: arbitrary quantized coefficient
-    blocks (random AC patterns — runs, ZRL, EOB, every magnitude
-    category, negatives) survive encode -> marker walk -> Huffman decode
-    exactly."""
-    import numpy as np
-
-    from cartography_spark.operators.multimodal import (
-        _jpeg_decode_scan,
-        jpeg_encode_blocks,
-    )
-
-    rng = np.random.RandomState(42)
-    for trial in range(100):
-        blocks = []
-        for _ in range(rng.randint(1, 5)):
-            blk = np.zeros((8, 8), dtype=np.int64)
-            for _ in range(rng.randint(0, 16)):
-                blk[rng.randint(8), rng.randint(8)] = rng.randint(-1023, 1024)
-            blocks.append(blk)
-        w, h = 8, 8 * len(blocks)
-        parsed = _jpeg_decode_scan(jpeg_encode_blocks(blocks, w, h))
-        assert parsed is not None, trial
-        got, gw, gh = parsed
-        assert (gw, gh, len(got)) == (w, h, len(blocks))
-        for a, b in zip(blocks, got):
-            assert (a == b).all()
-
-
-def test_jpeg_pixel_roundtrip_and_rejects():
-    """Block-constant grayscale images round-trip losslessly through the
-    full lossy pipeline; corrupt markers and foreign bytes are rejected."""
-    import numpy as np
-
-    from cartography_spark.operators.multimodal import jpeg_decode, jpeg_encode
-
-    rng = np.random.RandomState(3)
-    for _ in range(20):
-        hh = 8 * rng.randint(1, 4)
-        px = np.zeros((hh, 16), dtype=np.uint8)
-        for by in range(hh // 8):
-            for bx in range(2):
-                px[by * 8 : (by + 1) * 8, bx * 8 : (bx + 1) * 8] = rng.randint(0, 256)
-        enc = jpeg_encode(px)
-        dec = jpeg_decode(enc)
-        assert dec is not None and (dec == px).all()
-    assert jpeg_decode(b"not a jpeg") is None
-    assert jpeg_decode(b"\xff\xd8\xff\xd9") is None
-    broken = bytearray(jpeg_encode(np.full((8, 8), 7, dtype=np.uint8)))
-    broken[3] = 0xC2  # pretend progressive
-    assert jpeg_decode(bytes(broken)) is None
-
-
-def test_ulaw_g711_properties():
-    """G.711 companding: decode(encode(x)) is idempotent under recompand,
-    error is bounded by the segment step, sign-symmetric, zero-exact."""
-    import numpy as np
-
-    from cartography_spark.operators.multimodal import (
-        ulaw_decode,
-        ulaw_encode,
-        wav_ulaw_decode,
-        wav_ulaw_encode,
-    )
-
-    rng = np.random.RandomState(11)
-    x = rng.randint(-32768, 32768, 4096).astype(np.int16)
-    d = ulaw_decode(ulaw_encode(x))
-    assert (ulaw_decode(ulaw_encode(d)) == d).all()  # codewords are fixed points
-    err = np.abs(x.astype(np.int64) - d.astype(np.int64))
-    assert err.max() <= 1024 + 132  # half top-segment step + clip bias
-    assert ulaw_decode(ulaw_encode(np.array([0], dtype=np.int16)))[0] == 0
-    neg = ulaw_decode(ulaw_encode(-x))
-    assert (neg == -d.astype(np.int32)).all()
-    rate, smp = wav_ulaw_decode(wav_ulaw_encode(x))
-    assert rate == 8000 and (smp == d).all()
-    assert wav_ulaw_decode(b"junk") is None
-
-
-def test_mjpeg_split_and_frame_sampling():
-    """MJPEG stream splitting is exact (EOI cannot occur inside
-    entropy-coded data thanks to byte stuffing), frames round-trip
-    individually, and the stride-sampled stats match a full decode."""
-    import numpy as np
-
-    from cartography_spark.operators.multimodal import (
-        jpeg_decode,
-        jpeg_encode,
-        mjpeg_split,
-    )
-
-    rng = np.random.RandomState(7)
-    frames_px = [
-        (rng.randint(0, 256, (16, 16)) // 16 * 16).astype(np.uint8) for _ in range(5)
-    ]
-    # block-constant frames (the synthesized shape) decode exactly
-    for px in frames_px:
-        for by in range(0, 16, 8):
-            for bx in range(0, 16, 8):
-                px[by : by + 8, bx : bx + 8] = px[by, bx]
-    clip = b"".join(jpeg_encode(px) for px in frames_px)
-    frames = mjpeg_split(clip)
-    assert frames is not None and len(frames) == 5
-    for raw, px in zip(frames, frames_px):
-        dec = jpeg_decode(raw)
-        assert dec is not None and (dec == px).all()
-    # stride-2 sampling touches exactly frames 0, 2, 4
-    sampled = [jpeg_decode(frames[f]).sum(dtype=np.int64) for f in range(0, 5, 2)]
-    assert len(sampled) == 3
-    # malformed streams are rejected, not mis-split
-    assert mjpeg_split(b"") is None
-    assert mjpeg_split(b"\x00\x01") is None
-    assert mjpeg_split(clip + b"\xff\xd8\xff") is None  # trailing truncated frame
 
 
 def test_viterbi_segmentation_matches_bruteforce(spark):

@@ -111,7 +111,7 @@ def cmd_rules_run(args: argparse.Namespace) -> int:
     if args.format == "json":
         print(format_json(results, max_findings=args.max_findings))
     else:
-        print(format_text(results, color=False, max_findings=0))
+        print(format_text(results))
     return 0
 
 

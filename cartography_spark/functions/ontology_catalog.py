@@ -3,8 +3,8 @@ the module->ontology field-mapping spec compiler.
 
 Reference: cartography/models/ontology/labels.py (42 ``ExtraNodeLabel``
 records, kind=ONTOLOGY) and models/ontology/mapping/specs.py
-(``OntologyFieldMapping`` / ``OntologyNodeMapping`` / ``OntologyMapping``
-with eight ``special_handling`` transforms). The reference attaches these
+(``OntologyFieldMapping`` / ``OntologyNodeMapping`` with eight
+``special_handling`` transforms). The reference attaches these
 labels at ingest and materializes ``_ont_<field>`` properties per node;
 here the label catalog is a first-class dimension table and a mapping spec
 compiles to ONE Spark ``select`` of Column expressions (whole-stage
@@ -112,12 +112,6 @@ class OntologyNodeMapping:
     node_label: str
     fields: tuple[OntologyFieldMapping, ...]
     eligible_for_source: bool = True
-
-
-@dataclass(frozen=True)
-class OntologyMapping:
-    module_name: str
-    nodes: tuple[OntologyNodeMapping, ...]
 
 
 def compile_field(m: OntologyFieldMapping) -> Column:

@@ -33,24 +33,18 @@ def wildcard_match(value: Column, pattern: Column) -> Column:
     return F.like(F.lower(value), F.lower(wildcard_to_like(pattern)))
 
 
-def evaluate_policy_grid(
-    names: DataFrame,
-    statements: DataFrame,
-    name_col: str = "name",
-    pattern_col: str = "pattern",
-    effect_col: str = "effect",
-) -> DataFrame:
+def evaluate_policy_grid(names: DataFrame, statements: DataFrame) -> DataFrame:
     """For every name: allowed iff >=1 Allow statement matches and no Deny
     statement matches (explicit deny wins — :157-181). ``statements`` is a
     small dim -> broadcast; the match is a theta join on LIKE."""
-    s = F.broadcast(statements.select(pattern_col, effect_col))
-    m = names.join(s, wildcard_match(F.col(name_col), F.col(pattern_col)), "left")
+    s = F.broadcast(statements.select("pattern", "effect"))
+    m = names.join(s, wildcard_match(F.col("name"), F.col("pattern")), "left")
     return (
-        m.groupBy(name_col)
+        m.groupBy("name")
         .agg(
             (
-                (F.count(F.when(F.col(effect_col) == "Allow", 1)) > 0)
-                & (F.count(F.when(F.col(effect_col) == "Deny", 1)) == 0)
+                (F.count(F.when(F.col("effect") == "Allow", 1)) > 0)
+                & (F.count(F.when(F.col("effect") == "Deny", 1)) == 0)
             ).alias("allowed")
         )
     )
@@ -91,12 +85,7 @@ def statement_matches(
     )
 
 
-def principal_allowed_grid(
-    grid: DataFrame,
-    statements: DataFrame,
-    permission_col: str = "permission",
-    resource_col: str = "resource",
-) -> DataFrame:
+def principal_allowed_grid(grid: DataFrame, statements: DataFrame) -> DataFrame:
     """For every (permission, resource) row of ``grid``: allowed iff at
     least one Allow statement fully matches and NO Deny statement matches —
     ``principal_allowed_on_resource`` (:157-181) as one relational pass.
@@ -109,12 +98,12 @@ def principal_allowed_grid(
     """
     m = grid.crossJoin(F.broadcast(statements))
     hit = statement_matches(
-        F.col(permission_col), F.col(resource_col),
+        F.col("permission"), F.col("resource"),
         F.col("actions"), F.col("notactions"), F.col("resources"), F.col("notresources"),
     )
     return (
         m.withColumn("__hit", hit)
-        .groupBy(permission_col, resource_col)
+        .groupBy("permission", "resource")
         .agg(
             (
                 (F.count(F.when(F.col("__hit") & (F.col("effect") == "Allow"), 1)) > 0)

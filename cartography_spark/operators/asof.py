@@ -66,7 +66,6 @@ def asof_join_forward(
     by: str,
     ts: str,
     value_cols: tuple[str, ...],
-    tie_col: str | None = None,
     prefix: str = "asof_",
 ) -> DataFrame:
     """Forward as-of join: attach the EARLIEST right row with the same key
@@ -77,7 +76,7 @@ def asof_join_forward(
     nearest following right row backward onto each left row.
 
     Ties: a right row at exactly left.ts is visible; among right rows
-    sharing (key, ts), the LOWEST tie-column value wins (deterministic
+    sharing (key, ts), the LOWEST ``event_id`` wins (deterministic
     mirror of the backward form's highest-wins).
     """
     lt = left.withColumn("__ts", F.col(ts)).withColumn("__side", F.lit(1)).withColumn(
@@ -87,7 +86,7 @@ def asof_join_forward(
         F.col(by),
         F.col(ts).alias("__ts"),
         F.lit(0).alias("__side"),
-        (F.col(tie_col) if tie_col else F.lit(0)).cast("long").alias("__tie"),
+        F.col("event_id").cast("long").alias("__tie"),
         F.col(ts).alias(prefix + ts),
         *[F.col(c).alias(prefix + c) for c in value_cols],
     )
@@ -113,8 +112,6 @@ def asof_join_nearest(
     ts: str,
     value_cols: tuple[str, ...],
     left_id: str,
-    tie_col: str | None = None,
-    prefix: str = "asof_",
 ) -> DataFrame:
     """Nearest as-of join: attach whichever same-key right row is closer
     in time, looking BOTH directions; exact-distance ties go to the
@@ -123,12 +120,9 @@ def asof_join_nearest(
     equi-join on ``left_id``; per-direction tie rules are inherited, so
     the result stays fully deterministic.
     """
-    b = asof_join_backward(left, right, by, ts, value_cols, tie_col, prefix="__b_")
-    f = asof_join_forward(left, right, by, ts, value_cols, tie_col, prefix="__f_")
-    fsel = f.select(
-        F.col(left_id),
-        *[F.col(f"__f_{c}") for c in (ts, *value_cols)],
-    )
+    b = asof_join_backward(left, right, by, ts, value_cols, "event_id", prefix="__b_")
+    f = asof_join_forward(left, right, by, ts, value_cols, prefix="__f_")
+    fsel = f.select(F.col(left_id), *[F.col(f"__f_{c}") for c in (ts, *value_cols)])
     j = b.join(fsel, left_id)
     # distance works for any orderable timeline: timestamps go through
     # unix_micros, numeric timelines subtract directly (the
@@ -142,7 +136,7 @@ def asof_join_nearest(
     df = _axis(F.col(f"__f_{ts}")) - _axis(F.col(ts))
     use_b = F.when(db.isNull(), F.lit(False)).otherwise(df.isNull() | (db <= df))
     picked = [
-        F.when(use_b, F.col(f"__b_{c}")).otherwise(F.col(f"__f_{c}")).alias(prefix + c)
+        F.when(use_b, F.col(f"__b_{c}")).otherwise(F.col(f"__f_{c}")).alias(f"asof_{c}")
         for c in (ts, *value_cols)
     ]
     return j.select(*left.columns, *picked)

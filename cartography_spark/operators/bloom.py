@@ -12,8 +12,8 @@ convention, see operators/dedup.py), so the DuckDB oracle reproduces the
 exact bitset and the exact prefilter-kept row count.
 
 Scale notes:
-- The bitset collect is a scalar reduction (m/8 bytes, <=128 B at the
-  default m=1024) — the same driver-side tiny-broadcast pattern as
+- The bitset collect is a scalar reduction (m/8 bytes, 128 B at
+  m = ``BLOOM_BITS`` = 1024) — the same driver-side tiny-broadcast pattern as
   Spark's own runtime bloom pushdown
   (``spark.sql.optimizer.runtime.bloomFilter.enabled``, which covers the
   production path with an opaque JVM sketch; this operator exists for
@@ -32,44 +32,51 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.operators.sketches import _h32
+from cartography_spark.operators.dedup import portable_hash32
+
+BLOOM_BITS = 1024
+BLOOM_HASHES = 3
 
 
 def _bit_pos(col: F.Column, i: int, m: int) -> F.Column:
-    return _h32(F.concat(F.lit(f"{i}:"), col.cast("string"))) % m
+    return portable_hash32(F.concat(F.lit(f"{i}:"), col.cast("string"))) % m
 
 
-def bloom_build(small: DataFrame, key: str, m: int = 1024, k: int = 3) -> str:
-    """Build the m-bit Bloom bitset of ``small[key]`` as a '0'/'1'
-    string. Distributed part: k hash projections + a distinct on at most
-    m integers; the driver only ever sees <=m bits."""
-    probes = F.explode(F.array(*[F.lit(j) for j in range(k)])).alias("i")
+def bloom_build(small: DataFrame, key: str) -> str:
+    """Build the BLOOM_BITS-bit Bloom bitset of ``small[key]`` as a '0'/'1'
+    string. Distributed part: BLOOM_HASHES hash projections + a distinct on at
+    most BLOOM_BITS integers; the driver only ever sees <=BLOOM_BITS bits."""
+    probes = F.explode(F.array(*[F.lit(j) for j in range(BLOOM_HASHES)])).alias("i")
     bits = (
         small.select(F.col(key).cast("string").alias("v"), probes)
-        .select((_h32(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("v"))) % m).alias("b"))
+        .select(
+            (
+                portable_hash32(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("v")))
+                % BLOOM_BITS
+            ).alias("b")
+        )
         .distinct()
         .collect()
     )
-    out = ["0"] * m
+    out = ["0"] * BLOOM_BITS
     for r in bits:
         out[r.b] = "1"
     return "".join(out)
 
 
-def bloom_might_contain(col: F.Column, bitset: str, k: int = 3) -> F.Column:
-    """Predicate: all k bit positions of ``col`` are set in ``bitset``.
+def bloom_might_contain(col: F.Column, bitset: str) -> F.Column:
+    """Predicate: all BLOOM_HASHES bit positions of ``col`` are set in ``bitset``.
     A literal-string probe — stays inside the scan stage's codegen."""
     m = len(bitset)
     lit = F.lit(bitset)
     cond = F.lit(True)
-    for i in range(k):
+    for i in range(BLOOM_HASHES):
         cond = cond & (F.substring(lit, _bit_pos(col, i, m) + 1, 1) == "1")
     return cond
 
 
-def bloom_prefilter(big: DataFrame, small: DataFrame, big_key: str, small_key: str,
-                    m: int = 1024, k: int = 3) -> DataFrame:
+def bloom_prefilter(big: DataFrame, small: DataFrame, big_key: str, small_key: str) -> DataFrame:
     """Filter ``big`` down to rows whose ``big_key`` might be in
     ``small[small_key]`` — no shuffle, no false negatives."""
-    bitset = bloom_build(small, small_key, m=m, k=k)
-    return big.filter(bloom_might_contain(F.col(big_key), bitset, k=k))
+    bitset = bloom_build(small, small_key)
+    return big.filter(bloom_might_contain(F.col(big_key), bitset))

@@ -29,11 +29,11 @@ from pyspark.sql import functions as F
 _WORD_RE = "[a-z]+"
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """(word, wt, sym): lowercase word frequencies with the initial
     space-joined character symbol string ('the' -> 't h e')."""
     words = docs.select(
-        F.explode(F.expr(f"regexp_extract_all(lower({text_col}), '{_WORD_RE}', 0)")).alias("word")
+        F.explode(F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")).alias("word")
     )
     return (
         words.groupBy("word")
@@ -112,14 +112,12 @@ def _apply_merge_frame(wf: DataFrame, m: DataFrame) -> DataFrame:
     )
 
 
-def bpe_learn_merges(
-    docs: DataFrame, n_merges: int = 4, text_col: str = "text"
-) -> DataFrame:
+def bpe_learn_merges(docs: DataFrame, n_merges: int = 4) -> DataFrame:
     """Learn the first ``n_merges`` BPE merges over the corpus; returns the
     merge table (rank, lhs, rhs, merged, weight). Per round the corpus
     costs nothing — only the vocabulary table is re-folded (checkpointed
     per round to truncate lineage)."""
-    wf = word_freqs(docs, text_col).localCheckpoint(eager=True)
+    wf = word_freqs(docs).localCheckpoint(eager=True)
     # The per-round argmax stays a LAZY 1-row frame that is broadcast into
     # the fold (_apply_merge_frame), so each round is ONE checkpoint job —
     # the old literal-based fold needed a collect() of the argmax BEFORE it
@@ -154,28 +152,6 @@ def bpe_learn_merges(
     )
 
 
-def subword_vocab(
-    docs: DataFrame,
-    min_count: int = 20,
-    max_piece_len: int = 4,
-    text_col: str = "text",
-) -> DataFrame:
-    """Mine a subword vocabulary: every substring of length 2..max_piece_len
-    of the DISTINCT corpus words, kept when its positional occurrence count
-    (across distinct words) reaches ``min_count``. Vocab-bounded like BPE
-    training — the corpus costs one distinct-word aggregation; substring
-    explosion runs over |V| words, never the 100 TB of text."""
-    words = docs.select(
-        F.explode(F.expr(f"regexp_extract_all(lower({text_col}), '{_WORD_RE}', 0)")).alias("w")
-    ).distinct()
-    pieces = _candidate_pieces(words, max_piece_len)
-    return (
-        pieces.groupBy("piece")
-        .agg(F.count(F.lit(1)).alias("n_positions"))
-        .filter(F.col("n_positions") >= min_count)
-    )
-
-
 def _candidate_pieces(words: DataFrame, max_piece_len: int) -> DataFrame:
     """(w, s, e, piece) for every 0-indexed span [s, e) of length
     2..max_piece_len in each distinct word. Both sequence() bounds are
@@ -202,18 +178,13 @@ def _candidate_pieces(words: DataFrame, max_piece_len: int) -> DataFrame:
     )
 
 
-def subword_viterbi_segment(
-    docs: DataFrame,
-    min_count: int = 20,
-    max_piece_len: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def subword_viterbi_segment(docs: DataFrame, min_count: int = 20) -> DataFrame:
     """Unigram-LM-style Viterbi segmentation (the SentencePiece decoding
     shape, Kudo 2018) with unit piece costs: segment every corpus word into
     the MINIMUM number of vocabulary pieces, where the vocab is mined from
-    the data (``subword_vocab``) and single characters are always valid
-    (full coverage, the unigram-LM char fallback). Returns per-doc
+    the data (the 2..4-character substrings of the distinct corpus words
+    seen at ``min_count`` positions or more) and single characters are
+    always valid (full coverage, the unigram-LM char fallback). Returns per-doc
     (n_words, n_chars, n_pieces).
 
     Spark-first dataflow — the per-word dynamic program is a pure-Column
@@ -227,10 +198,10 @@ def subword_viterbi_segment(
     Unit costs keep the optimum integer-exact, so a DuckDB recursive-CTE
     oracle hash-matches the whole pipeline."""
     words = docs.select(
-        F.explode(F.expr(f"regexp_extract_all(lower({text_col}), '{_WORD_RE}', 0)")).alias("w")
+        F.explode(F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")).alias("w")
     )
     distinct_words = words.distinct()
-    pieces = _candidate_pieces(distinct_words, max_piece_len)
+    pieces = _candidate_pieces(distinct_words, 4)
     vocab = (
         pieces.groupBy("piece")
         .agg(F.count(F.lit(1)).alias("n_positions"))
@@ -262,12 +233,12 @@ def subword_viterbi_segment(
         .select("w", F.element_at(dp, F.length("w") + 1).alias("np"))
     )
     doc_words = docs.select(
-        F.col(id_col),
-        F.explode(F.expr(f"regexp_extract_all(lower({text_col}), '{_WORD_RE}', 0)")).alias("w"),
+        F.col("doc_id"),
+        F.explode(F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")).alias("w"),
     )
     return (
         doc_words.join(F.broadcast(segmented), "w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),
             F.sum(F.length("w")).cast("long").alias("n_chars"),
@@ -276,25 +247,20 @@ def subword_viterbi_segment(
     )
 
 
-def bpe_segment(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_segment(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned merge list to a corpus: (id, n_words, n_symbols) —
     the compression measurement you run after training. Same fold as
     training, applied in merge-rank order."""
     wf = docs.select(
-        F.col(id_col),
-        F.explode(F.expr(f"regexp_extract_all(lower({text_col}), '{_WORD_RE}', 0)")).alias("word"),
+        F.col("doc_id"),
+        F.explode(F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")).alias("word"),
     ).withColumn(
         "sym",
         F.expr("array_join(transform(sequence(1, length(word)), i -> substring(word, i, 1)), ' ')"),
     )
     for left, right in merges:
         wf = _apply_merge(wf, left, right)
-    return wf.groupBy(id_col).agg(
+    return wf.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum(F.size(F.split("sym", " "))).cast("long").alias("n_symbols"),
     )

@@ -23,8 +23,6 @@ from cartography_spark.operators.fixpoint import fixpoint
 def transitive_closure(
     edges: DataFrame,
     max_hops: int = 6,
-    src: str = "src_id",
-    dst: str = "dst_id",
     include_zero: bool = False,
 ) -> DataFrame:
     """All (src, dst, hops) pairs reachable in 1..max_hops steps, with
@@ -40,7 +38,7 @@ def transitive_closure(
     job: one job per hop, total materialized bytes O(result), not
     O(result x hops).
     """
-    base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    base = edges.select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst")).distinct()
     base = base.localCheckpoint(eager=True)  # probed every round (join + anti)
     chunks = []  # every chunk a round expanded, starting with the 1-hop edges
 
@@ -66,4 +64,4 @@ def transitive_closure(
         zero = verts.select(F.col("src"), F.col("src").alias("dst")).withColumn("hops", F.lit(0))
         # min-hop semantics: a vertex reaching itself via a cycle keeps hops=0
         reached = zero.unionByName(reached.join(zero.select("src", "dst"), ["src", "dst"], "left_anti"))
-    return reached.select(F.col("src").alias(src), F.col("dst").alias(dst), "hops")
+    return reached.select(F.col("src").alias("src_id"), F.col("dst").alias("dst_id"), "hops")

@@ -30,14 +30,12 @@ def _l2_sq(vec_col: F.Column, centroid: list[float]) -> F.Column:
     )
 
 
-def assign_clusters(
-    emb: DataFrame, centroids: list[list[float]], id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def assign_clusters(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Nearest-centroid assignment (squared L2, ties -> lowest cluster id):
     adds ``cluster`` and ``dist_sq`` columns. Pure narrow map."""
     scored = F.array(
         *[
-            F.struct(_l2_sq(F.col(vec_col), c).alias("d"), F.lit(i).alias("c"))
+            F.struct(_l2_sq(F.col("embedding"), c).alias("d"), F.lit(i).alias("c"))
             for i, c in enumerate(centroids)
         ]
     )
@@ -45,13 +43,11 @@ def assign_clusters(
     return emb.withColumn("cluster", best["c"]).withColumn("dist_sq", best["d"])
 
 
-def update_centroids(
-    assigned: DataFrame, k: int, dim: int, vec_col: str = "embedding"
-) -> list[list[float]]:
+def update_centroids(assigned: DataFrame, k: int, dim: int) -> list[list[float]]:
     """Elementwise mean per cluster, computed distributed then collected
     (k*dim rows). Empty clusters keep a zero centroid."""
     means = (
-        assigned.select("cluster", F.posexplode(F.col(vec_col)).alias("dim", "x"))
+        assigned.select("cluster", F.posexplode(F.col("embedding")).alias("dim", "x"))
         .groupBy("cluster", "dim")
         .agg(F.avg(F.col("x").cast("double")).alias("m"))
         .collect()
@@ -62,34 +58,28 @@ def update_centroids(
     return cents
 
 
-def kmeans(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans(emb: DataFrame, k: int = 16) -> DataFrame:
     """Lloyd k-means with deterministic init (the k lowest-id vectors) and
     a fixed iteration count — reproducible across runs and engines. Returns
     (vec_id, cluster, dist_sq, keep) where ``keep`` marks the cluster's
     canonical (lowest-id) member — the SemDeDup keep set."""
-    dim = len(emb.select(vec_col).head()[0])
-    init_rows = emb.orderBy(id_col).limit(k).select(vec_col).collect()
+    dim = len(emb.select("embedding").head()[0])
+    init_rows = emb.orderBy("vec_id").limit(k).select("embedding").collect()
     centroids = [[float(x) for x in r[0]] for r in init_rows]
     emb = emb.cache()
     assigned = None
-    for _ in range(iters):
-        assigned = assign_clusters(emb, centroids, id_col, vec_col)
-        centroids = update_centroids(assigned, k, dim, vec_col)
-    assigned = assign_clusters(emb, centroids, id_col, vec_col)
+    for _ in range(2):
+        assigned = assign_clusters(emb, centroids)
+        centroids = update_centroids(assigned, k, dim)
+    assigned = assign_clusters(emb, centroids)
     from pyspark.sql import Window
 
     w = Window.partitionBy("cluster")
     return assigned.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("cluster"),
         F.round(F.col("dist_sq"), 6).alias("dist_sq"),
-        (F.col(id_col) == F.min(id_col).over(w)).alias("keep"),
+        (F.col("vec_id") == F.min("vec_id").over(w)).alias("keep"),
     )
 
 
@@ -254,13 +244,7 @@ def semdedup_prune(
     )
 
 
-def trained_centroid_frame(
-    emb: DataFrame,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_mod: int = 1,
-) -> DataFrame:
+def trained_centroid_frame(emb: DataFrame, sample_mod: int = 1) -> DataFrame:
     """One integer-exact k-means round -> trained coarse-quantizer cells for
     IVF (similarity.ivf_ann_topk): returns (cid, cv array<double>), cv the
     floor-mean centroid de-quantized back to doubles (c / 1e6 — the same
@@ -274,23 +258,23 @@ def trained_centroid_frame(
     quantizers are actually built at corpus scale: centroid quality needs
     O(k * 1000) examples, not the full 100 TB — training cost drops by
     sample_mod while every vector still gets assigned to a trained cell.
-    Seeds are the first k sample members (id < k * sample_mod)."""
-    src = emb if sample_mod <= 1 else emb.filter(F.col(id_col) % sample_mod == 0)
-    q = src.select(id_col, F.posexplode(vec_col).alias("d", "v")).select(
-        id_col,
+    Seeds are the first 16 sample members (id < 16 * sample_mod)."""
+    src = emb if sample_mod <= 1 else emb.filter(F.col("vec_id") % sample_mod == 0)
+    q = src.select("vec_id", F.posexplode("embedding").alias("d", "v")).select(
+        "vec_id",
         "d",
         F.round(F.col("v").cast("double") * 1000000).cast("bigint").alias("qv"),
     )
-    seeds = q.filter(F.col(id_col) < k * max(sample_mod, 1)).select(
-        F.col(id_col).alias("cid"), "d", F.col("qv").alias("c")
+    seeds = q.filter(F.col("vec_id") < 16 * max(sample_mod, 1)).select(
+        F.col("vec_id").alias("cid"), "d", F.col("qv").alias("c")
     )
     diff = F.col("qv") - F.col("c")
     dist = (
-        q.join(F.broadcast(seeds), "d").groupBy(id_col, "cid").agg(F.sum(diff * diff).alias("dist"))
+        q.join(F.broadcast(seeds), "d").groupBy("vec_id", "cid").agg(F.sum(diff * diff).alias("dist"))
     )
-    assign = dist.groupBy(id_col).agg(F.min_by("cid", F.struct("dist", "cid")).alias("cid"))
+    assign = dist.groupBy("vec_id").agg(F.min_by("cid", F.struct("dist", "cid")).alias("cid"))
     c1 = (
-        q.join(assign, id_col)
+        q.join(assign, "vec_id")
         .groupBy("cid", "d")
         .agg(F.floor(F.sum("qv").cast("double") / F.count(F.lit(1))).cast("bigint").alias("c"))
     )
@@ -301,13 +285,7 @@ def trained_centroid_frame(
     )
 
 
-def kcenter_diverse(
-    embeddings: DataFrame,
-    k: int = 5,
-    seed_id: int = 0,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def kcenter_diverse(embeddings: DataFrame, k: int = 5, seed_id: int = 0) -> DataFrame:
     """Greedy k-center (farthest-point) diverse subset selection — the
     coverage-maximizing counterpart to SemDeDup-style near-dup pruning in
     a training-data pipeline: pick the point farthest from everything
@@ -326,42 +304,42 @@ def kcenter_diverse(
     """
     from cartography_spark.operators.similarity import _sq_dist, int8_quantize
 
-    q = int8_quantize(embeddings, vec_col=vec_col, id_col=id_col)
+    q = int8_quantize(embeddings)
     q = q.localCheckpoint(eager=True)
-    seed = q.filter(F.col(id_col) == seed_id).first()
+    seed = q.filter(F.col("vec_id") == seed_id).first()
     if seed is None:
-        raise ValueError(f"kcenter_diverse: seed_id {seed_id!r} not present in {id_col}")
+        raise ValueError(f"kcenter_diverse: seed_id {seed_id!r} not present in vec_id")
     n_candidates = q.count()
     if k > n_candidates:
         raise ValueError(
             f"kcenter_diverse: k={k} exceeds the {n_candidates} available vectors"
         )
     cur = q.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("qvec"),
         _sq_dist(F.col("qvec"), F.lit(list(seed["qvec"])).cast("array<long>")).alias("dmin"),
     ).localCheckpoint(eager=True)
-    selected: list[tuple[int, int, int]] = [(0, seed[id_col], 0)]
+    selected: list[tuple[int, int, int]] = [(0, seed["vec_id"], 0)]
     for r in range(1, k):
         chosen = (
-            cur.filter(~F.col(id_col).isin([s[1] for s in selected]))
-            .orderBy(F.desc("dmin"), F.asc(id_col))
+            cur.filter(~F.col("vec_id").isin([s[1] for s in selected]))
+            .orderBy(F.desc("dmin"), F.asc("vec_id"))
             .limit(1)
             .first()
         )
-        selected.append((r, chosen[id_col], chosen["dmin"]))
+        selected.append((r, chosen["vec_id"], chosen["dmin"]))
         newv = F.lit(list(chosen["qvec"])).cast("array<long>")
         cur = cur.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col("qvec"),
             F.least(F.col("dmin"), _sq_dist(F.col("qvec"), newv)).alias("dmin"),
         ).localCheckpoint(eager=True)
     return embeddings.sparkSession.createDataFrame(
-        selected, "sel_order int, " + id_col + " bigint, dmin bigint"
+        selected, "sel_order int, vec_id bigint, dmin bigint"
     )
 
 
-def gram_matrix(vecs: DataFrame, vec_col: str = "embedding", dims: int = 64) -> DataFrame:
+def gram_matrix(vecs: DataFrame, dims: int = 64) -> DataFrame:
     """Uncentered Gram (second-moment) matrix C = X^T X of an embedding
     column, as a (i, j, c) frame with 1-based dims — the substrate for
     spectral diagnostics (top principal direction, effective rank,
@@ -386,7 +364,7 @@ def gram_matrix(vecs: DataFrame, vec_col: str = "embedding", dims: int = 64) -> 
         seen = False
         for pdf in batches:
             if len(pdf):
-                x = np.vstack(pdf[vec_col].values)[:, :dims].astype(np.float64)
+                x = np.vstack(pdf["embedding"].values)[:, :dims].astype(np.float64)
                 g += x.T @ x
                 seen = True
         if seen:
@@ -395,13 +373,11 @@ def gram_matrix(vecs: DataFrame, vec_col: str = "embedding", dims: int = 64) -> 
                 {"i": ii.ravel() + 1, "j": jj.ravel() + 1, "c": g.ravel()}
             )
 
-    parts = vecs.select(vec_col).mapInPandas(partial, "i int, j int, c double")
+    parts = vecs.select("embedding").mapInPandas(partial, "i int, j int, c double")
     return parts.groupBy("i", "j").agg(F.sum("c").alias("c"))
 
 
-def top_pc_power(
-    vecs: DataFrame, vec_col: str = "embedding", dims: int = 64, n_iter: int = 8
-) -> DataFrame:
+def top_pc_power(vecs: DataFrame, dims: int = 64, n_iter: int = 8) -> DataFrame:
     """Dominant principal direction of the (uncentered) embedding Gram
     matrix via fixed-point power iteration — the anisotropy probe an
     embedding-quality audit runs before trusting cosine retrieval: a
@@ -435,7 +411,7 @@ def top_pc_power(
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    g = gram_matrix(vecs, vec_col, dims)
+    g = gram_matrix(vecs, dims)
     m = g.agg(F.max(F.abs(F.col("c"))).alias("m"))
     p = g.crossJoin(F.broadcast(m)).select(
         "i",
@@ -478,7 +454,7 @@ def top_pc_power(
     )
 
 
-def effective_rank(vecs: DataFrame, vec_col: str = "embedding", dims: int = 64) -> DataFrame:
+def effective_rank(vecs: DataFrame, dims: int = 64) -> DataFrame:
     """Participation-ratio effective rank of the embedding second-moment
     matrix — the one-number isotropy audit that complements
     :func:`top_pc_power`: eff_rank = tr(C)^2 / tr(C^2), which equals
@@ -502,7 +478,7 @@ def effective_rank(vecs: DataFrame, vec_col: str = "embedding", dims: int = 64) 
     only data-scale stage; the trace reductions run on the d^2-row
     frame. At 100 TB this is a single read of the embedding column.
     """
-    g = gram_matrix(vecs, vec_col, dims)
+    g = gram_matrix(vecs, dims)
     traces = g.agg(
         F.sum(F.when(F.col("i") == F.col("j"), F.col("c"))).alias("tr"),
         F.sum(F.col("c") * F.col("c")).alias("tr2"),

@@ -27,6 +27,11 @@ from pyspark.sql import functions as F
 from cartography_spark.operators.fixpoint import fixpoint
 from cartography_spark.session import shuffle_partition_count
 
+SHINGLE_N = 3
+JACCARD_THRESHOLD = 0.5
+BANDS = 4
+MAX_ITER = 6
+
 # Broadcast budget of ngram_jaccard_pairs' dense strategy: the per-doc
 # shingle bitset table must fit it.
 DENSE_JACCARD_BROADCAST_BYTES = 64 * 1024 * 1024
@@ -74,18 +79,18 @@ def ordered_dense_ids(df: DataFrame, order_cols: list[str], id_col: str) -> Data
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup: keep the lowest id per identical text hash.
     Returns (doc_id, keep, group_size). Null texts form their own group
     (null-safe join) — a plain equi-join would silently DROP null-text
     docs from the report, losing rows in a data-quality pass."""
-    h = docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("h"))
-    grp = h.groupBy("h").agg(F.min(id_col).alias("keeper"), F.count("*").alias("group_size"))
+    h = docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("h"))
+    grp = h.groupBy("h").agg(F.min("doc_id").alias("keeper"), F.count("*").alias("group_size"))
     return (
         h.alias("h").join(grp.alias("g"), F.col("h.h").eqNullSafe(F.col("g.h")))
         .select(
-            F.col(f"h.{id_col}").alias(id_col),
-            (F.col(f"h.{id_col}") == F.col("g.keeper")).alias("keep"),
+            F.col("h.doc_id").alias("doc_id"),
+            (F.col("h.doc_id") == F.col("g.keeper")).alias("keep"),
             F.col("g.group_size").alias("group_size"),
         )
     )
@@ -157,16 +162,10 @@ def _ngram_jaccard_dense(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs >= threshold, via PREFIX
-    FILTERING (exact — identical output to the naive inverted-index join).
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Exact character 3-gram Jaccard similarity pairs >= 0.5 within the
+    same ``lang``, via PREFIX FILTERING (exact — identical output to the
+    naive inverted-index join).
 
     Why: a naive inverted-index self-join generates Σ_s n_s² candidate rows;
     a shingle present in most documents alone produces |docs|² rows, which
@@ -177,9 +176,6 @@ def ngram_jaccard_pairs(
     Indexing only those prefixes removes the frequent-shingle hot spots
     entirely. Candidates are then verified exactly with one
     ``array_intersect`` per pair — no explode, no per-pair shuffle.
-
-    ``block_cols`` additionally restricts pairs to equal blocking keys
-    (e.g. lang).
 
     STRATEGY CHOICE (r9 opt; both strategies are exact and return the
     identical pair set — full-output diff + oracle verified):
@@ -211,7 +207,7 @@ def ngram_jaccard_pairs(
     """
     from pyspark.sql import Window
 
-    sh = doc_shingles(docs, n=n, text_col=text_col, id_col=id_col, extra_cols=block_cols)
+    sh = doc_shingles(docs, n=SHINGLE_N, extra_cols=("lang",))
     # materialize: consumed by freq, prefix, and the verification sets
     sh = sh.localCheckpoint(eager=True)
 
@@ -248,13 +244,7 @@ def ngram_jaccard_pairs(
     # action above.
     nwords = (vocab_size + 63) // 64
     if 0 < vocab_size and nwords <= 128:
-        if block_cols:
-            counts = [
-                r["__c"]
-                for r in docs.groupBy(*block_cols).agg(F.count("*").alias("__c")).collect()
-            ]
-        else:
-            counts = [docs.count()]
+        counts = [r["__c"] for r in docs.groupBy("lang").agg(F.count("*").alias("__c")).collect()]
         n_docs = sum(counts)
         cross_pairs = sum(c * (c - 1) / 2 for c in counts)
         # nwords multiplies D's per-pair cost; P's per-occurrence cost is
@@ -264,17 +254,17 @@ def ngram_jaccard_pairs(
             n_docs * (nwords + 3) * 8 <= DENSE_JACCARD_BROADCAST_BYTES
             and cross_pairs * nwords <= inv_index_pairs
         ):
-            return _ngram_jaccard_dense(sh, vocab, nwords, threshold, id_col, block_cols)
+            return _ngram_jaccard_dense(sh, vocab, nwords, JACCARD_THRESHOLD, "doc_id", ("lang",))
 
-    w = Window.partitionBy(id_col, *block_cols).orderBy("__sid")
-    wsz = Window.partitionBy(id_col, *block_cols)
+    w = Window.partitionBy("doc_id", "lang").orderBy("__sid")
+    wsz = Window.partitionBy("doc_id", "lang")
     ranked = (
         sh.join(F.broadcast(vocab), "shingle")
         .withColumn("__rn", F.row_number().over(w))
         .withColumn("__sz", F.count("*").over(wsz))
     )
     prefix = ranked.filter(
-        F.col("__rn") <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
+        F.col("__rn") <= F.col("__sz") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("__sz")) + 1
     )
 
     # Candidates join on the 4-byte dense id, not the shingle string, with
@@ -282,19 +272,17 @@ def ngram_jaccard_pairs(
     # J(A,B) >= t  =>  min|A|,|B| >= t * max|A|,|B| — kills
     # size-incompatible pairs before they reach the distinct.
     a = prefix.select(
-        F.col(id_col).alias("a"), "__sid", F.col("__sz").alias("__sza"),
+        F.col("doc_id").alias("a"), "__sid", F.col("__sz").alias("__sza"),
         F.col("__rn").alias("__rna"),
-        *[F.col(c).alias(f"__ba_{c}") for c in block_cols],
+        F.col("lang").alias("__ba_lang"),
     )
     b = prefix.select(
-        F.col(id_col).alias("b"), "__sid", F.col("__sz").alias("__szb"),
+        F.col("doc_id").alias("b"), "__sid", F.col("__sz").alias("__szb"),
         F.col("__rn").alias("__rnb"),
-        *[F.col(c).alias(f"__bb_{c}") for c in block_cols],
+        F.col("lang").alias("__bb_lang"),
     )
-    on = a["__sid"] == b["__sid"]
-    for c in block_cols:
-        on = on & (F.col(f"__ba_{c}") == F.col(f"__bb_{c}"))
-    size_ok = F.least("__sza", "__szb") >= F.lit(threshold) * F.greatest("__sza", "__szb")
+    on = (a["__sid"] == b["__sid"]) & (F.col("__ba_lang") == F.col("__bb_lang"))
+    size_ok = F.least("__sza", "__szb") >= F.lit(JACCARD_THRESHOLD) * F.greatest("__sza", "__szb")
     # PPJoin POSITIONAL filter (exact pruning): an occurrence at 1-based
     # rarity ranks (i, j) can support at most 1 + min(|A|-i, |B|-j)
     # intersecting shingles; a J >= t pair needs t/(1+t)·(|A|+|B|). The
@@ -304,7 +292,7 @@ def ngram_jaccard_pairs(
     # relaxes the pruning — the exact jaccard filter still runs below.
     alpha_ok = (
         1 + F.least(F.col("__sza") - F.col("__rna"), F.col("__szb") - F.col("__rnb"))
-        >= F.lit(threshold / (1.0 + threshold)) * (F.col("__sza") + F.col("__szb"))
+        >= F.lit(JACCARD_THRESHOLD / (1.0 + JACCARD_THRESHOLD)) * (F.col("__sza") + F.col("__szb"))
         - F.lit(1e-9)
     )
     cand = (
@@ -323,16 +311,16 @@ def ngram_jaccard_pairs(
     #    waste vocab_size/8 bytes per doc).
     if vocab_size <= 65536:
         nwords = (vocab_size + 63) // 64
-        word_bits = ided.groupBy(id_col, *block_cols, (F.col("__sid") / 64).cast("int").alias("__w")).agg(
+        word_bits = ided.groupBy("doc_id", "lang", (F.col("__sid") / 64).cast("int").alias("__w")).agg(
             F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__sid % 64 AS INT))")).alias("__bits"),
             F.count("*").alias("__n"),
         )
-        sets = word_bits.groupBy(id_col, *block_cols).agg(
+        sets = word_bits.groupBy("doc_id", "lang").agg(
             F.map_from_entries(F.collect_list(F.struct("__w", "__bits"))).alias("__m"),
             F.sum("__n").alias("__sz"),
         ).select(
-            id_col,
-            *block_cols,
+            "doc_id",
+            "lang",
             F.transform(
                 F.sequence(F.lit(0), F.lit(nwords - 1)),
                 lambda i: F.coalesce(F.col("__m")[i], F.lit(0).cast("bigint")),
@@ -345,33 +333,27 @@ def ngram_jaccard_pairs(
             lambda acc, v: acc + v,
         )
     else:
-        sets = ided.groupBy(id_col, *block_cols).agg(
+        sets = ided.groupBy("doc_id", "lang").agg(
             F.collect_set("__sid").alias("__set"), F.count("*").alias("__sz")
         )
         inter = F.size(F.array_intersect("__seta", "__setb")).cast("bigint")
 
-    sa = sets.select(F.col(id_col).alias("a"), F.col("__set").alias("__seta"), F.col("__sz").alias("sza"))
-    sb = sets.select(F.col(id_col).alias("b"), F.col("__set").alias("__setb"), F.col("__sz").alias("szb"))
+    sa = sets.select(F.col("doc_id").alias("a"), F.col("__set").alias("__seta"), F.col("__sz").alias("sza"))
+    sb = sets.select(F.col("doc_id").alias("b"), F.col("__set").alias("__setb"), F.col("__sz").alias("szb"))
     return (
         cand.join(sa, "a")
         .join(sb, "b")
         .withColumn("inter", inter)
         .withColumn("jaccard", F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
-def doc_shingles(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def doc_shingles(docs: DataFrame, n: int = 3, extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Distinct character n-gram shingles per doc (JVM-side)."""
-    t = F.lower(F.col(text_col))
-    rows = docs.select(F.col(id_col), *[F.col(c) for c in extra_cols], t.alias("__t"))
+    t = F.lower(F.col("text"))
+    rows = docs.select(F.col("doc_id"), *[F.col(c) for c in extra_cols], t.alias("__t"))
     # Parallelism guard: a compact input (one small parquet file = one scan
     # split) would run the ~100x row explosion + per-shingle md5 on a single
     # task. Hash-repartition the PRE-explode rows (cheap) so the heavy work
@@ -381,7 +363,7 @@ def doc_shingles(
     # with `repartition(col)` alone AQE sees a few-MB exchange and coalesces
     # it back to ONE partition, serializing the explode+md5 (observed 6x
     # slowdown at sf0.1).
-    rows = rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+    rows = rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     # guard: Spark's sequence(1, 0) is DESCENDING [1, 0], not empty — docs
     # shorter than n must yield no shingles (matches generate_series/oracle)
     grams = F.when(
@@ -392,7 +374,7 @@ def doc_shingles(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return (
-        rows.select(F.col(id_col), *extra_cols, F.explode(F.array_distinct(grams)).alias("shingle"))
+        rows.select(F.col("doc_id"), *extra_cols, F.explode(F.array_distinct(grams)).alias("shingle"))
     )
 
 
@@ -409,13 +391,7 @@ def perm_coeffs(i: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_wide(
-    docs: DataFrame,
-    num_perm: int = 16,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_wide(docs: DataFrame, num_perm: int = 16) -> DataFrame:
     """(id, mh0..mh{num_perm-1}): the MinHash signature as one wide row.
 
     Cost model (the reason for this shape): the expensive md5 runs ONCE per
@@ -425,32 +401,28 @@ def minhash_wide(
     num_perm-times row explosion. (A first implementation salted md5 per
     perm: 16x the hashing and 16x the shuffle, ~25x slower at sf0.1.)
     """
-    sh = doc_shingles(docs, n=n, text_col=text_col, id_col=id_col)
+    sh = doc_shingles(docs)
     hashed = sh.withColumn("h", portable_hash32(F.col("shingle")))
     aggs = []
     for i in range(num_perm):
         a, b = perm_coeffs(i)
         aggs.append(F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"mh{i}"))
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def band_signatures(
-    wide: DataFrame,
-    bands: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def band_signatures(wide: DataFrame) -> DataFrame:
     """(id, band, bsig) straight from the wide signature — no extra shuffle.
 
-    Band b holds permutations {b, b+bands, b+2*bands, ...} in ascending perm
-    order (equivalent to grouping long-format rows by perm % bands), so the
+    Band b holds permutations {b, b+4, b+8, ...} in ascending perm
+    order (equivalent to grouping long-format rows by perm % 4), so the
     band signature is a concat of already-computed aggregate columns: the
     explode-and-regroup a long-format pipeline would need (one full extra
     shuffle) disappears.
     """
     num_perm = sum(1 for c in wide.columns if c.startswith("mh"))
     rows = []
-    for b in range(bands):
-        perms = list(range(b, num_perm, bands))
+    for b in range(BANDS):
+        perms = list(range(b, num_perm, BANDS))
         concat = F.concat_ws("_", *[F.col(f"mh{p}").cast("string") for p in perms])
         # compact the ~100-byte signature string to a 60-bit key so the
         # bucket self-join shuffles 8-byte longs; md5-derived, so the oracle
@@ -463,20 +435,16 @@ def band_signatures(
             )
         )
     return wide.select(
-        F.col(id_col), F.explode(F.array(*rows)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig"))
+        F.col("doc_id"), F.explode(F.array(*rows)).alias("bb")
+    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig"))
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     """Band the :func:`minhash_wide` signature (rows_per_band = num_perm /
     bands) through :func:`band_signatures`, bucket-join on
     (band, band_signature): docs sharing any band are candidate pairs.
     """
-    band_sig = band_signatures(signatures, bands=bands, id_col=id_col)
+    band_sig = band_signatures(signatures)
     # materialize once: the a/b self-join would otherwise recompute the
     # whole shingle->hash->min pipeline twice (docs x bands rows — small)
     band_sig = band_sig.localCheckpoint(eager=True)
@@ -489,10 +457,10 @@ def lsh_candidate_pairs(
     # bucket's pair generation now spreads over G reducers. A-side rows
     # multiply by G — bounded (docs x bands x G) and tiny next to the pairs.
     G = 8
-    a = band_sig.select(F.col(id_col).alias("a"), "band", "bsig").withColumn(
+    a = band_sig.select(F.col("doc_id").alias("a"), "band", "bsig").withColumn(
         "g", F.explode(F.sequence(F.lit(0), F.lit(G - 1)).cast("array<int>"))
     )
-    b = band_sig.select(F.col(id_col).alias("b"), "band", "bsig").withColumn(
+    b = band_sig.select(F.col("doc_id").alias("b"), "band", "bsig").withColumn(
         "g", F.pmod(F.hash("b"), F.lit(G)).cast("int")
     )
     return (
@@ -503,15 +471,7 @@ def lsh_candidate_pairs(
     )
 
 
-def lsh_delta_pairs(
-    base_docs: DataFrame,
-    delta_docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lsh_delta_pairs(base_docs: DataFrame, delta_docs: DataFrame) -> DataFrame:
     """Incremental LSH index maintenance: the candidate near-dup pairs that
     APPEAR when ``delta_docs`` arrive — every pair has at least one delta
     side; base-base pairs (already known) are never regenerated.
@@ -526,14 +486,14 @@ def lsh_delta_pairs(
 
     Returns distinct (a, b) with a < b and at least one side in delta.
     """
-    wb = minhash_wide(base_docs, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col)
-    wd = minhash_wide(delta_docs, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col)
-    bb = band_signatures(wb, bands=bands, id_col=id_col)
-    bd = band_signatures(wd, bands=bands, id_col=id_col)
+    wb = minhash_wide(base_docs)
+    wd = minhash_wide(delta_docs)
+    bb = band_signatures(wb)
+    bd = band_signatures(wd)
     bd = bd.localCheckpoint(eager=True)  # probe side feeds the union AND the join
     index = bb.unionByName(bd)
-    probe = bd.select(F.col(id_col).alias("__da"), "band", "bsig")
-    hit = index.select(F.col(id_col).alias("__db"), "band", "bsig")
+    probe = bd.select(F.col("doc_id").alias("__da"), "band", "bsig")
+    hit = index.select(F.col("doc_id").alias("__db"), "band", "bsig")
     return (
         probe.join(hit, ["band", "bsig"])
         .filter(F.col("__da") != F.col("__db"))
@@ -545,35 +505,30 @@ def lsh_delta_pairs(
     )
 
 
-def simhash(
-    docs: DataFrame,
-    bits: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash fingerprint: each token votes ±1 per bit of its hash; the
     fingerprint sets bit b iff the vote sum is positive.
 
-    Plan: token explode -> bit explode (tokens × bits rows) -> groupBy(id)
+    Plan: token explode -> bit explode (tokens × 32 rows) -> groupBy(id)
     with conditional sums — one shuffle, map-side combined.
     """
-    toks = docs.select(F.col(id_col), F.lower(F.col(text_col)).alias("__t"))
+    toks = docs.select(F.col("doc_id"), F.lower(F.col("text")).alias("__t"))
     # same parallelism guard as doc_shingles: spread the token x bit
     # explosion before it happens, keyed so downstream groupBys don't
     # re-shuffle the exploded rows (explicit count, or AQE re-coalesces)
     toks = (
-        toks.repartition(toks.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-        .select(F.col(id_col), F.explode(F.split(F.col("__t"), r"\s+")).alias("tok"))
+        toks.repartition(toks.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
+        .select(F.col("doc_id"), F.explode(F.split(F.col("__t"), r"\s+")).alias("tok"))
         .filter(F.col("tok") != "")
     )
     hashed = toks.withColumn("h", portable_hash32(F.col("tok")))
     bitrows = hashed.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit"),
+        F.col("doc_id"),
+        F.explode(F.sequence(F.lit(0), F.lit(31))).alias("bit"),
         F.col("h"),
     ).withColumn("vote", F.when(F.expr("(h >> bit) & 1") == 1, 1).otherwise(-1))
-    votes = bitrows.groupBy(id_col, "bit").agg(F.sum("vote").alias("v"))
-    return votes.groupBy(id_col).agg(
+    votes = bitrows.groupBy("doc_id", "bit").agg(F.sum("vote").alias("v"))
+    return votes.groupBy("doc_id").agg(
         F.sum(
             F.when(F.col("v") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bit)")).otherwise(F.lit(0))
         ).alias("simhash")
@@ -650,8 +605,6 @@ def cluster_min_label_bipartite(
     memberships: DataFrame,
     vertices: DataFrame,
     max_iter: int = 6,
-    id_col: str = "doc_id",
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """Min-label clustering over BUCKET MEMBERSHIPS instead of pairs —
     star contraction on the hypergraph whose hyperedges are LSH buckets.
@@ -672,7 +625,7 @@ def cluster_min_label_bipartite(
     convergence read from a Dataset.observe metric during the round's
     checkpoint job (one job per round).
     """
-    mem = memberships.select(F.col(id_col).alias("mv"), F.col(bucket_col).alias("mb"))
+    mem = memberships.select(F.col("doc_id").alias("mv"), F.col("bucket").alias("mb"))
 
     def _hop(mem: DataFrame, lbls: DataFrame) -> DataFrame:
         bmin = (
@@ -690,7 +643,7 @@ def cluster_min_label_bipartite(
             F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"),
         )
 
-    return _min_label_clusters(_hop, mem, "mv", vertices, max_iter, id_col)
+    return _min_label_clusters(_hop, mem, "mv", vertices, max_iter, "doc_id")
 
 
 def embedding_near_dup_pairs(
@@ -698,9 +651,6 @@ def embedding_near_dup_pairs(
     dim: int,
     threshold: float = 0.99,
     n_planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 4,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-blocked.
 
@@ -713,26 +663,26 @@ def embedding_near_dup_pairs(
     """
     from cartography_spark.operators.similarity import cosine_similarity, hyperplane_signature
 
-    sig = hyperplane_signature(F.col(vec_col), dim, n_planes)
-    with_sig = embeddings.select(F.col(id_col), F.col(vec_col), sig.alias("__sig"))
+    sig = hyperplane_signature(F.col("embedding"), dim, n_planes)
+    with_sig = embeddings.select(F.col("vec_id"), F.col("embedding"), sig.alias("__sig"))
     # bounded: one row per vector; avoids recomputing 8x64 md5 signs per side
     with_sig = with_sig.localCheckpoint(eager=True)
-    a = with_sig.select(F.col(id_col).alias("a"), F.col(vec_col).alias("__va"), "__sig")
-    b = with_sig.select(F.col(id_col).alias("b"), F.col(vec_col).alias("__vb"), "__sig")
+    a = with_sig.select(F.col("vec_id").alias("a"), F.col("embedding").alias("__va"), "__sig")
+    b = with_sig.select(F.col("vec_id").alias("b"), F.col("embedding").alias("__vb"), "__sig")
     pairs = a.join(b, "__sig").filter(F.col("a") < F.col("b"))
     cos = cosine_similarity(F.col("__va").cast("array<double>"), F.col("__vb").cast("array<double>"))
     return (
-        pairs.withColumn("cosine", F.round(cos, round_digits))
+        pairs.withColumn("cosine", F.round(cos, 4))
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
     )
 
 
-def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3, id_col: str = "doc_id") -> DataFrame:
+def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs by hamming distance over simhash fingerprints.
     Blocked on the top byte to avoid the full cross join at scale."""
-    a = fingerprints.select(F.col(id_col).alias("a"), F.col("simhash").alias("ha"))
-    b = fingerprints.select(F.col(id_col).alias("b"), F.col("simhash").alias("hb"))
+    a = fingerprints.select(F.col("doc_id").alias("a"), F.col("simhash").alias("ha"))
+    b = fingerprints.select(F.col("doc_id").alias("b"), F.col("simhash").alias("hb"))
     blk_a = F.shiftright("ha", 24)
     blk_b = F.shiftright("hb", 24)
     return (
@@ -743,12 +693,7 @@ def simhash_near_pairs(fingerprints: DataFrame, max_hamming: int = 3, id_col: st
     )
 
 
-def substring_span_stats(
-    docs: DataFrame,
-    window: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def substring_span_stats(docs: DataFrame, window: int = 10) -> DataFrame:
     """Exact-substring duplication statistics (the suffix-array-free scale
     path of "Deduplicating Training Data Makes Language Models Better",
     Lee et al. 2021): hash every stride-1 ``window``-token span, flag spans
@@ -773,28 +718,28 @@ def substring_span_stats(
     # n_tokens/dup_permille aligned with engines where len(split(NULL)) is
     # NULL-propagated instead
     rows = docs.select(
-        F.col(id_col), F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("__ws")
+        F.col("doc_id"), F.split(F.coalesce(F.col("text"), F.lit("")), " ").alias("__ws")
     )
-    rows = rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    base = rows.select(F.col(id_col), F.size("__ws").cast("long").alias("n_tokens"))
+    rows = rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
+    base = rows.select(F.col("doc_id"), F.size("__ws").cast("long").alias("n_tokens"))
     # sequence(1, 0) would DESCEND in Spark — docs shorter than the window
     # must produce no spans, hence the explicit size filter.
     wins = (
         rows.filter(F.size("__ws") >= window)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(F.sequence(F.lit(1), F.size("__ws") - (window - 1))).alias("i"),
             F.col("__ws"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("i"),
             F.md5(F.array_join(F.slice("__ws", F.col("i"), F.lit(window)), " ")).alias("h"),
         )
     )
     dup_h = wins.groupBy("h").agg(F.count("*").alias("__cnt")).filter(F.col("__cnt") > 1)
-    dup = wins.join(dup_h, "h").select(F.col(id_col), F.col("i"))
-    prior = W.partitionBy(id_col).orderBy("i").rowsBetween(W.unboundedPreceding, -1)
+    dup = wins.join(dup_h, "h").select(F.col("doc_id"), F.col("i"))
+    prior = W.partitionBy("doc_id").orderBy("i").rowsBetween(W.unboundedPreceding, -1)
     cov = (
         dup.withColumn("__end", F.col("i") + (window - 1))
         .withColumn("__prev_end", F.coalesce(F.max("__end").over(prior), F.lit(0)))
@@ -805,14 +750,14 @@ def substring_span_stats(
             ),
         )
     )
-    per_doc = cov.groupBy(id_col).agg(
+    per_doc = cov.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("dup_windows"),
         F.sum("__covered").cast("long").alias("dup_tokens"),
     )
     return (
-        base.join(per_doc, id_col, "left")
+        base.join(per_doc, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_tokens"),
             F.coalesce("dup_windows", F.lit(0)).cast("long").alias("dup_windows"),
             F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
@@ -824,7 +769,7 @@ def substring_span_stats(
     )
 
 
-def exact_collapse(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_collapse(docs: DataFrame) -> DataFrame:
     """(all input columns, rep): min-id representative per EXACT duplicate
     group (md5 text key, null-safe so null-text docs keep a group).
 
@@ -845,23 +790,15 @@ def exact_collapse(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     # shuffled the docs once for the aggregate and once more for the probe
     # side — guide §2.4). Window partitioning groups NULL keys together,
     # matching the null-safe join semantics exactly.
-    key = F.md5(F.col(text_col))
+    key = F.md5(F.col("text"))
     return (
         docs.withColumn("__k", key)
-        .withColumn("rep", F.min(id_col).over(Window.partitionBy("__k")))
+        .withColumn("rep", F.min("doc_id").over(Window.partitionBy("__k")))
         .drop("__k")
     )
 
 
-def minhash_cluster_collapsed(
-    docs: DataFrame,
-    num_perm: int = 16,
-    n: int = 3,
-    bands: int = 4,
-    max_iter: int = 6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_cluster_collapsed(docs: DataFrame) -> DataFrame:
     """The 100 TB-sane MinHash dedup contract: (id, cluster, keep) — O(N)
     output — instead of the O(pairs) candidate list.
 
@@ -873,17 +810,17 @@ def minhash_cluster_collapsed(
     cluster label is the corpus-minimum doc id of the merged component
     (reps are group minima, so min over reps == min over docs).
     """
-    mapped = exact_collapse(docs, text_col=text_col, id_col=id_col)
+    mapped = exact_collapse(docs)
     # reused by reps + expansion; checkpoint only the compact (id, rep) map
-    idmap = mapped.select(F.col(id_col), "rep").localCheckpoint(eager=True)
-    reps = mapped.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col), F.col(text_col))
-    wide = minhash_wide(reps, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col)
+    idmap = mapped.select(F.col("doc_id"), "rep").localCheckpoint(eager=True)
+    reps = mapped.filter(F.col("doc_id") == F.col("rep")).select(F.col("doc_id"), F.col("text"))
+    wide = minhash_wide(reps, num_perm=32)
     # cluster straight over (doc, band-bucket) memberships — candidate
     # PAIRS are never materialized (see cluster_min_label_bipartite: the
     # components over shared-bucket membership equal components over the
     # pair graph, minus the per-bucket quadratic emit)
-    mem = band_signatures(wide, bands=bands, id_col=id_col).select(
-        F.col(id_col),
+    mem = band_signatures(wide).select(
+        F.col("doc_id"),
         F.concat_ws(":", F.col("band"), F.col("bsig")).alias("bucket"),
     )
     # vertices = the distinct rep ids, read from the already-checkpointed
@@ -892,31 +829,20 @@ def minhash_cluster_collapsed(
     # docs scan + collapse there; identical id set either way)
     cl = cluster_min_label_bipartite(
         mem,
-        idmap.select(F.col("rep").alias(id_col)),
-        max_iter=max_iter,
-        id_col=id_col,
+        idmap.select(F.col("rep").alias("doc_id")),
+        max_iter=MAX_ITER,
     )
     return (
-        idmap.join(
-            cl.select(F.col(id_col).alias("rep"), "cluster"), "rep"
-        )
+        idmap.join(cl.select(F.col("doc_id").alias("rep"), "cluster"), "rep")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "cluster",
-            (F.col(id_col) == F.col("cluster")).alias("keep"),
+            (F.col("doc_id") == F.col("cluster")).alias("keep"),
         )
     )
 
 
-def embedding_cluster_collapsed(
-    embeddings: DataFrame,
-    dim: int,
-    threshold: float = 0.99,
-    n_planes: int = 8,
-    max_iter: int = 6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def embedding_cluster_collapsed(embeddings: DataFrame, dim: int) -> DataFrame:
     """Embedding near-dup clustering with exact-copy collapse: group
     bit-identical vectors (equi-join on the array value — no lossy string
     formatting), run the LSH-blocked cosine pair generator on unique
@@ -932,41 +858,31 @@ def embedding_cluster_collapsed(
     # dropped them, and the window would otherwise group them into one
     # bogus cluster — parity with the join shape and the oracle's SQL
     # equi-join semantics.
-    embeddings = embeddings.filter(F.col(vec_col).isNotNull())
+    embeddings = embeddings.filter(F.col("embedding").isNotNull())
     mapped = embeddings.select(
-        F.col(id_col),
-        F.min(id_col).over(Window.partitionBy(vec_col)).alias("rep"),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.min("vec_id").over(Window.partitionBy("embedding")).alias("rep"),
+        F.col("embedding"),
     )
-    idmap = mapped.select(F.col(id_col), "rep").localCheckpoint(eager=True)
-    reps = mapped.filter(F.col(id_col) == F.col("rep")).select(F.col(id_col), F.col(vec_col))
-    pairs = embedding_near_dup_pairs(
-        reps, dim=dim, threshold=threshold, n_planes=n_planes,
-        vec_col=vec_col, id_col=id_col,
-    ).select("a", "b")
+    idmap = mapped.select(F.col("vec_id"), "rep").localCheckpoint(eager=True)
+    reps = mapped.filter(F.col("vec_id") == F.col("rep")).select(F.col("vec_id"), F.col("embedding"))
+    pairs = embedding_near_dup_pairs(reps, dim=dim).select("a", "b")
     # vertices from the checkpointed idmap — same rep-id set, no second
     # pass over the embedding collapse (see minhash_cluster_collapsed)
     cl = cluster_min_label(
-        pairs, idmap.select(F.col("rep").alias(id_col)), max_iter=max_iter, id_col=id_col
+        pairs, idmap.select(F.col("rep").alias("vec_id")), max_iter=MAX_ITER, id_col="vec_id"
     )
     return (
-        idmap.join(cl.select(F.col(id_col).alias("rep"), "cluster"), "rep")
+        idmap.join(cl.select(F.col("vec_id").alias("rep"), "cluster"), "rep")
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             "cluster",
-            (F.col(id_col) == F.col("cluster")).alias("keep"),
+            (F.col("vec_id") == F.col("cluster")).alias("keep"),
         )
     )
 
 
-def shingle_containment_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    min_permille: int = 900,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_col: str = "lang",
-) -> DataFrame:
+def shingle_containment_pairs(docs: DataFrame, min_permille: int = 900) -> DataFrame:
     """Asymmetric containment detection: |shingles(a) ∩ shingles(b)| over
     |shingles(smaller side)| — the relation Jaccard MISSES. An excerpt,
     quote, or truncated mirror of a long document shares nearly all of its
@@ -987,10 +903,10 @@ def shingle_containment_pairs(
     # shorter than n must yield no shingles (matches generate_series/oracle);
     # same pitfall guarded at the minhash and substring-span shingle sites.
     grams = F.when(
-        F.length(text_col) >= n,
+        F.length("text") >= SHINGLE_N,
         F.expr(
-            f"transform(sequence(1, length({text_col}) - {n - 1}), "
-            f"i -> substring(lower({text_col}), i, {n}))"
+            f"transform(sequence(1, length(text) - {SHINGLE_N - 1}), "
+            f"i -> substring(lower(text), i, {SHINGLE_N}))"
         ),
     ).otherwise(F.array().cast("array<string>"))
     # The post-explode repartition doubles as a MATERIALIZATION point:
@@ -999,14 +915,14 @@ def shingle_containment_pairs(
     # of re-flattening the gram arrays (cf. the r8-opt sf1 A/Bs on the
     # analogous token-stream sites).
     sh = docs.select(
-        F.col(id_col),
-        F.col(block_col),
+        F.col("doc_id"),
+        F.col("lang"),
         F.explode(F.array_distinct(grams)).alias("__sh"),
     )
-    sh = sh.repartition(sh.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
-    a = sh.select(F.col(id_col).alias("a"), F.col(block_col).alias("__ba"), F.col("__sh"))
-    b = sh.select(F.col(id_col).alias("b"), F.col(block_col).alias("__bb"), F.col("__sh"))
+    sh = sh.repartition(sh.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__sz"))
+    a = sh.select(F.col("doc_id").alias("a"), F.col("lang").alias("__ba"), F.col("__sh"))
+    b = sh.select(F.col("doc_id").alias("b"), F.col("lang").alias("__bb"), F.col("__sh"))
     inter = (
         a.join(b, ["__sh"])
         .filter((F.col("a") < F.col("b")) & (F.col("__ba") == F.col("__bb")))
@@ -1014,8 +930,8 @@ def shingle_containment_pairs(
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     return (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("__sz").alias("sz_a")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("__sz").alias("sz_b")), "b")
+        inter.join(sizes.select(F.col("doc_id").alias("a"), F.col("__sz").alias("sz_a")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("__sz").alias("sz_b")), "b")
         .filter(
             F.col("inter") * 1000 >= F.lit(min_permille) * F.least("sz_a", "sz_b")
         )
@@ -1031,12 +947,7 @@ def shingle_containment_pairs(
     )
 
 
-def shingle_novelty(
-    docs: DataFrame,
-    n: int = 6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shingle_novelty(docs: DataFrame) -> DataFrame:
     """Per-document n-gram NOVELTY score: the fraction of a document's
     distinct character n-grams that appear in NO other document —
     1_000_000 = entirely novel content, 0 = every shingle also occurs
@@ -1058,19 +969,17 @@ def shingle_novelty(
     final per-doc aggregate reuses the doc key. Never O(pairs) — cost
     is |postings| + |vocabulary|, linear in corpus size.
     """
-    sh = doc_shingles(docs, n=n, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=False
-    )
+    sh = doc_shingles(docs, n=6).localCheckpoint(eager=False)
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     return (
         sh.join(df_counts, "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_shingles"),
             F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).cast("long").alias("n_unique"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_unique",
             F.expr("(n_unique * 1000000) DIV n_shingles").cast("long").alias("novelty_ppm"),

@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 from cartography_spark.operators.fixpoint import _persist_copartitioned, fixpoint
 from cartography_spark.session import finalize_iterative, shuffle_partition_count
 
+N_ITER = 10
+
 PR_SCALE = 1_000_000_000_000  # rank fixed-point scale (1e12)
 
 
@@ -268,9 +270,7 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 3, checkpoint_every: int = 4
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Deterministic synchronous label-propagation community detection
     over an already-symmetrized directed edge list (every node appears as
     a src). label0(v) = v; each round every node adopts the most frequent
@@ -288,7 +288,7 @@ def label_propagation(
     -> ~2.7 s for the single-exchange shape). The argmax is
     ``max_by(label, (cnt, -label))`` — a mergeable aggregate — instead
     of a row_number window, so no per-group sort materializes. Lineage is
-    truncated every ``checkpoint_every`` rounds: each eager
+    truncated every 4 rounds: each eager
     localCheckpoint is a full materialization barrier, so at small round
     counts skipping it is ~40% wall-clock (measured at sf0.1), while
     long runs still get bounded plans (iterative-plan pattern shared
@@ -316,7 +316,7 @@ def label_propagation(
             )
             .select(F.col("src").alias("node"), "label")
         )
-        if checkpoint_every and (r + 1) % checkpoint_every == 0 and r + 1 < rounds:
+        if (r + 1) % 4 == 0 and r + 1 < rounds:
             labels = labels.localCheckpoint(eager=True)
     # session mode: checkpoint bounds the returned plan and the edge cache
     # is released; oneshot mode skips the extra materialization barrier
@@ -453,9 +453,7 @@ def modularity_exact(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_personalized(
-    edges: DataFrame, seed: int, iterations: int = 5
-) -> DataFrame:
+def pagerank_personalized(edges: DataFrame, seed: int) -> DataFrame:
     """Personalized PageRank: identical integer fixed-point recurrence to
     :func:`pagerank_exact` except ALL teleport mass returns to ``seed``
     (rank0 = SCALE at the seed, 0 elsewhere) — proximity-to-seed scores,
@@ -473,7 +471,7 @@ def pagerank_personalized(
         [(seed, (15 * PR_SCALE) // 100)], "node BIGINT, r BIGINT"
     )
     ranks = spark.createDataFrame([(seed, PR_SCALE)], "node BIGINT, r BIGINT")
-    for _ in range(iterations):
+    for _ in range(5):
         inflow = (
             e.join(ranks, e.src == ranks.node)
             .groupBy("dst")
@@ -519,20 +517,18 @@ def temporal_reachability(
 HITS_SCALE = 100_000  # hub/authority fixed-point scale (1e5)
 
 
-def hits_exact(
-    edges: DataFrame, iterations: int = 3, scale: int = HITS_SCALE
-) -> tuple[DataFrame, DataFrame]:
+def hits_exact(edges: DataFrame, iterations: int = 3) -> tuple[DataFrame, DataFrame]:
     """Integer-exact HITS (hubs & authorities) over a DIRECTED edge list.
 
     Per iteration: auth'[v] = sum of hub[u] over u->v, then renormalized
-    to ``(a * scale) div max(a)``; hubs symmetrically from the fresh
+    to ``(a * HITS_SCALE) div max(a)``; hubs symmetrically from the fresh
     authorities. Floor division after every step makes the fixed point
     bit-identical in any engine (the DuckDB oracle unrolls the same
     recurrence), exactly like :func:`pagerank_exact` — no float norms.
 
-    Scale bound: values stay <= scale after each renorm, so the largest
-    intermediate is ``max_inflow * scale <= (scale * max_degree) * scale``
-    — with scale=1e5 that overflows bigint only past ~9e8 in-degree,
+    Scale bound: values stay <= HITS_SCALE after each renorm, so the largest
+    intermediate is ``max_inflow * S <= (S * max_degree) * S`` (S = HITS_SCALE)
+    — with S=1e5 that overflows bigint only past ~9e8 in-degree,
     far beyond any real web/trade graph's hottest node.
 
     Returns ``(hubs, auths)`` as (node, h) / (node, a). The static edge
@@ -569,7 +565,7 @@ def hits_exact(
         m = obs.get["m"]
         if m is None:  # empty frontier (no edges): propagate the empty frame
             return raw
-        return raw.select("node", F.expr(f"({val} * {scale}) div {int(m)}").alias(val))
+        return raw.select("node", F.expr(f"({val} * {HITS_SCALE}) div {int(m)}").alias(val))
 
     for _ in range(iterations):
         auths = half_step(hubs, e.src, "a")
@@ -718,20 +714,14 @@ def _transition_micros(
     )
 
 
-def markov_stationary(
-    trans: DataFrame,
-    from_col: str = "prev_type",
-    to_col: str = "event_type",
-    count_col: str = "n_transitions",
-    n_iter: int = 10,
-) -> DataFrame:
+def markov_stationary(trans: DataFrame) -> DataFrame:
     """Stationary distribution of a finite Markov chain from observed
     transition counts — the long-run occupancy the transition matrix
     (event_transition_matrix) only implies: "where does a user
     eventually spend their time?" is what capacity planning and
     engagement scoring actually consume; markov_next_event_accuracy
     evaluates one-step prediction, this closes the family with the
-    fixed-point view. n_iter fixed power iterations from the uniform
+    fixed-point view. N_ITER fixed power iterations from the uniform
     vector (enough for the sub-percent accuracy bounded state spaces
     need; the answer is the ITERATE-10 contract, not a convergence
     promise).
@@ -747,12 +737,12 @@ def markov_stationary(
     row per state (state, pi_micros), zero-mass states included.
 
     Scale shape: the chain lives on the event-type DOMAIN — after the
-    count collapse every frame is k or k^2 rows, and the n_iter
+    count collapse every frame is k or k^2 rows, and the N_ITER
     join+agg steps run on those bounded broadcast frames. The only
     data-sized work is whatever built `trans` upstream.
     """
-    states, p_full = _transition_micros(trans, from_col, to_col, count_col)
-    return _stationary_iterate(states, p_full, n_iter)
+    states, p_full = _transition_micros(trans, "prev_type", "event_type", "n_transitions")
+    return _stationary_iterate(states, p_full, N_ITER)
 
 
 def _stationary_iterate(states: DataFrame, p_full: DataFrame, n_iter: int) -> DataFrame:
@@ -784,13 +774,7 @@ def _stationary_iterate(states: DataFrame, p_full: DataFrame, n_iter: int) -> Da
     )
 
 
-def markov_entropy_rate(
-    trans: DataFrame,
-    from_col: str = "prev_type",
-    to_col: str = "event_type",
-    count_col: str = "n_transitions",
-    n_iter: int = 10,
-) -> DataFrame:
+def markov_entropy_rate(trans: DataFrame) -> DataFrame:
     """Entropy rate of the finite Markov chain the event stream induces —
     the capstone over the family (event_transition_matrix -> where mass
     FLOWS, markov_next_event_accuracy -> one-step predictability,
@@ -824,8 +808,8 @@ def markov_entropy_rate(
     frame here is k or k^2 rows on broadcast joins; the only data-scale
     work built `trans` upstream.
     """
-    states, p_full = _transition_micros(trans, from_col, to_col, count_col)
-    pi = _stationary_iterate(states, p_full, n_iter)
+    states, p_full = _transition_micros(trans, "prev_type", "event_type", "n_transitions")
+    pi = _stationary_iterate(states, p_full, N_ITER)
     lnq = F.round(
         F.lit(1000.0) * F.log(F.col("p").cast("double") / F.lit(1_000_000.0))
     ).cast("long")

@@ -67,14 +67,9 @@ def merge_partials(partials: list[DataFrame], keys: list[str], metrics: list[str
     return unioned.groupBy(*keys).agg(*aggs)
 
 
-def cdc_apply(
-    changelog: DataFrame,
-    key_cols: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-) -> DataFrame:
+def cdc_apply(changelog: DataFrame, key_cols: list[str]) -> DataFrame:
     """Apply an insert/update/delete changelog to produce the current
-    snapshot: the highest-``seq_col`` change per key wins; a terminal
+    snapshot: the highest-``seq`` change per key wins; a terminal
     'D' is a tombstone that removes the key. Contract: (keys, seq) is
     unique — the usual CDC log invariant.
 
@@ -86,11 +81,11 @@ def cdc_apply(
     (/root/reference/cartography/sync.py:494-496): same end state,
     cost proportional to the delta.
     """
-    payload = [c for c in changelog.columns if c not in (*key_cols, seq_col, op_col)]
+    payload = [c for c in changelog.columns if c not in (*key_cols, "seq", "op")]
     latest = changelog.groupBy(*key_cols).agg(
-        F.max_by(F.struct(op_col, *payload), F.col(seq_col)).alias("__last")
+        F.max_by(F.struct("op", *payload), F.col("seq")).alias("__last")
     )
-    return latest.filter(F.col(f"__last.{op_col}") != "D").select(
+    return latest.filter(F.col("__last.op") != "D").select(
         *key_cols, *[F.col(f"__last.{c}").alias(c) for c in payload]
     )
 

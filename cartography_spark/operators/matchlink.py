@@ -17,16 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
-from cartography_spark.operators.upsert import merge
+from cartography_spark.operators.upsert import _matcher_condition, merge
 from cartography_spark.schema import PropertyRef, TargetNodeMatcher
-
-
-def _resolve(side: DataFrame, matcher: TargetNodeMatcher, rows: DataFrame, params: dict[str, Any] | None):
-    cond = None
-    for target_key, ref in matcher.keys.items():
-        c = side[target_key] == ref.expr(params)
-        cond = c if cond is None else (cond & c)
-    return rows.join(side, cond, "inner")
 
 
 def match_link(
@@ -52,8 +44,8 @@ def match_link(
     dst = catalog.node(dst_label).select(F.col("id").alias("__d_id"), *[
         F.col(k) for k in dst_matcher.keys
     ])
-    resolved = _resolve(src, src_matcher, rows, params)
-    resolved = _resolve(dst, dst_matcher, resolved, params)
+    resolved = rows.join(src, _matcher_condition(src_matcher, src, params), "inner")
+    resolved = resolved.join(dst, _matcher_condition(dst_matcher, dst, params), "inner")
 
     cols = [F.col("__s_id").alias("src_id"), F.col("__d_id").alias("dst_id")]
     for out_name, ref in (properties or {}).items():

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+ULAW_RATE = 8000
+
 
 def _map_rows(
     df: DataFrame,
@@ -304,22 +306,18 @@ IMG_WIDTH = 4  # 12 bytes/row -> stride 12, no padding; 12*H is a multiple
 AUDIO_RATE = 16000
 
 
-def _synthesize(
-    docs: DataFrame, text_col: str, id_col: str, out_col: str, encode: Callable[[bytes], bytes]
-) -> DataFrame:
-    """One ``(id, out_col)`` row per doc, payload = ``encode(md5(text))``;
+def _synthesize(docs: DataFrame, out_col: str, encode: Callable[[bytes], bytes]) -> DataFrame:
+    """One ``(doc_id, out_col)`` row per doc, payload = ``encode(md5(text))``;
     a NULL text hashes as the empty string."""
 
     def row(doc_id, text):
         text = text if text is not None else ""
         yield doc_id, encode(hashlib.md5(str(text).encode("utf-8")).digest())
 
-    return _map_rows(docs, [id_col, text_col], row, f"{id_col} long, {out_col} binary")
+    return _map_rows(docs, ["doc_id", "text"], row, f"doc_id long, {out_col} binary")
 
 
-def synthesize_image_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_image_column(docs: DataFrame) -> DataFrame:
     """Real 24-bit BMP per doc: 4 x H pixels (H = 4*(1 + b0 % 4), b0 = first
     md5(text) byte), pixel bytes = the md5 digest tiled. Every decoded
     feature then has a closed form over the digest bytes."""
@@ -329,12 +327,10 @@ def synthesize_image_column(
         tile = np.frombuffer(dig, dtype=np.uint8)
         return bmp_encode(np.tile(tile, IMG_WIDTH * 3 * h // 16).reshape(h, IMG_WIDTH, 3))
 
-    return _synthesize(docs, text_col, id_col, "image", encode)
+    return _synthesize(docs, "image", encode)
 
 
-def synthesize_audio_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_audio_column(docs: DataFrame) -> DataFrame:
     """Real PCM16 mono WAV per doc: the md5 digest as 8 little-endian int16
     samples, tiled R = 2*(1 + b0 % 4) times (16..64 samples @ 16 kHz)."""
 
@@ -342,13 +338,11 @@ def synthesize_audio_column(
         base = np.frombuffer(dig, dtype="<i2")
         return wav_encode(np.tile(base, 2 * (1 + dig[0] % 4)), AUDIO_RATE)
 
-    return _synthesize(docs, text_col, id_col, "audio", encode)
+    return _synthesize(docs, "audio", encode)
 
 
-def synthesize_video_column(
-    docs: DataFrame, n_frames: int = 6, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Trivial video container: ``n_frames`` BMP frames concatenated
+def synthesize_video_column(docs: DataFrame) -> DataFrame:
+    """Trivial video container: 6 BMP frames concatenated
     back-to-back (frame f's pixels = digest rolled by f bytes). The demuxer
     walks the declared BMP file sizes — a real (if minimal) container walk."""
 
@@ -356,15 +350,13 @@ def synthesize_video_column(
         tile = np.frombuffer(dig, dtype=np.uint8)
         return b"".join(
             bmp_encode(np.tile(np.roll(tile, fno), IMG_WIDTH * 3 * 4 // 16).reshape(4, IMG_WIDTH, 3))
-            for fno in range(n_frames)
+            for fno in range(6)
         )
 
-    return _synthesize(docs, text_col, id_col, "video", encode)
+    return _synthesize(docs, "video", encode)
 
 
-def synthesize_png_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_png_column(docs: DataFrame) -> DataFrame:
     """Real compressed PNG per doc: 8 x H grayscale (H = 4*(1 + b0 % 4)),
     pixel bytes = the md5 digest tiled, scanline filter = row % 5 so every
     PNG filter type (None/Sub/Up/Average/Paeth) appears in every image.
@@ -375,13 +367,11 @@ def synthesize_png_column(
         h = 4 * (1 + dig[0] % 4)
         return png_encode(np.tile(np.frombuffer(dig, dtype=np.uint8), 8 * h // 16).reshape(h, 8))
 
-    return _synthesize(docs, text_col, id_col, "image", encode)
+    return _synthesize(docs, "image", encode)
 
 
-def _gray_meta(
-    images: DataFrame, bin_col: str, id_col: str, decode: Callable[[bytes], np.ndarray | None]
-) -> DataFrame:
-    """Grayscale decode stats: (width, height, sum_pixel, min_pixel,
+def _gray_meta(images: DataFrame, decode: Callable[[bytes], np.ndarray | None]) -> DataFrame:
+    """Grayscale decode stats of the ``image`` column: (width, height, sum_pixel, min_pixel,
     max_pixel, mean_pixel, valid), all zero and ``valid`` false where
     ``decode`` returns None. Integer sums, exact in float64 —
     oracle-reproducible from the digest bytes."""
@@ -396,22 +386,22 @@ def _gray_meta(
         yield doc_id, w, h, s, int(px.min()), int(px.max()), s / (h * w), True
 
     schema = (
-        f"{id_col} long, width int, height int, sum_pixel long, min_pixel int, "
+        "doc_id long, width int, height int, sum_pixel long, min_pixel int, "
         "max_pixel int, mean_pixel double, valid boolean"
     )
-    return _map_rows(images, [id_col, bin_col], meta, schema)
+    return _map_rows(images, ["doc_id", "image"], meta, schema)
 
 
-def decode_png_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
+def decode_png_meta(images: DataFrame) -> DataFrame:
     """Real PNG decode: the ``_gray_meta`` stats of each image."""
-    return _gray_meta(images, bin_col, id_col, png_decode)
+    return _gray_meta(images, png_decode)
 
 
 # ---------------------------------------------------------------------------
 # Decoders / feature extractors (Arrow-batched, narrow, no shuffle)
 # ---------------------------------------------------------------------------
 
-def decode_image_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
+def decode_image_meta(images: DataFrame) -> DataFrame:
     """Real BMP decode: (width, height, n_bytes, channels, mean_pixel,
     std_pixel, valid).
 
@@ -432,13 +422,13 @@ def decode_image_meta(images: DataFrame, bin_col: str = "image", id_col: str = "
         yield doc_id, w, h, n_bytes, c, mean, float(np.sqrt(max(var, 0.0))), True
 
     schema = (
-        f"{id_col} long, width int, height int, n_bytes int, channels int, "
+        "doc_id long, width int, height int, n_bytes int, channels int, "
         "mean_pixel double, std_pixel double, valid boolean"
     )
-    return _map_rows(images, [id_col, bin_col], meta, schema)
+    return _map_rows(images, ["doc_id", "image"], meta, schema)
 
 
-def extract_audio_features(audio: DataFrame, bin_col: str = "audio", id_col: str = "doc_id") -> DataFrame:
+def extract_audio_features(audio: DataFrame) -> DataFrame:
     """Real WAV PCM16 decode: (sample_rate, n_samples, duration_ms,
     mean_amplitude, rms).
 
@@ -459,17 +449,17 @@ def extract_audio_features(audio: DataFrame, bin_col: str = "audio", id_col: str
         )
 
     schema = (
-        f"{id_col} long, sample_rate int, n_samples int, duration_ms double, "
+        "doc_id long, sample_rate int, n_samples int, duration_ms double, "
         "mean_amplitude double, rms double"
     )
-    return _map_rows(audio, [id_col, bin_col], features, schema)
+    return _map_rows(audio, ["doc_id", "audio"], features, schema)
 
 
-def resize_images(images: DataFrame, target_w: int, target_h: int, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
+def resize_images(images: DataFrame, target_w: int, target_h: int) -> DataFrame:
     """Real nearest-neighbor BMP resize: decode pixels, index-sample rows and
     columns, re-encode. Every other column passes through; invalid payloads
     become NULL."""
-    at = images.columns.index(bin_col)
+    at = images.columns.index("image")
 
     def resize(*row):
         px, blob = bmp_decode(row[at]), None
@@ -483,7 +473,7 @@ def resize_images(images: DataFrame, target_w: int, target_h: int, bin_col: str 
     return _map_rows(images, images.columns, resize, images.schema)
 
 
-def frame_sample(videos: DataFrame, every_n: int, bin_col: str = "video", id_col: str = "doc_id") -> DataFrame:
+def frame_sample(videos: DataFrame, every_n: int) -> DataFrame:
     """Demux a concatenated-BMP video by walking each frame's declared file
     size, keep every ``every_n``-th frame, emit one row per sampled frame
     with the frame's decoded mean pixel."""
@@ -503,15 +493,15 @@ def frame_sample(videos: DataFrame, every_n: int, bin_col: str = "video", id_col
             pos += fsize
             fno += 1
 
-    schema = f"{id_col} long, frame_no int, mean_pixel double, frame binary"
-    return _map_rows(videos, [id_col, bin_col], sample, schema)
+    schema = "doc_id long, frame_no int, mean_pixel double, frame binary"
+    return _map_rows(videos, ["doc_id", "video"], sample, schema)
 
 
 # ---------------------------------------------------------------------------
 # Perceptual hashing (average hash) + near-duplicate blocking
 # ---------------------------------------------------------------------------
 
-def image_ahash(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
+def image_ahash(images: DataFrame) -> DataFrame:
     """Average-hash (aHash) perceptual fingerprint from DECODED pixels:
     the classic downscale-and-threshold image near-dup signature. The
     image's byte stream collapses to its 16 tile-position means (the
@@ -538,17 +528,15 @@ def image_ahash(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id
         ah = int(sum(1 << i for i in range(16) if bits[i]))
         yield doc_id, ah, ah >> 8, ah & 0xFF, True
 
-    schema = f"{id_col} long, ahash long, band_hi long, band_lo long, valid boolean"
-    return _map_rows(images, [id_col, bin_col], ahash, schema)
+    schema = "doc_id long, ahash long, band_hi long, band_lo long, valid boolean"
+    return _map_rows(images, ["doc_id", "image"], ahash, schema)
 
 
-def ahash_near_dup_pairs(
-    hashes: DataFrame, max_hamming: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
+def ahash_near_dup_pairs(hashes: DataFrame) -> DataFrame:
     """Blocked perceptual near-dup pairs: candidates must collide on one
     of the two 8-bit hash bands (exact recall for Hamming <= 1 by
     pigeonhole; probabilistic beyond — the standard banded-LSH trade),
-    then verify true Hamming distance <= ``max_hamming`` with
+    then verify true Hamming distance <= 2 with
     bit_count(xor). Pair space is sum-over-band-values of postings^2,
     never corpus^2.
     """
@@ -556,11 +544,11 @@ def ahash_near_dup_pairs(
     # materialize it so the upstream decode pass runs ONCE, not four times
     hashes = hashes.localCheckpoint(eager=True)
     a = hashes.select(
-        F.col(id_col).alias("a"), F.col("ahash").alias("ha"),
+        F.col("doc_id").alias("a"), F.col("ahash").alias("ha"),
         F.col("band_hi").alias("__bh"), F.col("band_lo").alias("__bl"),
     )
     b = hashes.select(
-        F.col(id_col).alias("b"), F.col("ahash").alias("hb"),
+        F.col("doc_id").alias("b"), F.col("ahash").alias("hb"),
         F.col("band_hi").alias("__bh"), F.col("band_lo").alias("__bl"),
     )
     p_hi = a.join(b, "__bh").filter(F.col("a") < F.col("b")).select("a", "b", "ha", "hb")
@@ -573,7 +561,7 @@ def ahash_near_dup_pairs(
     ham = F.expr("bit_count(ha ^ hb)").cast("long")
     return (
         cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 2)
         .select("a", "b", "hamming")
     )
 
@@ -771,9 +759,7 @@ def gif_decode(payload: bytes) -> np.ndarray | None:
     return None
 
 
-def synthesize_gif_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_gif_column(docs: DataFrame) -> DataFrame:
     """Real LZW-compressed GIF per doc: 8 x H grayscale (H = 2*(1 + b3 % 8),
     b3 = fourth md5(text) byte), pixel bytes = the md5 digest tiled. Same
     closed-form stats contract as the BMP/PNG paths."""
@@ -782,12 +768,12 @@ def synthesize_gif_column(
         h = 2 * (1 + dig[3] % 8)
         return gif_encode(np.tile(np.frombuffer(dig, dtype=np.uint8), 8 * h // 16).reshape(h, 8))
 
-    return _synthesize(docs, text_col, id_col, "image", encode)
+    return _synthesize(docs, "image", encode)
 
 
-def decode_gif_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
+def decode_gif_meta(images: DataFrame) -> DataFrame:
     """Real GIF decode: the ``_gray_meta`` stats of each image."""
-    return _gray_meta(images, bin_col, id_col, gif_decode)
+    return _gray_meta(images, gif_decode)
 
 
 # ---------------------------------------------------------------------------
@@ -1192,20 +1178,18 @@ def _block_jpeg(dig: bytes, shift: int) -> bytes:
     return jpeg_encode(px)
 
 
-def synthesize_jpeg_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_jpeg_column(docs: DataFrame) -> DataFrame:
     """Real baseline JPEG per doc: 16 x 8*(1 + b1 % 3) grayscale built
     from 8x8-CONSTANT blocks (block k's value = digest byte k), flat DQT.
     DC-only blocks round-trip losslessly, so decoded stats have the same
     closed form over digest bytes as the other codecs — but only if the
     Huffman entropy decode, dezigzag and IDCT are all correct."""
-    return _synthesize(docs, text_col, id_col, "image", lambda dig: _block_jpeg(dig, 0))
+    return _synthesize(docs, "image", lambda dig: _block_jpeg(dig, 0))
 
 
-def decode_jpeg_meta(images: DataFrame, bin_col: str = "image", id_col: str = "doc_id") -> DataFrame:
+def decode_jpeg_meta(images: DataFrame) -> DataFrame:
     """Real JPEG decode: the ``_gray_meta`` stats of each image."""
-    return _gray_meta(images, bin_col, id_col, jpeg_decode)
+    return _gray_meta(images, jpeg_decode)
 
 
 # ---------------------------------------------------------------------------
@@ -1240,10 +1224,10 @@ def ulaw_decode(u: np.ndarray) -> np.ndarray:
     return np.where(sign != 0, -y, y).astype(np.int16)
 
 
-def wav_ulaw_encode(samples: np.ndarray, rate: int = 8000) -> bytes:
+def wav_ulaw_encode(samples: np.ndarray) -> bytes:
     """Encode int16 samples as a mono mu-law WAV (format tag 7, 8-bit)."""
     data = ulaw_encode(samples).tobytes()
-    fmt = struct.pack("<HHIIHH", 7, 1, rate, rate, 1, 8)
+    fmt = struct.pack("<HHIIHH", 7, 1, ULAW_RATE, ULAW_RATE, 1, 8)
     return (
         struct.pack("<4sI4s", b"RIFF", 4 + 8 + len(fmt) + 8 + len(data), b"WAVE")
         + struct.pack("<4sI", b"fmt ", len(fmt))
@@ -1274,9 +1258,7 @@ def wav_ulaw_decode(payload: bytes) -> tuple[int, np.ndarray] | None:
     return rate, ulaw_decode(data)
 
 
-def synthesize_ulaw_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_ulaw_column(docs: DataFrame) -> DataFrame:
     """Real mu-law WAV per doc: the md5 digest as 8 little-endian int16
     samples, tiled (1 + b0 % 4) times, companded to 8-bit G.711."""
 
@@ -1284,10 +1266,10 @@ def synthesize_ulaw_column(
         base = np.frombuffer(dig, dtype="<i2").astype(np.int16)
         return wav_ulaw_encode(np.tile(base, 1 + dig[0] % 4))
 
-    return _synthesize(docs, text_col, id_col, "audio", encode)
+    return _synthesize(docs, "audio", encode)
 
 
-def decode_ulaw_meta(audio: DataFrame, bin_col: str = "audio", id_col: str = "doc_id") -> DataFrame:
+def decode_ulaw_meta(audio: DataFrame) -> DataFrame:
     """Decode mu-law WAVs and report integer-exact companding stats:
     (sample_rate, n_samples, sum_abs, sum_sq, valid) over the EXPANDED
     samples — any mis-expanded segment/mantissa anywhere breaks the sums."""
@@ -1301,8 +1283,8 @@ def decode_ulaw_meta(audio: DataFrame, bin_col: str = "audio", id_col: str = "do
         s64 = smp.astype(np.int64)
         yield doc_id, rate, len(smp), int(np.abs(s64).sum()), int((s64 * s64).sum()), True
 
-    schema = f"{id_col} long, sample_rate int, n_samples long, sum_abs long, sum_sq long, valid boolean"
-    return _map_rows(audio, [id_col, bin_col], meta, schema)
+    schema = "doc_id long, sample_rate int, n_samples long, sum_abs long, sum_sq long, valid boolean"
+    return _map_rows(audio, ["doc_id", "audio"], meta, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1331,23 +1313,20 @@ def mjpeg_split(payload: bytes) -> list[bytes] | None:
     return frames
 
 
-def synthesize_mjpeg_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_mjpeg_column(docs: DataFrame) -> DataFrame:
     """Real MJPEG clip per doc: 2 + b2 % 3 frames of 16 x 8*(1 + b1 % 3)
     block-constant baseline JPEGs; frame f's block k holds digest byte
     (k + f) % 16, so every frame differs and the oracle can recompute any
     sampled subset."""
     return _synthesize(
-        docs, text_col, id_col, "video",
+        docs,
+        "video",
         lambda dig: b"".join(_block_jpeg(dig, f) for f in range(2 + dig[2] % 3)),
     )
 
 
-def mjpeg_frame_stats(
-    videos: DataFrame, every_n: int = 2, bin_col: str = "video", id_col: str = "doc_id"
-) -> DataFrame:
-    """Frame-sample an MJPEG stream (decode every ``every_n``-th frame
+def mjpeg_frame_stats(videos: DataFrame) -> DataFrame:
+    """Frame-sample an MJPEG stream (decode every 2nd frame
     only — the skip pattern a 100 TB video pipeline lives on, since
     MJPEG frames are independently decodable) and report exact pixel
     stats over the SAMPLED frames."""
@@ -1358,7 +1337,7 @@ def mjpeg_frame_stats(
             yield doc_id, 0, 0, 0, 0, 0, False
             return
         total, w, h, ok, n_sampled = 0, 0, 0, True, 0
-        for f in range(0, len(frames), every_n):
+        for f in range(0, len(frames), 2):
             px = jpeg_decode(frames[f])
             if px is None:
                 ok = False
@@ -1369,7 +1348,7 @@ def mjpeg_frame_stats(
         yield doc_id, len(frames), n_sampled, w, h, total, ok
 
     schema = (
-        f"{id_col} long, n_frames int, n_sampled int, width int, height int, "
+        "doc_id long, n_frames int, n_sampled int, width int, height int, "
         "sum_pixel long, valid boolean"
     )
-    return _map_rows(videos, [id_col, bin_col], stats, schema)
+    return _map_rows(videos, ["doc_id", "video"], stats, schema)

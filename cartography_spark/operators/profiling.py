@@ -21,6 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.dedup import portable_hash32
+
+CONFORMAL_ALPHA = 0.1
+M_PROB = 0.95
+HALF_WINDOW = 12
+
 ZBITS = 16
 
 
@@ -299,23 +305,21 @@ def psi_drift_by(
     )
 
 
-def conformal_interval_calibrate(
-    scores: DataFrame, n_col: str = "s", alpha: float = 0.1
-) -> DataFrame:
-    """Split-conformal calibration: the q_hat = ceil((n+1)(1-alpha))-th
+def conformal_interval_calibrate(scores: DataFrame) -> DataFrame:
+    """Split-conformal calibration: the q_hat = ceil((n+1)(1-CONFORMAL_ALPHA))-th
     smallest nonconformity score, computed WITHOUT a global sort — scores
     collapse to one row per DISTINCT value (map-side combinable), the
     rank cumsum runs over that bounded frame, and q_hat is the first
     value whose cumulative count reaches k (exact order statistic, the
     same pattern as ranking_auc / ks_two_sample). Returns one row
     (n_cal, k, q_hat)."""
-    per_v = scores.groupBy(F.col(n_col).alias("v")).agg(F.count("*").alias("c"))
+    per_v = scores.groupBy(F.col("s").alias("v")).agg(F.count("*").alias("c"))
     cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     ecdf = per_v.select("v", F.sum("c").over(cum).alias("cum"))
     # n_cal == max(cum), but summed from per_v so the broadcast build
     # does not re-execute the single-partition cumsum window
     tot = per_v.agg(F.sum("c").alias("n_cal"))
-    k = F.ceil((F.col("n_cal") + 1) * F.lit(1.0 - alpha)).cast("long")
+    k = F.ceil((F.col("n_cal") + 1) * F.lit(1.0 - CONFORMAL_ALPHA)).cast("long")
     return (
         ecdf.crossJoin(F.broadcast(tot))
         .withColumn("k", k)
@@ -438,9 +442,7 @@ def theil_sen_trend(
     )
 
 
-def fellegi_sunter_scores(
-    pairs: DataFrame, agree_cols: list[str], m_prob: float = 0.95
-) -> DataFrame:
+def fellegi_sunter_scores(pairs: DataFrame, agree_cols: list[str]) -> DataFrame:
     """Fellegi–Sunter record-linkage scoring over blocked candidate
     pairs: each comparison field contributes ln(m/u) millinats when it
     agrees and ln((1-m)/(1-u)) when it doesn't; the pair's match score
@@ -472,8 +474,8 @@ def fellegi_sunter_scores(
     w_terms = []
     for c in agree_cols:
         uf = F.col(f"__u_{c}")
-        wa = F.floor(F.log(F.lit(m_prob) / uf) * 1000).cast("long")
-        wd = F.floor(F.log(F.lit(1.0 - m_prob) / (F.lit(1.0) - uf)) * 1000).cast("long")
+        wa = F.floor(F.log(F.lit(M_PROB) / uf) * 1000).cast("long")
+        wd = F.floor(F.log(F.lit(1.0 - M_PROB) / (F.lit(1.0) - uf)) * 1000).cast("long")
         w_terms.append(F.when(F.col(c), wa).otherwise(wd))
     score = w_terms[0]
     for t in w_terms[1:]:
@@ -620,14 +622,9 @@ def kaplan_meier(
     )
 
 
-def seasonal_decompose_hourly(
-    events: DataFrame,
-    ts_col: str,
-    value_cents_col: Column,
-    half_window: int = 12,
-) -> DataFrame:
+def seasonal_decompose_hourly(events: DataFrame, ts_col: str, value_cents_col: Column) -> DataFrame:
     """Classical additive seasonal decomposition of an hourly series:
-    trend = centered moving average (±half_window buckets), seasonal =
+    trend = centered moving average (±12 buckets), seasonal =
     mean detrended value per hour-of-day. Returns 24 rows (hour_of_day,
     n_buckets, seasonal_millicents) — the daily load shape with the
     multi-day trend removed, the standard pre-pass before anomaly
@@ -649,7 +646,7 @@ def seasonal_decompose_hourly(
         F.count("*").cast("bigint").alias("cnt"),
     )
     mean_mc = F.round(F.lit(1000.0) * F.col("sum_cents").cast("double") / F.col("cnt").cast("double")).cast("bigint")
-    w = Window.orderBy("bucket").rowsBetween(-half_window, half_window)
+    w = Window.orderBy("bucket").rowsBetween(-HALF_WINDOW, HALF_WINDOW)
     trend_mc = F.round(F.sum("mean_mc").over(w).cast("double") / F.count("*").over(w).cast("double")).cast("bigint")
     detrended = (
         hourly.withColumn("mean_mc", mean_mc)
@@ -665,14 +662,9 @@ def seasonal_decompose_hourly(
     )
 
 
-def trimmed_mean(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    trim_ppm: int = 50_000,
-) -> DataFrame:
+def trimmed_mean(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Two-sided trimmed mean per group: drop the lowest and highest
-    floor(n * trim_ppm / 1e6) values exactly (by rank, not by
+    floor(n * 50000 / 1e6) values exactly (by rank, not by
     percentile interpolation) and average the rest — the robust
     location estimate between the mean (trim 0) and the median (trim
     50%), completing the robust suite beside MAD and Theil-Sen.
@@ -696,7 +688,7 @@ def trimmed_mean(
         .withColumn("__rn", F.row_number().over(w))
         .withColumn("__n", F.count("*").over(wc))
     )
-    k = F.expr(f"(__n * {trim_ppm}) div 1000000")
+    k = F.expr("(__n * 50000) div 1000000")
     kept = ranked.filter((F.col("__rn") > k) & (F.col("__rn") <= F.col("__n") - k))
     return kept.groupBy(F.col("__g").alias(group_col)).agg(
         F.max("__n").cast("bigint").alias("n_rows"),
@@ -1154,11 +1146,9 @@ def acf_hourly(
     )
 
 
-def conformal_mondrian_calibrate(
-    scores: DataFrame, group_col: str = "g", s_col: str = "s", alpha: float = 0.1
-) -> DataFrame:
+def conformal_mondrian_calibrate(scores: DataFrame) -> DataFrame:
     """Mondrian (group-conditional) split-conformal calibration: an
-    independent q_hat = ceil((n_g+1)(1-alpha))-th smallest nonconformity
+    independent q_hat = ceil((n_g+1)(1-CONFORMAL_ALPHA))-th smallest nonconformity
     score PER GROUP — one row (group_key, n_cal, k, q_hat) per group.
     Marginal conformal (conformal_interval_calibrate) guarantees coverage
     on average over the whole population; Mondrian conformal guarantees
@@ -1173,7 +1163,7 @@ def conformal_mondrian_calibrate(
     count reaches k. Strata parallelize instead of serializing.
     """
     per_v = scores.groupBy(
-        F.col(group_col).alias("g"), F.col(s_col).alias("v")
+        F.col("g").alias("g"), F.col("s").alias("v")
     ).agg(F.count("*").alias("c"))
     cum = Window.partitionBy("g").orderBy("v").rowsBetween(
         Window.unboundedPreceding, 0
@@ -1182,7 +1172,7 @@ def conformal_mondrian_calibrate(
     # per-group totals summed from per_v, not max over the cumsum frame:
     # same values without re-executing the window in the broadcast build
     tot = per_v.groupBy("g").agg(F.sum("c").alias("n_cal"))
-    k = F.ceil((F.col("n_cal") + 1) * F.lit(1.0 - alpha)).cast("long")
+    k = F.ceil((F.col("n_cal") + 1) * F.lit(1.0 - CONFORMAL_ALPHA)).cast("long")
     return (
         ecdf.join(F.broadcast(tot), "g")
         .withColumn("k", k)
@@ -1224,11 +1214,7 @@ def median_of_means_by(
     """
     from pyspark.sql import Window
 
-    b = (
-        F.conv(F.substring(F.md5(id_col.cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % n_buckets
-    ).alias("b")
+    b = (portable_hash32(id_col) % n_buckets).alias("b")
     per_bucket = df.groupBy(group_col.alias("g"), b).agg(
         F.sum(value_cents_col).cast("long").alias("s"),
         F.count("*").cast("long").alias("c"),
@@ -1866,9 +1852,7 @@ def ljung_box_hourly(
     )
 
 
-def benjamini_hochberg_rates(
-    df: DataFrame, group: Column, success: Column, alpha_micros: int = 50_000
-) -> DataFrame:
+def benjamini_hochberg_rates(df: DataFrame, group: Column, success: Column) -> DataFrame:
     """Benjamini-Hochberg FDR-controlled multiple testing over per-stratum
     rate tests: each stratum's success rate is z-tested against its
     COMPLEMENT (the pooled two-proportion z of two_proportion_z, one per
@@ -1884,7 +1868,7 @@ def benjamini_hochberg_rates(
     granularity that matters here) written as the SAME Horner expression
     on both engines; p is quantized to micros BEFORE ranking, so the BH
     ordering (p_micros, group) and the step-up comparison
-    p_micros * m <= alpha_micros * i are pure integer decisions — no
+    p_micros * m <= 50000 * i are pure integer decisions — no
     float enters the reject/rank path. Degenerate strata (complement
     empty, zero pooled variance) get p = 1 (never rejected), not NULL.
 
@@ -1955,7 +1939,7 @@ def benjamini_hochberg_rates(
     w_rank = Window.orderBy("p_micros", "g")
     w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ranked = scored.withColumn("bh_rank", F.row_number().over(w_rank).cast("long"))
-    passes = F.col("p_micros") * F.col("m") <= F.lit(alpha_micros) * F.col("bh_rank")
+    passes = F.col("p_micros") * F.col("m") <= F.lit(50_000) * F.col("bh_rank")
     ranked = ranked.withColumn(
         "i_max", F.max(F.when(passes, F.col("bh_rank")).otherwise(0)).over(w_all)
     )

@@ -26,7 +26,6 @@ def interval_join_backward(
     ts: str,
     window_seconds: int,
     right_cols: tuple[str, ...],
-    prefix: str = "r_",
 ) -> DataFrame:
     """Inner-join each left row to every right row with the same key and
     ``left.ts - window <= right.ts <= left.ts``. Equi-join on
@@ -40,11 +39,11 @@ def interval_join_backward(
     rt = right.select(
         F.col(by),
         rb.alias("__b"),
-        F.col(ts).alias(prefix + ts),
-        *[F.col(c).alias(prefix + c) for c in right_cols],
+        F.col(ts).alias("r_" + ts),
+        *[F.col(c).alias("r_" + c) for c in right_cols],
     )
     joined = lt.join(rt, [by, "__b"])
-    rts = F.col(prefix + ts)
+    rts = F.col("r_" + ts)
     exact = (rts <= F.col("__lts")) & (
         rts >= F.col("__lts") - F.make_dt_interval(secs=w.cast("double"))
     )

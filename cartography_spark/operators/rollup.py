@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ROUND_TO = 2
+
 def _partials():
     return (
         F.count("*").cast("bigint").alias("n_events"),
@@ -34,10 +36,10 @@ def _combined_partials():
     )
 
 
-def minute_partials(events: DataFrame, ts: str = "ts", value: str = "value") -> DataFrame:
+def minute_partials(events: DataFrame) -> DataFrame:
     """The single raw-data pass: per-minute mergeable partial state."""
     return (
-        events.select(F.date_trunc("minute", F.col(ts)).alias("bucket"), F.col(value).alias("__v"))
+        events.select(F.date_trunc("minute", F.col("ts")).alias("bucket"), F.col("value").alias("__v"))
         .groupBy("bucket")
         .agg(*_partials())
     )
@@ -53,23 +55,21 @@ def rollup_level(finer: DataFrame, unit: str) -> DataFrame:
     )
 
 
-def continuous_aggregate(
-    events: DataFrame, ts: str = "ts", value: str = "value"
-) -> dict[str, DataFrame]:
+def continuous_aggregate(events: DataFrame) -> dict[str, DataFrame]:
     """The minute -> hour -> day rollup hierarchy."""
-    minute = minute_partials(events, ts, value)
+    minute = minute_partials(events)
     hour = rollup_level(minute, "hour")
     day = rollup_level(hour, "day")
     return {"minute": minute, "hour": hour, "day": day}
 
 
-def finalize(level: DataFrame, round_to: int = 2) -> DataFrame:
+def finalize(level: DataFrame) -> DataFrame:
     """Read-time projection: derive avg from the mergeable state."""
     return level.select(
         F.col("bucket"),
         F.col("n_events"),
-        F.round(F.col("sum_value"), round_to).alias("total_value"),
-        F.round(F.col("min_value"), round_to).alias("min_value"),
-        F.round(F.col("max_value"), round_to).alias("max_value"),
-        F.round(F.col("sum_value") / F.col("n_events"), round_to).alias("avg_value"),
+        F.round(F.col("sum_value"), ROUND_TO).alias("total_value"),
+        F.round(F.col("min_value"), ROUND_TO).alias("min_value"),
+        F.round(F.col("max_value"), ROUND_TO).alias("max_value"),
+        F.round(F.col("sum_value") / F.col("n_events"), ROUND_TO).alias("avg_value"),
     )

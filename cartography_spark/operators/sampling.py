@@ -15,75 +15,63 @@ from pyspark.sql import functions as F
 
 from cartography_spark.operators.dedup import portable_hash32
 
+DSIR_BUCKETS = 256
+N_REPLICATES = 32
+LO_RANK = 2
+N_SHARDS = 8
+# train/val/test shares of the 100 hash buckets
+SPLIT_WEIGHTS = {"train": 80, "val": 10, "test": 10}
+
 
 def hash_bucket(col: Column, n_buckets: int = 100, salt: str = "split") -> Column:
     """Stable bucket in [0, n_buckets) from the salted md5 of the id."""
     return portable_hash32(col, salt=salt) % n_buckets
 
 
-def hash_sample(
-    df: DataFrame, fraction: float, id_col: str = "doc_id", salt: str = "sample"
-) -> DataFrame:
+def hash_sample(df: DataFrame, fraction: float) -> DataFrame:
     """Deterministic ~fraction sample: keep rows whose hash bucket falls
     below fraction*1000 (0.1% resolution)."""
-    return df.filter(hash_bucket(F.col(id_col), 1000, salt) < int(fraction * 1000))
+    return df.filter(hash_bucket(F.col("doc_id"), 1000, "sample") < int(fraction * 1000))
 
 
-def assign_splits(
-    df: DataFrame,
-    weights: dict[str, int] | None = None,
-    id_col: str = "doc_id",
-    salt: str = "split",
-) -> DataFrame:
-    """Attach a ``split`` column (e.g. train/val/test 80/10/10): bucket
-    ranges over a 100-bucket hash. Weights must sum to 100."""
-    weights = weights or {"train": 80, "val": 10, "test": 10}
-    if sum(weights.values()) != 100:
-        raise ValueError(f"split weights must sum to 100, got {weights}")
-    b = hash_bucket(F.col(id_col), 100, salt)
+def assign_splits(df: DataFrame) -> DataFrame:
+    """Attach a ``split`` column (train/val/test 80/10/10): bucket ranges
+    over a 100-bucket hash."""
+    b = hash_bucket(F.col("doc_id"), 100, "split")
     expr = None
     lo = 0
-    for name, w in weights.items():
+    for name, w in SPLIT_WEIGHTS.items():
         cond = (b >= lo) & (b < lo + w)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
         lo += w
     return df.withColumn("split", expr)
 
 
-def weighted_sample_topk(
-    df: DataFrame, weight_col: Column, k: int, id_col: str = "doc_id", salt: str = "ws"
-) -> DataFrame:
+def weighted_sample_topk(df: DataFrame, weight_col: Column, k: int) -> DataFrame:
     """Deterministic weighted sampling without replacement (Efraimidis-
     Spirakis A-ES): per-row key = ln(u)/w with u derived from the salted
     md5 hash, take the k largest keys. Inclusion probability is
     proportional to weight, yet fully reproducible. Distributed cost: a
     narrow projection + TakeOrdered(k) — no shuffle, merges across
     partitions like any top-k."""
-    u = (portable_hash32(F.col(id_col), salt=salt) + 1) / F.lit(4294967296.0)
+    u = (portable_hash32(F.col("doc_id"), salt="ws") + 1) / F.lit(4294967296.0)
     key = F.log(u) / weight_col
     return (
-        df.select(F.col(id_col), weight_col.cast("bigint").alias("weight"), key.alias("__key"))
-        .orderBy(F.col("__key").desc(), F.col(id_col))
+        df.select(F.col("doc_id"), weight_col.cast("bigint").alias("weight"), key.alias("__key"))
+        .orderBy(F.col("__key").desc(), F.col("doc_id"))
         .limit(k)
-        .select(id_col, "weight", F.round("__key", 6).alias("sample_key"))
+        .select("doc_id", "weight", F.round("__key", 6).alias("sample_key"))
     )
 
 
-def dsir_importance(
-    docs: DataFrame,
-    target_pred: Column,
-    n_buckets: int = 256,
-    top_k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dsir_importance(docs: DataFrame, target_pred: Column, top_k: int = 100) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023):
     score every document by how target-like its hashed-bigram distribution
     is, then keep the ``top_k`` highest-weight documents.
 
     The model is two bag-of-hashed-bigram distributions — the target slice
     (rows where ``target_pred`` holds) and the raw corpus — over
-    ``n_buckets`` md5-hashed buckets with add-1 smoothing. A document's
+    256 md5-hashed buckets with add-1 smoothing. A document's
     importance weight is the sum over its bigram OCCURRENCES of the
     per-bucket log-likelihood ratio log p_target(b) - log p_raw(b),
     quantized to millinats (bigint) so the per-document sum is
@@ -92,7 +80,7 @@ def dsir_importance(
 
     Plan shape for 100 TB: one explode + one groupBy reduces the stream to
     vocabulary-bounded bigram counts (map-side combinable; the bucket md5
-    runs per distinct bigram, not per occurrence), folded to the n_buckets
+    runs per distinct bigram, not per occurrence), folded to the 256
     model; the log-ratio dictionary and its two scalar totals are a
     bounded broadcast; the scoring pass is one broadcast join + one
     per-doc sum; selection is a TakeOrdered(top_k) semi-joined back — no
@@ -103,13 +91,13 @@ def dsir_importance(
     """
     from cartography_spark.operators.textprep import _tokens, _word_ngrams
 
-    base = docs.select(F.col(id_col), target_pred.alias("__t"), _tokens(text_col).alias("__toks"))
+    base = docs.select(F.col("doc_id"), target_pred.alias("__t"), _tokens("text").alias("__toks"))
     # small single-file parquet scans as ONE split — spread the compact
     # pre-explode rows so the explode work parallelizes (and the exchange
     # lets both passes below reuse the tokenize)
-    base = base.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+    base = base.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     grams = base.select(
-        F.col(id_col), "__t", F.explode(_word_ngrams(F.col("__toks"), 2)).alias("g")
+        F.col("doc_id"), "__t", F.explode(_word_ngrams(F.col("__toks"), 2)).alias("g")
     )
 
     # md5 over the bigram VOCABULARY, not the occurrence stream: the
@@ -130,7 +118,7 @@ def dsir_importance(
         .agg(F.count("*").alias("rc"), F.count_if(F.col("__t")).alias("tc"))
         .localCheckpoint(eager=False)
     )
-    bucket = (portable_hash32(F.col("g"), salt="dsir") % n_buckets).alias("b")
+    bucket = (portable_hash32(F.col("g"), salt="dsir") % DSIR_BUCKETS).alias("b")
     model = (
         counts_g.select(bucket, "rc", "tc")
         .groupBy("b")
@@ -138,8 +126,8 @@ def dsir_importance(
     )
     totals = model.agg(F.sum("rc").alias("rt"), F.sum("tc").alias("tt"))
     lr = (
-        F.log((F.col("tc") + F.lit(1.0)) / (F.col("tt") + F.lit(float(n_buckets))))
-        - F.log((F.col("rc") + F.lit(1.0)) / (F.col("rt") + F.lit(float(n_buckets))))
+        F.log((F.col("tc") + F.lit(1.0)) / (F.col("tt") + F.lit(float(DSIR_BUCKETS))))
+        - F.log((F.col("rc") + F.lit(1.0)) / (F.col("rt") + F.lit(float(DSIR_BUCKETS))))
     )
     model = model.crossJoin(F.broadcast(totals)).select(
         "b", F.round(lr * 1000).cast("bigint").alias("lr_millinats")
@@ -153,37 +141,35 @@ def dsir_importance(
     )
     scored = (
         grams.join(F.broadcast(gram_lr), "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_grams"),
             F.sum("lr_millinats").cast("bigint").alias("weight_millinats"),
         )
     )
     chosen = (
-        scored.orderBy(F.col("weight_millinats").desc(), F.col(id_col).asc())
+        scored.orderBy(F.col("weight_millinats").desc(), F.col("doc_id").asc())
         .limit(top_k)
-        .select(F.col(id_col), F.lit(True).alias("__sel"))
+        .select(F.col("doc_id"), F.lit(True).alias("__sel"))
     )
-    return scored.join(F.broadcast(chosen), id_col, "left").select(
-        id_col,
+    return scored.join(F.broadcast(chosen), "doc_id", "left").select(
+        "doc_id",
         "n_grams",
         "weight_millinats",
         F.coalesce("__sel", F.lit(False)).alias("selected"),
     )
 
 
-def stratified_sample_topk(
-    df: DataFrame, group_col: str, k: int, id_col: str = "doc_id", salt: str = "strat"
-) -> DataFrame:
+def stratified_sample_topk(df: DataFrame, group_col: str, k: int) -> DataFrame:
     """Exactly k rows per group (fewer if the group is smaller), chosen by
     hash order — a deterministic stratified sample. One shuffle on the
     group key; within each group the hash order is a uniform permutation."""
     from pyspark.sql import Window
 
-    h = portable_hash32(F.col(id_col), salt=salt)
-    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col(id_col).asc())
+    h = portable_hash32(F.col("doc_id"), salt="strat")
+    w = Window.partitionBy(group_col).orderBy(h.asc(), F.col("doc_id").asc())
     return (
-        df.select(F.col(group_col), F.col(id_col))
+        df.select(F.col(group_col), F.col("doc_id"))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
     )
@@ -193,14 +179,6 @@ def stratified_sample_topk(
 # P(0)=e^-1, cumulative x 2^32, identical integer literals in the SQL
 # oracle so replicate weights are engine-exact.
 _POISSON_CUTS = (1580030169, 3160060337, 3950075422, 4213413783)
-
-
-def _poisson_from_uniform(u: Column) -> Column:
-    """Truncated-Poisson(1) inverse CDF on a 32-bit uniform column."""
-    w = F.when(u < _POISSON_CUTS[0], 0)
-    for k in range(1, len(_POISSON_CUTS)):
-        w = w.when(u < _POISSON_CUTS[k], k)
-    return w.otherwise(len(_POISSON_CUTS))
 
 
 # the same cuts as fixed-width lowercase hex: for 8-hex-char slices of an
@@ -214,15 +192,16 @@ _POISSON_HEX_CUTS = tuple(format(c, "08x") for c in _POISSON_CUTS)
 
 def _poisson_from_hex_slice(hx: Column) -> Column:
     """Truncated-Poisson(1) inverse CDF evaluated directly on an 8-char
-    lowercase-hex slice of an md5 (same value as
-    ``_poisson_from_uniform(conv(hx, 16, 10))``, without the parse)."""
+    lowercase-hex slice of an md5: the same value as comparing the parsed
+    32-bit integer ``conv(hx, 16, 10)`` against ``_POISSON_CUTS``, without
+    the parse."""
     w = F.when(hx < _POISSON_HEX_CUTS[0], 0)
     for k in range(1, len(_POISSON_HEX_CUTS)):
         w = w.when(hx < _POISSON_HEX_CUTS[k], k)
     return w.otherwise(len(_POISSON_HEX_CUTS))
 
 
-def poisson_replicate_weight(col: Column, b: int, salt: str = "boot") -> Column:
+def poisson_replicate_weight(col: Column, b: int) -> Column:
     """Deterministic Poisson(1)-ish bootstrap weight for replicate ``b``:
     inverse-CDF (truncated at 4) on a 32-bit slice of the salted md5 of
     the row id. One md5 is 128 bits = FOUR independent 32-bit uniforms,
@@ -232,27 +211,21 @@ def poisson_replicate_weight(col: Column, b: int, salt: str = "boot") -> Column:
     of (id, b): reproducible across runs, engines, and repartitions,
     which seeded ``df.sample`` is not."""
     group, slot = divmod(b, 4)
-    h = F.md5(F.concat(F.lit(f"{salt}{group}:"), col.cast("string")))
+    h = F.md5(F.concat(F.lit(f"boot{group}:"), col.cast("string")))
     return _poisson_from_hex_slice(F.substring(h, 1 + 8 * slot, 8))
 
 
-def poisson_bootstrap_ci(
-    df: DataFrame,
-    value: Column,
-    id_col: Column,
-    n_replicates: int = 32,
-    lo_rank: int = 2,
-) -> DataFrame:
+def poisson_bootstrap_ci(df: DataFrame, value: Column, id_col: Column) -> DataFrame:
     """One-pass Poisson-bootstrap confidence interval for a mean: each
     replicate resamples every row with an independent hash-derived
     Poisson(1) weight, so replicate b's mean is sum(w_b*x)/sum(w_b) —
-    2*n_replicates running sums computed in ONE scan with map-side
+    2*32 running sums computed in ONE scan with map-side
     combine, no data duplication and no global N needed (the property
     that makes the Poisson bootstrap THE bootstrap at 100 TB; an exact
     multinomial resample would need the total count up front and a 32x
     explode). ``value`` must be integer-quantized by the caller so the
     sums are reduction-order-exact. CI bounds are order statistics
-    (rank lo_rank and n_replicates+1-lo_rank) of the replicate means —
+    (rank 2 and 31) of the 32 replicate means —
     exact ranks, no interpolation, so engines agree bit-for-bit.
 
     Output: (n_rows, point_mean, ci_lo, ci_hi, n_replicates).
@@ -261,7 +234,7 @@ def poisson_bootstrap_ci(
 
     # materialize one md5 per 4 replicates explicitly (not relying on
     # codegen subexpression elimination): the hash is the per-row cost
-    n_groups = (n_replicates + 3) // 4
+    n_groups = (N_REPLICATES + 3) // 4
     hashed = df.select(
         value.alias("_x"),
         *[
@@ -270,7 +243,7 @@ def poisson_bootstrap_ci(
         ],
     )
     aggs = [F.sum("_x").alias("s"), F.count(F.lit(1)).alias("n")]
-    for b in range(n_replicates):
+    for b in range(N_REPLICATES):
         group, slot = divmod(b, 4)
         # hex-slice string compare instead of conv(hex,16,10): identical
         # weights (fixed-width lowercase hex orders lexicographically ==
@@ -285,24 +258,21 @@ def poisson_bootstrap_ci(
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        (F.col(f"s{b}") / F.col(f"n{b}")).alias("m"),
-                    )
-                    for b in range(n_replicates)
+                    F.struct(F.lit(b).alias("b"), (F.col(f"s{b}") / F.col(f"n{b}")).alias("m"))
+                    for b in range(N_REPLICATES)
                 ]
             )
         ).alias("r"),
     ).select("s", "n", F.col("r.b").alias("b"), F.col("r.m").alias("m"))
     rk = F.row_number().over(Window.orderBy("m", "b"))
     ranked = reps.withColumn("rk", rk)
-    hi_rank = n_replicates + 1 - lo_rank
+    hi_rank = N_REPLICATES + 1 - LO_RANK
     return ranked.agg(
         F.max("n").cast("long").alias("n_rows"),
         (F.max("s") / F.max("n")).alias("point_mean"),
-        F.max(F.when(F.col("rk") == lo_rank, F.col("m"))).alias("ci_lo"),
+        F.max(F.when(F.col("rk") == LO_RANK, F.col("m"))).alias("ci_lo"),
         F.max(F.when(F.col("rk") == hi_rank, F.col("m"))).alias("ci_hi"),
-        F.lit(n_replicates).alias("n_replicates"),
+        F.lit(N_REPLICATES).alias("n_replicates"),
     )
 
 
@@ -377,11 +347,9 @@ def neyman_allocation(
     )
 
 
-def rendezvous_shards(
-    df: DataFrame, id_col: str = "doc_id", n_shards: int = 8, salt: str = "hrw"
-) -> DataFrame:
+def rendezvous_shards(df: DataFrame) -> DataFrame:
     """Rendezvous (highest-random-weight) sharding with an expansion
-    audit: each row is assigned to the shard whose md5(salt:id:shard)
+    audit: each row is assigned to the shard whose md5(hrw:id:shard)
     score is lexicographically largest among shards 0..n-1, then
     RE-assigned among 0..n (one new shard), and the per-shard movement
     is reported — one row per base shard with (shard, n_docs, n_moved).
@@ -401,22 +369,20 @@ def rendezvous_shards(
     collapses immediately — no window, no shuffle beyond the two
     grouped aggregates.
     """
-    shard_axis = F.array(*[F.lit(i) for i in range(n_shards + 1)])
-    scored = df.select(F.col(id_col).alias("id")).select(
+    shard_axis = F.array(*[F.lit(i) for i in range(N_SHARDS + 1)])
+    scored = df.select(F.col("doc_id").alias("id")).select(
         "id", F.explode(shard_axis).alias("shard")
     )
     score = F.md5(
         F.concat(
-            F.lit(salt + ":"),
+            F.lit("hrw:"),
             F.col("id").cast("string"),
             F.lit(":"),
             F.col("shard").cast("string"),
         )
     )
     per_id = scored.select("id", "shard", score.alias("score")).groupBy("id").agg(
-        F.expr(f"max_by(shard, CASE WHEN shard < {n_shards} THEN score END)").alias(
-            "base_shard"
-        ),
+        F.expr(f"max_by(shard, CASE WHEN shard < {N_SHARDS} THEN score END)").alias("base_shard"),
         F.expr("max_by(shard, score)").alias("new_shard"),
     )
     return (

@@ -18,6 +18,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+ROUND_DIGITS = 4
+N_PLANES = 8
+QUERY_ID = 0
+TOP_K = 10
+N_CENTROIDS = 16
+N_SUB = 4
+QUERY_DOC_ID = 0
+K_EACH = 20
+RRF_K = 60
+DIM = 64
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -33,21 +44,14 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 4,
-) -> DataFrame:
+def cosine_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
     """Exact brute-force top-k by cosine similarity to ``query_vec``."""
     q = F.lit(query_vec).cast("array<double>")
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     scored = embeddings.select(
-        F.col(id_col), F.round(cosine_similarity(v, q), round_digits).alias("cosine")
+        F.col("vec_id"), F.round(cosine_similarity(v, q), ROUND_DIGITS).alias("cosine")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def plane_signs(i: int, dim: int) -> list[float]:
@@ -80,37 +84,23 @@ def hyperplane_signature(vec_col: Column, dim: int, n_planes: int = 8) -> Column
     return sig
 
 
-def lsh_ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    dim: int,
-    k: int = 10,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 4,
-) -> DataFrame:
+def lsh_ann_topk(embeddings: DataFrame, query_vec: list[float], dim: int, k: int = 10) -> DataFrame:
     """ANN: filter to the query's LSH bucket, then exact cosine re-rank.
     Recall < 1.0 by construction; the oracle replicates the same bucketing
     so results are still exactly checkable."""
-    sig = hyperplane_signature(F.col(vec_col), dim, n_planes)
+    sig = hyperplane_signature(F.col("embedding"), dim, N_PLANES)
     with_sig = embeddings.withColumn("__sig", sig)
     q = F.lit(query_vec).cast("array<double>")
-    qsig = hyperplane_signature(q, dim, n_planes)
+    qsig = hyperplane_signature(q, dim, N_PLANES)
     bucket = with_sig.filter(F.col("__sig") == qsig)
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     scored = bucket.select(
-        F.col(id_col), F.round(cosine_similarity(v, q), round_digits).alias("cosine")
+        F.col("vec_id"), F.round(cosine_similarity(v, q), ROUND_DIGITS).alias("cosine")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """IVF index build: assign every stored vector to its max-cosine cell
     (ties -> lowest cid). Returns (id, cid, __v array<double>) — the
     inverted lists. Cell assignment is a broadcast cross join (|emb| x K
@@ -120,18 +110,18 @@ def ivf_assign(
     ORDER BY cos DESC, cid ASC). At very large K you'd move the
     assignment into a pandas-UDF matmul — the surrounding plan shape is
     unchanged. Run once per corpus snapshot; probes reuse the result."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     cents = centroids.select("cid", F.col("cv").cast("array<double>").alias("cv"))
-    scored = embeddings.select(F.col(id_col), v.alias("__v")).crossJoin(F.broadcast(cents))
+    scored = embeddings.select(F.col("vec_id"), v.alias("__v")).crossJoin(F.broadcast(cents))
     scored = scored.withColumn("__cos", cosine_similarity(F.col("__v"), F.col("cv")))
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(
             F.min_by(
                 F.struct("cid", "__v"), F.struct((-F.col("__cos")).alias("nc"), F.col("cid"))
             ).alias("__b")
         )
-        .select(id_col, F.col("__b.cid").alias("cid"), F.col("__b.__v").alias("__v"))
+        .select("vec_id", F.col("__b.cid").alias("cid"), F.col("__b.__v").alias("__v"))
     )
 
 
@@ -141,9 +131,6 @@ def ivf_ann_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 4,
     centroids: DataFrame | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
@@ -168,17 +155,17 @@ def ivf_ann_topk(
     on cell id, so the exact re-rank scans ~n_probe/n_centroids of the
     data.
     """
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     if centroids is None:
-        cents = embeddings.filter(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cid"), v.alias("cv")
+        cents = embeddings.filter(F.col("vec_id") < n_centroids).select(
+            F.col("vec_id").alias("cid"), v.alias("cv")
         )
     else:
         cents = centroids.select("cid", F.col("cv").cast("array<double>").alias("cv"))
     q = F.lit(query_vec).cast("array<double>")
 
     if assigned is None:
-        assigned = ivf_assign(embeddings, cents, vec_col=vec_col, id_col=id_col)
+        assigned = ivf_assign(embeddings, cents)
 
     probes = (
         cents.withColumn("__qcos", cosine_similarity(F.col("cv"), q))
@@ -188,26 +175,18 @@ def ivf_ann_topk(
     )
     bucket = assigned.join(F.broadcast(probes), "cid", "left_semi")
     out = bucket.select(
-        F.col(id_col), F.round(cosine_similarity(F.col("__v"), q), round_digits).alias("cosine")
+        F.col("vec_id"), F.round(cosine_similarity(F.col("__v"), q), ROUND_DIGITS).alias("cosine")
     )
-    return out.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return out.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def sparse_token_cosine_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 2,
-    max_df_div: int = 10,
-    min_cos: float = 0.5,
-    k: int = 20,
-) -> DataFrame:
+def sparse_token_cosine_pairs(docs: DataFrame, min_cos: float = 0.5, k: int = 20) -> DataFrame:
     """All-pairs sparse cosine similarity over word-bigram count vectors
     via an INVERTED-INDEX join — the set-based sparse analogue of the
     dense embedding paths above:
 
-      tf(doc, gram) -> prune grams with df < min_df (can't pair) or
-      df > N/max_df_div (stopword-like grams, the df-cap that bounds the
+      tf(doc, gram) -> prune grams with df < 2 (can't pair) or
+      df > N/10 (stopword-like grams, the df-cap that bounds the
       per-gram pair fan-out to df^2 — the standard sparse-similarity
       scalability lever) -> self-join on gram -> sum(tf_a*tf_b) -> dot.
 
@@ -222,7 +201,7 @@ def sparse_token_cosine_pairs(
 
     sc = docs.sparkSession.sparkContext
     grams = docs.repartition(sc.defaultParallelism).select(
-        F.col(id_col).alias("doc"), F.explode(_word_ngrams(_tokens(text_col), 2)).alias("g")
+        F.col("doc_id").alias("doc"), F.explode(_word_ngrams(_tokens("text"), 2)).alias("g")
     )
     tf = grams.groupBy("doc", "g").agg(F.count("*").cast("bigint").alias("tf"))
     # tf feeds FOUR consumers (norms, the df filter, and both self-join
@@ -235,7 +214,7 @@ def sparse_token_cosine_pairs(
         tf.groupBy("g")
         .agg(F.count("*").alias("df"))
         .crossJoin(F.broadcast(total))
-        .filter((F.col("df") >= min_df) & (F.col("df") <= F.floor(F.col("total") / max_df_div)))
+        .filter((F.col("df") >= 2) & (F.col("df") <= F.floor(F.col("total") / 10)))
         .select("g")
     )
     kept = tf.join(F.broadcast(dfk), "g")
@@ -261,9 +240,7 @@ def sparse_token_cosine_pairs(
     )
 
 
-def int8_quantize(
-    embeddings: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def int8_quantize(embeddings: DataFrame) -> DataFrame:
     """Scalar-quantize float vectors to [0, 254] integers per dimension
     (the int8 compression path every 100 TB vector store ships: 4x less
     I/O and integer dot products instead of float).
@@ -275,7 +252,7 @@ def int8_quantize(
     constant dims -> 0. All arithmetic is IEEE-double then integer, so
     any engine reproduces the codes bit-exactly.
     """
-    pos = embeddings.select(F.posexplode(F.col(vec_col)).alias("pos", "v")).withColumn(
+    pos = embeddings.select(F.posexplode(F.col("embedding")).alias("pos", "v")).withColumn(
         "v", F.col("v").cast("double")
     )
     stats = pos.groupBy("pos").agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
@@ -288,7 +265,7 @@ def int8_quantize(
         ).alias("__mxs"),
     )
     qvec = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda v, i: F.when(
             F.get("__mxs", i) > F.get("__mns", i),
             F.least(
@@ -305,17 +282,11 @@ def int8_quantize(
     )
     return (
         embeddings.crossJoin(F.broadcast(row))
-        .select(F.col(id_col), qvec.alias("qvec"))
+        .select(F.col("vec_id"), qvec.alias("qvec"))
     )
 
 
-def int8_topk(
-    embeddings: DataFrame,
-    query_id: int = 0,
-    k: int = 20,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def int8_topk(embeddings: DataFrame, k: int = 20) -> DataFrame:
     """Top-k neighbors by integer dot product over int8-quantized vectors.
 
     The scan side never materializes floats: one pass over the quantized
@@ -323,18 +294,18 @@ def int8_topk(
     dot, then TakeOrdered(k) — order (qdot DESC, id ASC) is total, so
     the cut is deterministic.
     """
-    q = int8_quantize(embeddings, vec_col=vec_col, id_col=id_col)
-    qv = q.filter(F.col(id_col) == query_id).select(F.col("qvec").alias("__qq"))
+    q = int8_quantize(embeddings)
+    qv = q.filter(F.col("vec_id") == QUERY_ID).select(F.col("qvec").alias("__qq"))
     dot = F.aggregate(
         F.zip_with("qvec", "__qq", lambda x, y: x * y),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
     return (
-        q.filter(F.col(id_col) != query_id)
+        q.filter(F.col("vec_id") != QUERY_ID)
         .crossJoin(F.broadcast(qv))
-        .select(F.col(id_col), dot.alias("qdot"))
-        .orderBy(F.desc("qdot"), F.asc(id_col))
+        .select(F.col("vec_id"), dot.alias("qdot"))
+        .orderBy(F.desc("qdot"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -351,12 +322,9 @@ def _sq_dist(a: Column, b: Column) -> Column:
 def pq_adc_topk(
     embeddings: DataFrame,
     dim: int,
-    query_id: int = 0,
     k: int = 20,
     n_sub: int = 4,
     codebook_ids: tuple[int, ...] = (1, 2, 3, 4, 5, 6, 7, 8),
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Product-quantization ADC (asymmetric distance computation) top-k.
 
@@ -386,10 +354,10 @@ def pq_adc_topk(
     TakeOrdered(k) with the total order (adist ASC, id ASC).
     """
     dsub = dim // n_sub
-    q = int8_quantize(embeddings, vec_col=vec_col, id_col=id_col)
+    q = int8_quantize(embeddings)
     q = q.localCheckpoint(eager=True)
     cbq = (
-        q.filter(F.col(id_col).isin([*codebook_ids, query_id]))
+        q.filter(F.col("vec_id").isin([*codebook_ids, QUERY_ID]))
         .groupBy()
         .agg(
             # collect_list skips NULLs, so the when() drops the query row
@@ -397,15 +365,15 @@ def pq_adc_topk(
                 F.array_sort(
                     F.collect_list(
                         F.when(
-                            F.col(id_col) != query_id,
-                            F.struct(F.col(id_col), F.col("qvec")),
+                            F.col("vec_id") != QUERY_ID,
+                            F.struct(F.col("vec_id"), F.col("qvec")),
                         )
                     )
                 ),
                 lambda s: s["qvec"],
             ).alias("__cb"),
             # exactly one row has the flag set, so max_by is deterministic
-            F.max_by("qvec", (F.col(id_col) == query_id).cast("int")).alias("__q"),
+            F.max_by("qvec", (F.col("vec_id") == QUERY_ID).cast("int")).alias("__q"),
         )
     )
 
@@ -461,10 +429,10 @@ def pq_adc_topk(
 
     adist = sum(F.get(F.get("__lut", m), code(m)) for m in range(n_sub))
     return (
-        q.filter(F.col(id_col) != query_id)
+        q.filter(F.col("vec_id") != QUERY_ID)
         .crossJoin(F.broadcast(lut_row))
-        .select(F.col(id_col), adist.cast("long").alias("adist"))
-        .orderBy(F.asc("adist"), F.asc(id_col))
+        .select(F.col("vec_id"), adist.cast("long").alias("adist"))
+        .orderBy(F.asc("adist"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -474,47 +442,31 @@ def multiprobe_lsh_ann_topk(
     query_vec: list[float],
     dim: int,
     k: int = 10,
-    n_planes: int = 8,
-    max_hamming: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 4,
 ) -> DataFrame:
-    """Multi-probe LSH ANN: scan every bucket within ``max_hamming`` bit
+    """Multi-probe LSH ANN: scan every bucket within 1 bit
     flips of the query's signature (9 of 256 buckets at 8 planes/1 flip)
     then exact cosine re-rank — the standard recall lever over
     single-bucket LSH without re-hashing or extra tables. The probe set
     is expressed as one ``bit_count(sig XOR qsig) <= h`` scan predicate:
     no bucket explosion, no join, and the signature column stays an
     equi-partitionable long for the stored side."""
-    sig = hyperplane_signature(F.col(vec_col), dim, n_planes)
-    qsig = hyperplane_signature(F.lit(query_vec).cast("array<double>"), dim, n_planes)
+    sig = hyperplane_signature(F.col("embedding"), dim, N_PLANES)
+    qsig = hyperplane_signature(F.lit(query_vec).cast("array<double>"), dim, N_PLANES)
     cand = embeddings.withColumn("__sig", sig).filter(
-        F.bit_count(F.col("__sig").bitwiseXOR(qsig)) <= max_hamming
+        F.bit_count(F.col("__sig").bitwiseXOR(qsig)) <= 1
     )
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     q = F.lit(query_vec).cast("array<double>")
     scored = cand.select(
-        F.col(id_col), F.round(cosine_similarity(v, q), round_digits).alias("cosine")
+        F.col("vec_id"), F.round(cosine_similarity(v, q), ROUND_DIGITS).alias("cosine")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    dim: int,
-    query_id: int = 0,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    n_sub: int = 4,
-    codebook_ids: tuple[int, ...] = (1, 2, 3, 4, 5, 6, 7, 8),
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_pq_topk(embeddings: DataFrame, dim: int) -> DataFrame:
     """IVF-PQ: the production ANN layout — a coarse quantizer prunes the
-    scan to ``n_probe`` of ``n_centroids`` cells, product-quantization
-    ADC scores the survivors with ``n_sub`` table lookups each. Combines
+    scan to 4 of ``N_CENTROIDS`` cells, product-quantization ADC
+    scores the survivors with ``N_SUB`` table lookups each. Combines
     ivf_ann_topk's pruning with pq_adc_topk's compression; both stages
     run on the int8 codes with exact BIGINT distances (coarse argmin and
     probe selection tie-break on the smaller centroid id), so the full
@@ -523,22 +475,22 @@ def ivf_pq_topk(
     Plan: one localCheckpointed pass builds codes; coarse centroids,
     PQ codebook, query LUT and probe list are all 1-row broadcasts; cell
     pruning is an ``array_contains`` scan predicate (no join); scoring
-    is 4 lookups/row; TakeOrdered(k) on the total (adist, id) order.
+    is 4 lookups/row; TakeOrdered(TOP_K) on the total (adist, id) order.
     """
-    dsub = dim // n_sub
-    q = int8_quantize(embeddings, vec_col=vec_col, id_col=id_col)
+    dsub = dim // N_SUB
+    q = int8_quantize(embeddings)
     q = q.localCheckpoint(eager=True)
 
     def one_row_codebook(src: DataFrame, alias: str) -> DataFrame:
         return src.groupBy().agg(
             F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col(id_col), F.col("qvec")))),
+                F.array_sort(F.collect_list(F.struct(F.col("vec_id"), F.col("qvec")))),
                 lambda s: s["qvec"],
             ).alias(alias)
         )
 
-    coarse = one_row_codebook(q.filter(F.col(id_col) < n_centroids), "__cc")
-    cb = one_row_codebook(q.filter(F.col(id_col).isin(list(codebook_ids))), "__cb")
+    coarse = one_row_codebook(q.filter(F.col("vec_id") < N_CENTROIDS), "__cc")
+    cb = one_row_codebook(q.filter(F.col("vec_id").isin(list(range(1, 9)))), "__cb")
     enc = q.crossJoin(F.broadcast(coarse)).crossJoin(F.broadcast(cb))
 
     cdists = F.transform(F.col("__cc"), lambda c: _sq_dist(F.col("qvec"), c))
@@ -553,54 +505,40 @@ def ivf_pq_topk(
     codes = F.array(
         *[
             (F.array_position(sub_dists(m), F.array_min(sub_dists(m))) - 1).cast("int")
-            for m in range(n_sub)
+            for m in range(N_SUB)
         ]
     )
     probe_structs = F.array_sort(
         F.zip_with(
             cdists,
-            F.sequence(F.lit(0), F.lit(n_centroids - 1)),
+            F.sequence(F.lit(0), F.lit(N_CENTROIDS - 1)),
             lambda d, i: F.struct(d.alias("d"), i.alias("cid")),
         )
     )
-    probes = F.transform(F.slice(probe_structs, 1, n_probe), lambda s: s["cid"].cast("int"))
-    qrow = enc.filter(F.col(id_col) == query_id).select(
-        F.array(*[sub_dists(m) for m in range(n_sub)]).alias("__lut"),
+    probes = F.transform(F.slice(probe_structs, 1, 4), lambda s: s["cid"].cast("int"))
+    qrow = enc.filter(F.col("vec_id") == QUERY_ID).select(
+        F.array(*[sub_dists(m) for m in range(N_SUB)]).alias("__lut"),
         probes.alias("__probes"),
     )
     scan = (
-        enc.filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), cell.alias("__cell"), codes.alias("__codes"))
+        enc.filter(F.col("vec_id") != QUERY_ID)
+        .select(F.col("vec_id"), cell.alias("__cell"), codes.alias("__codes"))
         .crossJoin(F.broadcast(qrow))
         .filter(F.array_contains("__probes", F.col("__cell")))
     )
-    adist = sum(
-        F.get(F.get("__lut", m), F.get("__codes", F.lit(m))) for m in range(n_sub)
-    )
+    adist = sum(F.get(F.get("__lut", m), F.get("__codes", F.lit(m))) for m in range(N_SUB))
     return (
-        scan.select(F.col(id_col), adist.cast("long").alias("adist"))
-        .orderBy(F.asc("adist"), F.asc(id_col))
-        .limit(k)
+        scan.select(F.col("vec_id"), adist.cast("long").alias("adist"))
+        .orderBy(F.asc("adist"), F.asc("vec_id"))
+        .limit(TOP_K)
     )
 
 
-def hybrid_rrf_topk(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    query_vec: list[float],
-    query_doc_id: int = 0,
-    k_each: int = 20,
-    k: int = 10,
-    rrf_k: int = 60,
-    text_col: str = "text",
-    doc_id_col: str = "doc_id",
-    vec_col: str = "embedding",
-    vec_id_col: str = "vec_id",
-) -> DataFrame:
+def hybrid_rrf_topk(docs: DataFrame, embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
     """Hybrid retrieval by Reciprocal Rank Fusion: the dense lane ranks by
     embedding cosine to ``query_vec``, the sparse lane by word-bigram
-    cosine to document ``query_doc_id``, and candidates fuse with
-    score = 1/(rrf_k + dense_rank) + 1/(rrf_k + sparse_rank) (a lane a
+    cosine to document ``QUERY_DOC_ID``, and candidates fuse with
+    score = 1/(RRF_K + dense_rank) + 1/(RRF_K + sparse_rank) (a lane a
     candidate missed contributes 0) — the standard way production search
     merges BM25-ish lexical recall with vector recall.
 
@@ -611,8 +549,8 @@ def hybrid_rrf_topk(
     its integer norm (run-length fold over the sorted array) per row:
     zero shuffles, no corpus-wide term-frequency table (the previous
     inverted-index plan spent ~6.5 s at sf1 just materializing tf).
-    The dense lane is one scan; each lane keeps only its top ``k_each``
-    before the fuse, so the rank window sorts k_each rows, never the
+    The dense lane is one scan; each lane keeps only its top ``K_EACH``
+    before the fuse, so the rank window sorts K_EACH rows, never the
     corpus.
     """
     from pyspark.sql import Window
@@ -621,12 +559,12 @@ def hybrid_rrf_topk(
 
     # dense lane
     q = F.lit(query_vec).cast("array<double>")
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     dense = (
-        embeddings.filter(F.col(vec_id_col) != query_doc_id)
-        .select(F.col(vec_id_col).alias("id"), cosine_similarity(v, q).alias("dcos"))
+        embeddings.filter(F.col("vec_id") != QUERY_DOC_ID)
+        .select(F.col("vec_id").alias("id"), cosine_similarity(v, q).alias("dcos"))
         .orderBy(F.col("dcos").desc(), F.col("id").asc())
-        .limit(k_each)
+        .limit(K_EACH)
     )
     wd = Window.orderBy(F.col("dcos").desc(), F.col("id").asc())
     dense = dense.withColumn("dr", F.row_number().over(wd)).select("id", "dr")
@@ -635,9 +573,9 @@ def hybrid_rrf_topk(
     # (ONE document by contract) and scored scan-locally against every doc
     from collections import Counter
 
-    grams_arr = _word_ngrams(_tokens(text_col), 2)
+    grams_arr = _word_ngrams(_tokens("text"), 2)
     qrow = (
-        docs.filter(F.col(doc_id_col) == query_doc_id).select(grams_arr.alias("__g")).first()
+        docs.filter(F.col("doc_id") == QUERY_DOC_ID).select(grams_arr.alias("__g")).first()
     )
     qtf = Counter(qrow["__g"] if qrow and qrow["__g"] else [])
     qnrm = sum(c * c for c in qtf.values())
@@ -654,11 +592,11 @@ def hybrid_rrf_topk(
         # materializes a (doc, gram) table across the cluster: the only
         # shuffle payload is one row per document.
         spark = docs.sparkSession
-        base = docs.filter(F.col(doc_id_col) != query_doc_id).repartition(
-            spark.sparkContext.defaultParallelism, F.col(doc_id_col)
+        base = docs.filter(F.col("doc_id") != QUERY_DOC_ID).repartition(
+            spark.sparkContext.defaultParallelism, F.col("doc_id")
         )
         dtf = (
-            base.select(F.col(doc_id_col).alias("id"), F.explode(grams_arr).alias("__g"))
+            base.select(F.col("doc_id").alias("id"), F.explode(grams_arr).alias("__g"))
             .groupBy("id", "__g")
             .agg(F.count(F.lit(1)).alias("__tf"))
         )
@@ -680,7 +618,7 @@ def hybrid_rrf_topk(
                 (F.col("dot") / (F.sqrt("nrm") * F.sqrt(F.lit(float(qnrm))))).alias("scos"),
             )
             .orderBy(F.col("scos").desc(), F.col("id").asc())
-            .limit(k_each)
+            .limit(K_EACH)
         )
     else:
         # query doc empty: sparse lane contributes nothing
@@ -691,24 +629,17 @@ def hybrid_rrf_topk(
     fused = dense.join(sparse, "id", "full_outer").select(
         "id",
         F.round(
-            F.coalesce(F.lit(1.0) / (rrf_k + F.col("dr")), F.lit(0.0))
-            + F.coalesce(F.lit(1.0) / (rrf_k + F.col("sr")), F.lit(0.0)),
+            F.coalesce(F.lit(1.0) / (RRF_K + F.col("dr")), F.lit(0.0))
+            + F.coalesce(F.lit(1.0) / (RRF_K + F.col("sr")), F.lit(0.0)),
             6,
         ).alias("rrf_score"),
         F.coalesce("dr", F.lit(0)).alias("dense_rank"),
         F.coalesce("sr", F.lit(0)).alias("sparse_rank"),
     )
-    return fused.orderBy(F.col("rrf_score").desc(), F.col("id").asc()).limit(k)
+    return fused.orderBy(F.col("rrf_score").desc(), F.col("id").asc()).limit(TOP_K)
 
 
-def random_project(
-    embeddings: DataFrame,
-    dim: int,
-    n_components: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
+def random_project(embeddings: DataFrame, dim: int, n_components: int = 4) -> DataFrame:
     """Johnson-Lindenstrauss random projection with a DETERMINISTIC dense
     ±1 matrix (Achlioptas 2003 without the sparsity): component k of the
     projection is ``dot(v, signs_k) / sqrt(n_components)`` with
@@ -724,40 +655,31 @@ def random_project(
     you'd broadcast it into a pandas-UDF matmul with identical values.
     Scan-local: zero shuffles, one projection per row.
     """
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     scale = float(n_components) ** 0.5
-    cols = [F.col(id_col)]
+    cols = [F.col("vec_id")]
     for k in range(n_components):
         comps = F.lit(plane_signs(k, dim)).cast("array<double>")
         dot = F.aggregate(F.zip_with(v, comps, lambda x, y: x * y), F.lit(0.0), lambda a, b: a + b)
-        cols.append(F.round(dot / scale, round_digits).alias(f"p{k}"))
+        cols.append(F.round(dot / scale, ROUND_DIGITS).alias(f"p{k}"))
     return embeddings.select(*cols)
 
 
-def binary_sign_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    dim: int = 64,
-    k: int = 10,
-    rerank: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id: int = 0,
-) -> DataFrame:
+def binary_sign_topk(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
     """1-bit binary quantization retrieval — the 32x-compression rung of
     the ANN ladder below int8 (4x) and PQ: keep only each component's sign,
-    packed 32 bits per BIGINT (two words for dim<=64; bit 63 of a single
+    packed 32 bits per BIGINT (two words for DIM<=64; bit 63 of a single
     word would overflow signed engines), rank candidates by Hamming
     distance (one xor + popcount per word — the cheapest possible scan
     over a 100 TB vector store), then exact-cosine re-rank the top
-    ``k * rerank`` pool. Matches modern binary-embedding retrieval
+    ``TOP_K * 4`` pool. Matches modern binary-embedding retrieval
     (sign(x) agrees with angular similarity in expectation).
 
     Everything JVM-side codegen: the packing is a fixed fan of 64 CASE
     terms, the scan is two xor/popcount columns, the re-rank pool is
-    ``k * rerank`` rows so its float cosine cost is constant.
+    ``TOP_K * 4`` rows so its float cosine cost is constant.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
 
     def pack(lo_dim: int, n_bits: int) -> F.Column:
         out = F.lit(0).cast("long")
@@ -767,12 +689,12 @@ def binary_sign_topk(
             ).otherwise(F.lit(0).cast("long"))
         return out
 
-    lo_bits = min(32, dim)
-    hi_bits = max(0, dim - 32)
+    lo_bits = min(32, DIM)
+    hi_bits = max(0, DIM - 32)
     qlo = sum((1 << i) for i in range(lo_bits) if query_vec[i] > 0)
     qhi = sum((1 << i) for i in range(hi_bits) if query_vec[32 + i] > 0)
-    sig = embeddings.filter(F.col(id_col) != query_id).select(
-        F.col(id_col), v.alias("__v"), pack(0, lo_bits).alias("__lo"), pack(32, hi_bits).alias("__hi")
+    sig = embeddings.filter(F.col("vec_id") != QUERY_ID).select(
+        F.col("vec_id"), v.alias("__v"), pack(0, lo_bits).alias("__lo"), pack(32, hi_bits).alias("__hi")
     )
     hamming = (
         F.bit_count(F.col("__lo").bitwiseXOR(F.lit(qlo).cast("long")))
@@ -780,17 +702,17 @@ def binary_sign_topk(
     ).cast("bigint")
     cand = (
         sig.withColumn("hamming", hamming)
-        .orderBy(F.col("hamming").asc(), F.col(id_col).asc())
-        .limit(k * rerank)
+        .orderBy(F.col("hamming").asc(), F.col("vec_id").asc())
+        .limit(TOP_K * 4)
     )
     cos = cosine_similarity(
         F.col("__v").cast("array<double>"), F.lit(query_vec).cast("array<double>")
     )
     return (
         cand.withColumn("cosine", F.round(cos, 6))
-        .select(id_col, "hamming", "cosine")
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
+        .select("vec_id", "hamming", "cosine")
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+        .limit(TOP_K)
     )
 
 
@@ -800,8 +722,6 @@ def mmr_rerank(
     k: int = 5,
     pool: int = 20,
     lam: float = 0.7,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     query_id: int = 0,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998) —
@@ -820,11 +740,11 @@ def mmr_rerank(
     trajectory is bit-reproducible in any engine.
     """
     q = F.lit(query_vec).cast("array<double>")
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     cand = (
-        embeddings.filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), v.alias("__v"), cosine_similarity(v, q).alias("__rel"))
-        .orderBy(F.col("__rel").desc(), F.col(id_col).asc())
+        embeddings.filter(F.col("vec_id") != query_id)
+        .select(F.col("vec_id"), v.alias("__v"), cosine_similarity(v, q).alias("__rel"))
+        .orderBy(F.col("__rel").desc(), F.col("vec_id").asc())
         .limit(pool)
     )
     cand = cand.localCheckpoint(eager=True)  # pool computed once; k argmax scans reuse it
@@ -843,10 +763,10 @@ def mmr_rerank(
         score = F.round(
             (F.lit(lam) * F.col("__rel") - F.lit(1.0 - lam) * maxsim) * 1_000_000
         ).cast("bigint")
-        remaining = cand.filter(~F.col(id_col).isin([s[0] for s in selected])) if selected else cand
+        remaining = cand.filter(~F.col("vec_id").isin([s[0] for s in selected])) if selected else cand
         top = (
-            remaining.select(F.col(id_col), score.alias("__score"), F.col("__v"))
-            .orderBy(F.col("__score").desc(), F.col(id_col).asc())
+            remaining.select(F.col("vec_id"), score.alias("__score"), F.col("__v"))
+            .orderBy(F.col("__score").desc(), F.col("vec_id").asc())
             .first()
         )
         if top is None:
@@ -854,10 +774,10 @@ def mmr_rerank(
         selected.append((top[0], top[1], list(top[2])))
     spark = embeddings.sparkSession
     rows = [(i + 1, s[0], s[1]) for i, s in enumerate(selected)]
-    return spark.createDataFrame(rows, f"rank int, {id_col} long, score_micro bigint")
+    return spark.createDataFrame(rows, "rank int, vec_id long, score_micro bigint")
 
 
-def dimension_stats(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def dimension_stats(embeddings: DataFrame) -> DataFrame:
     """Per-dimension moment profile of an embedding column: one row per
     dimension with exact integer micro-quantized moment sums (n,
     sum_micros, sumsq_micros2), the mean (mean_micros), the sample
@@ -881,9 +801,7 @@ def dimension_stats(embeddings: DataFrame, vec_col: str = "embedding") -> DataFr
     """
     from pyspark.sql import Window
 
-    vals = embeddings.select(
-        F.posexplode(F.col(vec_col)).alias("pos", "val")
-    ).select(
+    vals = embeddings.select(F.posexplode(F.col("embedding")).alias("pos", "val")).select(
         (F.col("pos") + 1).cast("bigint").alias("dim"),
         F.round(F.lit(1_000_000.0) * F.col("val").cast("double")).cast("bigint").alias("q"),
     )
@@ -907,7 +825,7 @@ def dimension_stats(embeddings: DataFrame, vec_col: str = "embedding") -> DataFr
     return stats.withColumn("var_rank", F.row_number().over(w).cast("bigint"))
 
 
-def int8_distortion(embeddings: DataFrame, vec_col: str = "embedding", label_col: str = "label") -> DataFrame:
+def int8_distortion(embeddings: DataFrame) -> DataFrame:
     """Reconstruction-error audit of the int8 scalar quantizer: dequantize
     each code at its cell midpoint (mn + (q + 0.5) * step) and report the
     per-label squared-error profile — the QA number that tells you
@@ -925,7 +843,7 @@ def int8_distortion(embeddings: DataFrame, vec_col: str = "embedding", label_col
     computed as e*e (not pow) so the oracle's identical expression
     chain reproduces it bit-exactly.
     """
-    pos = embeddings.select(F.posexplode(F.col(vec_col)).alias("pos", "v")).withColumn(
+    pos = embeddings.select(F.posexplode(F.col("embedding")).alias("pos", "v")).withColumn(
         "v", F.col("v").cast("double")
     )
     stats = pos.groupBy("pos").agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
@@ -951,9 +869,9 @@ def int8_distortion(embeddings: DataFrame, vec_col: str = "embedding", label_col
         )
 
     per_vec = embeddings.crossJoin(F.broadcast(row)).select(
-        F.col(label_col).cast("bigint").alias("label"),
+        F.col("label").cast("bigint").alias("label"),
         F.aggregate(
-            F.transform(F.col(vec_col), err_pico),
+            F.transform(F.col("embedding"), err_pico),
             F.lit(0).cast("bigint"),
             lambda acc, x: acc + x,
         ).alias("err_pico"),

@@ -27,24 +27,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.dedup import portable_hash32
 
-def _h32(col) -> F.Column:
-    """Portable 32-bit hash: first 8 hex digits of md5 (same as the
-    dedup/minhash convention)."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
+KMV_K = 64
 
 
-def kmv_distinct_estimate(df: DataFrame, col: str, k: int = 64) -> DataFrame:
+def kmv_distinct_estimate(df: DataFrame, col: str) -> DataFrame:
     """KMV cardinality estimate of ``col``: one row with the exact count
-    (for the oracle comparison), the sketch estimate, and k."""
-    hashes = df.select(_h32(F.col(col)).alias("h")).distinct()
-    kth = hashes.orderBy("h").limit(k).agg(F.max("h").alias("kth"), F.count("*").alias("got"))
+    (for the oracle comparison), the sketch estimate, and KMV_K."""
+    hashes = df.select(portable_hash32(F.col(col)).alias("h")).distinct()
+    kth = hashes.orderBy("h").limit(KMV_K).agg(F.max("h").alias("kth"), F.count("*").alias("got"))
     return kth.select(
-        F.lit(k).alias("k"),
+        F.lit(KMV_K).alias("k"),
         # fewer than k distinct values -> the sketch is exact (got)
         F.when(
-            F.col("got") < k, F.col("got").cast("double")
-        ).otherwise(F.round((F.lit(float(k - 1)) * F.lit(float(2**32))) / F.col("kth"), 2)).alias(
+            F.col("got") < KMV_K, F.col("got").cast("double")
+        ).otherwise(F.round((F.lit(float(KMV_K - 1)) * F.lit(float(2**32))) / F.col("kth"), 2)).alias(
             "estimate"
         ),
     )
@@ -170,7 +168,8 @@ def countmin_build(
     combinable groupBy; at most depth*width output cells."""
     rows = F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("r")
     cells = df.select(F.col(col).alias("__x"), rows).select(
-        "r", (_h32(F.concat(F.col("r").cast("string"), F.lit(":"), F.col("__x"))) % width).alias("b")
+        "r",
+        (portable_hash32(F.concat(F.col("r").cast("string"), F.lit(":"), F.col("__x"))) % width).alias("b"),
     )
     return cells.groupBy("r", "b").agg(F.count("*").cast("bigint").alias("n"))
 
@@ -187,7 +186,7 @@ def countmin_estimate(
         )
     )
     probes = probes.withColumn(
-        "b", _h32(F.concat(F.col("r").cast("string"), F.lit(":"), F.col(col))) % width
+        "b", portable_hash32(F.concat(F.col("r").cast("string"), F.lit(":"), F.col(col))) % width
     )
     joined = probes.join(F.broadcast(sketch), ["r", "b"], "left").withColumn(
         "n", F.coalesce(F.col("n"), F.lit(0))
@@ -195,9 +194,7 @@ def countmin_estimate(
     return joined.groupBy(col).agg(F.min("n").cast("bigint").alias("est_n"))
 
 
-def kmv_intersection_estimate(
-    a: DataFrame, b: DataFrame, col: str, k: int = 64
-) -> DataFrame:
+def kmv_intersection_estimate(a: DataFrame, b: DataFrame, col: str) -> DataFrame:
     """KMV set-operation estimates (the theta-sketch idiom): Jaccard and
     intersection cardinality of two keyed sets from their k-minimum-value
     sketches alone.
@@ -210,11 +207,11 @@ def kmv_intersection_estimate(
     the estimates bit-exactly. Exact counts ride along to expose the
     sketch error.
     """
-    ha = a.select(_h32(F.col(col)).alias("h")).distinct()
-    hb = b.select(_h32(F.col(col)).alias("h")).distinct()
-    ka = ha.orderBy("h").limit(k)
-    kb = hb.orderBy("h").limit(k)
-    union_k = ka.unionByName(kb).distinct().orderBy("h").limit(k)
+    ha = a.select(portable_hash32(F.col(col)).alias("h")).distinct()
+    hb = b.select(portable_hash32(F.col(col)).alias("h")).distinct()
+    ka = ha.orderBy("h").limit(KMV_K)
+    kb = hb.orderBy("h").limit(KMV_K)
+    union_k = ka.unionByName(kb).distinct().orderBy("h").limit(KMV_K)
     kth = union_k.agg(F.max("h").alias("kth"))
     m = (
         union_k.join(ka, "h", "left_semi")
@@ -228,12 +225,12 @@ def kmv_intersection_estimate(
         m.crossJoin(F.broadcast(kth))
         .crossJoin(F.broadcast(exact))
         .select(
-            F.lit(k).alias("k"),
+            F.lit(KMV_K).alias("k"),
             "m",
-            F.round(F.col("m") / F.lit(float(k)), 6).alias("jaccard_est"),
+            F.round(F.col("m") / F.lit(float(KMV_K)), 6).alias("jaccard_est"),
             F.round(
-                (F.col("m") / F.lit(float(k)))
-                * (F.lit(float(k - 1)) * F.lit(float(2**32)) / F.col("kth")),
+                (F.col("m") / F.lit(float(KMV_K)))
+                * (F.lit(float(KMV_K - 1)) * F.lit(float(2**32)) / F.col("kth")),
                 2,
             ).alias("inter_est"),
             "n_inter_exact",
@@ -241,19 +238,17 @@ def kmv_intersection_estimate(
     )
 
 
-def kmv_difference_estimate(
-    a: DataFrame, b: DataFrame, col: str, k: int = 64
-) -> DataFrame:
+def kmv_difference_estimate(a: DataFrame, b: DataFrame, col: str) -> DataFrame:
     """KMV A-not-B estimate (completing the theta-sketch set algebra next
     to :func:`kmv_intersection_estimate`): of the union's k-min sample,
     the fraction found in A's sketch but NOT B's estimates
     |A \\ B| / |A∪B|. Same md5 hash space, same merge rules, exact
     integer m — bit-reproducible anywhere."""
-    ha = a.select(_h32(F.col(col)).alias("h")).distinct()
-    hb = b.select(_h32(F.col(col)).alias("h")).distinct()
-    ka = ha.orderBy("h").limit(k)
-    kb = hb.orderBy("h").limit(k)
-    union_k = ka.unionByName(kb).distinct().orderBy("h").limit(k)
+    ha = a.select(portable_hash32(F.col(col)).alias("h")).distinct()
+    hb = b.select(portable_hash32(F.col(col)).alias("h")).distinct()
+    ka = ha.orderBy("h").limit(KMV_K)
+    kb = hb.orderBy("h").limit(KMV_K)
+    union_k = ka.unionByName(kb).distinct().orderBy("h").limit(KMV_K)
     kth = union_k.agg(F.max("h").alias("kth"))
     m = (
         union_k.join(ka, "h", "left_semi")
@@ -269,11 +264,11 @@ def kmv_difference_estimate(
         m.crossJoin(F.broadcast(kth))
         .crossJoin(F.broadcast(exact))
         .select(
-            F.lit(k).alias("k"),
+            F.lit(KMV_K).alias("k"),
             "m",
             F.round(
-                (F.col("m") / F.lit(float(k)))
-                * (F.lit(float(k - 1)) * F.lit(float(2**32)) / F.col("kth")),
+                (F.col("m") / F.lit(float(KMV_K)))
+                * (F.lit(float(KMV_K - 1)) * F.lit(float(2**32)) / F.col("kth")),
                 2,
             ).alias("diff_est"),
             "n_diff_exact",

@@ -22,13 +22,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+SALT_BUCKETS = 4
+N_BUCKETS = 32
 
-def with_salt(df: DataFrame, salt_buckets: int, salt_col: str = "__salt") -> DataFrame:
+
+def with_salt(df: DataFrame, salt_buckets: int) -> DataFrame:
     """Attach a uniform random-ish salt derived from a row hash — stable
     per-row (crc32 of all columns), not an RNG, so retries/replays are
     deterministic."""
     h = F.crc32(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns]))
-    return df.withColumn(salt_col, (h % salt_buckets).cast("int"))
+    return df.withColumn("__salt", (h % salt_buckets).cast("int"))
 
 
 def salted_agg(
@@ -61,28 +64,23 @@ def salted_agg(
     return phase1.groupBy(*keys).agg(*[combiner(n, e) for n, e in aggs.items()])
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
+def salted_join(fact: DataFrame, dim: DataFrame, on: list[str]) -> DataFrame:
     """Skew-safe equi-join: the (possibly skewed) fact side gets a salt;
     the dim side is replicated across every salt value; the join runs on
-    keys + salt so a hot key's rows spread over ``salt_buckets`` tasks."""
-    f = with_salt(fact, salt_buckets)
-    d = dim.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<int>")))
-    out = f.join(d, [*on, "__salt"], how)
+    keys + salt so a hot key's rows spread over ``SALT_BUCKETS`` tasks."""
+    f = with_salt(fact, SALT_BUCKETS)
+    salts = F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)).cast("array<int>")
+    d = dim.withColumn("__salt", F.explode(salts))
+    out = f.join(d, [*on, "__salt"], "inner")
     return out.drop("__salt")
 
 
-def skew_audit(df: DataFrame, key: Column, n_buckets: int = 32) -> DataFrame:
+def skew_audit(df: DataFrame, key: Column) -> DataFrame:
     """Pre-shuffle skew audit for a prospective join/groupBy key — the
     measurement you run BEFORE committing a 100 TB plan to a shuffle on
     ``key``, to decide between a plain exchange, AQE skew splitting, and
     explicit salting (:func:`with_salt`). Hash-partitions the key space
-    into ``n_buckets`` buckets with the repo-portable md5 hash
+    into ``N_BUCKETS`` buckets with the repo-portable md5 hash
     (dedup.portable_hash32 — NOT Spark's Murmur3, so the oracle and any
     other engine compute identical buckets) and reports ONE summary row:
 
@@ -91,7 +89,7 @@ def skew_audit(df: DataFrame, key: Column, n_buckets: int = 32) -> DataFrame:
     - max_bucket_rows / max_key_rows — the heaviest reducer and the
       heaviest single key (a hot KEY needs salting; a hot BUCKET with
       cold keys only needs more partitions);
-    - bucket_skew_millis = 1000 * max_bucket_rows * n_buckets / n_rows
+    - bucket_skew_millis = 1000 * max_bucket_rows * N_BUCKETS / n_rows
       (1000 = perfectly uniform) and key_skew_millis = 1000 *
       max_key_rows * n_keys / n_rows;
     - salt_recommended — bucket skew > 2x uniform AND driven by a hot
@@ -108,12 +106,8 @@ def skew_audit(df: DataFrame, key: Column, n_buckets: int = 32) -> DataFrame:
     from cartography_spark.operators.dedup import portable_hash32
 
     keys = df.groupBy(key.alias("k")).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    keyed = keys.select(
-        "k", "c", (portable_hash32(F.col("k")) % n_buckets).alias("b")
-    )
-    buckets = keyed.groupBy("b").agg(
-        F.sum("c").alias("rows"), F.count(F.lit(1)).alias("nk")
-    )
+    keyed = keys.select("k", "c", (portable_hash32(F.col("k")) % N_BUCKETS).alias("b"))
+    buckets = keyed.groupBy("b").agg(F.sum("c").alias("rows"), F.count(F.lit(1)).alias("nk"))
     kstats = keyed.agg(
         F.sum("c").alias("n_rows"),
         F.count(F.lit(1)).alias("n_keys"),
@@ -128,7 +122,7 @@ def skew_audit(df: DataFrame, key: Column, n_buckets: int = 32) -> DataFrame:
     bskew = F.round(
         F.lit(1000.0)
         * F.try_divide(
-            (F.col("max_bucket_rows") * F.lit(n_buckets)).cast("double"),
+            (F.col("max_bucket_rows") * F.lit(N_BUCKETS)).cast("double"),
             F.col("n_rows").cast("double"),
         )
     ).cast("long")

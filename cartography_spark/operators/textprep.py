@@ -24,6 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+CONTAMINATION_N = 5
+CDC_WINDOW = 8
+
 
 def _tokens(text_col: str) -> Column:
     return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
@@ -38,12 +41,12 @@ def _word_ngrams(toks: Column, n: int) -> Column:
     return out
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style intra-document repetition metrics: fraction of tokens
     taken by the single most frequent token, duplicate word-bigram
     fraction, and the distinct-token ratio. Cheap per-row signals used to
     drop degenerate (looping / boilerplate) documents before training."""
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     n_tok = F.greatest(F.size(toks), F.lit(1))
     # occurrences of each distinct token, all computed inside the row
     per_tok_counts = F.transform(
@@ -57,7 +60,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
     distinct_ratio = F.size(F.array_distinct(toks)) / n_tok
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(top_word_frac, 6).alias("top_word_frac"),
         F.round(dup_bigram_frac, 6).alias("dup_bigram_frac"),
         F.round(distinct_ratio, 6).alias("distinct_token_ratio"),
@@ -72,14 +75,12 @@ PHONE_RE = r"\b\d{3}-\d{3}-\d{4}\b"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 
 
-def synthesize_pii_column(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_pii_column(docs: DataFrame) -> DataFrame:
     """Deterministically append synthetic PII (email / phone / IPv4 derived
     from the doc id) so the scrubber has real matches to redact; the test
     corpus itself contains none. Mirrors multimodal.synthesize_*: fake
     payload, real plumbing."""
-    i = F.col(id_col).cast("long")
+    i = F.col("doc_id").cast("long")
     email = F.concat(F.lit("user"), (i % 100).cast("string"), F.lit("@example.com"))
     phone = F.concat(
         F.lit("555-"),
@@ -91,19 +92,19 @@ def synthesize_pii_column(
         F.lit("10."), (i % 256).cast("string"), F.lit(".0."), ((i * 13) % 256).cast("string")
     )
     return docs.withColumn(
-        text_col,
+        "text",
         F.concat(
-            F.col(text_col), F.lit(" contact "), email, F.lit(" call "), phone, F.lit(" from "), ip
+            F.col("text"), F.lit(" contact "), email, F.lit(" call "), phone, F.lit(" from "), ip
         ),
     )
 
 
-def scrub_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def scrub_pii(docs: DataFrame) -> DataFrame:
     """Redact emails, phone numbers and IPv4 addresses with typed
     placeholders; report per-type match counts and a fingerprint of the
     redacted text. Order matters: emails first so their host parts are not
     half-eaten by the IP pattern."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_emails = F.regexp_count(t, F.lit(EMAIL_RE))
     n_phones = F.regexp_count(t, F.lit(PHONE_RE))
     redacted = F.regexp_replace(t, EMAIL_RE, "<EMAIL>")
@@ -111,7 +112,7 @@ def scrub_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     n_ips = F.regexp_count(redacted, F.lit(IPV4_RE))
     redacted = F.regexp_replace(redacted, IPV4_RE, "<IP>")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_emails.cast("int").alias("n_emails"),
         n_phones.cast("int").alias("n_phones"),
         n_ips.cast("int").alias("n_ips"),
@@ -122,41 +123,30 @@ def scrub_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # --- chunking / packing ----------------------------------------------------
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 20,
-    stride: int = 15,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Split each document into overlapping fixed-token windows (chunk at
-    every ``stride`` tokens, each up to ``chunk_tokens`` long — the
+    every 15 tokens, each up to 20 long — the
     standard context-window chunking for retrieval / training). Emits
     (doc_id, chunk_id, n_chunk_tokens, chunk_md5)."""
-    toks = _tokens(text_col)
-    starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(stride))
+    toks = _tokens("text")
+    starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(15))
     exploded = docs.select(
-        F.col(id_col), toks.alias("__toks"), F.posexplode(starts).alias("chunk_id", "__start")
+        F.col("doc_id"), toks.alias("__toks"), F.posexplode(starts).alias("chunk_id", "__start")
     )
-    chunk = F.slice(F.col("__toks"), F.col("__start"), chunk_tokens)
+    chunk = F.slice(F.col("__toks"), F.col("__start"), 20)
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_id"),
         F.size(chunk).alias("n_chunk_tokens"),
         F.md5(F.concat_ws(" ", chunk)).alias("chunk_md5"),
     )
 
 
-def length_bucket_batches(
-    docs: DataFrame,
-    min_bucket: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def length_bucket_batches(docs: DataFrame) -> DataFrame:
     """Power-of-two length-bucketed batching with padding-waste accounting
     — the shuffle-light alternative to bin packing (``pack_sequences``)
     used when examples must stay intact: each doc pads up to the next
-    power-of-two token length >= ``min_bucket``, and the report prices
+    power-of-two token length >= 16, and the report prices
     that choice per bucket (padded minus real tokens, waste in permille).
 
     Bucket assignment is a pure per-row expression (ceil-log2 of the
@@ -168,14 +158,12 @@ def length_bucket_batches(
     new docs arrive — the property a reproducible training pipeline
     needs).
     """
-    n = F.size(_tokens(text_col))
+    n = F.size(_tokens("text"))
     # next power of two >= max(n, min_bucket): 2^ceil(log2(x)); exact for
     # x a power of two (log2 of a power of two is exact in IEEE double)
-    x = F.greatest(n, F.lit(min_bucket))
+    x = F.greatest(n, F.lit(16))
     target = F.pow(F.lit(2.0), F.ceil(F.log2(x))).cast("bigint")
-    rows = docs.select(
-        F.col(id_col), n.cast("bigint").alias("__n"), target.alias("__t")
-    )
+    rows = docs.select(F.col("doc_id"), n.cast("bigint").alias("__n"), target.alias("__t"))
     return (
         rows.groupBy(F.col("__t").alias("bucket_len"))
         .agg(
@@ -197,13 +185,7 @@ def length_bucket_batches(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int = 256,
-    part_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = 256) -> DataFrame:
     """Assign documents to fixed-token-budget bins with the
     concatenate-and-split convention: within each partition (language),
     documents are laid out in id order and a document belongs to the bin
@@ -211,17 +193,15 @@ def pack_sequences(
     the partition key; deterministic across engines and re-runs."""
     from pyspark.sql import Window
 
-    n_tok = F.size(_tokens(text_col))
+    n_tok = F.size(_tokens("text"))
     w = (
-        Window.partitionBy(part_col)
-        .orderBy(id_col)
+        Window.partitionBy("lang")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    sized = docs.select(F.col(id_col), F.col(part_col), n_tok.alias("__n"))
-    binned = sized.withColumn(
-        "bin", F.floor((F.sum("__n").over(w) - F.col("__n")) / F.lit(budget))
-    )
-    return binned.groupBy(part_col, "bin").agg(
+    sized = docs.select(F.col("doc_id"), F.col("lang"), n_tok.alias("__n"))
+    binned = sized.withColumn("bin", F.floor((F.sum("__n").over(w) - F.col("__n")) / F.lit(budget)))
+    return binned.groupBy("lang", "bin").agg(
         F.count("*").alias("n_docs"), F.sum("__n").cast("bigint").alias("total_tokens")
     )
 
@@ -229,14 +209,7 @@ def pack_sequences(
 # --- contamination ---------------------------------------------------------
 
 
-def contamination_overlap(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    threshold: float = 0.2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def contamination_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark-contamination check: fraction of each corpus document's
     distinct word n-grams that appear anywhere in the benchmark set.
     The benchmark gram set is broadcast (eval suites are tiny next to a
@@ -244,29 +217,30 @@ def contamination_overlap(
     probe -> per-doc count: one aggregation shuffle, no corpus self-join."""
     def grams(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(id_col), F.explode(F.array_distinct(_word_ngrams(_tokens(text_col), n))).alias("g")
+            F.col("doc_id"),
+            F.explode(F.array_distinct(_word_ngrams(_tokens("text"), CONTAMINATION_N))).alias("g"),
         )
 
     bench_grams = benchmark.select(
-        F.explode(F.array_distinct(_word_ngrams(_tokens(text_col), n))).alias("g")
+        F.explode(F.array_distinct(_word_ngrams(_tokens("text"), CONTAMINATION_N))).alias("g")
     ).distinct()
     doc_grams = grams(corpus)
-    sizes = doc_grams.groupBy(id_col).agg(F.count("*").alias("n_grams"))
+    sizes = doc_grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     matched = (
         doc_grams.join(F.broadcast(bench_grams), "g", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_matched"))
     )
     frac = F.col("n_matched") / F.col("n_grams")
     return (
-        sizes.join(matched, id_col, "left")
+        sizes.join(matched, "doc_id", "left")
         .withColumn("n_matched", F.coalesce(F.col("n_matched"), F.lit(0)).cast("bigint"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_grams"),
             F.col("n_matched"),
             F.round(frac, 6).alias("contam_frac"),
-            (frac >= threshold).alias("contaminated"),
+            (frac >= 0.2).alias("contaminated"),
         )
     )
 
@@ -307,17 +281,10 @@ def unicode_nfc_normalize(
     return df.mapInPandas(gen, schema)
 
 
-def content_defined_chunks(
-    docs: DataFrame,
-    window: int = 8,
-    base: int = 31,
-    divisor: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def content_defined_chunks(docs: DataFrame) -> DataFrame:
     """Content-defined chunking (Rabin-style): chunk boundaries where a
-    polynomial hash of the preceding ``window`` characters is 0 mod
-    ``divisor`` — so an insertion early in a document shifts only the
+    polynomial hash of the preceding ``CDC_WINDOW`` characters is 0 mod
+    64 — so an insertion early in a document shifts only the
     chunks it touches, and every chunk after the next boundary keeps its
     byte content and therefore its fingerprint. This is the dedup
     primitive rsync/LBFS/storage dedup use, applied to corpus text: join
@@ -326,39 +293,37 @@ def content_defined_chunks(
     edited document.
 
     The hash is position-independent by construction: H(i) = sum_j
-    code(c[i+j]) * base^j over the window starting at i, computed with
+    code(c[i+j]) * 31^j over the window starting at i, computed with
     built-in transform/aggregate (JVM codegen, exact BIGINT — max term
     0x10FFFF * 31^7 ~ 3e16, window sum < 3e17, no overflow). A boundary
     at position i >= 2 starts a new chunk; position 1 always starts the
-    first. Documents shorter than window+1 are a single chunk (Spark's
+    first. Documents shorter than CDC_WINDOW+1 are a single chunk (Spark's
     sequence(2, n) is DESCENDING for n < 2 — guarded, same pitfall as
     doc_shingles).
 
     100 TB: no key shuffle — scan, per-row array math, explode. The only
     exchange is the cheap pre-explode repartition of COMPACT doc rows
     (doc_shingles parallelism-guard pattern: a single-split parquet input
-    would otherwise run the O(window * chars) codegen loop on one task);
+    would otherwise run the O(CDC_WINDOW * chars) codegen loop on one task);
     everything downstream of it is pipelined. Output is chunk rows keyed
     by (doc_id, chunk_idx) with the chunk md5 ready for a dedup groupBy.
     """
-    pows = ", ".join(str(base**j) + "L" for j in range(window))
+    pows = ", ".join(str(31**j) + "L" for j in range(CDC_WINDOW))
     h = (
-        f"aggregate(sequence(0, {window - 1}), 0L, "
+        f"aggregate(sequence(0, {CDC_WINDOW - 1}), 0L, "
         f"(acc, j) -> acc + ascii(substring(__t, i + j, 1)) * element_at(array({pows}), j + 1))"
     )
-    rows = docs.select(F.col(id_col), F.col(text_col).alias("__t"))
-    rows = rows.repartition(
-        rows.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    rows = docs.select(F.col("doc_id"), F.col("text").alias("__t"))
+    rows = rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     starts = F.expr(
         f"""concat(array(1),
-            CASE WHEN length(__t) >= {window + 1}
-                 THEN filter(sequence(2, length(__t) - {window - 1}),
-                             i -> ({h}) % {divisor} = 0)
+            CASE WHEN length(__t) >= {CDC_WINDOW + 1}
+                 THEN filter(sequence(2, length(__t) - {CDC_WINDOW - 1}),
+                             i -> ({h}) % 64 = 0)
                  ELSE array() END)"""
     )
     chunked = rows.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__t"),
         F.posexplode(
             F.zip_with(
@@ -372,7 +337,7 @@ def content_defined_chunks(
         ).alias("idx0", "c"),
     )
     return chunked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         (F.col("idx0") + 1).cast("bigint").alias("chunk_idx"),
         F.col("c.start").cast("bigint").alias("start"),
         F.col("c.chunk_len").cast("bigint").alias("chunk_len"),

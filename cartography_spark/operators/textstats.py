@@ -13,6 +13,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+NB_BUCKETS = 64
+MAX_N = 3
+BETA = 2
+
 # BPE-ish token pattern: word pieces, digit runs, or single non-space symbols
 BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -33,7 +37,7 @@ def _count_tokens_in(tokens: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*words)))
 
 
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     # Every output is a scalar regex count — no token arrays, no
     # interpreted fold lambdas (r8 opt; the array shapes cost 2.4x at
     # sf1). Exactness of each replacement:
@@ -44,11 +48,11 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     #     trimming only removes whitespace).
     #   size(regexp_extract_all(re)) = regexp_count(re) without
     #     materializing the match array.
-    t = F.col(text_col)
+    t = F.col("text")
     ws_chars = F.regexp_count(t, F.lit(r"\s"))
     n_ws_tokens = F.regexp_count(F.trim(t), F.lit(r"\s+")) + F.lit(1)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.length(t).alias("n_chars"),
         n_ws_tokens.alias("n_ws_tokens"),
         F.regexp_count(t, F.lit(BPE_TOKEN_RE)).alias("n_bpe_tokens"),
@@ -60,10 +64,10 @@ def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality score in [0,1]: favors moderate length, low
     punctuation density, and presence of stopwords (prose-likeness)."""
-    t = F.lower(F.col(text_col))
+    t = F.lower(F.col("text"))
     tokens = F.split(F.trim(t), r"\s+")
     n_tok = F.greatest(F.size(tokens), F.lit(1))
     punct_ratio = F.length(F.regexp_replace(t, r"[a-z0-9\s]", "")) / F.greatest(
@@ -77,18 +81,18 @@ def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
         + F.lit(0.3) * F.least(stop_ratio * 5, F.lit(1.0))
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(score, 6).alias("quality"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Predict language by marker-word hit count (argmax, ties -> lexical
     order). The operator shape is a per-language conditional aggregate —
     the same plan a real n-gram model table would use via a join."""
-    t = F.lower(F.col(text_col))
+    t = F.lower(F.col("text"))
     tokens = F.split(F.trim(t), r"\s+")
     scores = [
         F.struct(_count_tokens_in(tokens, words).alias("hits"), F.lit(lang).alias("lang"))
@@ -98,22 +102,20 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     # struct, so reverse-sorted input makes ties resolve to first language
     best = F.array_max(F.array(*scores))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         best["lang"].alias("predicted_lang"),
         best["hits"].alias("marker_hits"),
     )
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Deterministic content fingerprint: lowercase, strip non-alphanumerics,
     md5. Robust to whitespace/punctuation-only edits."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9]", "")
-    return docs.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
+    norm = F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]", "")
+    return docs.select(F.col("doc_id"), F.md5(norm).alias("fingerprint"))
 
 
-def unigram_surprisal(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def unigram_surprisal(docs: DataFrame) -> DataFrame:
     """Corpus-unigram language-model quality score, integer-exact.
 
     Classic LM-perplexity filtering (CCNet-style) scores each document by
@@ -139,11 +141,9 @@ def unigram_surprisal(
     # measured 15% SLOWER at sf1 — each consumer re-ran the explode —
     # so the exploded-stream shuffle stays (interleaved A/B, r8 opt).
     toks = docs.select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
+        F.col("doc_id"), F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
     )
-    toks = toks.repartition(
-        toks.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    toks = toks.repartition(toks.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     freq = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").alias("t"))
     scored = (
@@ -151,20 +151,14 @@ def unigram_surprisal(
         .crossJoin(F.broadcast(total))
         .withColumn("bits", F.length(F.bin(F.expr("t DIV c"))).cast("long") - 1)
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
         F.sum("bits").cast("long").alias("total_bits"),
         F.expr("CAST((sum(bits) * 1000) DIV count(*) AS BIGINT)").alias("mean_millibits"),
     )
 
 
-def nb_language_classifier(
-    docs: DataFrame,
-    n_buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    label_col: str = "lang",
-) -> DataFrame:
+def nb_language_classifier(docs: DataFrame) -> DataFrame:
     """Multinomial Naive Bayes trained AND scored in-engine — the
     fastText-style shallow classifier stage of a training-data pipeline
     (language ID, quality routing), with the model learned from the
@@ -174,7 +168,7 @@ def nb_language_classifier(
     document-frequency class prior. Score: log P(label) +
     sum_tokens log P(bucket|label), decomposed so unobserved
     (label, bucket) pairs cost nothing — log(c+1) is 0 at c=0, so the
-    likelihood table stays at OBSERVED pairs only (<= n_buckets x
+    likelihood table stays at OBSERVED pairs only (<= 64 x
     n_labels rows, broadcast), and the per-label normalizer
     -n_tokens * log(ct_label + B) attaches from a label-count table of
     n_labels rows. All log terms quantized to millinat bigints, so
@@ -204,11 +198,11 @@ def nb_language_classifier(
     # exchange — sf1 interleaved A/B 5.4 vs 7.8 s min; the per-occurrence
     # md5 variants measured 7.8-13.2 s across three shapes, r8 opt).
     toks = docs.select(
-        F.col(id_col),
-        F.col(label_col).alias("actual"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
+        F.col("doc_id"),
+        F.col("lang").alias("actual"),
+        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
     )
-    bucket = (portable_hash32(F.col("tok"), salt="nb") % n_buckets).alias("b")
+    bucket = (portable_hash32(F.col("tok"), salt="nb") % NB_BUCKETS).alias("b")
 
     # (label, tok) counts: the only pass over the stream for the model;
     # partial aggregation keeps the exchange vocabulary-bounded. Lazy
@@ -237,34 +231,34 @@ def nb_language_classifier(
     tok_b = counts_lt.select("tok").distinct().select("tok", bucket)
     lik_tok = tok_b.join(F.broadcast(likelihood), "b").select("tok", "label", "lc")
     class_tok = counts.groupBy("label").agg(F.sum("c").alias("ct"))
-    prior = docs.groupBy(F.col(label_col).alias("label")).agg(F.count("*").alias("dc"))
+    prior = docs.groupBy(F.col("lang").alias("label")).agg(F.count("*").alias("dc"))
     n_docs = docs.agg(F.count("*").alias("nd"))
     classes = (
         class_tok.join(F.broadcast(prior), "label")
         .crossJoin(F.broadcast(n_docs))
         .select(
             "label",
-            F.round(F.log(F.col("ct") + n_buckets) * 1000).cast("bigint").alias("norm"),
+            F.round(F.log(F.col("ct") + NB_BUCKETS) * 1000).cast("bigint").alias("norm"),
             F.round(F.log(F.col("dc") / F.col("nd")) * 1000).cast("bigint").alias("pr"),
         )
     )
 
     s1 = (
         toks.join(F.broadcast(lik_tok), "tok")
-        .groupBy(F.col(id_col), "label")
+        .groupBy(F.col("doc_id"), "label")
         .agg(F.sum("lc").alias("s1"))
     )
     # n_tokens as a narrow projection on docs — no third explode pass
     per_doc = docs.select(
-        F.col(id_col),
-        F.col(label_col).alias("actual"),
-        F.size(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).cast("long").alias("n_tokens"),
+        F.col("doc_id"),
+        F.col("lang").alias("actual"),
+        F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).cast("long").alias("n_tokens"),
     )
     scored = (
         per_doc.crossJoin(F.broadcast(classes))
-        .join(s1, [id_col, "label"], "left")
+        .join(s1, ["doc_id", "label"], "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "actual",
             "label",
             (
@@ -274,14 +268,14 @@ def nb_language_classifier(
             ).alias("score"),
         )
     )
-    best = scored.groupBy(F.col(id_col), F.col("actual")).agg(
+    best = scored.groupBy(F.col("doc_id"), F.col("actual")).agg(
         F.min_by(
             F.struct(F.col("label"), F.col("score")),
             F.struct((-F.col("score")).alias("ns"), F.col("label")),
         ).alias("best")
     )
     return best.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "actual",
         F.col("best.label").alias("pred"),
         F.col("best.score").cast("bigint").alias("score_millinats"),
@@ -289,9 +283,7 @@ def nb_language_classifier(
     )
 
 
-def bigram_surprisal(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_surprisal(docs: DataFrame) -> DataFrame:
     """Corpus-bigram conditional LM score, integer-exact: each token after
     the first is charged floor(log2(c(prev) / c(prev, tok))) bits — the
     quantized -log2 P(tok | prev) under the corpus bigram model. The
@@ -311,18 +303,14 @@ def bigram_surprisal(
     # and measured 2x slower — the exchange shape is the fastest of the
     # three).
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.lower(F.col(text_col)), " ")).alias("pos", "tok"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.lower(F.col("text")), " ")).alias("pos", "tok"),
     )
-    toks = toks.repartition(
-        toks.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    toks = toks.repartition(toks.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(id_col).orderBy("pos")
-    pairs = toks.withColumn("prev", F.lag("tok").over(w)).filter(
-        F.col("prev").isNotNull()
-    )
+    w = W.partitionBy("doc_id").orderBy("pos")
+    pairs = toks.withColumn("prev", F.lag("tok").over(w)).filter(F.col("prev").isNotNull())
     uni = pairs.groupBy("prev").agg(F.count("*").alias("c1"))
     bi = pairs.groupBy("prev", "tok").agg(F.count("*").alias("c2"))
     scored = (
@@ -330,16 +318,14 @@ def bigram_surprisal(
         .join(uni, "prev")
         .withColumn("bits", F.length(F.bin(F.expr("c1 DIV c2"))).cast("long") - 1)
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_bigrams"),
         F.sum("bits").cast("long").alias("total_bits"),
         F.expr("CAST((sum(bits) * 1000) DIV count(*) AS BIGINT)").alias("mean_millibits"),
     )
 
 
-def inverted_index(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Inverted-index construction — the index-build-as-a-DataFrame job
     behind every sharded search deployment (the batch producer of the
     posting lists BM25 serves). Per term: document frequency, collection
@@ -356,7 +342,7 @@ def inverted_index(
     # compact pre-explode repartition (doc_shingles pattern): one array
     # row per doc crosses the wire, not the exploded term stream
     pre = docs.select(
-        F.col(id_col).alias("doc"), F.split(F.lower(F.col(text_col)), " ").alias("__arr")
+        F.col("doc_id").alias("doc"), F.split(F.lower(F.col("text")), " ").alias("__arr")
     ).repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col("doc"))
     toks = pre.select(F.col("doc"), F.explode("__arr").alias("term")).filter(
         F.col("term") != ""
@@ -370,19 +356,14 @@ def inverted_index(
     )
 
 
-def blockmax_index(
-    docs: DataFrame,
-    block_size: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def blockmax_index(docs: DataFrame) -> DataFrame:
     """Block-Max index construction — the skipping structure WAND-family
     dynamic pruning consumes (Block-Max WAND, Ding & Suel SIGIR'11): the
     posting list of each term is cut into fixed doc-id blocks and each
     block stores its LOCAL maximum impact score, letting the query
     processor skip a whole block when its max can't enter the top-k.
 
-    Per (term, block of ``block_size`` doc ids): posting count, max term
+    Per (term, block of 64 doc ids): posting count, max term
     frequency, and the block-max tf*idf impact with idf quantized to
     integer millinats (round(ln(N/df)*1000) — one quantized log per term,
     identical IEEE double in any engine, everything after it integer).
@@ -390,20 +371,18 @@ def blockmax_index(
     Plan shape: explode -> (term, doc) tf aggregate (map-side combinable)
     -> term df aggregate -> idf broadcast back -> (term, block) max
     aggregate. Doc-id blocks mean the final aggregate's key is derived
-    arithmetically (doc DIV block_size) — no windows, no sorts; at 100 TB
+    arithmetically (doc DIV 64) — no windows, no sorts; at 100 TB
     each term shard builds its block maxima in one combinable pass, and
-    the output is |postings| / block_size rows — the same compression
+    the output is |postings| / 64 rows — the same compression
     knob the on-disk structure has.
     """
     # compact pre-explode repartition (doc_shingles pattern): one array
     # row per doc crosses the wire, not the exploded term stream
     pre = docs.select(
-        F.col(id_col).alias("doc"), F.split(F.lower(F.col(text_col)), " ").alias("__arr")
+        F.col("doc_id").alias("doc"), F.split(F.lower(F.col("text")), " ").alias("__arr")
     ).repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col("doc"))
-    toks = pre.select(F.col("doc"), F.explode("__arr").alias("term")).filter(
-        F.col("term") != ""
-    )
-    n_docs = docs.agg(F.countDistinct(id_col).alias("n"))
+    toks = pre.select(F.col("doc"), F.explode("__arr").alias("term")).filter(F.col("term") != "")
+    n_docs = docs.agg(F.countDistinct("doc_id").alias("n"))
     # tf feeds BOTH the df/idf aggregate and the final block rollup:
     # checkpoint it so the corpus is scanned + exploded + counted once,
     # not once per branch
@@ -427,7 +406,7 @@ def blockmax_index(
         tf.join(idf, "term")
         .groupBy(
             "term",
-            (F.col("doc") - (F.col("doc") % block_size)).alias("block_start"),
+            (F.col("doc") - (F.col("doc") % 64)).alias("block_start"),
         )
         .agg(
             F.count("*").cast("bigint").alias("n_postings"),
@@ -437,12 +416,7 @@ def blockmax_index(
     )
 
 
-def phrase_search(
-    docs: DataFrame,
-    phrase: list[str] | tuple[str, ...],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def phrase_search(docs: DataFrame, phrase: list[str] | tuple[str, ...]) -> DataFrame:
     """Exact phrase matching over a positional inverted index — the query
     side of the index ``inverted_index`` builds, extended with positions
     (what a search engine's phrase/proximity operator consumes). Returns
@@ -463,8 +437,8 @@ def phrase_search(
         raise ValueError("phrase must have at least two terms")
     terms = [t.lower() for t in phrase]
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(F.split(F.lower(F.col(text_col)), " ")).alias("pos", "term"),
+        F.col("doc_id").alias("doc"),
+        F.posexplode(F.split(F.lower(F.col("text")), " ")).alias("pos", "term"),
     ).filter(F.col("term").isin(terms))
     # one materialization of the tiny phrase-term sliver, reused by every
     # per-term branch (without it each branch re-scans + re-explodes)
@@ -477,14 +451,12 @@ def phrase_search(
             F.col("doc"), (F.col("pos") - i).alias("pos")
         )
         out = out.join(nxt, ["doc", "pos"])
-    return out.groupBy(F.col("doc").alias(id_col)).agg(
+    return out.groupBy(F.col("doc").alias("doc_id")).agg(
         F.count("*").cast("long").alias("n_matches")
     )
 
 
-def ranking_auc(
-    scored: DataFrame, score_col: str = "score_millinats", label_col: str = "correct"
-) -> DataFrame:
+def ranking_auc(scored: DataFrame) -> DataFrame:
     """Exact ROC-AUC of a scored binary outcome via the Mann-Whitney U
     rank statistic with tie midranks: AUC = P(score_pos > score_neg)
     + 0.5 * P(score_pos = score_neg). One row: (n_pos, n_neg, u2, auc,
@@ -500,9 +472,9 @@ def ranking_auc(
     """
     from pyspark.sql import Window
 
-    by_score = scored.groupBy(F.col(score_col).alias("s")).agg(
-        F.sum(F.when(F.col(label_col), 1).otherwise(0)).alias("n1"),
-        F.sum(F.when(F.col(label_col), 0).otherwise(1)).alias("n0"),
+    by_score = scored.groupBy(F.col("score_millinats").alias("s")).agg(
+        F.sum(F.when(F.col("correct"), 1).otherwise(0)).alias("n1"),
+        F.sum(F.when(F.col("correct"), 0).otherwise(1)).alias("n0"),
     )
     below = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
     cum = by_score.withColumn("cum0", F.coalesce(F.sum("n0").over(below), F.lit(0)))
@@ -571,13 +543,7 @@ def average_precision(
     )
 
 
-def chi2_feature_selection(
-    docs: DataFrame,
-    n_buckets: int = 64,
-    top_k: int = 10,
-    text_col: str = "text",
-    label_col: str = "lang",
-) -> DataFrame:
+def chi2_feature_selection(docs: DataFrame, n_buckets: int = 64, top_k: int = 10) -> DataFrame:
     """Chi-square feature selection over the SAME hashed-bucket features
     the NB classifier uses: for every (label, bucket) one-vs-rest 2x2
     contingency cell, chi2 = N*(AD-BC)^2 / (row1*row2*col1*col2), ranked
@@ -587,14 +553,14 @@ def chi2_feature_selection(
     corpus scale) and the formula is a fixed left-associative chain so
     both engines produce the identical IEEE value. Plan: one explode +
     one (label, bucket) groupBy; every later step runs on the bounded
-    model frame (<= n_buckets x n_labels rows)."""
+    model frame (<= 64 x n_labels rows)."""
     from pyspark.sql import Window
 
     from cartography_spark.operators.dedup import portable_hash32
 
     tb = docs.select(
-        F.col(label_col).alias("label"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
+        F.col("lang").alias("label"),
+        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
     ).withColumn("b", portable_hash32(F.col("tok"), salt="nb") % n_buckets)
     c = tb.groupBy("label", "b").agg(F.count("*").alias("c"))
     rb = c.groupBy("b").agg(F.sum("c").alias("rb"))
@@ -627,11 +593,7 @@ def chi2_feature_selection(
     )
 
 
-def char_entropy(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon character entropy — the standard cheap gate for
     binary junk / key-mash / base64 blobs in pretraining corpora (gibberish
     has near-uniform char distribution -> high entropy; repeated-char spam
@@ -651,18 +613,18 @@ def char_entropy(
     """
     spark = docs.sparkSession
     base = docs.select(
-        F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias("__t")
-    ).repartition(spark.sparkContext.defaultParallelism, F.col(id_col))
+        F.col("doc_id"), F.coalesce(F.col("text"), F.lit("")).alias("__t")
+    ).repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
     cnt = (
-        base.select(F.col(id_col), F.explode(F.split("__t", "")).alias("__ch"))
+        base.select(F.col("doc_id"), F.explode(F.split("__t", "")).alias("__ch"))
         # split('', '') yields [''] (size 1), not [] — drop the phantom char
         # so empty/null docs produce no cells, like the oracle's
         # generate_series(1, 0) comprehension
         .filter(F.col("__ch") != "")
-        .groupBy(id_col, "__ch")
+        .groupBy("doc_id", "__ch")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    tot = cnt.groupBy(id_col).agg(
+    tot = cnt.groupBy("doc_id").agg(
         F.sum("__c").cast("bigint").alias("n_chars"),
         F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
     )
@@ -670,11 +632,11 @@ def char_entropy(
         F.lit(1000) * F.log(F.col("n_chars") * F.lit(1.0) / F.col("__c"))
     ).cast("bigint")
     return (
-        cnt.join(tot, id_col)
-        .groupBy(id_col, "n_chars", "n_distinct")
+        cnt.join(tot, "doc_id")
+        .groupBy("doc_id", "n_chars", "n_distinct")
         .agg(F.sum(w).alias("__sw"))
         .select(
-            id_col,
+            "doc_id",
             "n_chars",
             "n_distinct",
             F.expr("CAST(__sw DIV n_chars AS BIGINT)").alias("entropy_millinat"),
@@ -682,13 +644,7 @@ def char_entropy(
     )
 
 
-def pmi_collocations(
-    docs: DataFrame,
-    min_count: int = 3,
-    k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pmi_collocations(docs: DataFrame, k: int = 100) -> DataFrame:
     """Top-k bigram collocations by pointwise mutual information — the
     classic phrase-mining signal (two words that co-occur far more than
     their marginals predict form a lexical unit worth a single token).
@@ -706,7 +662,7 @@ def pmi_collocations(
     Plan at 100 TB: one posexplode + lag per doc, then three
     vocabulary-bounded aggregations (pair counts, both marginals — all
     map-side combinable) and two dictionary joins on the FILTERED
-    pair table (min_count prunes the long tail before any join). The
+    pair table (the 3-occurrence minimum prunes the long tail before any join). The
     global pair count N attaches as a 1-row broadcast, and the final
     top-k is a TakeOrdered — no full sort.
     """
@@ -716,10 +672,10 @@ def pmi_collocations(
     # array row per doc, not the exploded token stream; Generate preserves
     # the hash(id) partitioning the lag window needs
     pre = docs.select(
-        F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("__arr")
-    ).repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    toks = pre.select(F.col(id_col), F.posexplode("__arr").alias("pos", "tok"))
-    w = W.partitionBy(id_col).orderBy("pos")
+        F.col("doc_id"), F.split(F.lower(F.col("text")), " ").alias("__arr")
+    ).repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
+    toks = pre.select(F.col("doc_id"), F.posexplode("__arr").alias("pos", "tok"))
+    w = W.partitionBy("doc_id").orderBy("pos")
     # checkpoint: four branches (total, c_x, c_y, c_xy) consume this
     # relation — without it the explode + per-doc lag window execute once
     # per branch (the scan itself is deduped by ReusedExchange, the
@@ -735,7 +691,7 @@ def pmi_collocations(
     cxy = (
         pairs.groupBy("prev", "tok")
         .agg(F.count("*").cast("long").alias("c_pair"))
-        .filter(F.col("c_pair") >= min_count)
+        .filter(F.col("c_pair") >= 3)
     )
     scored = (
         cxy.join(cx, "prev")
@@ -753,12 +709,7 @@ def pmi_collocations(
     return scored.orderBy(ratio.desc(), "prev", "tok").limit(k)
 
 
-def zipf_fit(
-    docs: DataFrame,
-    top_n: int = 200,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def zipf_fit(docs: DataFrame, top_n: int = 200) -> DataFrame:
     """Zipf's-law fit of the corpus frequency spectrum: OLS slope of
     ln(freq) against ln(rank) over the top_n terms — the one-number
     health check of a text corpus (natural language sits near -1;
@@ -785,7 +736,7 @@ def zipf_fit(
     from pyspark.sql import Window as W
 
     toks = docs.select(
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term")
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     ).filter(F.col("term") != "")
     freq = toks.groupBy("term").agg(F.count("*").cast("long").alias("freq"))
     ranked = freq.orderBy(F.col("freq").desc(), "term").limit(top_n).select(
@@ -813,12 +764,7 @@ def zipf_fit(
     )
 
 
-def bleu_ngram_precision(
-    pairs: DataFrame,
-    pair_col: str = "pair_id",
-    cand_col: str = "cand_text",
-    ref_col: str = "ref_text",
-) -> DataFrame:
+def bleu_ngram_precision(pairs: DataFrame) -> DataFrame:
     """Corpus-level BLEU-2 between (candidate, reference) text pairs:
     modified (clipped) unigram and bigram precision, brevity penalty,
     and their geometric mean — the standard automatic metric for
@@ -844,11 +790,9 @@ def bleu_ngram_precision(
     from pyspark.sql import Window
 
     sides = pairs.select(
-        F.col(pair_col).alias("pid"),
+        F.col("pair_id").alias("pid"),
         F.posexplode(
-            F.create_map(
-                F.lit("c"), F.col(cand_col), F.lit("r"), F.col(ref_col)
-            )
+            F.create_map(F.lit("c"), F.col("cand_text"), F.lit("r"), F.col("ref_text"))
         ).alias("_i", "side", "txt"),
     ).select("pid", "side", "txt")
     toks = (
@@ -929,13 +873,7 @@ def bleu_ngram_precision(
     )
 
 
-def rake_keywords(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    stopwords: tuple[str, ...] = STOPWORDS_EN,
-    k: int = 20,
-) -> DataFrame:
+def rake_keywords(docs: DataFrame, k: int = 20) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010): candidate phrases are
     maximal stopword-free token runs; each word scores deg/freq (deg =
     total length of phrases it appears in, freq = its occurrence count)
@@ -962,11 +900,11 @@ def rake_keywords(
 
     toks = (
         docs.select(
-            F.col(id_col).alias("doc"),
-            F.posexplode(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+")).alias("pos", "tok"),
+            F.col("doc_id").alias("doc"),
+            F.posexplode(F.split(F.lower(F.col("text")), "[^a-z0-9]+")).alias("pos", "tok"),
         )
         .filter(F.col("tok") != "")
-        .withColumn("is_stop", F.col("tok").isin(*stopwords))
+        .withColumn("is_stop", F.col("tok").isin(*STOPWORDS_EN))
     )
     w = Window.partitionBy("doc").orderBy("pos")
     seg = toks.withColumn(
@@ -1004,30 +942,23 @@ def rake_keywords(
     )
 
 
-def chrf_score(
-    pairs: DataFrame,
-    pair_col: str = "pair_id",
-    cand_col: str = "cand_text",
-    ref_col: str = "ref_text",
-    max_n: int = 3,
-    beta: int = 2,
-) -> DataFrame:
+def chrf_score(pairs: DataFrame) -> DataFrame:
     """Corpus chrF (Popovic 2015): character n-gram precision/recall
-    F-beta between (candidate, reference) pairs, averaged over n-gram
-    orders 1..max_n — the generation-eval metric that credits partial
+    F-2 between (candidate, reference) pairs, averaged over n-gram
+    orders 1..3 — the generation-eval metric that credits partial
     word matches (morphology, typos) that word-level BLEU scores as
     total misses. Whitespace is stripped before n-gram extraction (the
     chrF convention), text lowercased.
 
     Returns ONE row: per-order exact BIGINT counts (clip_n / cand_n /
-    ref_n for each n), per-order f{beta}_micros, and chrf_micros (the
+    ref_n for each n), per-order f2_micros, and chrf_micros (the
     integer mean of the per-order quantized F scores).
 
     Exactness: all counts are integers from grouped aggregation; each
     precision/recall/F is a fixed float expression over them, quantized
     to micros per order, and the final average is integer arithmetic
     over those quantized values. Zero-overlap orders contribute F = 0
-    (no log, no division hazard: F's denominator beta^2*P+R is only 0
+    (no log, no division hazard: F's denominator 4*P+R is only 0
     when both are, guarded by try_divide -> coalesce 0).
 
     Scale shape: ONE scan explodes both sides into a (pair, side, n,
@@ -1036,9 +967,9 @@ def chrf_score(
     pre-collapsed distinct-n-gram counts per pair.
     """
     sides = pairs.select(
-        F.col(pair_col).alias("pid"),
+        F.col("pair_id").alias("pid"),
         F.explode(
-            F.create_map(F.lit("c"), F.col(cand_col), F.lit("r"), F.col(ref_col))
+            F.create_map(F.lit("c"), F.col("cand_text"), F.lit("r"), F.col("ref_text"))
         ).alias("side", "txt"),
     ).select(
         "pid", "side", F.regexp_replace(F.lower("txt"), r"\s+", "").alias("s")
@@ -1050,7 +981,7 @@ def chrf_score(
     # is the cheap part (compressed text, column-pruned); the explode
     # dominates, so three streaming explodes beat one materialized array.
     per_n = None
-    for n in range(1, max_n + 1):
+    for n in range(1, MAX_N + 1):
         grams_n = sides.select(
             "pid",
             "side",
@@ -1082,16 +1013,14 @@ def chrf_score(
     )
     p = F.col("clip").cast("double") / F.col("cand_total").cast("double")
     r = F.col("clip").cast("double") / F.col("ref_total").cast("double")
-    b2 = float(beta * beta)
-    fb = F.coalesce(
-        F.try_divide((1.0 + b2) * p * r, b2 * p + r), F.lit(0.0)
-    )
+    b2 = float(BETA * BETA)
+    fb = F.coalesce(F.try_divide((1.0 + b2) * p * r, b2 * p + r), F.lit(0.0))
     scored = agg.select(
         "n", "clip", "cand_total", "ref_total",
         F.round(F.lit(1_000_000.0) * fb).cast("bigint").alias("f_micros"),
     )
     wide_cols = []
-    for n in range(1, max_n + 1):
+    for n in range(1, MAX_N + 1):
         for c in ("clip", "cand_total", "ref_total", "f_micros"):
             # coalesce: an order with no n-grams anywhere (every text
             # shorter than n) has no group row — report exact 0, not NULL
@@ -1103,18 +1032,13 @@ def chrf_score(
     wide = scored.groupBy().agg(*wide_cols)
     mean_f = F.expr(
         "CAST(round(("
-        + " + ".join(f"CAST(f_micros_{n} AS DOUBLE)" for n in range(1, max_n + 1))
-        + f") / {max_n}.0) AS BIGINT)"
+        + " + ".join(f"CAST(f_micros_{n} AS DOUBLE)" for n in range(1, MAX_N + 1))
+        + f") / {MAX_N}.0) AS BIGINT)"
     )
     return wide.select("*", mean_f.alias("chrf_micros"))
 
 
-def token_f1_pairs(
-    pairs: DataFrame,
-    pair_col: str = "pair_id",
-    cand_col: str = "cand_text",
-    ref_col: str = "ref_text",
-) -> DataFrame:
+def token_f1_pairs(pairs: DataFrame) -> DataFrame:
     """Per-pair token-level F1 — the SQuAD-style answer-overlap metric:
     bag-of-token clipped overlap between candidate and reference, with
     per-pair precision/recall/F1. One row per pair: (pair_id, n_overlap,
@@ -1135,9 +1059,9 @@ def token_f1_pairs(
     downstream metadata joins.
     """
     sides = pairs.select(
-        F.col(pair_col).alias("pid"),
+        F.col("pair_id").alias("pid"),
         F.explode(
-            F.create_map(F.lit("c"), F.col(cand_col), F.lit("r"), F.col(ref_col))
+            F.create_map(F.lit("c"), F.col("cand_text"), F.lit("r"), F.col("ref_text"))
         ).alias("side", "txt"),
     )
     toks = sides.select(
@@ -1176,7 +1100,7 @@ def token_f1_pairs(
     )
     # fully-empty pairs (no tokens on either side) vanish from the token
     # relation — restore them as exact-zero rows so output is 1 row/pair
-    ids = pairs.select(F.col(pair_col).cast("bigint").alias("pair_id")).distinct()
+    ids = pairs.select(F.col("pair_id").cast("bigint").alias("pair_id")).distinct()
     return ids.join(scored, "pair_id", "left").select(
         "pair_id",
         *[
@@ -1186,11 +1110,7 @@ def token_f1_pairs(
     )
 
 
-def hapax_ratio_by(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def hapax_ratio_by(docs: DataFrame) -> DataFrame:
     """Per-group hapax share: of each group's distinct token types, how
     many are corpus-global hapax legomena (frequency exactly 1)? One row
     per group: (group_key, n_tokens, n_types, n_hapax_types,
@@ -1212,8 +1132,8 @@ def hapax_ratio_by(
     """
     cells = (
         docs.select(
-            F.col(group_col).alias("g"),
-            F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
+            F.col("source").alias("g"),
+            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
         )
         .filter(F.col("tok") != "")
         .groupBy("g", "tok")
@@ -1235,9 +1155,7 @@ def hapax_ratio_by(
     )
 
 
-def kn_bigram_surprisal(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def kn_bigram_surprisal(docs: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM score, integer-exact — the
     standard smoothed n-gram model (the one real LM-quality filters use)
     on top of bigram_surprisal's raw conditional: with discount d = 3/4,
@@ -1269,18 +1187,14 @@ def kn_bigram_surprisal(
     # A/B verdict: exchange shape beats both the compact pre-explode
     # variant and a localCheckpoint).
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.lower(F.col(text_col)), " ")).alias("pos", "tok"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.lower(F.col("text")), " ")).alias("pos", "tok"),
     )
-    toks = toks.repartition(
-        toks.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    toks = toks.repartition(toks.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(id_col).orderBy("pos")
-    pairs = toks.withColumn("prev", F.lag("tok").over(w)).filter(
-        F.col("prev").isNotNull()
-    )
+    w = W.partitionBy("doc_id").orderBy("pos")
+    pairs = toks.withColumn("prev", F.lag("tok").over(w)).filter(F.col("prev").isNotNull())
     uni = pairs.groupBy("prev").agg(F.count("*").alias("c1"))
     bi = pairs.groupBy("prev", "tok").agg(F.count("*").alias("c2"))
     cont = bi.groupBy("prev").agg(F.count("*").alias("tp"))  # T(p)
@@ -1301,7 +1215,7 @@ def kn_bigram_surprisal(
             F.length(F.bin(F.expr("__den DIV __num"))).cast("long") - 1,
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_bigrams"),
         F.sum("bits").cast("long").alias("total_bits"),
         F.expr("CAST((sum(bits) * 1000) DIV count(*) AS BIGINT)").alias(
@@ -1310,12 +1224,7 @@ def kn_bigram_surprisal(
     )
 
 
-def stupid_backoff_trigram(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    holdout_mod: int = 2,
-) -> DataFrame:
+def stupid_backoff_trigram(docs: DataFrame) -> DataFrame:
     """Trigram stupid-backoff LM scored on a HELD-OUT split, integer-
     exact — the web-scale smoothing Brants et al. built for exactly this
     setting (count dictionaries too large for principled discounting):
@@ -1325,7 +1234,7 @@ def stupid_backoff_trigram(
                     = 0.4^2 * c(w3)/N          else if the word was
                     = 0.4^2 * 1/N              else (OOV)
 
-    Train counts come from docs with id % holdout_mod == 0; scoring runs
+    Train counts come from docs with id % 2 == 0; scoring runs
     over the OTHER docs, so the backoff path actually fires (scoring the
     training corpus itself never leaves the first branch — the mistake
     this operator's split contract exists to avoid). kn_bigram_surprisal
@@ -1352,15 +1261,15 @@ def stupid_backoff_trigram(
     # array row per doc, not the exploded token stream; Generate preserves
     # the hash(id) partitioning the lag window needs
     pre = docs.select(
-        F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("__arr")
-    ).repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-    toks = pre.select(F.col(id_col), F.posexplode("__arr").alias("pos", "tok"))
-    w = W.partitionBy(id_col).orderBy("pos")
+        F.col("doc_id"), F.split(F.lower(F.col("text")), " ").alias("__arr")
+    ).repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
+    toks = pre.select(F.col("doc_id"), F.posexplode("__arr").alias("pos", "tok"))
+    w = W.partitionBy("doc_id").orderBy("pos")
     tri = (
         toks.withColumn("w2", F.lag("tok", 1).over(w))
         .withColumn("w1", F.lag("tok", 2).over(w))
         .filter(F.col("w1").isNotNull())
-        .select(F.col(id_col), "w1", "w2", F.col("tok").alias("w3"))
+        .select(F.col("doc_id"), "w1", "w2", F.col("tok").alias("w3"))
     )
     # materialize the trigram frame ONCE: it fans out to seven consumers
     # (five train count dictionaries, the train total, and the held-out
@@ -1369,7 +1278,7 @@ def stupid_backoff_trigram(
     # measured 15.3 s -> ~2 s at sf0.01 for the registry query (guide §5:
     # persist only when re-used AND recompute is the expensive side).
     tri = tri.localCheckpoint(eager=True)
-    is_train = (F.col(id_col) % holdout_mod) == 0
+    is_train = (F.col("doc_id") % 2) == 0
     train, held = tri.filter(is_train), tri.filter(~is_train)
 
     c_tri = train.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c3"))
@@ -1400,8 +1309,8 @@ def stupid_backoff_trigram(
         .when(F.col("cw").isNotNull(), F.lit("uni"))
         .otherwise(F.lit("oov"))
     )
-    scored = j.select(F.col(id_col), bits.alias("bits"), level.alias("lv"))
-    return scored.groupBy(id_col).agg(
+    scored = j.select(F.col("doc_id"), bits.alias("bits"), level.alias("lv"))
+    return scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_trigrams"),
         F.sum("bits").cast("long").alias("total_bits"),
         F.expr("CAST((sum(bits) * 1000) DIV count(*) AS BIGINT)").alias(

@@ -46,7 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
-from cartography_spark.schema import LinkDirection, NodeSchema, RelSchema
+from cartography_spark.schema import LinkDirection, NodeSchema, RelSchema, TargetNodeMatcher
 from cartography_spark.sources.rows import local_frame
 
 
@@ -158,12 +158,15 @@ def attach_relationships(
         upsert_rel(catalog, schema, rel, batch, update_tag, params)
 
 
-def _matcher_condition(rel: RelSchema, target: DataFrame, params: dict[str, Any] | None) -> Column:
-    """Build the join condition for the rel's matcher keys, honouring the
+def _matcher_condition(
+    matcher: TargetNodeMatcher, target: DataFrame, params: dict[str, Any] | None
+) -> Column:
+    """Build the join condition for a matcher's keys, honouring the
     PropertyRef flags — the four matcher join modes of
-    querybuilder.py:632-666,711-736."""
+    querybuilder.py:632-666,711-736. Both relationship upserts and
+    matchlinks resolve their targets through it."""
     conds: list[Column] = []
-    for target_key, ref in rel.target_node_matcher.keys.items():
+    for target_key, ref in matcher.keys.items():
         t = target[target_key]
         b = ref.expr(params)
         if ref.one_to_many:
@@ -204,7 +207,7 @@ def upsert_rel(
     src_id = schema.properties["id"].expr(params).cast("string")
     rows = batch.withColumn("__src_id", src_id).filter(F.col("__src_id").isNotNull())
 
-    cond = _matcher_condition(rel, target, params)
+    cond = _matcher_condition(rel.target_node_matcher, target, params)
     # small target tables (tenants/dims) broadcast; Catalyst/AQE decides
     matched = rows.join(target, cond, "inner")  # OPTIONAL MATCH tolerance: missing targets drop
     edge_cols = [

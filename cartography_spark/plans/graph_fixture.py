@@ -7,7 +7,7 @@ state by running actual syncs against fixture dicts
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
@@ -126,6 +126,19 @@ ORDER_SCHEMA = NodeSchema(
 )
 
 
+def supplier_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The supplier "transform" stage: enrich with the tenant key (region)
+    via nation and flag positive balances. The reference flattens/augments
+    rows in Python before load (intel/aws/ec2/instances.py:111-297); here
+    it's a broadcast join."""
+    nation = load_table(spark, sf_dir, "nation")
+    supplier = load_table(spark, sf_dir, "supplier")
+    return supplier.join(
+        F.broadcast(nation.select("n_nationkey", "n_regionkey")),
+        supplier.s_nationkey == F.col("n_nationkey"),
+    ).withColumn("s_acctbal_positive", F.col("s_acctbal") > 0)
+
+
 def stage_fns(spark: SparkSession, sf_dir: str):
     """Per-label load stages for the staged Sync — the Spark analog of the
     reference's intel-module starters (sync.py:588-640 build_sync wires one
@@ -141,16 +154,7 @@ def stage_fns(spark: SparkSession, sf_dir: str):
         load(cat, NATION_SCHEMA, load_table(spark, sf_dir, "nation"), config["UPDATE_TAG"])
 
     def supplier_stage(cat: GraphCatalog, config) -> None:
-        # "transform" stage: enrich with the tenant key (region) via nation —
-        # the reference flattens/augments rows in Python before load
-        # (intel/aws/ec2/instances.py:111-297); here it's a broadcast join.
-        nation = load_table(spark, sf_dir, "nation")
-        supplier = load_table(spark, sf_dir, "supplier")
-        supplier_t = supplier.join(
-            F.broadcast(nation.select("n_nationkey", "n_regionkey")),
-            supplier.s_nationkey == F.col("n_nationkey"),
-        ).withColumn("s_acctbal_positive", F.col("s_acctbal") > 0)
-        load(cat, SUPPLIER_SCHEMA, supplier_t, config["UPDATE_TAG"])
+        load(cat, SUPPLIER_SCHEMA, supplier_rows(spark, sf_dir), config["UPDATE_TAG"])
 
     def customer_stage(cat: GraphCatalog, config) -> None:
         nation = load_table(spark, sf_dir, "nation")

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from cartography_spark.plans.registry import query
 from cartography_spark.sources.parquet import load_table as T
 
+N_REPS = 32
+
 
 @query(
     "cube_pricing",
@@ -451,12 +453,12 @@ def q_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _boot_oracle(n_reps: int = 32) -> str:
+def _boot_oracle() -> str:
     cuts = (1580030169, 3160060337, 3950075422, 4213413783)
-    n_groups = (n_reps + 3) // 4
+    n_groups = (N_REPS + 3) // 4
     hs = [f"md5('boot{g}:' || rid) AS h{g}" for g in range(n_groups)]
     ws, sums, structs = [], [], []
-    for b in range(n_reps):
+    for b in range(N_REPS):
         group, slot = divmod(b, 4)
         u = f"('0x' || substring(h{group}, {1 + 8 * slot}, 8))::BIGINT"
         case = f"CASE WHEN {u} < {cuts[0]} THEN 0"
@@ -481,15 +483,15 @@ def _boot_oracle(n_reps: int = 32) -> str:
     SELECT CAST(max(n) AS BIGINT) AS n_rows,
            max(s) / max(n) AS point_mean,
            max(CASE WHEN rk = 2 THEN m END) AS ci_lo,
-           max(CASE WHEN rk = {n_reps - 1} THEN m END) AS ci_hi,
-           {n_reps} AS n_replicates
+           max(CASE WHEN rk = {N_REPS - 1} THEN m END) AS ci_hi,
+           {N_REPS} AS n_replicates
     FROM ranked
     """
 
 
 @query(
     "bootstrap_mean_ci",
-    oracle=_boot_oracle(32),
+    oracle=_boot_oracle(),
     doc="One-pass Poisson-bootstrap 95%-ish CI for the mean line price "
     "(operators/sampling.py:poisson_bootstrap_ci): every replicate "
     "resamples each row with a deterministic hash-derived Poisson(1) "
@@ -512,7 +514,7 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rid"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("x"),
     )
-    return poisson_bootstrap_ci(li, F.col("x"), F.col("rid"), n_replicates=32)
+    return poisson_bootstrap_ci(li, F.col("x"), F.col("rid"))
 
 
 @query(
@@ -675,10 +677,8 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = cal.groupBy("g").agg(
         F.floor(F.sum("y").cast("double") / F.count("*")).cast("bigint").alias("m")
     )
-    cal_scores = cal.join(F.broadcast(mu), "g").select(
-        F.abs(F.col("y") - F.col("m")).alias("s")
-    )
-    calib = conformal_interval_calibrate(cal_scores, "s", alpha=0.1)
+    cal_scores = cal.join(F.broadcast(mu), "g").select(F.abs(F.col("y") - F.col("m")).alias("s"))
+    calib = conformal_interval_calibrate(cal_scores)
     test = o.filter(F.col("b") == 1).join(F.broadcast(mu), "g").select(
         F.abs(F.col("y") - F.col("m")).alias("s")
     )
@@ -951,9 +951,7 @@ def q_timeseries_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFra
     from cartography_spark.operators.profiling import seasonal_decompose_hourly
 
     ev = T(spark, sf_dir, "events")
-    return seasonal_decompose_hourly(
-        ev, "ts", F.round(F.col("value") * 100).cast("bigint"), half_window=12
-    )
+    return seasonal_decompose_hourly(ev, "ts", F.round(F.col("value") * 100).cast("bigint"))
 
 
 @query(
@@ -998,7 +996,7 @@ def q_robust_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = T(spark, sf_dir, "orders").select(
         "o_orderpriority", F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents")
     )
-    return trimmed_mean(o, "o_orderpriority", "cents", trim_ppm=50_000)
+    return trimmed_mean(o, "o_orderpriority", "cents")
 
 
 @query(
@@ -1602,7 +1600,7 @@ def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.textstats import hapax_ratio_by
 
-    return hapax_ratio_by(T(spark, sf_dir, "documents"), "source", "text")
+    return hapax_ratio_by(T(spark, sf_dir, "documents"))
 
 
 @query(
@@ -1668,7 +1666,7 @@ def q_conformal_mondrian_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
     cal_scores = cal.join(F.broadcast(mu), "g").select(
         "g", F.abs(F.col("y") - F.col("m")).alias("s")
     )
-    calib = conformal_mondrian_calibrate(cal_scores, "g", "s", alpha=0.1)
+    calib = conformal_mondrian_calibrate(cal_scores)
     test = o.filter(F.col("b") == 1).join(F.broadcast(mu), "g").select(
         "g", F.abs(F.col("y") - F.col("m")).alias("s")
     )
@@ -2629,9 +2627,7 @@ def q_stats_bh_fdr_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.profiling import benjamini_hochberg_rates
 
     ev = T(spark, sf_dir, "events")
-    return benjamini_hochberg_rates(
-        ev, F.col("event_type"), F.col("value") >= 50, alpha_micros=50_000
-    )
+    return benjamini_hochberg_rates(ev, F.col("event_type"), F.col("value") >= 50)
 
 
 @query(

@@ -492,7 +492,5 @@ def q_record_linkage_fs_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("seg_a") == F.col("seg_b")).alias("g_seg"),
         (F.col("bal_a") == F.col("bal_b")).alias("g_bal"),
     )
-    scored = fellegi_sunter_scores(pairs, ["g_name", "g_seg", "g_bal"], m_prob=0.95)
-    return scored.filter(F.col("score_milli") > 0).select(
-        "a_id", "b_id", "n_agree", "score_milli"
-    )
+    scored = fellegi_sunter_scores(pairs, ["g_name", "g_seg", "g_bal"])
+    return scored.filter(F.col("score_milli") > 0).select("a_id", "b_id", "n_agree", "score_milli")

@@ -915,10 +915,8 @@ def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sm = load_table(spark, sf_dir, "part").filter(F.col("p_size") == 1).select(
         "p_partkey", "p_brand"
     )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_extendedprice", "l_discount"
-    )
-    kept = bloom_prefilter(li, sm, "l_partkey", "p_partkey", m=1024, k=3)
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice", "l_discount")
+    kept = bloom_prefilter(li, sm, "l_partkey", "p_partkey")
     n = kept.agg(F.count("*").cast("bigint").alias("prefilter_kept"))
     return (
         kept.join(F.broadcast(sm), F.col("l_partkey") == F.col("p_partkey"))
@@ -1006,8 +1004,7 @@ def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", "value"
     )
     out = asof_join_forward(
-        views, purchases, by="user_id", ts="ts", value_cols=("value",), tie_col="event_id",
-        prefix="purchase_",
+        views, purchases, by="user_id", ts="ts", value_cols=("value",), prefix="purchase_",
     )
     return out.select(
         "view_id",
@@ -1200,7 +1197,6 @@ def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts="click_ts",
         value_cols=("value",),
         left_id="click_id",
-        tie_col="event_id",
     ).select(
         "click_id",
         "user_id",
@@ -1272,9 +1268,7 @@ def q_dedup_embedding_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     base = emb.unionByName(copies).unionByName(perturbed)
-    return dd.embedding_cluster_collapsed(
-        base, dim=64, threshold=0.99, n_planes=8, max_iter=6
-    )
+    return dd.embedding_cluster_collapsed(base, dim=64)
 
 
 @query(
@@ -1607,7 +1601,7 @@ def q_streaming_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CDC_LOG_CACHE[cache_key] = path
     path = _CDC_LOG_CACHE[cache_key]
     stream = spark.readStream.schema(log.schema).parquet(path)
-    state = cdc_latest_state(stream, "c_custkey", payload_cols=("name",))
+    state = cdc_latest_state(stream, "c_custkey")
     name = f"stream_cdc_{uuid.uuid4().hex[:8]}"
     return run_available_now(state, name, output_mode="complete")
 
@@ -1792,4 +1786,4 @@ def q_skew_shuffle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.skew import skew_audit
 
     ev = load_table(spark, sf_dir, "events")
-    return skew_audit(ev, F.col("event_type"), n_buckets=32)
+    return skew_audit(ev, F.col("event_type"))

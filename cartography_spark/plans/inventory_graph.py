@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cartography_spark.operators.graph import (
+    HITS_SCALE,
     PR_SCALE,
     bellman_ford,
     bfs_distances,
@@ -37,6 +38,15 @@ from cartography_spark.operators.graph import (
 )
 from cartography_spark.plans.registry import query
 from cartography_spark.sources.parquet import load_table as T
+
+PAGERANK_ITERATIONS = 5
+BELLMAN_ROUNDS = 8
+KCORE_K = 45
+KCORE_ROUNDS = 4
+TEMPORAL_REACH_ROUNDS = 4
+LPA_ROUNDS = 3
+PPR_SEED = 1
+HITS_ITERATIONS = 3
 
 # Customer<->supplier trade graph: distinct (customer, supplier) pairs that
 # appear in any order. Supplier ids offset by 100000 into a shared id space.
@@ -60,7 +70,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(iterations: int = 5) -> str:
+def _pagerank_oracle() -> str:
     parts = [
         f"WITH base_e AS ({_TRADE_EDGES_SQL}),",
         "e AS (SELECT a AS src, b AS dst FROM base_e UNION SELECT b, a FROM base_e),",
@@ -68,7 +78,7 @@ def _pagerank_oracle(iterations: int = 5) -> str:
         "p AS (SELECT count(*) AS n FROM d),",
         f"r0 AS (SELECT src AS node, CAST({PR_SCALE} // n AS BIGINT) AS r FROM d, p),",
     ]
-    for k in range(1, iterations + 1):
+    for k in range(1, PAGERANK_ITERATIONS + 1):
         parts.append(
             f"""r{k} AS (
       SELECT e.dst AS node,
@@ -80,7 +90,7 @@ def _pagerank_oracle(iterations: int = 5) -> str:
         )
     body = "\n    ".join(parts).rstrip(",")
     return f"""{body}
-    SELECT node, r AS rank FROM r{iterations} ORDER BY rank DESC, node ASC LIMIT 20"""
+    SELECT node, r AS rank FROM r{PAGERANK_ITERATIONS} ORDER BY rank DESC, node ASC LIMIT 20"""
 
 
 @query(
@@ -97,7 +107,7 @@ def _pagerank_oracle(iterations: int = 5) -> str:
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = symmetrize(_trade_edges(spark, sf_dir), "a", "b")
-    ranks = pagerank_exact(edges, iterations=5)
+    ranks = pagerank_exact(edges, iterations=PAGERANK_ITERATIONS)
     return ranks.select("node", F.col("r").alias("rank")).orderBy(
         F.desc("rank"), F.asc("node")
     ).limit(20)
@@ -195,14 +205,14 @@ def q_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bfs_distances(edges, source=1, max_depth=6)
 
 
-def _bellman_oracle(rounds: int = 8) -> str:
+def _bellman_oracle() -> str:
     parts = [
         f"WITH base_e AS ({_TRADE_EDGES_SQL}),",
         "eu AS (SELECT a AS src, b AS dst FROM base_e UNION SELECT b, a FROM base_e),",
         "e AS (SELECT src, dst, 1 + (src + dst) % 5 AS w FROM eu),",
         "d0 AS (SELECT CAST(1 AS BIGINT) AS node, CAST(0 AS BIGINT) AS cost),",
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, BELLMAN_ROUNDS + 1):
         parts.append(
             f"""d{k} AS (
       SELECT node, min(cost) AS cost FROM (
@@ -213,7 +223,7 @@ def _bellman_oracle(rounds: int = 8) -> str:
     ),"""
         )
     body = "\n    ".join(parts).rstrip(",")
-    return f"{body}\n    SELECT node, cost FROM d{rounds}"
+    return f"{body}\n    SELECT node, cost FROM d{BELLMAN_ROUNDS}"
 
 
 @query(
@@ -233,7 +243,7 @@ def q_bellman(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted = sym.select(
         "src", "dst", (1 + (F.col("src") + F.col("dst")) % 5).alias("w")
     )
-    return bellman_ford(weighted, source=1, rounds=8)
+    return bellman_ford(weighted, source=1, rounds=BELLMAN_ROUNDS)
 
 
 @query(
@@ -303,22 +313,22 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kcore_oracle(k: int = 45, rounds: int = 4) -> str:
+def _kcore_oracle() -> str:
     parts = [
         f"WITH base_e AS ({_TRADE_EDGES_SQL}),",
         "e0 AS (SELECT a AS src, b AS dst FROM base_e UNION SELECT b, a FROM base_e),",
     ]
-    for r in range(rounds):
+    for r in range(KCORE_ROUNDS):
         parts.append(
             f"""d{r} AS (SELECT src, count(*) AS deg FROM e{r} GROUP BY src),
-    k{r} AS (SELECT src FROM d{r} WHERE deg >= {k}),
+    k{r} AS (SELECT src FROM d{r} WHERE deg >= {KCORE_K}),
     e{r + 1} AS (SELECT e.src, e.dst FROM e{r} e
                  JOIN k{r} s ON e.src = s.src
                  JOIN k{r} t ON e.dst = t.src),"""
         )
     parts.append(
-        f"""df AS (SELECT src, count(*) AS deg FROM e{rounds} GROUP BY src)
-    SELECT src AS node, CAST(deg AS BIGINT) AS deg FROM df WHERE deg >= {k}"""
+        f"""df AS (SELECT src, count(*) AS deg FROM e{KCORE_ROUNDS} GROUP BY src)
+    SELECT src AS node, CAST(deg AS BIGINT) AS deg FROM df WHERE deg >= {KCORE_K}"""
     )
     return "\n    ".join(parts)
 
@@ -340,18 +350,18 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _trade_edges(spark, sf_dir).select(
         F.col("a").alias("u"), F.col("b").alias("v")
     )
-    return kcore(edges, k=45, rounds=4)
+    return kcore(edges, k=KCORE_K, rounds=KCORE_ROUNDS)
 
 
-def _lpa_cte(rounds: int = 3) -> str:
-    """The shared unrolled-LPA CTE chain (ends with l<rounds>, no final
+def _lpa_cte() -> str:
+    """The shared unrolled-LPA CTE chain (ends with l<LPA_ROUNDS>, no final
     SELECT) — used by both the LPA oracle and the modularity oracle."""
     parts = [
         f"WITH base_e AS ({_TRADE_EDGES_SQL}),",
         "e AS (SELECT a AS src, b AS dst FROM base_e UNION SELECT b, a FROM base_e),",
         "l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),",
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, LPA_ROUNDS + 1):
         parts.append(
             f"""c{k} AS (
       SELECT e.src, l.label, count(*) AS cnt
@@ -368,9 +378,9 @@ def _lpa_cte(rounds: int = 3) -> str:
     return "\n    ".join(parts)
 
 
-def _lpa_oracle(rounds: int = 3) -> str:
-    body = _lpa_cte(rounds).rstrip(",")
-    return f"{body}\n    SELECT node, label FROM l{rounds}"
+def _lpa_oracle() -> str:
+    body = _lpa_cte().rstrip(",")
+    return f"{body}\n    SELECT node, label FROM l{LPA_ROUNDS}"
 
 
 @query(
@@ -389,7 +399,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.graph import label_propagation
 
     edges = symmetrize(_trade_edges(spark, sf_dir), "a", "b")
-    return label_propagation(edges, rounds=3)
+    return label_propagation(edges, rounds=LPA_ROUNDS)
 
 
 @query(
@@ -473,19 +483,19 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _modularity_oracle(rounds: int = 3) -> str:
-    body = _lpa_cte(rounds)
+def _modularity_oracle() -> str:
+    body = _lpa_cte()
     return f"""{body}
     deg AS (SELECT src, count(*) AS d FROM e GROUP BY src),
     tm AS (SELECT CAST(count(*) AS BIGINT) AS two_m FROM e),
     intra AS (
       SELECT CAST(sum(CASE WHEN ls.label = ld.label THEN 1 ELSE 0 END) AS BIGINT) AS intra2
-      FROM e JOIN l{rounds} ls ON e.src = ls.node JOIN l{rounds} ld ON e.dst = ld.node
+      FROM e JOIN l{LPA_ROUNDS} ls ON e.src = ls.node JOIN l{LPA_ROUNDS} ld ON e.dst = ld.node
     ),
     dc2 AS (
       SELECT CAST(sum(dc * dc) AS BIGINT) AS sum_dc2 FROM (
         SELECT l.label, sum(d) AS dc
-        FROM deg JOIN l{rounds} l ON deg.src = l.node GROUP BY l.label
+        FROM deg JOIN l{LPA_ROUNDS} l ON deg.src = l.node GROUP BY l.label
       )
     )
     SELECT two_m, intra2,
@@ -510,18 +520,18 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     edges = symmetrize(_trade_edges(spark, sf_dir), "a", "b")
     edges.persist()
-    labels = label_propagation(edges, rounds=3)
+    labels = label_propagation(edges, rounds=LPA_ROUNDS)
     return modularity_exact(edges, labels)
 
 
-def _ppr_oracle(seed: int = 1, iterations: int = 5) -> str:
+def _ppr_oracle() -> str:
     parts = [
         f"WITH base_e AS ({_TRADE_EDGES_SQL}),",
         "e AS (SELECT a AS src, b AS dst FROM base_e UNION SELECT b, a FROM base_e),",
         "d AS (SELECT src, count(*) AS deg FROM e GROUP BY src),",
-        f"r0 AS (SELECT CAST({seed} AS BIGINT) AS node, CAST({PR_SCALE} AS BIGINT) AS r),",
+        f"r0 AS (SELECT CAST({PPR_SEED} AS BIGINT) AS node, CAST({PR_SCALE} AS BIGINT) AS r),",
     ]
-    for k in range(1, iterations + 1):
+    for k in range(1, PAGERANK_ITERATIONS + 1):
         parts.append(
             f"""r{k} AS (
       SELECT node, CAST(sum(x) AS BIGINT) AS r FROM (
@@ -530,19 +540,19 @@ def _ppr_oracle(seed: int = 1, iterations: int = 5) -> str:
         FROM e JOIN r{k - 1} r ON e.src = r.node JOIN d ON e.src = d.src
         GROUP BY e.dst
         UNION ALL
-        SELECT CAST({seed} AS BIGINT), CAST({(15 * PR_SCALE) // 100} AS BIGINT)
+        SELECT CAST({PPR_SEED} AS BIGINT), CAST({(15 * PR_SCALE) // 100} AS BIGINT)
       ) GROUP BY node
     ),"""
         )
     body = "\n    ".join(parts).rstrip(",")
     return f"""{body}
-    SELECT node, r AS rank FROM r{iterations} WHERE r > 0
+    SELECT node, r AS rank FROM r{PAGERANK_ITERATIONS} WHERE r > 0
     ORDER BY rank DESC, node ASC LIMIT 20"""
 
 
 @query(
     "graph_pagerank_personalized",
-    oracle=_ppr_oracle(seed=1),
+    oracle=_ppr_oracle(),
     doc="Personalized PageRank from customer 1 (operators/graph.py:"
     "pagerank_personalized): the pagerank_exact recurrence with all "
     "teleport mass returned to the seed — integer fixed-point, "
@@ -556,7 +566,7 @@ def q_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.graph import pagerank_personalized
 
     edges = symmetrize(_trade_edges(spark, sf_dir), "a", "b")
-    ranks = pagerank_personalized(edges, seed=1, iterations=5)
+    ranks = pagerank_personalized(edges, seed=PPR_SEED)
     return (
         ranks.filter(F.col("r") > 0)
         .select("node", F.col("r").alias("rank"))
@@ -576,12 +586,12 @@ _TEMPORAL_EDGES_SQL = """
 """
 
 
-def _temporal_reach_oracle(source: int = 1, rounds: int = 4) -> str:
+def _temporal_reach_oracle() -> str:
     parts = [
         f"WITH e AS ({_TEMPORAL_EDGES_SQL}),",
-        f"a0 AS (SELECT CAST({source} AS BIGINT) AS node, CAST(0 AS BIGINT) AS arrival),",
+        "a0 AS (SELECT CAST(1 AS BIGINT) AS node, CAST(0 AS BIGINT) AS arrival),",
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, TEMPORAL_REACH_ROUNDS + 1):
         parts.append(
             f"""a{k} AS (
       SELECT node, min(arrival) AS arrival FROM (
@@ -592,12 +602,12 @@ def _temporal_reach_oracle(source: int = 1, rounds: int = 4) -> str:
     ),"""
         )
     body = "\n    ".join(parts).rstrip(",")
-    return f"{body}\n    SELECT node, arrival FROM a{rounds}"
+    return f"{body}\n    SELECT node, arrival FROM a{TEMPORAL_REACH_ROUNDS}"
 
 
 @query(
     "graph_temporal_reachability",
-    oracle=_temporal_reach_oracle(source=1),
+    oracle=_temporal_reach_oracle(),
     doc="Earliest-arrival temporal reachability (operators/graph.py:"
     "temporal_reachability) over the order/ship handoff graph (customer "
     "-> supplier at order date, supplier -> customer at ship date, "
@@ -628,31 +638,31 @@ def q_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         day("l_shipdate").alias("t"),
     )
     edges = fwd.unionByName(back).distinct()
-    return temporal_reachability(edges, source=1, rounds=4)
+    return temporal_reachability(edges, source=1, rounds=TEMPORAL_REACH_ROUNDS)
 
 
-def _hits_oracle(iterations: int = 3, scale: int = 100_000) -> str:
+def _hits_oracle() -> str:
     parts = [
         f"WITH base_e AS ({_TRADE_EDGES_SQL}),",
         "e AS (SELECT a AS src, b AS dst FROM base_e),",
         "h0 AS (SELECT DISTINCT src AS node, CAST(1 AS BIGINT) AS h FROM e),",
     ]
-    for k in range(1, iterations + 1):
+    for k in range(1, HITS_ITERATIONS + 1):
         parts.append(
             f"""a{k}r AS (
       SELECT e.dst AS node, CAST(sum(h.h) AS BIGINT) AS a
       FROM e JOIN h{k - 1} h ON e.src = h.node GROUP BY e.dst
     ),
-    a{k} AS (SELECT node, CAST((a * {scale}) // (SELECT max(a) FROM a{k}r) AS BIGINT) AS a FROM a{k}r),
+    a{k} AS (SELECT node, CAST((a * {HITS_SCALE}) // (SELECT max(a) FROM a{k}r) AS BIGINT) AS a FROM a{k}r),
     h{k}r AS (
       SELECT e.src AS node, CAST(sum(a{k}.a) AS BIGINT) AS h
       FROM e JOIN a{k} ON e.dst = a{k}.node GROUP BY e.src
     ),
-    h{k} AS (SELECT node, CAST((h * {scale}) // (SELECT max(h) FROM h{k}r) AS BIGINT) AS h FROM h{k}r),"""
+    h{k} AS (SELECT node, CAST((h * {HITS_SCALE}) // (SELECT max(h) FROM h{k}r) AS BIGINT) AS h FROM h{k}r),"""
         )
     body = "\n    ".join(parts).rstrip(",")
     return f"""{body}
-    SELECT node, a AS authority FROM a{iterations}
+    SELECT node, a AS authority FROM a{HITS_ITERATIONS}
     ORDER BY authority DESC, node ASC LIMIT 20"""
 
 
@@ -675,7 +685,7 @@ def q_hits_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _trade_edges(spark, sf_dir).select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     )
-    hubs, auths = hits_exact(edges, iterations=3)
+    hubs, auths = hits_exact(edges, iterations=HITS_ITERATIONS)
     return (
         auths.select("node", F.col("a").alias("authority"))
         .orderBy(F.desc("authority"), F.asc("node"))

@@ -39,12 +39,9 @@ def base_catalog(spark: SparkSession, sf_dir: str) -> GraphCatalog:
 
 
 def _supplier_batches(spark: SparkSession, sf_dir: str):
-    nation = load_table(spark, sf_dir, "nation")
-    supplier = load_table(spark, sf_dir, "supplier")
-    b1 = supplier.join(
-        F.broadcast(nation.select("n_nationkey", "n_regionkey")),
-        supplier.s_nationkey == F.col("n_nationkey"),
-    ).withColumn("s_acctbal_positive", F.col("s_acctbal") > 0)
+    from cartography_spark.plans.graph_fixture import supplier_rows
+
+    b1 = supplier_rows(spark, sf_dir)
     b2 = b1.filter(F.col("s_suppkey") % 2 == 0).withColumn("s_acctbal", F.col("s_acctbal") + 1000)
     return b1, b2
 

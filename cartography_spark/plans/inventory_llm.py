@@ -20,6 +20,11 @@ from cartography_spark.operators import textstats as ts
 from cartography_spark.plans.registry import query
 from cartography_spark.sources.parquet import load_table
 
+KCENTER_K = 5
+MMR_K = 5
+LOGREG_ITERATIONS = 3
+MMR_LAMBDA = 0.7
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
@@ -81,9 +86,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup"),
 )
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.ngram_jaccard_pairs(
-        _docs(spark, sf_dir), n=3, threshold=0.5, block_cols=("lang",)
-    )
+    return dd.ngram_jaccard_pairs(_docs(spark, sf_dir))
 
 
 @query(
@@ -119,8 +122,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup"),
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = dd.minhash_wide(_docs(spark, sf_dir), num_perm=16, n=3)
-    return dd.lsh_candidate_pairs(wide, bands=4)
+    wide = dd.minhash_wide(_docs(spark, sf_dir), num_perm=16)
+    return dd.lsh_candidate_pairs(wide)
 
 
 @query(
@@ -155,7 +158,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup"),
 )
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fp = dd.simhash(_docs(spark, sf_dir), bits=32)
+    fp = dd.simhash(_docs(spark, sf_dir))
     return dd.simhash_near_pairs(fp, max_hamming=3)
 
 
@@ -196,7 +199,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    pairs = dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5, block_cols=("lang",))
+    pairs = dd.ngram_jaccard_pairs(docs)
     return dd.cluster_min_label(pairs, docs, max_iter=6)
 
 
@@ -224,7 +227,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup"),
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.simhash(_docs(spark, sf_dir), bits=32)
+    return dd.simhash(_docs(spark, sf_dir))
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -359,7 +362,7 @@ _SIG_SQL = """
 )
 def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim.lsh_ann_topk(emb, _query_vec(spark, sf_dir), dim=64, k=10, n_planes=8)
+    return sim.lsh_ann_topk(emb, _query_vec(spark, sf_dir), dim=64, k=10)
 
 
 def _cos64(a: str, b: str) -> str:
@@ -417,7 +420,7 @@ def _cos64(a: str, b: str) -> str:
 )
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cents, assigned = _ivf_index(spark, sf_dir, k=16, sample_mod=10)
+    cents, assigned = _ivf_index(spark, sf_dir)
     return sim.ivf_ann_topk(
         emb,
         _query_vec(spark, sf_dir),
@@ -438,24 +441,21 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session restarts). The assigned inverted lists are corpus-sized: kept as
 # a localCheckpointed frame keyed by applicationId (rebuilt on a new
 # session — same deterministic values).
-_IVF_CENTROID_CACHE: dict[tuple[str, int, int], list] = {}
-_IVF_ASSIGN_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
+_IVF_CENTROID_CACHE: dict[str, list] = {}
+_IVF_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-def _ivf_index(
-    spark: SparkSession, sf_dir: str, k: int = 16, sample_mod: int = 10
-) -> tuple[DataFrame, DataFrame]:
+def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from cartography_spark.operators.clustering import trained_centroid_frame
 
-    ckey = (sf_dir, k, sample_mod)
-    if ckey not in _IVF_CENTROID_CACHE:
+    if sf_dir not in _IVF_CENTROID_CACHE:
         emb = load_table(spark, sf_dir, "embeddings")
-        _IVF_CENTROID_CACHE[ckey] = [
+        _IVF_CENTROID_CACHE[sf_dir] = [
             (r["cid"], list(r["cv"]))
-            for r in trained_centroid_frame(emb, k=k, sample_mod=sample_mod).collect()
+            for r in trained_centroid_frame(emb, sample_mod=10).collect()
         ]
-    cents = spark.createDataFrame(_IVF_CENTROID_CACHE[ckey], "cid bigint, cv array<double>")
-    akey = (spark.sparkContext.applicationId, sf_dir, k, sample_mod)
+    cents = spark.createDataFrame(_IVF_CENTROID_CACHE[sf_dir], "cid bigint, cv array<double>")
+    akey = (spark.sparkContext.applicationId, sf_dir)
     if akey not in _IVF_ASSIGN_CACHE:
         emb = load_table(spark, sf_dir, "embeddings")
         _IVF_ASSIGN_CACHE[akey] = sim.ivf_assign(emb, cents).localCheckpoint(eager=True)
@@ -572,9 +572,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.sampling import assign_splits
 
     docs = _docs(spark, sf_dir)
-    return assign_splits(docs, id_col="doc_id").groupBy("lang", "split").agg(
-        F.count("*").alias("n_docs")
-    )
+    return assign_splits(docs).groupBy("lang", "split").agg(F.count("*").alias("n_docs"))
 
 
 @query(
@@ -921,9 +919,9 @@ _MINHASH_SQL = """
     tags=("llm", "dedup"),
 )
 def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = dd.minhash_wide(_docs(spark, sf_dir), num_perm=16, n=3)
+    wide = dd.minhash_wide(_docs(spark, sf_dir), num_perm=16)
     wide = wide.localCheckpoint(eager=True)
-    pairs = dd.lsh_candidate_pairs(wide, bands=4)
+    pairs = dd.lsh_candidate_pairs(wide)
     wa = wide.select(F.col("doc_id").alias("a"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(16)])
     wb = wide.select(F.col("doc_id").alias("b"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(16)])
     agree = sum(
@@ -1048,7 +1046,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity"),
 )
 def q_int8_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.int8_topk(load_table(spark, sf_dir, "embeddings"), query_id=0, k=20)
+    return sim.int8_topk(load_table(spark, sf_dir, "embeddings"), k=20)
 
 
 @query(
@@ -1109,7 +1107,7 @@ def q_int8_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity"),
 )
 def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.pq_adc_topk(load_table(spark, sf_dir, "embeddings"), dim=64, query_id=0, k=20)
+    return sim.pq_adc_topk(load_table(spark, sf_dir, "embeddings"), dim=64, k=20)
 
 
 @query(
@@ -1137,9 +1135,7 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_similarity_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim.multiprobe_lsh_ann_topk(
-        emb, _query_vec(spark, sf_dir), dim=64, k=10, n_planes=8, max_hamming=1
-    )
+    return sim.multiprobe_lsh_ann_topk(emb, _query_vec(spark, sf_dir), dim=64, k=10)
 
 
 _INT8_Q_SQL = """
@@ -1170,7 +1166,7 @@ def _sqd64(a: str, b: str) -> str:
     )
 
 
-def _kcenter_oracle(k: int = 5) -> str:
+def _kcenter_oracle() -> str:
     parts = [f"WITH {_INT8_Q_SQL},"]
     parts.append(
         f"d1 AS (SELECT p.vec_id, {_sqd64('p.qvec', 's.qvec')} AS dmin"
@@ -1178,7 +1174,7 @@ def _kcenter_oracle(k: int = 5) -> str:
     )
     prev_ids = "SELECT CAST(0 AS BIGINT) AS vec_id"
     finals = ["SELECT 0 AS sel_order, CAST(0 AS BIGINT) AS vec_id, CAST(0 AS BIGINT) AS dmin"]
-    for r in range(1, k):
+    for r in range(1, KCENTER_K):
         parts.append(
             f"p{r} AS (SELECT vec_id, dmin FROM d{r}"
             f" WHERE vec_id NOT IN ({prev_ids})"
@@ -1189,7 +1185,7 @@ def _kcenter_oracle(k: int = 5) -> str:
             f"SELECT {r} AS sel_order, CAST(vec_id AS BIGINT) AS vec_id,"
             f" CAST(dmin AS BIGINT) AS dmin FROM p{r}"
         )
-        if r < k - 1:
+        if r < KCENTER_K - 1:
             parts.append(
                 f"d{r + 1} AS (SELECT d{r}.vec_id,"
                 f" least(d{r}.dmin, {_sqd64('p.qvec', 'sv.qvec')}) AS dmin"
@@ -1202,7 +1198,7 @@ def _kcenter_oracle(k: int = 5) -> str:
 
 @query(
     "sampling_kcenter_diverse",
-    oracle=_kcenter_oracle(5),
+    oracle=_kcenter_oracle(),
     doc="Greedy k-center diverse subset selection (operators/"
     "clustering.py:kcenter_diverse): 5 farthest-point picks over the "
     "int8-quantized embeddings, ties to the smallest id — the coverage-"
@@ -1217,7 +1213,7 @@ def _kcenter_oracle(k: int = 5) -> str:
 def q_kcenter_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.clustering import kcenter_diverse
 
-    return kcenter_diverse(load_table(spark, sf_dir, "embeddings"), k=5, seed_id=0)
+    return kcenter_diverse(load_table(spark, sf_dir, "embeddings"), k=KCENTER_K, seed_id=0)
 
 
 @query(
@@ -1320,7 +1316,7 @@ def _sqd16(a: str, b: str, m: str) -> str:
     tags=("llm", "similarity"),
 )
 def q_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.ivf_pq_topk(load_table(spark, sf_dir, "embeddings"), dim=64, query_id=0, k=10)
+    return sim.ivf_pq_topk(load_table(spark, sf_dir, "embeddings"), dim=64)
 
 
 @query(
@@ -1483,7 +1479,7 @@ def q_quality_decile_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_canonical_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    pairs = dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5, block_cols=("lang",))
+    pairs = dd.ngram_jaccard_pairs(docs)
     clusters = dd.cluster_min_label(pairs, docs, max_iter=6).select("doc_id", "cluster")
     sized = clusters.join(
         load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"), "doc_id"
@@ -1679,9 +1675,7 @@ WITH RECURSIVE base AS ({_DUPES_SQL}),
     tags=("llm", "dedup", "scale"),
 )
 def q_dedup_minhash_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.minhash_cluster_collapsed(
-        _docs_with_dupes(spark, sf_dir), num_perm=32, n=3, bands=4, max_iter=6
-    )
+    return dd.minhash_cluster_collapsed(_docs_with_dupes(spark, sf_dir))
 
 
 def _bpe_round_sql(k: int) -> str:
@@ -1849,7 +1843,7 @@ def q_bpe_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.bpe import subword_viterbi_segment
 
-    return subword_viterbi_segment(_docs(spark, sf_dir), min_count=20, max_piece_len=4)
+    return subword_viterbi_segment(_docs(spark, sf_dir), min_count=20)
 
 
 @query(
@@ -1900,9 +1894,7 @@ def q_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    out = sim.hybrid_rrf_topk(
-        docs, emb, _query_vec(spark, sf_dir), query_doc_id=0, k_each=20, k=10
-    )
+    out = sim.hybrid_rrf_topk(docs, emb, _query_vec(spark, sf_dir))
     return out.select(
         "id", "rrf_score",
         F.col("dense_rank").cast("long").alias("dense_rank"),
@@ -1948,7 +1940,7 @@ def q_dataset_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.sampling import hash_bucket
 
     clusters = dd.minhash_cluster_collapsed(
-        _docs_with_dupes(spark, sf_dir), num_perm=32, n=3, bands=4, max_iter=6
+        _docs_with_dupes(spark, sf_dir)
     ).select("doc_id", "cluster")
     b = hash_bucket(F.col("cluster"), 100, "clsplit")
     labeled = clusters.withColumn(
@@ -2074,7 +2066,7 @@ def q_text_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_classifier_ranking_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = ts.nb_language_classifier(_docs(spark, sf_dir))
-    return ts.ranking_auc(nb, score_col="score_millinats", label_col="correct")
+    return ts.ranking_auc(nb)
 
 
 @query(
@@ -2160,7 +2152,7 @@ def q_classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     images = mm.synthesize_image_column(_docs(spark, sf_dir))
     hashes = mm.image_ahash(images)
-    return mm.ahash_near_dup_pairs(hashes, max_hamming=2)
+    return mm.ahash_near_dup_pairs(hashes)
 
 
 @query(
@@ -2206,7 +2198,7 @@ def q_dedup_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     base = docs.filter(F.col("doc_id") % 5 != 0)
     delta = docs.filter(F.col("doc_id") % 5 == 0)
-    return dd.lsh_delta_pairs(base, delta, num_perm=16, bands=4, n=3)
+    return dd.lsh_delta_pairs(base, delta)
 
 
 @query(
@@ -2366,8 +2358,8 @@ def q_dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then carries each pair's two sets once, still strictly fewer bytes
     # than the old stream join's 450M narrow rows.
     docs = _docs(spark, sf_dir)
-    wide = dd.minhash_wide(docs, num_perm=16, n=3)
-    cand = dd.lsh_candidate_pairs(wide, bands=4).select("a", "b")
+    wide = dd.minhash_wide(docs, num_perm=16)
+    cand = dd.lsh_candidate_pairs(wide).select("a", "b")
     sh = dd.doc_shingles(docs, n=3)
     ss = (
         sh.groupBy("doc_id")
@@ -2426,7 +2418,7 @@ def q_multimodal_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.decode_png_meta(images)
 
 
-def _logreg_oracle(iterations: int = 3) -> str:
+def _logreg_oracle() -> str:
     """Unrolled hard-sigmoid GD training in DuckDB SQL — replays
     operators/linear.py:logreg_train's integer updates exactly."""
     S, HALF = 1_000_000, 500_000
@@ -2444,7 +2436,7 @@ def _logreg_oracle(iterations: int = 3) -> str:
         "nn AS (SELECT CAST(count(*) * 100 AS BIGINT) AS dn FROM d)",
         "it0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1, CAST(0 AS BIGINT) AS w2)",
     ]
-    for i in range(1, iterations + 1):
+    for i in range(1, LOGREG_ITERATIONS + 1):
         p = f"it{i-1}"
         ctes.append(f"""it{i} AS (
           SELECT w0 + {fldn('g0')} AS w0, w1 + {fldn('g1')} AS w1, w2 + {fldn('g2')} AS w2
@@ -2461,7 +2453,7 @@ def _logreg_oracle(iterations: int = 3) -> str:
             )
           )
         )""")
-    last = f"it{iterations}"
+    last = f"it{LOGREG_ITERATIONS}"
     return f"""
     WITH {','.join(ctes)}
     SELECT w0, w1, w2,
@@ -2478,7 +2470,7 @@ def _logreg_oracle(iterations: int = 3) -> str:
 
 @query(
     "logreg_train_exact",
-    oracle=_logreg_oracle(3),
+    oracle=_logreg_oracle(),
     doc="Distributed model training beyond NB/k-means: full-batch gradient "
     "descent for logistic regression with a HARD-SIGMOID link "
     "(clamp(z/4 + 1/2, 0, 1) — the quantized-network sigmoid), all "
@@ -2504,7 +2496,7 @@ def q_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_returnflag") == "R").cast("long").alias("y"),
     )
     li = li.localCheckpoint(eager=True)  # scanned once per iteration + scoring
-    w = logreg_train(li, ("x1", "x2"), "y", iterations=3, lr_inv=100)
+    w = logreg_train(li, ("x1", "x2"), "y", iterations=LOGREG_ITERATIONS, lr_inv=100)
     return logreg_score(li, w, ("x1", "x2"), "y")
 
 
@@ -2641,7 +2633,7 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text"),
 )
 def q_text_blockmax_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.blockmax_index(_docs(spark, sf_dir), block_size=64)
+    return ts.blockmax_index(_docs(spark, sf_dir))
 
 
 @query(
@@ -2854,7 +2846,7 @@ def q_multimodal_ulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_multimodal_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     videos = mm.synthesize_mjpeg_column(_docs(spark, sf_dir))
-    return mm.mjpeg_frame_stats(videos, every_n=2)
+    return mm.mjpeg_frame_stats(videos)
 
 
 @query(
@@ -2992,7 +2984,7 @@ def q_dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
     )
     base = d.select("doc_id", "text", "lang").unionByName(excerpts)
-    return dd.shingle_containment_pairs(base, n=3, min_permille=900)
+    return dd.shingle_containment_pairs(base, min_permille=900)
 
 
 @query(
@@ -3087,7 +3079,7 @@ def q_unicode_nfc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_similarity_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim.binary_sign_topk(emb, _query_vec(spark, sf_dir), dim=64, k=10, rerank=4)
+    return sim.binary_sign_topk(emb, _query_vec(spark, sf_dir))
 
 
 # nDCG position discounts round(1e6 / log2(i+1)), i = 1..10 — shared integer
@@ -3199,20 +3191,20 @@ def q_retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
-    """Unrolled k-stage MMR oracle. The diversity penalty constant is the
-    exact IEEE repr of Python's ``1.0 - lam`` (0.30000000000000004 for 0.7)
+def _mmr_oracle() -> str:
+    """Unrolled 5-stage MMR oracle. The diversity penalty constant is the
+    exact IEEE repr of Python's ``1.0 - MMR_LAMBDA`` (0.30000000000000004)
     so both engines evaluate the identical double chain before the single
     micro-quantizing round per (candidate, step)."""
-    pen = repr(1.0 - lam)
+    pen = repr(1.0 - MMR_LAMBDA)
     stages = [
         f"""s1 AS (
       SELECT vec_id, v,
-             CAST(round(({lam!r}*rel - {pen}*0.0)*1000000) AS BIGINT) AS score
+             CAST(round(({MMR_LAMBDA!r}*rel - {pen}*0.0)*1000000) AS BIGINT) AS score
       FROM cand ORDER BY score DESC, vec_id ASC LIMIT 1
     )"""
     ]
-    for j in range(2, k + 1):
+    for j in range(2, MMR_K + 1):
         sims = ", ".join(_cos64("c.v", f"s{i}.v") for i in range(1, j))
         maxsim = f"GREATEST({sims})" if j > 2 else sims
         joins = " ".join(f"CROSS JOIN s{i}" for i in range(1, j))
@@ -3220,7 +3212,7 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
         stages.append(
             f"""s{j} AS (
       SELECT c.vec_id, c.v,
-             CAST(round(({lam!r}*c.rel - {pen}*{maxsim})*1000000) AS BIGINT) AS score
+             CAST(round(({MMR_LAMBDA!r}*c.rel - {pen}*{maxsim})*1000000) AS BIGINT) AS score
       FROM cand c {joins}
       WHERE c.vec_id NOT IN ({excl})
       ORDER BY score DESC, c.vec_id ASC LIMIT 1
@@ -3228,7 +3220,7 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
         )
     final = " UNION ALL ".join(
         f"SELECT CAST({j} AS INTEGER) AS rank, vec_id, score AS score_micro FROM s{j}"
-        for j in range(1, k + 1)
+        for j in range(1, MMR_K + 1)
     )
     return f"""
     WITH e AS (SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM embeddings),
@@ -3236,7 +3228,7 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
     cand AS (
       SELECT e.vec_id, e.v, {_cos64('e.v', 'q.qv')} AS rel
       FROM e CROSS JOIN q WHERE e.vec_id <> 0
-      ORDER BY rel DESC, vec_id ASC LIMIT {pool}
+      ORDER BY rel DESC, vec_id ASC LIMIT 20
     ),
     {', '.join(stages)}
     {final}
@@ -3245,7 +3237,7 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
 
 @query(
     "similarity_mmr_rerank",
-    oracle=_mmr_oracle(k=5, pool=20, lam=0.7),
+    oracle=_mmr_oracle(),
     doc="Maximal Marginal Relevance diversified re-ranking "
     "(operators/similarity.py:mmr_rerank, Carbonell & Goldstein 1998): "
     "greedy top-5 from the exact top-20 pool maximizing lam*rel - "
@@ -3262,7 +3254,7 @@ def _mmr_oracle(k: int = 5, pool: int = 20, lam: float = 0.7) -> str:
 )
 def q_similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return sim.mmr_rerank(emb, _query_vec(spark, sf_dir), k=5, pool=20, lam=0.7)
+    return sim.mmr_rerank(emb, _query_vec(spark, sf_dir), k=MMR_K, pool=20, lam=MMR_LAMBDA)
 
 
 @query(
@@ -3304,7 +3296,7 @@ def q_similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text"),
 )
 def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.pmi_collocations(_docs(spark, sf_dir), min_count=3, k=100)
+    return ts.pmi_collocations(_docs(spark, sf_dir), k=100)
 
 
 @query(
@@ -3425,7 +3417,7 @@ def q_classifier_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "dedup", "text"),
 )
 def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dd.shingle_novelty(_docs(spark, sf_dir), n=6)
+    return dd.shingle_novelty(_docs(spark, sf_dir))
 
 
 @query(
@@ -3684,7 +3676,7 @@ def q_similarity_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_eval_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     pairs = _doc_pairs(docs)
-    return ts.bleu_ngram_precision(pairs, "pair_id", "cand_text", "ref_text")
+    return ts.bleu_ngram_precision(pairs)
 
 
 @query(
@@ -3726,7 +3718,7 @@ def q_eval_bleu_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "embedding", "analytics"),
 )
 def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.dimension_stats(load_table(spark, sf_dir, "embeddings"), "embedding")
+    return sim.dimension_stats(load_table(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -3786,7 +3778,7 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "eval"),
 )
 def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ts.rake_keywords(_docs(spark, sf_dir), "text", "doc_id", k=20)
+    return ts.rake_keywords(_docs(spark, sf_dir), k=20)
 
 
 # RBO tail weights: W[m] = sum_{d=m..10} (1-p) p^(d-1) / d at p=0.9,
@@ -4042,7 +4034,7 @@ def q_classifier_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_eval_chrf_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     pairs = _doc_pairs(docs)
-    return ts.chrf_score(pairs, "pair_id", "cand_text", "ref_text", max_n=3, beta=2)
+    return ts.chrf_score(pairs)
 
 
 @query(
@@ -4093,9 +4085,7 @@ def q_eval_chrf_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "similarity", "eval"),
 )
 def q_similarity_int8_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sim.int8_distortion(
-        load_table(spark, sf_dir, "embeddings"), "embedding", "label"
-    )
+    return sim.int8_distortion(load_table(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -4158,7 +4148,7 @@ def q_similarity_int8_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_eval_token_f1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     pairs = _doc_pairs(docs)
-    return ts.token_f1_pairs(pairs, "pair_id", "cand_text", "ref_text")
+    return ts.token_f1_pairs(pairs)
 
 
 @query(
@@ -4209,9 +4199,7 @@ def q_eval_token_f1_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_cluster_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_with_dupes(spark, sf_dir)
-    assign = dd.minhash_cluster_collapsed(
-        docs, num_perm=32, n=3, bands=4, max_iter=6
-    ).select("doc_id", "cluster")
+    assign = dd.minhash_cluster_collapsed(docs).select("doc_id", "cluster")
     base_id = F.when(
         F.col("doc_id") >= 1000000, F.col("doc_id") - 1000000
     ).otherwise(F.col("doc_id"))
@@ -4523,7 +4511,7 @@ def q_embedding_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.clustering import top_pc_power
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return top_pc_power(emb, "embedding", dims=64, n_iter=8)
+    return top_pc_power(emb, dims=64, n_iter=8)
 
 
 @query(
@@ -4563,7 +4551,7 @@ def q_embedding_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.clustering import effective_rank
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return effective_rank(emb, "embedding", dims=64)
+    return effective_rank(emb, dims=64)
 
 
 @query(
@@ -4679,7 +4667,7 @@ def q_similarity_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     exact = sim.cosine_topk(emb, qv, k=10).select("vec_id")
-    cents, assigned = _ivf_index(spark, sf_dir, k=16, sample_mod=10)
+    cents, assigned = _ivf_index(spark, sf_dir)
     ivf = sim.ivf_ann_topk(
         emb, qv, k=10, n_centroids=16, n_probe=4, centroids=cents, assigned=assigned
     ).select("vec_id")

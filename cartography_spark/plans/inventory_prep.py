@@ -148,7 +148,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text"),
 )
 def q_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tp.chunk_documents(_docs(spark, sf_dir), chunk_tokens=20, stride=15)
+    return tp.chunk_documents(_docs(spark, sf_dir))
 
 
 @query(
@@ -202,7 +202,7 @@ def q_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "sampling"),
 )
 def q_batch_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tp.length_bucket_batches(_docs(spark, sf_dir), min_bucket=16)
+    return tp.length_bucket_batches(_docs(spark, sf_dir))
 
 
 @query(
@@ -345,7 +345,7 @@ def q_embedding_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") < 20)
-    return tp.contamination_overlap(docs, bench, n=5, threshold=0.2)
+    return tp.contamination_overlap(docs, bench)
 
 
 @query(
@@ -374,7 +374,7 @@ def q_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.sketches import kmv_distinct_estimate
 
     li = load_table(spark, sf_dir, "lineitem")
-    est = kmv_distinct_estimate(li, "l_partkey", k=64)
+    est = kmv_distinct_estimate(li, "l_partkey")
     exact = li.agg(F.countDistinct("l_partkey").cast("bigint").alias("n_exact"))
     return est.crossJoin(F.broadcast(exact))
 
@@ -734,7 +734,7 @@ def q_sketch_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     b = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    return kmv_intersection_estimate(a, b, "o_custkey", k=64)
+    return kmv_intersection_estimate(a, b, "o_custkey")
 
 
 @query(
@@ -784,7 +784,7 @@ def q_sketch_kmv_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     b = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    return kmv_difference_estimate(a, b, "o_custkey", k=64)
+    return kmv_difference_estimate(a, b, "o_custkey")
 
 
 @query(
@@ -1480,4 +1480,4 @@ def q_text_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_shard_rendezvous_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cartography_spark.operators.sampling import rendezvous_shards
 
-    return rendezvous_shards(_docs(spark, sf_dir), "doc_id", n_shards=8, salt="hrw")
+    return rendezvous_shards(_docs(spark, sf_dir))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.dedup import portable_hash32
 from cartography_spark.operators.incremental import cents, merge_partials, partial_aggregate
 from cartography_spark.plans.registry import query
 from cartography_spark.sources.parquet import load_table as T
@@ -101,7 +102,7 @@ def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linestatus"),
         F.col("l_shipdate").cast("date").cast("string"),
     )
-    fp = F.conv(F.substring(F.md5(payload), 1, 8), 16, 10).cast("bigint")
+    fp = portable_hash32(payload)
     return (
         li.select(((F.col("l_orderkey") * 10 + F.col("l_linenumber")) % 64).alias("block_id"), fp.alias("fp"))
         .groupBy("block_id")
@@ -511,7 +512,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("prev_type", "event_type")
         .agg(F.count(F.lit(1)).alias("n_transitions"))
     )
-    return markov_stationary(pairs, "prev_type", "event_type", "n_transitions", n_iter=10)
+    return markov_stationary(pairs)
 
 
 @query(
@@ -591,7 +592,7 @@ def q_events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("prev_type", "event_type")
         .agg(F.count(F.lit(1)).alias("n_transitions"))
     )
-    return markov_entropy_rate(pairs, "prev_type", "event_type", "n_transitions", n_iter=10)
+    return markov_entropy_rate(pairs)
 
 
 @query(

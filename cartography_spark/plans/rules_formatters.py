@@ -3,8 +3,9 @@
 per-rule sections with fact compliance lines, then an execution summary
 with totals and a compliance percentage.
 
-Findings DataFrames are materialized with ``limit(max_findings)`` so the
-report never collects an unbounded result to the driver.
+The JSON report materializes findings with ``limit(max_findings)`` so it
+never collects an unbounded result to the driver; the text report lists
+no findings.
 """
 
 from __future__ import annotations
@@ -14,8 +15,6 @@ from dataclasses import asdict, is_dataclass
 from typing import Any
 
 from cartography_spark.plans.rules import RuleResult
-
-GREEN, RED, CYAN, GREY, RESET = "\033[32m", "\033[31m", "\033[36m", "\033[90m", "\033[0m"
 
 
 def to_serializable(obj: Any) -> Any:
@@ -70,9 +69,8 @@ def format_json(results: list[RuleResult], max_findings: int = 100) -> str:
     return json.dumps([_result_payload(r, max_findings) for r in results], indent=2)
 
 
-def format_text(results: list[RuleResult], color: bool = False, max_findings: int = 0) -> str:
+def format_text(results: list[RuleResult]) -> str:
     """Human-readable report (reference formatters.py:230-260 layout)."""
-    g, r_, c, gr, z = (GREEN, RED, CYAN, GREY, RESET) if color else ("",) * 5
     lines: list[str] = []
     for res in results:
         lines.append("=" * 60)
@@ -85,13 +83,10 @@ def format_text(results: list[RuleResult], color: bool = False, max_findings: in
         for fr in res.facts:
             pct = (fr.passing_assets / fr.total_assets * 100) if fr.total_assets else 100.0
             lines.append(
-                f"  {fr.fact.fact_id}: {r_}{fr.failing_assets} failing{z} / "
-                f"{g}{fr.passing_assets} passing{z} / {fr.total_assets} total "
+                f"  {fr.fact.fact_id}: {fr.failing_assets} failing / "
+                f"{fr.passing_assets} passing / {fr.total_assets} total "
                 f"({pct:.1f}% compliant)"
             )
-            if max_findings:
-                for row in fr.findings.limit(max_findings).collect():
-                    lines.append(f"    - {to_serializable(row)}")
     total_facts = sum(r.total_facts for r in results)
     total_assets = sum(r.total_assets for r in results)
     total_passing = sum(r.total_passing for r in results)
@@ -106,11 +101,11 @@ def format_text(results: list[RuleResult], color: bool = False, max_findings: in
     lines.append(f"Total facts: {total_facts}")
     if total_assets > 0:
         lines.append(f"Total assets: {total_assets}")
-        lines.append(f"{g}Passing: {total_passing}{z}")
-        lines.append(f"{r_}Failing: {total_failing}{z}")
+        lines.append(f"Passing: {total_passing}")
+        lines.append(f"Failing: {total_failing}")
         lines.append(f"Compliance: {total_passing / total_assets * 100:.1f}%")
     if total_failing > 0:
-        lines.append(f"{c}Rule execution completed with {total_failing} total findings{z}")
+        lines.append(f"Rule execution completed with {total_failing} total findings")
     else:
-        lines.append(f"{gr}Rule execution completed with no findings{z}")
+        lines.append("Rule execution completed with no findings")
     return "\n".join(lines)

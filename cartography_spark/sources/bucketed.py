@@ -22,15 +22,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame, table: str, bucket_col: str, n_buckets: int, sort: bool = True
-) -> None:
-    """Persist ``df`` as a parquet catalog table bucketed (and
-    optionally sorted) by ``bucket_col``."""
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
+def write_bucketed(df: DataFrame, table: str, bucket_col: str, n_buckets: int) -> None:
+    """Persist ``df`` as a parquet catalog table bucketed and sorted by
+    ``bucket_col``."""
+    (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
+    )
 
 
 def bucketed_join(

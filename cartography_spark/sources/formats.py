@@ -15,16 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
     """Read CSV with an explicit DDL schema (inference = an extra full
     scan, never at scale). Malformed rows land in PERMISSIVE nulls."""
-    reader = spark.read.option("header", header).option("sep", delimiter)
+    reader = spark.read.option("header", True)
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -32,8 +26,8 @@ def read_csv(
     return reader.csv(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", header).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -42,8 +36,8 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite") -> None:
-    w = df.write.mode(mode)
+def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)

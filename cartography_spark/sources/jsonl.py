@@ -3,9 +3,9 @@ training-data pipelines (the reference's analogous surface is its
 list[dict] ingestion, client/core/tx.py:637-698; JSONL is that, on disk).
 
 Reading with an explicit schema keeps the scan single-pass (no inference
-job) and missing keys become typed nulls; writing partitions by any column
-(e.g. the hash-based ``split`` from operators/sampling) so downstream
-loaders read one split without listing the others.
+job) and missing keys become typed nulls; writing partitions by the
+hash-based ``split`` from operators/sampling so downstream loaders read
+one split without listing the others.
 """
 
 from __future__ import annotations
@@ -22,19 +22,8 @@ def read_jsonl(spark: SparkSession, path: str, schema: str | None = None) -> Dat
     return reader.json(path)
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    compression: str | None = "gzip",
-    mode: str = "overwrite",
-) -> None:
-    """Write newline-delimited JSON, optionally partitioned (split/lang)
-    and compressed; one file per task — control output file count with
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write uncompressed newline-delimited JSON partitioned by ``split``;
+    one file per task — control output file count with
     ``df.repartition(n)`` upstream."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+    df.write.mode("overwrite").partitionBy("split").json(path)

@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+WATERMARK = "2 hours"
+SKETCH_WINDOW = "1 hour"
+
 # (applicationId, path) -> (probed ts type, resolved stream dir); see
 # read_events_stream — setup metadata only, never row data
 _STREAM_SETUP_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
@@ -126,23 +129,23 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """1-hour tumbling windows with late-data handling via watermark —
     identical logic to the batch query events_tumbling_window."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
     )
 
 
-def sessionize(events: DataFrame, gap: str = "10 minutes", watermark: str = "2 hours") -> DataFrame:
+def sessionize(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
     """Session windows per user: gap-based session assignment in the state
     store (built-in session_window — the declarative form of a custom
     applyInPandasWithState sessionizer)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
@@ -155,16 +158,14 @@ def sessionize(events: DataFrame, gap: str = "10 minutes", watermark: str = "2 h
     )
 
 
-def stream_dedupe(
-    events: DataFrame, key_cols: list[str] | None = None, watermark: str = "2 hours"
-) -> DataFrame:
+def stream_dedupe(events: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
     """Streaming exact dedup on event ids with watermark-BOUNDED state:
     ``dropDuplicatesWithinWatermark`` keeps a key in the state store only
     until the watermark passes it, so state is proportional to the
     watermark window, not the stream's lifetime — the only dedup shape that
     survives an unbounded stream. (Batch dropDuplicates semantics, applied
     to at-least-once sources.)"""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         key_cols or ["event_id"]
     )
 
@@ -236,7 +237,7 @@ def run_available_now(stream_df: DataFrame, query_name: str, output_mode: str = 
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def minute_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def minute_rollup_stream(events: DataFrame) -> DataFrame:
     """Streaming front-end of the continuous-aggregate hierarchy
     (operators/rollup.py): emits the same per-minute mergeable partials
     (count/sum/min/max) the batch minute pass produces, with watermarked
@@ -245,7 +246,7 @@ def minute_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     with no lambda-architecture divergence, because both paths share the
     partial-state schema."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
@@ -259,42 +260,35 @@ def minute_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def stream_stream_attribution(
-    clicks: DataFrame, views: DataFrame, horizon: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def stream_stream_attribution(clicks: DataFrame, views: DataFrame) -> DataFrame:
     """Stream-stream interval join: every click joined to the same user's
-    views from the preceding ``horizon``. Both sides carry watermarks and
+    views from the preceding hour. Both sides carry watermarks and
     the join condition bounds event time on BOTH streams, so each side's
     join state is evictable: a buffered view can be dropped once the click
-    watermark passes view_ts + horizon (state ∝ watermark x rate, not
+    watermark passes view_ts + 1 hour (state ∝ watermark x rate, not
     stream lifetime). This is the streaming form of the batch as-of/range
     join family (operators/asof.py, operators/rangejoin.py)."""
     c = clicks.select(
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
+    ).withWatermark("click_ts", WATERMARK)
     v = views.select(
         F.col("event_id").alias("view_id"),
         F.col("user_id").alias("v_user"),
         F.col("ts").alias("view_ts"),
-    ).withWatermark("view_ts", watermark)
+    ).withWatermark("view_ts", WATERMARK)
     return c.join(
         v,
         (F.col("c_user") == F.col("v_user"))
         & (F.col("view_ts") <= F.col("click_ts"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr(f"interval {horizon}")),
+        & (F.col("view_ts") >= F.col("click_ts") - F.expr("interval 1 hour")),
     ).select("click_id", F.col("c_user").alias("user_id"), "click_ts", "view_id", "view_ts")
 
 
-def hll_register_stream(
-    events: DataFrame,
-    col: str = "user_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def hll_register_stream(events: DataFrame) -> DataFrame:
     """Maintain HyperLogLog registers incrementally on a stream: per
-    event-time window, the 256 (bucket, max-rank) registers of ``col``.
+    event-time window, the 256 (bucket, max-rank) registers of ``user_id``.
 
     max() is associative/commutative/idempotent, so Spark keeps ONE row
     of state per (window, bucket) — bounded state, evicted by the
@@ -313,62 +307,51 @@ def hll_register_stream(
     """
     from cartography_spark.operators.sketches import hll_bucket_rho
 
-    b, rho = hll_bucket_rho(col)
+    b, rho = hll_bucket_rho("user_id")
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .select(F.col("ts"), b.alias("b"), rho.alias("rho"))
-        .groupBy(F.window("ts", window).alias("win"), F.col("b"))
+        .groupBy(F.window("ts", SKETCH_WINDOW).alias("win"), F.col("b"))
         .agg(F.max("rho").alias("mx"))
         .select(F.col("win.start").alias("window_start"), "b", "mx")
     )
 
 
-def countmin_cell_stream(
-    events: DataFrame,
-    col: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    width: int = 16,
-    depth: int = 4,
-) -> DataFrame:
+def countmin_cell_stream(events: DataFrame) -> DataFrame:
     """Maintain Count-Min counters incrementally on a stream: per
-    event-time window, the depth x width counter cells of ``col``.
+    event-time window, the 4 x 16 counter cells of ``event_type``.
 
     count() partials merge by SUM — the additive half of the mergeable-
     sketch contract (hll_register_stream above is the max/idempotent
     half) — so per-window cells emitted by the stream sum into exactly
     the cells a batch pass would build. State is bounded at
-    depth*width rows per open window and watermark-evicted.
+    4*16 rows per open window and watermark-evicted.
 
     OUTPUT-MODE CONTRACT: run the writeStream in ``complete`` (or
     ``update``) mode — see hll_register_stream above; ``append`` would
     withhold the trailing watermark-width of windows and a mid-stream
     merged sketch would silently undercount.
     """
-    from cartography_spark.operators.sketches import _h32
+    from cartography_spark.operators.dedup import portable_hash32
 
-    rows = F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("r")
-    cells = events.withWatermark("ts", watermark).select(
-        F.col("ts"), F.col(col).alias("__x"), rows
+    rows = F.explode(F.array(*[F.lit(r) for r in range(4)])).alias("r")
+    cells = events.withWatermark("ts", WATERMARK).select(
+        F.col("ts"), F.col("event_type").alias("__x"), rows
     ).select(
         "ts",
         "r",
-        (_h32(F.concat(F.col("r").cast("string"), F.lit(":"), F.col("__x"))) % width).alias("b"),
+        (
+            portable_hash32(F.concat(F.col("r").cast("string"), F.lit(":"), F.col("__x"))) % 16
+        ).alias("b"),
     )
     return (
-        cells.groupBy(F.window("ts", window).alias("win"), "r", "b")
+        cells.groupBy(F.window("ts", SKETCH_WINDOW).alias("win"), "r", "b")
         .agg(F.count("*").cast("bigint").alias("n"))
         .select(F.col("win.start").alias("window_start"), "r", "b", "n")
     )
 
 
-def cdc_latest_state(
-    changelog: DataFrame,
-    key_col: str,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    payload_cols: tuple[str, ...] = ("name",),
-) -> DataFrame:
+def cdc_latest_state(changelog: DataFrame, key_col: str) -> DataFrame:
     """Streaming CDC apply: reduce an I/U/D changelog STREAM to the
     latest state per key with one mergeable max_by aggregate — the
     streaming twin of operators/incremental.py:cdc_apply. Each key's
@@ -385,21 +368,10 @@ def cdc_latest_state(
     the streaming tail)."""
     from cartography_spark.operators.incremental import cdc_apply
 
-    return cdc_apply(
-        changelog.select(key_col, seq_col, op_col, *payload_cols),
-        [key_col],
-        seq_col,
-        op_col,
-    )
+    return cdc_apply(changelog.select(key_col, "seq", "op", "name"), [key_col])
 
 
-def psi_bin_stream(
-    events: DataFrame,
-    value_col: str = "value",
-    bin_width_cents: int = 2000,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def psi_bin_stream(events: DataFrame) -> DataFrame:
     """Maintain the binned value histogram a drift monitor needs, per
     event-time window: (window_start, bin, n). count() partials merge by
     SUM — the additive mergeable-sketch contract — so Spark keeps ONE
@@ -415,28 +387,22 @@ def psi_bin_stream(
     (or ``update``) mode — append would withhold the trailing
     watermark-width of windows from the read-side fold.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = F.round(F.col("value") * 100).cast("long")
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(
-            F.window("ts", window).alias("w"),
-            F.floor(cents / F.lit(float(bin_width_cents))).cast("int").alias("bin"),
+            F.window("ts", SKETCH_WINDOW).alias("w"),
+            F.floor(cents / F.lit(2000.0)).cast("int").alias("bin"),
         )
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("w.start").alias("window_start"), "bin", "n")
     )
 
 
-def value_count_stream(
-    events: DataFrame,
-    value_col: str = "value",
-    quant_cents: int = 100,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def value_count_stream(events: DataFrame) -> DataFrame:
     """Maintain per-window QUANTIZED-VALUE counts — the mergeable state a
     streaming Kolmogorov-Smirnov gate needs: (window_start, v, n), where
-    v is the value quantized to ``quant_cents`` so state stays bounded by
+    v is the value quantized to 100 cents so state stays bounded by
     the value DOMAIN (not the event count) per watermark-live window. KS
     of the quantized variable is exact KS of that variable — the same
     upstream-quantization contract as the batch ks_two_sample.
@@ -452,12 +418,12 @@ def value_count_stream(
     (or ``update``) mode — append would withhold the trailing
     watermark-width of windows from the read-side fold.
     """
-    cents = F.round(F.col(value_col) * 100).cast("long")
+    cents = F.round(F.col("value") * 100).cast("long")
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(
-            F.window("ts", window).alias("w"),
-            F.floor(cents / F.lit(float(quant_cents))).cast("long").alias("v"),
+            F.window("ts", SKETCH_WINDOW).alias("w"),
+            F.floor(cents / F.lit(100.0)).cast("long").alias("v"),
         )
         .agg(F.count("*").cast("long").alias("n"))
         .select(F.col("w.start").alias("window_start"), "v", "n")

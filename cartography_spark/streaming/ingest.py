@@ -15,8 +15,6 @@ catalog tables, not the streaming state store.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 
 from cartography_spark.catalog import GraphCatalog
@@ -24,19 +22,14 @@ from cartography_spark.operators.upsert import load
 from cartography_spark.schema import NodeSchema
 
 
-def run_stream_upsert(
-    catalog: GraphCatalog,
-    schema: NodeSchema,
-    stream_df: DataFrame,
-    update_tag_fn: Callable[[int], int] | None = None,
-):
+def run_stream_upsert(catalog: GraphCatalog, schema: NodeSchema, stream_df: DataFrame):
     """Run the stream to completion (Trigger.AvailableNow) upserting each
-    micro-batch; after it finishes the catalog holds the merged state and
-    the per-batch lineage is checkpointed (bounded plans across batches)."""
-    tag_of = update_tag_fn or (lambda batch_id: int(batch_id) + 1)
+    micro-batch with update tag batch id + 1; after it finishes the catalog
+    holds the merged state and the per-batch lineage is checkpointed
+    (bounded plans across batches)."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        load(catalog, schema, batch_df, tag_of(batch_id))
+        load(catalog, schema, batch_df, int(batch_id) + 1)
         catalog.checkpoint()
 
     q = stream_df.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
@@ -44,15 +37,7 @@ def run_stream_upsert(
     return catalog
 
 
-def run_stream_lsh_dedup(
-    base_docs: DataFrame,
-    stream_docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def run_stream_lsh_dedup(base_docs: DataFrame, stream_docs: DataFrame):
     """Continuous near-dup detection: each micro-batch of arriving documents
     probes the accumulated corpus with the incremental LSH maintenance
     operator (operators/dedup.lsh_delta_pairs) and is then folded into the
@@ -70,18 +55,15 @@ def run_stream_lsh_dedup(
     from cartography_spark.operators.dedup import lsh_delta_pairs
 
     state = {
-        "base": base_docs.select(id_col, text_col).localCheckpoint(eager=True),
+        "base": base_docs.select("doc_id", "text").localCheckpoint(eager=True),
         "pairs": None,
     }
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.select(id_col, text_col)
+        delta = batch_df.select("doc_id", "text")
         if delta.isEmpty():
             return
-        new_pairs = lsh_delta_pairs(
-            state["base"], delta, num_perm=num_perm, bands=bands, n=n,
-            text_col=text_col, id_col=id_col,
-        ).localCheckpoint(eager=True)
+        new_pairs = lsh_delta_pairs(state["base"], delta).localCheckpoint(eager=True)
         state["pairs"] = (
             new_pairs if state["pairs"] is None
             else state["pairs"].unionByName(new_pairs).localCheckpoint(eager=True)

@@ -79,9 +79,7 @@ def test_asof_forward_semantics(spark):
     )
     out = {
         r.lid: r
-        for r in asof_join_forward(
-            left, right, by="k", ts="ts", value_cols=("rv",), tie_col="event_id"
-        ).collect()
+        for r in asof_join_forward(left, right, by="k", ts="ts", value_cols=("rv",)).collect()
     }
     assert out[1].asof_rv == 77.0 and out[1].asof_ts == t(10)  # equal ts visible, tie -> min id
     assert out[2].asof_rv == 50.0 and out[2].asof_ts == t(12)
@@ -110,7 +108,7 @@ def test_asof_nearest_picks_closer_side(spark):
         r.lid: (r.asof_ts.second, r.asof_v)
         for r in asof_join_nearest(
             left, right, by="u", ts="ts", value_cols=("v",),
-            left_id="lid", tie_col="event_id",
+            left_id="lid",
         ).collect()
     }
     assert got == {

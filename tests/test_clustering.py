@@ -41,8 +41,8 @@ def test_inertia_decreases(spark):
 
 
 def test_kmeans_deterministic_and_complete(spark):
-    out1 = kmeans(_emb(spark), k=8, iters=2).orderBy("vec_id").collect()
-    out2 = kmeans(_emb(spark), k=8, iters=2).orderBy("vec_id").collect()
+    out1 = kmeans(_emb(spark), k=8).orderBy("vec_id").collect()
+    out2 = kmeans(_emb(spark), k=8).orderBy("vec_id").collect()
     assert [(r.vec_id, r.cluster) for r in out1] == [(r.vec_id, r.cluster) for r in out2]
     n = _emb(spark).count()
     assert len(out1) == n
@@ -56,7 +56,7 @@ def test_kmeans_beats_random_label_purity(spark):
     label purity of k-means clusters must clearly beat the random baseline
     (1/n_labels)."""
     emb = _emb(spark)
-    out = kmeans(emb, k=16, iters=2).join(emb.select("vec_id", "label"), "vec_id")
+    out = kmeans(emb, k=16).join(emb.select("vec_id", "label"), "vec_id")
     counts = out.groupBy("cluster", "label").count()
     top = counts.groupBy("cluster").agg(F.max("count").alias("top"))
     purity = (

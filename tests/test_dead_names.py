@@ -1,14 +1,15 @@
 """Every module-level name in ``cartography_spark/`` has a caller.
 
-A function, class or assignment at module level whose name appears only at
-its own definition is dead code. ``@query``-registered builders are reached
+A function, class or assignment at module level that no code references is
+dead code. A reference is an ``ast`` node, so a name mentioned only in a
+docstring or comment stays dead: a loaded ``Name``, an ``Attribute`` of that
+name, or an imported alias. ``@query``-registered builders are reached
 through the registry, and dunders through the runtime, so both are skipped.
 """
 
 from __future__ import annotations
 
 import ast
-import re
 from collections import Counter
 from pathlib import Path
 
@@ -46,17 +47,24 @@ def _defined_names(source: Path) -> list[str]:
     return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
 
 
+def _references(source: Path) -> list[str]:
+    refs = []
+    for node in ast.walk(ast.parse(source.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            refs.append(node.id)
+        elif isinstance(node, ast.Attribute):
+            refs.append(node.attr)
+        elif isinstance(node, ast.alias):
+            refs.append(node.name.rsplit(".", 1)[-1])
+    return refs
+
+
 def test_every_module_level_name_is_used():
-    words = Counter(
-        word
-        for tree in TREES
-        for source in _sources(tree)
-        for word in re.findall(r"\w+", source.read_text(encoding="utf-8"))
-    )
+    refs = Counter(name for tree in TREES for source in _sources(tree) for name in _references(source))
     dead = sorted(
         f"{source.relative_to(ROOT)}:{name}"
         for source in sorted(PACKAGE.rglob("*.py"))
         for name in _defined_names(source)
-        if words[name] < 2
+        if not refs[name]
     )
     assert not dead, f"module-level names nothing references: {dead}"

@@ -71,7 +71,7 @@ def test_jsonl_roundtrip_with_split_partitions(spark, tmp_path):
         [(i, f"text {i}") for i in range(200)], "doc_id long, text string"
     )
     out = str(tmp_path / "corpus")
-    write_jsonl(assign_splits(docs), out, partition_by=["split"], compression=None)
+    write_jsonl(assign_splits(docs), out)
     back = read_jsonl(spark, out, schema="doc_id long, text string, split string")
     assert back.count() == 200
     train = read_jsonl(spark, f"{out}/split=train", schema="doc_id long, text string")

@@ -191,6 +191,28 @@ def test_matchlink_and_cleanup(spark, sf_dir):
     assert cat.edge("Customer", "ORDERED", "Order").count() == 20
 
 
+def test_matchlink_honours_matcher_flags(spark):
+    """match_link resolves each side through the same matcher compiler as
+    upsert_rel, so ignore_case and one_to_many keep their join semantics."""
+    cat = GraphCatalog(spark)
+    host = NodeSchema(label="Host", properties={"id": PropertyRef("hid"), "hostname": PropertyRef("hn")})
+    port = NodeSchema(label="Port", properties={"id": PropertyRef("pid"), "number": PropertyRef("num")})
+    load(cat, host, spark.createDataFrame([("h1", "Web-01")], "hid string, hn string"), T1)
+    load(cat, port, spark.createDataFrame([("p1", 80), ("p2", 443)], "pid string, num bigint"), T1)
+    rows = spark.createDataFrame([("web-01", [443])], "host string, ports array<bigint>")
+    match_link(
+        cat,
+        rows,
+        rel_label="EXPOSES",
+        src_label="Host",
+        src_matcher=TargetNodeMatcher({"hostname": PropertyRef("host", ignore_case=True)}),
+        dst_label="Port",
+        dst_matcher=TargetNodeMatcher({"number": PropertyRef("ports", one_to_many=True)}),
+        update_tag=T1,
+    )
+    assert cat.check_rels("Host", "id", "Port", "id", "EXPOSES") == {("h1", "p2")}
+
+
 def test_cartesian_link(spark, sf_dir):
     cat = build_catalog(spark, sf_dir, T1)
     cartesian_link(cat, "SEES", "Region", "Nation", T1)

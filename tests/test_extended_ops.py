@@ -268,7 +268,7 @@ def test_salted_join_matches_plain(spark):
         F.col("s_suppkey").alias("l_suppkey"), "s_name"
     )
     plain = {tuple(r) for r in li.join(sup, "l_suppkey").collect()}
-    salted = {tuple(r) for r in salted_join(li, sup, ["l_suppkey"], salt_buckets=4).collect()}
+    salted = {tuple(r) for r in salted_join(li, sup, ["l_suppkey"]).collect()}
     assert salted == plain
 
 

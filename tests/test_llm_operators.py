@@ -132,7 +132,7 @@ def test_int8_quantize_and_topk_hand_computed(spark):
     )
     codes = {r.vec_id: list(r.qvec) for r in int8_quantize(emb).collect()}
     assert codes == {0: [0, 254], 1: [254, 0], 2: [127, 127]}
-    top = [(r.vec_id, r.qdot) for r in int8_topk(emb, query_id=0, k=2).collect()]
+    top = [(r.vec_id, r.qdot) for r in int8_topk(emb, k=2).collect()]
     assert top == [(2, 254 * 127), (1, 0)]
 
 
@@ -152,9 +152,7 @@ def test_pq_adc_hand_computed(spark):
     )
     got = [
         (r.vec_id, r.adist)
-        for r in pq_adc_topk(
-            emb, dim=4, query_id=0, k=3, n_sub=2, codebook_ids=(1, 2)
-        ).collect()
+        for r in pq_adc_topk(emb, dim=4, k=3, n_sub=2, codebook_ids=(1, 2)).collect()
     ]
     d = 254 * 254 * 2  # squared distance between opposite subspace corners
     assert got == [(2, 0), (1, d * 2), (3, d * 2)]
@@ -191,8 +189,8 @@ def test_ivf_pq_consistent_with_pq_adc(spark, sf_dir):
     (id, adist) must appear identically in the unpruned ADC ranking."""
     emb = _emb(spark, sf_dir)
     full = {r.vec_id: r.adist
-            for r in sim.pq_adc_topk(emb, dim=64, query_id=0, k=10_000).collect()}
-    pruned = sim.ivf_pq_topk(emb, dim=64, query_id=0, k=10).collect()
+            for r in sim.pq_adc_topk(emb, dim=64, k=10_000).collect()}
+    pruned = sim.ivf_pq_topk(emb, dim=64).collect()
     assert pruned and all(full[r.vec_id] == r.adist for r in pruned)
 
 
@@ -229,7 +227,7 @@ def test_ann_recall_ladder(spark, sf_dir):
     # n_probe must not lose recall vs the first-k-vectors seed quantizer
     from cartography_spark.operators.clustering import trained_centroid_frame
 
-    cents = trained_centroid_frame(emb, k=16)
+    cents = trained_centroid_frame(emb)
     r_ivf_trained = recall(sim.ivf_ann_topk(emb, q, k=10, centroids=cents))
     assert r_ivf_trained >= r_ivf
 
@@ -244,7 +242,7 @@ def test_hybrid_rrf_fuses_both_lanes(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     qv = [float(x) for x in emb.filter("vec_id = 0").head()["embedding"]]
-    rows = hybrid_rrf_topk(docs, emb, qv, query_doc_id=0, k_each=20, k=10).collect()
+    rows = hybrid_rrf_topk(docs, emb, qv).collect()
     assert len(rows) == 10
     for r in rows:
         expect = (1.0 / (60 + r["dense_rank"]) if r["dense_rank"] else 0.0) + (
@@ -363,7 +361,7 @@ def test_lsh_delta_equals_full_minus_base(spark):
     got = {(r.a, r.b) for r in lsh_delta_pairs(base, delta).collect()}
     full = {
         (r.a, r.b)
-        for r in lsh_candidate_pairs(minhash_wide(docs), bands=4).collect()
+        for r in lsh_candidate_pairs(minhash_wide(docs)).collect()
     }
     want = {(a, b) for a, b in full if a % 5 == 0 or b % 5 == 0}
     assert got == want
@@ -490,7 +488,7 @@ def test_blockmax_index_upper_bounds(spark):
         [(1, "x x x y"), (2, "x y"), (65, "x"), (70, "y y")],
         "doc_id long, text string",
     )
-    rows = blockmax_index(docs, block_size=64).collect()
+    rows = blockmax_index(docs).collect()
     n = 4
     tf = {("x", 1): 3, ("x", 2): 1, ("x", 65): 1, ("y", 1): 1, ("y", 2): 1, ("y", 70): 2}
     df = {"x": 3, "y": 3}
@@ -525,7 +523,7 @@ def test_pmi_collocations_ranking_and_exactness(spark, sf_dir):
     from cartography_spark.operators.textstats import pmi_collocations
     from cartography_spark.sources.parquet import load_table
 
-    out = pmi_collocations(load_table(spark, sf_dir, "documents"), min_count=3, k=25).collect()
+    out = pmi_collocations(load_table(spark, sf_dir, "documents"), k=25).collect()
     assert 0 < len(out) <= 25
     keys = [(-(r.pmi_num / r.pmi_den), r.prev, r.tok) for r in out]
     assert keys == sorted(keys)
@@ -555,10 +553,10 @@ def test_shingle_novelty_bounds_and_duplicate_kills_novelty(spark, sf_dir):
     from cartography_spark.sources.parquet import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(40)
-    base = shingle_novelty(docs, n=6)
+    base = shingle_novelty(docs)
     assert base.filter("novelty_ppm < 0 OR novelty_ppm > 1000000").count() == 0
     dup = docs.limit(1).withColumn("doc_id", F.col("doc_id") + 999999)
-    out = shingle_novelty(docs.unionByName(dup), n=6)
+    out = shingle_novelty(docs.unionByName(dup))
     tgt = docs.limit(1).collect()[0].doc_id
     got = {r.doc_id: r.novelty_ppm for r in out.filter(
         F.col("doc_id").isin(int(tgt), int(tgt) + 999999)).collect()}

@@ -239,7 +239,7 @@ def test_audio_features_real_wav(spark, sf_dir):
 
 def test_frame_sample_real_demux(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(5)
-    vids = mm.synthesize_video_column(docs, n_frames=6)
+    vids = mm.synthesize_video_column(docs)
     frames = mm.frame_sample(vids, every_n=2)
     rows = frames.collect()
     by_id = {}
@@ -269,7 +269,7 @@ def test_ahash_identical_and_inverted_images(spark, sf_dir):
     assert hashes.filter(~SF.col("valid")).count() == 0
     pairs = {
         (r.a, r.b): r.hamming
-        for r in mm.ahash_near_dup_pairs(hashes, max_hamming=2).collect()
+        for r in mm.ahash_near_dup_pairs(hashes).collect()
     }
     assert pairs[(0, 1000000)] == 0
     bad = mm.image_ahash(

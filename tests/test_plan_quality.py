@@ -336,7 +336,7 @@ def test_novelty_single_shingle_pass(spark):
     from cartography_spark.sources.parquet import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    df = shingle_novelty(docs, n=6)
+    df = shingle_novelty(docs)
     df.collect()  # finalize AQE + materialize the lazy checkpoint
     plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert plan.count("Scan parquet") == 0, "shingle branch re-scan crept back in"

@@ -215,7 +215,7 @@ def test_asof_nearest_matches_bruteforce(spark, lefts, rights):
     got = {
         r.lid: (None if r.asof_v is None else int(r.asof_v))
         for r in asof_join_nearest(
-            ldf, rdf, by="u", ts="ts", value_cols=("v",), left_id="lid", tie_col="event_id"
+            ldf, rdf, by="u", ts="ts", value_cols=("v",), left_id="lid"
         ).collect()
     }
     for i, ls in enumerate(lefts):
@@ -393,9 +393,7 @@ def test_viterbi_min_pieces_property(spark, word_lists, min_count):
     )
     out = {
         r["doc_id"]: (r["n_words"], r["n_chars"], r["n_pieces"])
-        for r in subword_viterbi_segment(
-            docs, min_count=min_count, max_piece_len=4
-        ).collect()
+        for r in subword_viterbi_segment(docs, min_count=min_count).collect()
     }
 
     words = sorted({w for ws in word_lists for w in ws})

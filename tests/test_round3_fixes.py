@@ -415,7 +415,7 @@ def test_viterbi_segmentation_matches_bruteforce(spark):
     )
     out = {
         r["doc_id"]: (r["n_words"], r["n_chars"], r["n_pieces"])
-        for r in subword_viterbi_segment(docs, min_count=3, max_piece_len=4).collect()
+        for r in subword_viterbi_segment(docs, min_count=3).collect()
     }
 
     # mine the same vocab in plain Python
@@ -576,7 +576,7 @@ def test_poisson_bootstrap_ci_statistical_sanity(spark):
     df = spark.createDataFrame(
         [(str(i), (i * 37) % 1000) for i in range(n)], "rid string, x long"
     )
-    out = poisson_bootstrap_ci(df, F.col("x"), F.col("rid"), n_replicates=32).collect()[0]
+    out = poisson_bootstrap_ci(df, F.col("x"), F.col("rid")).collect()[0]
     true_mean = sum((i * 37) % 1000 for i in range(n)) / n
     assert out["n_rows"] == n
     assert abs(out["point_mean"] - true_mean) < 1e-9
@@ -674,7 +674,7 @@ def test_conformal_calibration_exact_order_statistic(spark):
         [3, 3, 3, 8],                              # tiny n (k > n clamp)
     ):
         df = spark.createDataFrame([(s,) for s in scores], "s long")
-        out = conformal_interval_calibrate(df, "s", alpha=0.1).collect()[0]
+        out = conformal_interval_calibrate(df).collect()[0]
         n = len(scores)
         k = math.ceil((n + 1) * 0.9)
         expect = sorted(scores)[min(k, n) - 1]

@@ -39,7 +39,7 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
     docs = spark.createDataFrame(
         [(1, base, "en"), (2, excerpt, "en")], "doc_id long, text string, lang string"
     )
-    rows = shingle_containment_pairs(docs, n=3, min_permille=900).collect()
+    rows = shingle_containment_pairs(docs, min_permille=900).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["a"], r["b"]) == (1, 2)
@@ -58,12 +58,12 @@ def test_containment_short_docs_yield_no_shingles(spark):
         [(1, "", "en"), (2, "", "en"), (3, "ab", "en"), (4, "ab", "en"), (5, None, "en")],
         "doc_id long, text string, lang string",
     )
-    assert shingle_containment_pairs(docs, n=3, min_permille=500).count() == 0
+    assert shingle_containment_pairs(docs, min_permille=500).count() == 0
     # exactly-n-length docs still pair up normally
     docs2 = spark.createDataFrame(
         [(1, "abc", "en"), (2, "abc", "en")], "doc_id long, text string, lang string"
     )
-    rows = shingle_containment_pairs(docs2, n=3, min_permille=900).collect()
+    rows = shingle_containment_pairs(docs2, min_permille=900).collect()
     assert len(rows) == 1 and rows[0]["inter"] == 1
 
 
@@ -72,7 +72,7 @@ def test_containment_blocked_by_lang(spark):
         [(1, "shared text body", "en"), (2, "shared text body", "fr")],
         "doc_id long, text string, lang string",
     )
-    assert shingle_containment_pairs(docs, n=3, min_permille=500).count() == 0
+    assert shingle_containment_pairs(docs, min_permille=500).count() == 0
 
 
 def test_nfc_normalize_fuses_combining_marks(spark):

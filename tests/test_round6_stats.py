@@ -175,7 +175,7 @@ def test_trimmed_mean_drops_exact_rank_count(spark):
     # n=20, 5% trim -> k=1: drop the single min (0) and max (1000)
     vals = [0] + list(range(1, 19)) + [1000]
     df = spark.createDataFrame([("g", v) for v in vals], "grp string, x long")
-    out = trimmed_mean(df, "grp", "x", trim_ppm=50_000).head()
+    out = trimmed_mean(df, "grp", "x").head()
     assert out.n_rows == 20 and out.n_trimmed_each_side == 1
     kept = sorted(vals)[1:-1]
     assert out.kept_sum == sum(kept) and out.n_kept == 18
@@ -187,7 +187,7 @@ def test_trimmed_mean_small_group_trims_nothing(spark):
 
     # n=10 at 5% -> k=0: plain mean
     df = spark.createDataFrame([("g", v) for v in range(10)], "grp string, x long")
-    out = trimmed_mean(df, "grp", "x", trim_ppm=50_000).head()
+    out = trimmed_mean(df, "grp", "x").head()
     assert out.n_trimmed_each_side == 0 and out.n_kept == 10
     assert out.kept_sum == 45
 

@@ -282,14 +282,14 @@ def test_mondrian_conformal_per_group_order_statistic(spark):
 
     rows = [("g1", s) for s in range(1, 21)] + [("g2", s) for s in (5, 5, 5, 100)]
     df = spark.createDataFrame(rows, "g string, s long")
-    out = {r.group_key: r for r in conformal_mondrian_calibrate(df, "g", "s").collect()}
+    out = {r.group_key: r for r in conformal_mondrian_calibrate(df).collect()}
     # g1: n=20, k=ceil(21*0.9)=19 -> 19th smallest of 1..20 = 19
     assert out["g1"].n_cal == 20 and out["g1"].k == 19 and out["g1"].q_hat == 19
     # g2: n=4, k=ceil(5*0.9)=5 > n -> clamp to max score
     assert out["g2"].q_hat == 100
     # single-group Mondrian == global calibrate
     single = df.filter(F.col("g") == "g1").select("s")
-    glob = conformal_interval_calibrate(single, "s", alpha=0.1).head()
+    glob = conformal_interval_calibrate(single).head()
     assert (glob.n_cal, glob.k, glob.q_hat) == (20, 19, 19)
 
 

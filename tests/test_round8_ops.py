@@ -572,7 +572,7 @@ def test_rendezvous_shards_matches_model_and_invariant(spark):
 
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     got = {r.shard: [r.n_docs, r.n_moved]
-           for r in rendezvous_shards(df, "doc_id", n_shards=8).collect()}
+           for r in rendezvous_shards(df).collect()}
     assert got == {k: v for k, v in want.items()}
     assert sum(v[0] for v in got.values()) == 100
 
@@ -810,7 +810,7 @@ def test_skew_audit_hand_computed(spark):
     from cartography_spark.operators.skew import skew_audit
 
     df = spark.createDataFrame([("a",)] * 6 + [("b",)] * 2 + [("c",)], "k string")
-    out = skew_audit(df, F.col("k"), n_buckets=32).head()
+    out = skew_audit(df, F.col("k")).head()
     assert out.n_rows == 9 and out.n_keys == 3 and out.n_buckets_used == 3
     assert out.max_bucket_rows == 6 and out.max_key_rows == 6
     assert out.bucket_skew_millis == 21333
@@ -824,7 +824,7 @@ def test_skew_audit_uniform_no_salt(spark):
     from cartography_spark.operators.skew import skew_audit
 
     df = spark.createDataFrame([(str(i),) for i in range(64)], "k string")
-    out = skew_audit(df, F.col("k"), n_buckets=32).head()
+    out = skew_audit(df, F.col("k")).head()
     assert out.n_rows == 64 and out.n_keys == 64 and out.max_key_rows == 1
     assert out.salt_recommended is False
 

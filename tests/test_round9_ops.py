@@ -38,15 +38,11 @@ def overlapping_docs(spark):
 
 def test_ngram_dense_and_prefix_strategies_identical(spark, overlapping_docs, monkeypatch):
     monkeypatch.setattr(dd, "DENSE_JACCARD_BROADCAST_BYTES", 0)  # force the prefix path
-    p = dd.ngram_jaccard_pairs(
-        overlapping_docs, n=3, threshold=0.5, block_cols=("lang",)
-    )
+    p = dd.ngram_jaccard_pairs(overlapping_docs)
     p_plan = _plan(p)
     p_rows = _rows(p)
     monkeypatch.setattr(dd, "DENSE_JACCARD_BROADCAST_BYTES", 64 * 1024 * 1024)
-    d = dd.ngram_jaccard_pairs(
-        overlapping_docs, n=3, threshold=0.5, block_cols=("lang",)
-    )
+    d = dd.ngram_jaccard_pairs(overlapping_docs)
     d_plan = _plan(d)
     d_rows = _rows(d)
     # identical output...
@@ -65,7 +61,7 @@ def test_ngram_dense_cost_check_prefers_prefix_on_disjoint_docs(spark):
     # though the vocab is tiny
     texts = [(1, "aaabbb", "en"), (2, "cccddd", "en"), (3, "eeefff", "en")]
     docs = spark.createDataFrame(texts, "doc_id long, text string, lang string")
-    df = dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5, block_cols=("lang",))
+    df = dd.ngram_jaccard_pairs(docs)
     assert "row_number" in _plan(df)  # prefix path chosen
     assert df.count() == 0
 
@@ -79,13 +75,13 @@ def test_ngram_positional_filter_keeps_boundary_pair(spark, monkeypatch):
     )
     # prefix path (where the filter lives)
     monkeypatch.setattr(dd, "DENSE_JACCARD_BROADCAST_BYTES", 0)
-    rows = _rows(dd.ngram_jaccard_pairs(docs, n=3, threshold=0.5, block_cols=("lang",)))
+    rows = _rows(dd.ngram_jaccard_pairs(docs))
     assert rows == [(1, 2, 0.5)]
 
 
 def test_ngram_dense_respects_lang_blocking(spark, overlapping_docs):
     # docs 1 and 5 are identical texts in different langs: never paired
-    df = dd.ngram_jaccard_pairs(overlapping_docs, n=3, threshold=0.5, block_cols=("lang",))
+    df = dd.ngram_jaccard_pairs(overlapping_docs)
     pairs = {(r["a"], r["b"]) for r in df.collect()}
     assert (1, 5) not in pairs
     # in-block identical pair would have jaccard 1.0 with itself only —

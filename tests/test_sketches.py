@@ -33,10 +33,10 @@ def test_countmin_never_underestimates(spark):
 
 def test_kmv_exact_below_k_and_bounded_above(spark):
     small = spark.createDataFrame([(i % 10,) for i in range(100)], "x long")
-    est = kmv_distinct_estimate(small, "x", k=64).collect()[0]
+    est = kmv_distinct_estimate(small, "x").collect()[0]
     assert est.estimate == 10.0  # fewer distincts than k -> exact
     big = spark.createDataFrame([(i,) for i in range(5000)], "x long")
-    e = kmv_distinct_estimate(big, "x", k=64).collect()[0].estimate
+    e = kmv_distinct_estimate(big, "x").collect()[0].estimate
     assert abs(e - 5000) / 5000 < 0.5  # ~1/sqrt(k-1) expected error
 
 

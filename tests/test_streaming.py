@@ -278,7 +278,7 @@ def test_streaming_cdc_revive_after_tombstone(spark):
     log.write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema(log.schema).parquet(path)
     out = run_available_now(
-        cdc_latest_state(stream, "k", payload_cols=("name",)),
+        cdc_latest_state(stream, "k"),
         f"cdc_t_{uuid.uuid4().hex[:8]}",
         output_mode="complete",
     )

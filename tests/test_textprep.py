@@ -47,7 +47,7 @@ def test_scrub_pii_counts_and_redacts(spark):
 def test_chunking_covers_all_tokens(spark):
     text = " ".join(f"t{i}" for i in range(47))
     df = _docs(spark, [(1, "en", text), (2, "en", "short doc")])
-    chunks = tp.chunk_documents(df, chunk_tokens=20, stride=15).collect()
+    chunks = tp.chunk_documents(df).collect()
     by_doc = {}
     for c in chunks:
         by_doc.setdefault(c.doc_id, []).append(c)
@@ -80,7 +80,7 @@ def test_contamination_boundaries(spark):
             (2, "en", "p q r s t u v w"),  # disjoint
         ],
     )
-    out = {r.doc_id: r for r in tp.contamination_overlap(corpus, bench, n=5).collect()}
+    out = {r.doc_id: r for r in tp.contamination_overlap(corpus, bench).collect()}
     assert out[0].contaminated and out[0].contam_frac == 1.0
     assert out[1].n_matched == 1 and not out[1].contaminated
     assert out[2].n_matched == 0 and not out[2].contaminated and out[2].contam_frac == 0.0
@@ -100,7 +100,7 @@ def test_length_bucket_batches_boundaries(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {r.bucket_len: r for r in length_bucket_batches(docs, min_bucket=16).collect()}
+    rows = {r.bucket_len: r for r in length_bucket_batches(docs).collect()}
     assert set(rows) == {16, 32}
     b16, b32 = rows[16], rows[32]
     assert (b16.n_docs, b16.real_tokens, b16.padded_tokens) == (2, 19, 32)

@@ -19,27 +19,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
-from cartography_spark.schema import LinkDirection, NodeSchema
-
-
-def _tenant_edge_key(catalog: GraphCatalog, schema: NodeSchema) -> tuple[str, str, str]:
-    rel = schema.sub_resource_relationship
-    if rel is None:
-        raise ValueError(f"{schema.label} has no sub_resource_relationship")
-    if rel.direction == LinkDirection.INWARD:
-        return (rel.target_node_label, rel.rel_label, schema.label)
-    return (schema.label, rel.rel_label, rel.target_node_label)
+from cartography_spark.schema import NodeSchema
 
 
 def _scoped_ids(catalog: GraphCatalog, schema: NodeSchema, tenant_id: str) -> DataFrame:
     """ids of nodes of this label attached to the given tenant."""
-    rel = schema.sub_resource_relationship
-    key = _tenant_edge_key(catalog, schema)
-    edges = catalog.edge(*key)
-    if rel.direction == LinkDirection.INWARD:
-        # stored (tenant -> node): node ids are dst
-        return edges.filter(F.col("src_id") == str(tenant_id)).select(F.col("dst_id").alias("id"))
-    return edges.filter(F.col("dst_id") == str(tenant_id)).select(F.col("src_id").alias("id"))
+    key, own_col, tenant_col = schema.sub_resource_relationship.stored_edge(schema.label)
+    tenant_edges = catalog.edge(*key).filter(F.col(tenant_col) == str(tenant_id))
+    return tenant_edges.select(F.col(own_col).alias("id"))
 
 
 def cleanup_nodes(
@@ -84,18 +71,25 @@ def cleanup_cascade(
     catalog: GraphCatalog,
     parent_schema: NodeSchema,
     child_schema: NodeSchema,
-    child_edge: tuple[str, str, str],
     update_tag: int,
 ) -> None:
     """Cascade delete (cleanupbuilder.py:309-334): delete stale parents,
-    then stale children attached to those parents through ``child_edge``
-    (stored child -> parent). Unscoped: every tenant's stale parents."""
+    then stale children attached to those parents through the one
+    relationship ``child_schema`` declares to the parent label, whichever
+    way it is stored. Unscoped: every tenant's stale parents."""
+    rels = [r for r in child_schema.all_relationships() if r.target_node_label == parent_schema.label]
+    if len(rels) != 1:
+        raise ValueError(
+            f"{child_schema.label} declares {len(rels)} relationships to "
+            f"{parent_schema.label}; a cascade needs exactly one"
+        )
+    key, child_col, parent_col = rels[0].stored_edge(child_schema.label)
     parents = catalog.node(parent_schema.label)
     stale_parents = parents.filter(F.col("lastupdated") != F.lit(update_tag)).select("id")
-    edges = catalog.edge(*child_edge)
+    edges = catalog.edge(*key)
     child_ids = edges.join(
-        stale_parents.select(F.col("id").alias("dst_id")), "dst_id", "left_semi"
-    ).select(F.col("src_id").alias("id"))
+        stale_parents.select(F.col("id").alias(parent_col)), parent_col, "left_semi"
+    ).select(F.col(child_col).alias("id"))
 
     children = catalog.node(child_schema.label)
     doomed_children = (

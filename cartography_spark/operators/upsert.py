@@ -46,7 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
-from cartography_spark.schema import LinkDirection, NodeSchema, RelSchema, TargetNodeMatcher
+from cartography_spark.schema import NodeSchema, RelSchema, TargetNodeMatcher
 from cartography_spark.sources.rows import local_frame
 
 
@@ -192,8 +192,8 @@ def upsert_rel(
     update_tag: int,
     params: dict[str, Any] | None = None,
 ) -> DataFrame:
-    """Join batch rows to the target node table via the matcher, derive
-    (src_id, dst_id) per LinkDirection, and MERGE into the edge table.
+    """Join batch rows to the target node table via the matcher, orient
+    (src_id, dst_id) by ``rel.stored_edge``, and MERGE into the edge table.
 
     A target label absent from the catalog matches ZERO nodes (Cypher
     MATCH semantics: the reference's MERGE query simply binds no target
@@ -210,26 +210,12 @@ def upsert_rel(
     cond = _matcher_condition(rel.target_node_matcher, target, params)
     # small target tables (tenants/dims) broadcast; Catalyst/AQE decides
     matched = rows.join(target, cond, "inner")  # OPTIONAL MATCH tolerance: missing targets drop
-    edge_cols = [
-        F.col("__src_id").alias("src_id"),
-        target["id"].alias("dst_id"),
-    ]
+    key, own_col, target_col = rel.stored_edge(schema.label)
+    ids = {own_col: F.col("__src_id"), target_col: target["id"]}
+    edge_cols = [ids["src_id"].alias("src_id"), ids["dst_id"].alias("dst_id")]
     for out_name, ref in rel.properties.items():
         edge_cols.append(ref.expr(params).alias(out_name))
-    edges = matched.select(*edge_cols)
-
-    if rel.direction == LinkDirection.INWARD:
-        # arrow points at the source: store (target -> source)
-        edges = edges.select(
-            F.col("dst_id").alias("src_id"),
-            F.col("src_id").alias("dst_id"),
-            *[c for c in edges.columns if c not in ("src_id", "dst_id")],
-        )
-        key = (rel.target_node_label, rel.rel_label, schema.label)
-    else:
-        key = (schema.label, rel.rel_label, rel.target_node_label)
-
-    edges = edges.dropDuplicates(["src_id", "dst_id"])
+    edges = matched.select(*edge_cols).dropDuplicates(["src_id", "dst_id"])
     catalog.edges[key] = merged = merge(catalog.edges.get(key), edges, ["src_id", "dst_id"], update_tag)
     return merged
 

@@ -4,23 +4,32 @@ graph/analysisbuilder.py:36-556 to Cypher writes + auto-generated cleanup).
 
 Spark-native: an ``AnalysisStatement`` holds a *matcher* (a function
 ``catalog -> DataFrame`` — typically built with plans.query.match) and a
-list of typed effects compiled to DataFrame rewrites:
+list of typed effects compiled to DataFrame rewrites. Every effect but
+``AddRelationship`` writes through one keyed update (``_keyed_update``):
+left-join a frame unique on the table's key, then set its columns in one
+projection.
 
-- ``SetProperty``            analysis.py:71-88   -> join target ids, withColumn
-- ``AddToSet``               analysis.py:114-132 -> array_distinct(concat(...))
-- ``AddRelationship``        analysis.py:134-150 -> edge upsert into a derived
-                                                    edge table
-- ``SetRelationshipProperty`` analysis.py:90-112 -> edge-table update
+- ``SetProperties``           analysis.py:71-88   -> one keyed update sets all
+  (``SetProperty`` = one prop)                        props + ``<prop>__tag``
+- ``AddToSet``                analysis.py:114-132 -> keyed update with
+  ``AddValuesToSet``                                  array_distinct(concat(...))
+- ``SetRelationshipProperty`` analysis.py:90-112  -> keyed update on
+                                                     (src_id, dst_id)
+- ``AddRelationship``         analysis.py:134-150 -> MERGE into a derived
+                                                     edge table
 
 Auto-cleanup (analysisbuilder.py:132-165,385-490): derived properties are
 cleared on nodes NOT matched in the current run; derived edges with
 ``lastupdated <> tag`` are deleted — same anti-join shape as §2.7 cleanup.
+A scoped job marks its scope with the same keyed update, so other
+tenants' rows are never cleaned.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -28,6 +37,7 @@ from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
 from cartography_spark.operators.upsert import merge
+from cartography_spark.schema import LinkDirection, RelSchema, TargetNodeMatcher
 
 Matcher = Callable[[GraphCatalog], DataFrame]
 
@@ -62,36 +72,62 @@ class ScopeById:
 
 def _scope_member_ids(catalog: GraphCatalog, scope: ScopeById, scope_id: Any) -> DataFrame:
     """ids of nodes attached to the scope node via ``rel_label`` edges,
-    whichever way the edge table is oriented; restricted to
+    whichever way each member label declares the edge; restricted to
     ``member_label`` edge tables when set."""
-    parts = []
-    for (sl, rl, dl), edf in catalog.edges.items():
-        if rl != scope.rel_label:
-            continue
-        if scope.member_label is not None and scope.member_label not in (sl, dl):
-            continue
-        if sl == scope.label:
-            parts.append(
-                edf.filter(F.col("src_id") == scope_id).select(F.col("dst_id").alias("id"))
-            )
-        elif dl == scope.label:
-            parts.append(
-                edf.filter(F.col("dst_id") == scope_id).select(F.col("src_id").alias("id"))
-            )
+    members = (
+        (scope.member_label,)
+        if scope.member_label is not None
+        else dict.fromkeys(label for sl, _, dl in catalog.edges for label in (sl, dl))
+    )
+    parts: dict[tuple[str, str, str], DataFrame] = {}
+    for member in members:
+        for direction in LinkDirection:
+            # the membership edge as the member would declare it
+            rel = RelSchema(scope.rel_label, scope.label, TargetNodeMatcher({}), direction)
+            key, member_col, scope_col = rel.stored_edge(member)
+            if key in catalog.edges and key not in parts:
+                scoped = catalog.edges[key].filter(F.col(scope_col) == scope_id)
+                parts[key] = scoped.select(F.col(member_col).alias("id"))
     if not parts:
         raise KeyError(
             f"no {scope.rel_label!r} edges touching label {scope.label!r} in the catalog"
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
+    return reduce(DataFrame.unionByName, parts.values()).distinct()
+
+
+def _keyed_update(
+    table: DataFrame, frame: DataFrame, keys: list[str], cols: dict[str, Column]
+) -> DataFrame:
+    """Left-join ``frame`` (unique on ``keys``) onto ``table`` and set
+    ``cols`` in one projection: the table's other columns keep their order,
+    then each of ``cols`` follows in order, replacing the table's column of
+    that name (a SET's drop-and-append). ``frame``'s other columns are seen
+    only by the ``cols`` expressions. Every property and set effect, and
+    the scope mark of scoped cleanup, writes through it."""
+    joined = table.join(frame, keys, "left")
+    kept = [F.col(c) for c in table.columns if c not in cols]
+    return joined.select(*kept, *[expr.alias(c) for c, expr in cols.items()])
+
+
+def _mark_scope(
+    table: DataFrame, scope_ids: DataFrame | None, key: str
+) -> tuple[DataFrame, Column]:
+    """``table`` with an ``__in_scope`` mark on rows whose ``key`` is one of
+    ``scope_ids``, and the condition "row is outside the scope" — never true
+    without ``scope_ids``. Scoped cleanup spares the rows outside."""
+    if scope_ids is None:
+        return table, F.lit(False)
+    mark = scope_ids.select(F.col("id").alias(key), F.lit(True).alias("__in_scope"))
+    marked = _keyed_update(table, mark, [key], {"__in_scope": F.col("__in_scope")})
+    return marked, F.col("__in_scope").isNull()
 
 
 @dataclass(frozen=True)
-class SetProperty:
-    """Set ``prop`` = ``value`` on nodes of ``target_label`` whose id is in
-    the matched frame's ``id_col``.
+class SetProperties:
+    """Set each ``properties`` item (prop -> Column or literal) on nodes of
+    ``target_label`` whose id is in the matched frame's ``id_col`` (reference
+    analysis.py:71-88 SetProperty/SetProperties) — one join for all of them,
+    so with duplicate matched ids every value comes from the same row.
 
     SET touches only matched nodes (reference SET semantics): values written
     by earlier statements in the same run survive. A companion audit column
@@ -103,34 +139,25 @@ class SetProperty:
 
     target_label: str
     id_col: str
-    prop: str
-    value: Any  # Column or literal
-
-    def _tag_col(self) -> str:
-        return f"{self.prop}__tag"
+    properties: dict[str, Any]
 
     def apply(self, catalog: GraphCatalog, matched: DataFrame, update_tag: int) -> None:
-        ids = matched.select(F.col(self.id_col).alias("id"), _as_col(self.value).alias("__v")).dropDuplicates(
-            ["id"]
-        )
         table = catalog.node(self.target_label)
-        tagc = self._tag_col()
-        has = self.prop in table.columns
-        joined = table.join(ids, "id", "left")
-        newval = F.coalesce(F.col("__v"), F.col(self.prop)) if has else F.col("__v")
-        newtag = (
-            F.when(F.col("__v").isNotNull(), F.lit(update_tag).cast("long")).otherwise(F.col(tagc))
-            if has and tagc in table.columns
-            else F.when(F.col("__v").isNotNull(), F.lit(update_tag).cast("long"))
-        )
-        out = joined.withColumn("__newv", newval).withColumn("__newt", newtag).drop("__v")
-        if has:
-            out = out.drop(self.prop)
-        if tagc in table.columns:
-            out = out.drop(tagc)
-        catalog.nodes[self.target_label] = out.withColumnRenamed("__newv", self.prop).withColumnRenamed(
-            "__newt", tagc
-        )
+        vals = matched.select(
+            F.col(self.id_col).alias("id"),
+            *[_as_col(v).alias(f"__v{i}") for i, v in enumerate(self.properties.values())],
+        ).dropDuplicates(["id"])
+        stamp = F.lit(update_tag).cast("long")
+        cols: dict[str, Column] = {}
+        for i, prop in enumerate(self.properties):
+            v, tagc = F.col(f"__v{i}"), f"{prop}__tag"
+            value, tag = v, F.when(v.isNotNull(), stamp)
+            if prop in table.columns:
+                value = F.coalesce(v, F.col(prop))
+                if tagc in table.columns:
+                    tag = tag.otherwise(F.col(tagc))
+            cols |= {prop: value, tagc: tag}
+        catalog.nodes[self.target_label] = _keyed_update(table, vals, ["id"], cols)
 
     def cleanup(
         self, catalog: GraphCatalog, update_tag: int, scope_ids: DataFrame | None = None
@@ -140,55 +167,21 @@ class SetProperty:
         tenants' derived values survive (scoped generated cleanup,
         analysisbuilder.py:385-490 with the ScopeById prefix)."""
         table = catalog.node(self.target_label)
-        tagc = self._tag_col()
-        if self.prop not in table.columns or tagc not in table.columns:
-            return
-        keep = F.col(tagc) == update_tag
-        if scope_ids is not None:
-            marked = table.join(
-                scope_ids.withColumn("__in_scope", F.lit(True)), "id", "left"
-            )
-            keep = keep | F.col("__in_scope").isNull()
-            catalog.nodes[self.target_label] = (
-                marked.withColumn(self.prop, F.when(keep, F.col(self.prop)))
-                .withColumn(tagc, F.when(keep, F.col(tagc)))
-                .drop("__in_scope")
-            )
-            return
-        catalog.nodes[self.target_label] = table.withColumn(
-            self.prop, F.when(keep, F.col(self.prop))
-        ).withColumn(tagc, F.when(keep, F.col(tagc)))
+        marked, outside = _mark_scope(table, scope_ids, "id")
+        cleared: dict[str, Column] = {}
+        for prop in self.properties:
+            tagc = f"{prop}__tag"
+            if prop in table.columns and tagc in table.columns:
+                keep = (F.col(tagc) == update_tag) | outside
+                cleared |= {prop: F.when(keep, F.col(prop)), tagc: F.when(keep, F.col(tagc))}
+        if cleared:
+            catalog.nodes[self.target_label] = marked.withColumns(cleared).drop("__in_scope")
 
 
-@dataclass(frozen=True)
-class SetProperties:
-    """Set MULTIPLE properties on matched nodes in one pass (reference
-    analysis.py:81-88 SetProperties) — compiled as one join + N
-    withColumns instead of N statements, sharing SetProperty's per-prop
-    audit tag + scoped-cleanup semantics."""
-
-    target_label: str
-    id_col: str
-    properties: dict[str, Any]  # prop -> Column or literal
-
-    def _parts(self) -> tuple[SetProperty, ...]:
-        return tuple(
-            SetProperty(self.target_label, self.id_col, p, v)
-            for p, v in self.properties.items()
-        )
-
-    def apply(self, catalog: GraphCatalog, matched: DataFrame, update_tag: int) -> None:
-        # one matched frame, applied per property (each rewrite is a narrow
-        # withColumn chain over the same join; Catalyst collapses the
-        # projections into a single stage)
-        for part in self._parts():
-            part.apply(catalog, matched, update_tag)
-
-    def cleanup(
-        self, catalog: GraphCatalog, update_tag: int, scope_ids: DataFrame | None = None
-    ) -> None:
-        for part in self._parts():
-            part.cleanup(catalog, update_tag, scope_ids=scope_ids)
+def SetProperty(target_label: str, id_col: str, prop: str, value: Any) -> SetProperties:
+    """Set ``prop`` = ``value`` on the matched nodes: the one-property
+    :class:`SetProperties` (reference analysis.py:71-80)."""
+    return SetProperties(target_label, id_col, {prop: value})
 
 
 def _add_to_set(catalog: GraphCatalog, label: str, prop: str, vals: DataFrame) -> None:
@@ -197,14 +190,12 @@ def _add_to_set(catalog: GraphCatalog, label: str, prop: str, vals: DataFrame) -
     idiom of AddToSet and AddValuesToSet (analysisbuilder.py:285-307)."""
     vals = vals.groupBy("id").agg(F.collect_set("__v").alias("__vs"))
     table = catalog.node(label)
-    has = prop in table.columns
-    joined = table.join(vals, "id", "left")
     # never-set base is a typed NULL (not an empty array: unmatched
     # nodes must keep the property NULL); the cast matches the VALUE's
     # element type so concat typechecks for e.g. int sets
     base = (
         F.col(prop)
-        if has
+        if prop in table.columns
         else F.lit(None).cast(vals.schema["__vs"].dataType.simpleString())
     )
     # SET only fires on MATCHED nodes (reference analysisbuilder.py:
@@ -214,10 +205,7 @@ def _add_to_set(catalog: GraphCatalog, label: str, prop: str, vals: DataFrame) -
     # by the one orderless customer at sf0.1.
     appended = F.array_distinct(F.concat(F.coalesce(base, F.array()), F.col("__vs")))
     newcol = F.when(F.size(F.col("__vs")) > 0, appended).otherwise(base)
-    out = joined.withColumn("__new", newcol).drop("__vs")
-    if has:
-        out = out.drop(prop)
-    catalog.nodes[label] = out.withColumnRenamed("__new", prop)
+    catalog.nodes[label] = _keyed_update(table, vals, ["id"], {prop: newcol})
 
 
 @dataclass(frozen=True)
@@ -271,21 +259,9 @@ class AddRelationship:
         key = self.key()
         if key not in catalog.edges:
             return
-        edges = catalog.edges[key]
+        marked, outside = _mark_scope(catalog.edges[key], scope_ids, "src_id")
         fresh = F.col("lastupdated") == update_tag
-        if scope_ids is not None:
-            marked = edges.join(
-                scope_ids.select(F.col("id").alias("src_id")).withColumn(
-                    "__in_scope", F.lit(True)
-                ),
-                "src_id",
-                "left",
-            )
-            catalog.edges[key] = marked.filter(
-                fresh | F.col("__in_scope").isNull()
-            ).drop("__in_scope")
-            return
-        catalog.edges[key] = edges.filter(fresh)
+        catalog.edges[key] = marked.filter(fresh | outside).drop("__in_scope")
 
 
 @dataclass(frozen=True)
@@ -307,18 +283,15 @@ class SetRelationshipProperty:
             _as_col(self.value).alias("__v"),
         ).dropDuplicates(["src_id", "dst_id"])
         edges = catalog.edge(*self.edge_key)
-        has = self.prop in edges.columns
-        joined = edges.join(sel, ["src_id", "dst_id"], "left")
-        if has and self.if_missing:
-            newcol = F.coalesce(F.col(self.prop), F.col("__v"))
-        elif has:
-            newcol = F.coalesce(F.col("__v"), F.col(self.prop))
-        else:
+        if self.prop not in edges.columns:
             newcol = F.col("__v")
-        out = joined.withColumn("__new", newcol).drop("__v")
-        if has:
-            out = out.drop(self.prop)
-        catalog.edges[self.edge_key] = out.withColumnRenamed("__new", self.prop)
+        elif self.if_missing:
+            newcol = F.coalesce(F.col(self.prop), F.col("__v"))
+        else:
+            newcol = F.coalesce(F.col("__v"), F.col(self.prop))
+        catalog.edges[self.edge_key] = _keyed_update(
+            edges, sel, ["src_id", "dst_id"], {self.prop: newcol}
+        )
 
     def cleanup(
         self, catalog: GraphCatalog, update_tag: int, scope_ids: DataFrame | None = None
@@ -363,14 +336,7 @@ def _as_col(v: Any) -> Column:
     return v if isinstance(v, Column) else F.lit(v)
 
 
-Effect = (
-    SetProperty
-    | SetProperties
-    | AddToSet
-    | AddValuesToSet
-    | AddRelationship
-    | SetRelationshipProperty
-)
+Effect = SetProperties | AddToSet | AddValuesToSet | AddRelationship | SetRelationshipProperty
 
 
 @dataclass(frozen=True)

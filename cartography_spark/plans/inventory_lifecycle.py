@@ -167,7 +167,6 @@ def q_cleanup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         cat,
         parent_schema=ORDER_SCHEMA,
         child_schema=_LINEITEM_SCHEMA,
-        child_edge=("Lineitem", "PART_OF", "Order"),
         update_tag=T2,
     )
     # One lazy plan instead of two count() driver actions + an ExistingRDD

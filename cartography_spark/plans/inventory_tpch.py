@@ -30,12 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cartography_spark.operators.incremental import cents
 from cartography_spark.plans.registry import query
 from cartography_spark.sources.parquet import load_table as T
-
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("bigint")
 
 
 def _rev_cents() -> F.Column:
@@ -84,7 +81,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("l_partkey").alias("p_partkey"),
             "l_suppkey",
-            _cents("l_extendedprice").alias("offer_cents"),
+            cents("l_extendedprice").alias("offer_cents"),
         )
         .distinct()
     )
@@ -94,7 +91,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
         offers.join(mins, ["p_partkey", "offer_cents"])
         .join(part, "p_partkey")
         .join(
-            sup.select("s_suppkey", "s_name", _cents("s_acctbal").alias("s_acctbal_cents")),
+            sup.select("s_suppkey", "s_name", cents("s_acctbal").alias("s_acctbal_cents")),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
         .select("p_partkey", "s_name", "s_acctbal_cents", "offer_cents")
@@ -368,7 +365,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = (
         T(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%red%"))
-        .select("p_partkey", _cents("p_retailprice").alias("retail_cents"))
+        .select("p_partkey", cents("p_retailprice").alias("retail_cents"))
     )
     nat = T(spark, sf_dir, "nation")
     sup = (
@@ -419,7 +416,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.join(li, F.col("o_orderkey") == li.l_orderkey)
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_custkey", "c_name", _cents("c_acctbal").alias("c_acctbal_cents"), "n_name")
+        .groupBy("c_custkey", "c_name", cents("c_acctbal").alias("c_acctbal_cents"), "n_name")
         .agg(F.sum(_rev_cents()).alias("revenue_cents"))
         .select("c_custkey", "c_name", "revenue_cents", "c_acctbal_cents", "n_name")
         .orderBy(F.col("revenue_cents").desc(), F.col("c_custkey").asc())
@@ -450,7 +447,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = (
         T(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_partkey").alias("p_partkey"))
-        .agg(F.sum(_cents("l_extendedprice")).alias("value_cents"))
+        .agg(F.sum(cents("l_extendedprice")).alias("value_cents"))
     )
     total = per_part.agg(F.sum("value_cents").alias("total_cents"))
     return (
@@ -602,7 +599,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(stats, "l_partkey")
         .filter(F.col("l_quantity").cast("bigint") * 5 * F.col("cnt") < F.col("sum_qty"))
         .agg(
-            F.sum(_cents("l_extendedprice")).alias("revenue_cents"),
+            F.sum(cents("l_extendedprice")).alias("revenue_cents"),
             F.count("*").alias("n_rows"),
         )
     )

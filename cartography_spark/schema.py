@@ -95,6 +95,15 @@ class RelSchema:
     direction: LinkDirection = LinkDirection.OUTWARD
     properties: dict[str, PropertyRef] = field(default_factory=dict)
 
+    def stored_edge(self, label: str) -> tuple[tuple[str, str, str], str, str]:
+        """Where this relationship, declared on ``label`` nodes, is stored:
+        the edge-table key, the id column holding ``label``'s nodes and the
+        id column holding the target's. The only place that reads
+        ``direction`` to orient an edge."""
+        if self.direction == LinkDirection.INWARD:
+            return (self.target_node_label, self.rel_label, label), "dst_id", "src_id"
+        return (label, self.rel_label, self.target_node_label), "src_id", "dst_id"
+
 
 @dataclass(frozen=True)
 class NodeSchema:

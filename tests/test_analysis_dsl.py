@@ -318,3 +318,134 @@ def test_set_properties_multi_prop_with_cleanup(spark):
     AnalysisJob("j", (AnalysisStatement(over(10), eff()),)).run(cat, 2)
     rows = {r.id: (r.risk, r.reviewed) for r in cat.node("N").collect()}
     assert rows == {"1": (None, None), "2": ("HIGH", True)}
+
+
+def test_set_properties_is_one_join(spark):
+    """A 3-property SetProperties joins the node table once, and with a
+    duplicate matched id every property comes from the same matched row."""
+    from cartography_spark.catalog import GraphCatalog
+    from cartography_spark.plans.analysis import SetProperties
+
+    cat = GraphCatalog(spark)
+    cat.nodes["N"] = spark.createDataFrame([("1",), ("2",)], "id string")
+    matched = spark.createDataFrame(
+        [("1", "HIGH", 9, True), ("1", "LOW", 1, False)], "nid string, r string, s int, b boolean"
+    )
+    eff = SetProperties("N", "nid", {"risk": F.col("r"), "score": F.col("s"), "reviewed": F.col("b")})
+    eff.apply(cat, matched, 1)
+    out = cat.node("N")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert sum(line.lstrip(" :+-").startswith("Join ") for line in plan.splitlines()) == 1, plan
+    assert out.columns == ["id", "risk", "risk__tag", "score", "score__tag", "reviewed", "reviewed__tag"]
+    rows = {r.id: r for r in out.collect()}
+    assert (rows["1"].risk, rows["1"].score, rows["1"].reviewed) in {("HIGH", 9, True), ("LOW", 1, False)}
+    assert (rows["1"].risk__tag, rows["1"].score__tag, rows["1"].reviewed__tag) == (1, 1, 1)
+    assert (rows["2"].risk, rows["2"].score, rows["2"].reviewed__tag) == (None, None, None)
+
+
+def test_analysis_k8s_exposure_cascade(spark, sf_dir):
+    """The k8s-exposure AnalysisJob cascade writes svc/pod/container flags
+    scoped to one cluster tenant, and derives EXPOSE edges with
+    exposure_type (reference analysis/kubernetes/analysis.py:8-150)."""
+    from cartography_spark.plans.inventory_lifecycle import q_analysis_k8s_exposure
+
+    out = q_analysis_k8s_exposure(spark, sf_dir)
+    rows = out.collect()
+    assert rows, "expected exposed suppliers at sf0.001"
+    assert all(r.exposure_type == "via_lb_only" and r.exposed_internet for r in rows)
+    assert all(r.n_exposing_lbs >= 1 for r in rows)
+
+
+def test_analysis_gcp_case_projection_total(spark, sf_dir):
+    """The GCP-style Case/RawCypher projection plus default-fill leaves no
+    null booleans and marks only size>45 parts exposed."""
+    from cartography_spark.plans.inventory_lifecycle import (
+        q_analysis_gcp_ontology_projection,
+    )
+
+    rows = q_analysis_gcp_ontology_projection(spark, sf_dir).collect()
+    assert rows
+    assert all(r.ont_public is not None and r.exposed_internet is not None for r in rows)
+    assert all(
+        (r.exposed_internet and r.exposed_internet_type == "direct")
+        or (not r.exposed_internet and r.exposed_internet_type is None)
+        for r in rows
+    )
+
+
+def test_analysis_azure_exposure_backfill_and_antipattern(spark, sf_dir):
+    """The Azure exposure battery (reference analysis/azure/analysis.py:9-90)
+    leaves exposed_internet TOTAL on Suppliers (null-backfill statements),
+    and the scoped LB-EXPOSE job only derives edges for suppliers NOT
+    directly exposed (the negated pattern predicate, :96-117)."""
+    from cartography_spark.plans.inventory_lifecycle import q_analysis_azure_lb_exposure
+
+    rows = q_analysis_azure_lb_exposure(spark, sf_dir).collect()
+    assert rows
+    assert all(r.exposed_internet is not None for r in rows), "backfill must be total"
+    for r in rows:
+        if r.lb_exposure_type is not None:
+            # edge only for via-lb-only suppliers, never directly exposed ones
+            assert r.lb_exposure_type == "via_lb_only"
+            assert r.exposure_types == "lb"
+        if r.exposure_types is None:
+            assert r.exposed_internet is False
+
+
+def test_analysis_intune_union_dedups_overlapping_paths(spark, sf_dir):
+    """Three statements deriving the same APPLIES_TO rel type from
+    overlapping match paths (reference intune/analysis.py:7-56) must
+    union-dedup: per-policy device count never exceeds the tenant's
+    device universe, and firstseen stays at the first write's tag."""
+    from cartography_spark.plans.inventory_lifecycle import (
+        T1,
+        q_analysis_intune_policy_union,
+    )
+    from cartography_spark.sources.parquet import load_table
+
+    sf = sf_dir
+    rows = q_analysis_intune_policy_union(spark, sf).collect()
+    assert rows
+    n_orders = load_table(spark, sf, "orders").count()
+    assert all(r.firstseen == T1 for r in rows)
+    assert all(0 < r.n_devices <= n_orders for r in rows)
+
+
+def test_analysis_identity_var_null_propagation(spark, sf_dir):
+    """Entra Var() projection under OPTIONAL MATCH: linked customers get a
+    non-null _ont_enabled copied from the matched supplier; unlinked
+    customers keep NULL (reference entra/analysis.py:7-24)."""
+    from cartography_spark.plans.inventory_lifecycle import q_analysis_identity_projection
+
+    rows = q_analysis_identity_projection(spark, sf_dir).collect()
+    assert rows
+    assert any(r.linked for r in rows) and any(not r.linked for r in rows)
+    for r in rows:
+        if r.linked:
+            assert r.ont_enabled in ("true", "false")
+        else:
+            assert r.ont_enabled is None
+
+
+def test_analysis_aibom_runs_on_idempotent(spark, sf_dir):
+    """One derived RUNS_ON edge per order (linear fan-out, the reference
+    job's shape), and re-running the job leaves the set unchanged (the
+    reference job reruns every sync — the query itself runs it twice)."""
+    from cartography_spark.plans.inventory_lifecycle import q_analysis_aibom_runs_on
+    from cartography_spark.sources.parquet import load_table
+
+    out = q_analysis_aibom_runs_on(spark, sf_dir)
+    got = {(r.regionkey, r.n_runs_on) for r in out.collect()}
+    orders = load_table(spark, sf_dir, "orders")
+    cus = load_table(spark, sf_dir, "customer")
+    nat = load_table(spark, sf_dir, "nation")
+    want = {
+        (r.n_regionkey, r.n)
+        for r in orders.join(cus, orders.o_custkey == cus.c_custkey)
+        .join(nat, cus.c_nationkey == nat.n_nationkey)
+        .groupBy("n_regionkey")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert got == want
+    assert sum(n for _, n in got) == orders.count()  # exactly one edge per order

@@ -4,6 +4,7 @@ reference's sync-twice integration pattern
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cartography_spark.catalog import GraphCatalog
@@ -15,7 +16,7 @@ from cartography_spark.plans.graph_fixture import (
     SUPPLIER_SCHEMA,
     build_catalog,
 )
-from cartography_spark.schema import NodeSchema, PropertyRef, RelSchema, TargetNodeMatcher
+from cartography_spark.schema import LinkDirection, NodeSchema, PropertyRef, RelSchema, TargetNodeMatcher
 from cartography_spark.sources.parquet import load_table
 
 T1, T2 = 100, 200
@@ -280,7 +281,6 @@ def test_cascade_cleanup(spark, sf_dir):
         cat,
         parent_schema=ORDER_SCHEMA,
         child_schema=li_schema,
-        child_edge=("Lineitem", "PART_OF", "Order"),
         update_tag=T2,
     )
     assert cat.node("Order").filter(F.col("lastupdated") != T2).count() == 0
@@ -289,6 +289,45 @@ def test_cascade_cleanup(spark, sf_dir):
     # pairs, so the upsert dedups on id — compare distinct ids
     assert remaining.count() == li2.select("li_id").distinct().count()
     assert remaining.filter(F.col("l_orderkey") % 2 == 1).count() == 0
+
+
+def _cascade_schemas(*directions):
+    parent = NodeSchema(label="P", properties={"id": PropertyRef("id")})
+    child = NodeSchema(
+        label="C",
+        properties={"id": PropertyRef("id")},
+        other_relationships=tuple(
+            RelSchema("OF", "P", TargetNodeMatcher({"id": PropertyRef("pid")}), direction=d) for d in directions
+        ),
+    )
+    return parent, child
+
+
+def test_cascade_cleanup_inward_child_edge(spark):
+    """A child that declares its parent edge INWARD is stored parent ->
+    child; the cascade still finds and deletes the stale parent's stale
+    child, and keeps the fresh ones."""
+    parent, child = _cascade_schemas(LinkDirection.INWARD)
+    cat = GraphCatalog(spark)
+    load(cat, parent, spark.createDataFrame([("p1",), ("p2",)], "id string"), T1)
+    kids = spark.createDataFrame([("c1", "p1"), ("c2", "p2")], "id string, pid string")
+    load(cat, child, kids, T1)
+    assert {(r.src_id, r.dst_id) for r in cat.edge("P", "OF", "C").collect()} == {("p1", "c1"), ("p2", "c2")}
+    load(cat, parent, spark.createDataFrame([("p2",)], "id string"), T2)
+    load(cat, child, kids.filter(F.col("id") == "c2"), T2)
+
+    cleanup_cascade(cat, parent_schema=parent, child_schema=child, update_tag=T2)
+    assert [r.id for r in cat.node("P").collect()] == ["p2"]
+    assert [r.id for r in cat.node("C").collect()] == ["c2"]
+    assert [(r.src_id, r.dst_id) for r in cat.edge("P", "OF", "C").collect()] == [("p2", "c2")]
+
+
+def test_cascade_cleanup_needs_one_parent_edge(spark):
+    cat = GraphCatalog(spark)
+    for directions in ((), (LinkDirection.INWARD, LinkDirection.OUTWARD)):
+        parent, child = _cascade_schemas(*directions)
+        with pytest.raises(ValueError, match="declares 0 relationships|declares 2 relationships"):
+            cleanup_cascade(cat, parent_schema=parent, child_schema=child, update_tag=T2)
 
 
 def test_rel_only_cleanup(spark, sf_dir):

@@ -1,8 +1,9 @@
 """Round-3 fixes: session-mode cache hygiene gating, the IVF
 index-build/probe split, fractional as-of tolerance axes, hits_exact
 argument validation, shuffle-partition conf fallback, the host-sized
-driver heap, and the analysis, layout and statistics operators of that
-round. Its multimodal codec tests live in test_multimodal.py."""
+driver heap, and the layout and statistics operators of that round. Its
+multimodal codec tests live in test_multimodal.py, its analysis-DSL tests
+in test_analysis_dsl.py."""
 
 from __future__ import annotations
 
@@ -159,19 +160,6 @@ def test_ivf_assign_matches_inline_assignment(spark):
     assert [(r.vec_id, r.cosine) for r in inline] == [(r.vec_id, r.cosine) for r in prebuilt]
 
 
-def test_analysis_k8s_exposure_cascade(spark):
-    """The k8s-exposure AnalysisJob cascade writes svc/pod/container flags
-    scoped to one cluster tenant, and derives EXPOSE edges with
-    exposure_type (reference analysis/kubernetes/analysis.py:8-150)."""
-    from cartography_spark.plans.inventory_lifecycle import q_analysis_k8s_exposure
-
-    out = q_analysis_k8s_exposure(spark, "/root/testdata/sf0.001")
-    rows = out.collect()
-    assert rows, "expected exposed suppliers at sf0.001"
-    assert all(r.exposure_type == "via_lb_only" and r.exposed_internet for r in rows)
-    assert all(r.n_exposing_lbs >= 1 for r in rows)
-
-
 def test_client_read_sinks_roundtrip(spark):
     from cartography_spark.plans.inventory_meta import q_client_read_sinks
 
@@ -180,23 +168,6 @@ def test_client_read_sinks_roundtrip(spark):
     first = min(rows, key=lambda r: r.n_nationkey)
     assert all(r.first_key == first.n_nationkey for r in rows)
     assert all(r.name_dict == r.name_tuple == r.name_iter for r in rows)
-
-
-def test_analysis_gcp_case_projection_total(spark):
-    """The GCP-style Case/RawCypher projection plus default-fill leaves no
-    null booleans and marks only size>45 parts exposed."""
-    from cartography_spark.plans.inventory_lifecycle import (
-        q_analysis_gcp_ontology_projection,
-    )
-
-    rows = q_analysis_gcp_ontology_projection(spark, "/root/testdata/sf0.001").collect()
-    assert rows
-    assert all(r.ont_public is not None and r.exposed_internet is not None for r in rows)
-    assert all(
-        (r.exposed_internet and r.exposed_internet_type == "direct")
-        or (not r.exposed_internet and r.exposed_internet_type is None)
-        for r in rows
-    )
 
 
 def test_url_canonicalization_edges(spark):
@@ -312,60 +283,6 @@ def test_l_diversity_flags_homogeneous_groups(spark):
     )
     by_nation = {r.c_nationkey: r.l_distinct for r in cells}
     assert by_nation[0] == 3 and by_nation[1] == 1
-
-
-def test_analysis_azure_exposure_backfill_and_antipattern(spark):
-    """The Azure exposure battery (reference analysis/azure/analysis.py:9-90)
-    leaves exposed_internet TOTAL on Suppliers (null-backfill statements),
-    and the scoped LB-EXPOSE job only derives edges for suppliers NOT
-    directly exposed (the negated pattern predicate, :96-117)."""
-    from cartography_spark.plans.inventory_lifecycle import q_analysis_azure_lb_exposure
-
-    rows = q_analysis_azure_lb_exposure(spark, "/root/testdata/sf0.001").collect()
-    assert rows
-    assert all(r.exposed_internet is not None for r in rows), "backfill must be total"
-    for r in rows:
-        if r.lb_exposure_type is not None:
-            # edge only for via-lb-only suppliers, never directly exposed ones
-            assert r.lb_exposure_type == "via_lb_only"
-            assert r.exposure_types == "lb"
-        if r.exposure_types is None:
-            assert r.exposed_internet is False
-
-
-def test_analysis_intune_union_dedups_overlapping_paths(spark):
-    """Three statements deriving the same APPLIES_TO rel type from
-    overlapping match paths (reference intune/analysis.py:7-56) must
-    union-dedup: per-policy device count never exceeds the tenant's
-    device universe, and firstseen stays at the first write's tag."""
-    from cartography_spark.plans.inventory_lifecycle import (
-        T1,
-        q_analysis_intune_policy_union,
-    )
-    from cartography_spark.sources.parquet import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = q_analysis_intune_policy_union(spark, sf).collect()
-    assert rows
-    n_orders = load_table(spark, sf, "orders").count()
-    assert all(r.firstseen == T1 for r in rows)
-    assert all(0 < r.n_devices <= n_orders for r in rows)
-
-
-def test_analysis_identity_var_null_propagation(spark):
-    """Entra Var() projection under OPTIONAL MATCH: linked customers get a
-    non-null _ont_enabled copied from the matched supplier; unlinked
-    customers keep NULL (reference entra/analysis.py:7-24)."""
-    from cartography_spark.plans.inventory_lifecycle import q_analysis_identity_projection
-
-    rows = q_analysis_identity_projection(spark, "/root/testdata/sf0.001").collect()
-    assert rows
-    assert any(r.linked for r in rows) and any(not r.linked for r in rows)
-    for r in rows:
-        if r.linked:
-            assert r.ont_enabled in ("true", "false")
-        else:
-            assert r.ont_enabled is None
 
 
 def test_layout_compaction_preserves_clustering(spark):

@@ -34,30 +34,6 @@ def test_average_precision_perfect_and_empty(spark):
     assert average_precision(neg, score_col="s", label_col="y").head().average_precision is None
 
 
-def test_analysis_aibom_runs_on_idempotent(spark, sf_dir):
-    """One derived RUNS_ON edge per order (linear fan-out, the reference
-    job's shape), and re-running the job leaves the set unchanged (the
-    reference job reruns every sync — the query itself runs it twice)."""
-    from cartography_spark.plans.inventory_lifecycle import q_analysis_aibom_runs_on
-    from cartography_spark.sources.parquet import load_table
-
-    out = q_analysis_aibom_runs_on(spark, sf_dir)
-    got = {(r.regionkey, r.n_runs_on) for r in out.collect()}
-    orders = load_table(spark, sf_dir, "orders")
-    cus = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    want = {
-        (r.n_regionkey, r.n)
-        for r in orders.join(cus, orders.o_custkey == cus.c_custkey)
-        .join(nat, cus.c_nationkey == nat.n_nationkey)
-        .groupBy("n_regionkey")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got == want
-    assert sum(n for _, n in got) == orders.count()  # exactly one edge per order
-
-
 def test_median_of_means_resists_contamination(spark):
     from cartography_spark.operators.profiling import median_of_means_by
 

@@ -17,8 +17,10 @@ A SPEC is one of
 
 Each run materializes through the noop sink (full distributed compute, no
 driver Row materialization). One unmeasured warmup per side, then A,B
-alternating ``--runs`` times each; prints per-run times plus min/median
-per side and the min-vs-min verdict as one JSON line.
+alternating ``--runs`` times each; prints per-run times and Janino compile
+counts plus min/median per side and the min-vs-min verdict as one JSON
+line. A run that compiles is paying for classes the generated-class cache
+evicted (or never held), so its wall time is not plan cost alone.
 """
 
 from __future__ import annotations
@@ -52,14 +54,17 @@ def resolve(spec: str):
     return spec, REGISTRY[spec].spark
 
 
-def _run_once(fn, spark, sf_dir: str) -> float:
-    t0 = time.time()
+def _run_once(fn, spark, sf_dir: str) -> tuple[float, int]:
+    """Wall seconds and Janino compiles of one run."""
+    from cartography_spark.session import codegen_compiles
+
+    c0, t0 = codegen_compiles(spark), time.time()
     fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    dt = time.time() - t0
+    dt, compiles = time.time() - t0, codegen_compiles(spark) - c0
     # reclaim checkpointed RDD blocks before the other side's timing
     gc.collect()
     spark.sparkContext._jvm.System.gc()
-    return dt
+    return dt, compiles
 
 
 def main() -> None:
@@ -85,9 +90,13 @@ def main() -> None:
 
     times_a: list[float] = []
     times_b: list[float] = []
+    compiles_a: list[int] = []
+    compiles_b: list[int] = []
     for i in range(args.runs):
-        times_a.append(_run_once(fn_a, spark, args.sf))
-        times_b.append(_run_once(fn_b, spark, args.sf))
+        for fn, times, compiles in ((fn_a, times_a, compiles_a), (fn_b, times_b, compiles_b)):
+            dt, n = _run_once(fn, spark, args.sf)
+            times.append(dt)
+            compiles.append(n)
         print(
             f"round {i + 1}: {label_a} {times_a[-1]:.2f}s  {label_b} {times_b[-1]:.2f}s",
             file=sys.stderr,
@@ -102,9 +111,11 @@ def main() -> None:
         json.dumps(
             {
                 "a": {"spec": label_a, "runs": [round(t, 3) for t in times_a],
-                      "min": round(min_a, 3), "median": round(statistics.median(times_a), 3)},
+                      "min": round(min_a, 3), "median": round(statistics.median(times_a), 3),
+                      "compiles": compiles_a},
                 "b": {"spec": label_b, "runs": [round(t, 3) for t in times_b],
-                      "min": round(min_b, 3), "median": round(statistics.median(times_b), 3)},
+                      "min": round(min_b, 3), "median": round(statistics.median(times_b), 3),
+                      "compiles": compiles_b},
                 "faster": verdict,
                 "sf_dir": args.sf,
             }

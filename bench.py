@@ -158,7 +158,7 @@ def _prior_timings(sf) -> dict[str, float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from cartography_spark.plans.registry import REGISTRY, all_queries
-    from cartography_spark.session import get_spark, set_session_mode
+    from cartography_spark.session import get_spark
 
     all_queries()
     # `bench.py q1 [q2 ...]` measures only the named registry queries
@@ -168,9 +168,6 @@ def main() -> None:
         unknown = [q for q in only if q not in REGISTRY]
         if unknown:
             sys.exit(f"unknown queries: {unknown}")
-    # bench runs one query at a time and exits: skip the per-query final
-    # materialization barrier (identical results, see session.finalize_iterative)
-    set_session_mode("oneshot")
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,14 +1,14 @@
 """Embedding clustering for corpus curation — distributed Lloyd k-means
-with driver-side centroids.
+in integer arithmetic.
 
-Scale design: the DATA never leaves the cluster; only the centroid matrix
-(k x dim floats — a few KB) round-trips to the driver each iteration.
-- assign step: argmin over k literal centroid arrays, evaluated JVM-side
-  per row (zip_with/aggregate — no UDF, no shuffle).
-- update step: posexplode(vec) -> groupBy(cluster, dim).avg — one
-  map-side-combinable shuffle of at most k*dim groups per iteration.
-At 100 TB this is exactly the MLlib KMeans dataflow, without the RDD
-legacy: iterations scan the (cached) input, shuffles are tiny.
+Scale design: the DATA never leaves the cluster; the centroid table
+(k x dim — a few KB) is broadcast to every round.
+- assign step: one broadcast join of (vec, dim) against the centroid
+  table, one (vec, cid) distance aggregate and one mergeable argmin.
+- update step: groupBy(cluster, dim) floor-mean — one map-side-combinable
+  shuffle of at most k*dim groups per round.
+At 100 TB this is the MLlib KMeans dataflow, without the RDD legacy:
+rounds scan the checkpointed quantized input, shuffles are tiny.
 
 The final assignment powers semantic dedup / cluster-balanced sampling:
 keep-the-canonical-member-per-cluster (SemDeDup-style) falls out as a
@@ -19,68 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _l2_sq(vec_col: F.Column, centroid: list[float]) -> F.Column:
-    lit_c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec_col, lit_c, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def assign_clusters(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """Nearest-centroid assignment (squared L2, ties -> lowest cluster id):
-    adds ``cluster`` and ``dist_sq`` columns. Pure narrow map."""
-    scored = F.array(
-        *[
-            F.struct(_l2_sq(F.col("embedding"), c).alias("d"), F.lit(i).alias("c"))
-            for i, c in enumerate(centroids)
-        ]
-    )
-    best = F.array_min(scored)  # struct compare: (d, c) -> min dist, then min id
-    return emb.withColumn("cluster", best["c"]).withColumn("dist_sq", best["d"])
-
-
-def update_centroids(assigned: DataFrame, k: int, dim: int) -> list[list[float]]:
-    """Elementwise mean per cluster, computed distributed then collected
-    (k*dim rows). Empty clusters keep a zero centroid."""
-    means = (
-        assigned.select("cluster", F.posexplode(F.col("embedding")).alias("dim", "x"))
-        .groupBy("cluster", "dim")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .collect()
-    )
-    cents = [[0.0] * dim for _ in range(k)]
-    for r in means:
-        cents[r["cluster"]][r["dim"]] = r["m"]
-    return cents
-
-
-def kmeans(emb: DataFrame, k: int = 16) -> DataFrame:
-    """Lloyd k-means with deterministic init (the k lowest-id vectors) and
-    a fixed iteration count — reproducible across runs and engines. Returns
-    (vec_id, cluster, dist_sq, keep) where ``keep`` marks the cluster's
-    canonical (lowest-id) member — the SemDeDup keep set."""
-    dim = len(emb.select("embedding").head()[0])
-    init_rows = emb.orderBy("vec_id").limit(k).select("embedding").collect()
-    centroids = [[float(x) for x in r[0]] for r in init_rows]
-    emb = emb.cache()
-    assigned = None
-    for _ in range(2):
-        assigned = assign_clusters(emb, centroids)
-        centroids = update_centroids(assigned, k, dim)
-    assigned = assign_clusters(emb, centroids)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("cluster")
-    return assigned.select(
-        F.col("vec_id"),
-        F.col("cluster"),
-        F.round(F.col("dist_sq"), 6).alias("dist_sq"),
-        (F.col("vec_id") == F.min("vec_id").over(w)).alias("keep"),
-    )
 
 
 def kmeans_exact(

@@ -31,9 +31,10 @@ Scale notes (100 TB / 1000 executors):
   job, so no separate count() action runs per round.
 
 Every operator that persists its static edge side releases the cache
-before returning, so caches don't accumulate across a long session: the
+before returning, so nothing it persisted outlives the query: the
 checkpointed loops through ``fixpoint.fixpoint`` (also when a round
-raises), the lazy ones through ``finalize_iterative``.
+raises), the lazy ones through ``finalize_iterative``, which checkpoints
+the result first.
 """
 
 from __future__ import annotations
@@ -94,8 +95,6 @@ def pagerank_exact(edges: DataFrame, iterations: int = 5) -> DataFrame:
                 (F.lit(base) + F.expr(f"(85 * inflow) div 100")).alias("r"),
             )
         )
-    # session mode: checkpoint bounds the returned plan and the edge cache
-    # is released; oneshot mode skips the extra materialization barrier
     return finalize_iterative(ranks, e)
 
 
@@ -318,8 +317,6 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
         )
         if (r + 1) % 4 == 0 and r + 1 < rounds:
             labels = labels.localCheckpoint(eager=True)
-    # session mode: checkpoint bounds the returned plan and the edge cache
-    # is released; oneshot mode skips the extra materialization barrier
     return finalize_iterative(labels, e)
 
 
@@ -414,17 +411,12 @@ def modularity_exact(edges: DataFrame, labels: DataFrame) -> DataFrame:
     Louvain optimize, computable here as three map-side-combinable
     aggregates + two label joins: no pairwise term ever materializes.
 
-    ``labels``: (node, label) as returned by :func:`label_propagation`.
+    ``labels``: (node, label) as returned by :func:`label_propagation`,
+    which checkpoints it, so its three references below (both intra sides
+    and the community-degree rollup) do not re-run the round loop.
     """
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     two_m = edges.agg(F.count("*").cast("long").alias("two_m"))
-    # labels is referenced three times below (both intra sides + the
-    # community-degree rollup); when the caller hands over a LAZY iterative
-    # plan (LPA in oneshot mode) each reference would re-execute the whole
-    # round loop. The lazy localCheckpoint runs it once per action — same
-    # barrier class as the markov fix (r8 opt §27/§29); linear (node,
-    # label) rows, strictly cheaper than 3x the LPA loop at any scale.
-    labels = labels.localCheckpoint(eager=False)
     lab_src = labels.select(F.col("node").alias("src"), F.col("label").alias("__cs"))
     lab_dst = labels.select(F.col("node").alias("dst"), F.col("label").alias("__cd"))
     intra = (

@@ -1534,9 +1534,6 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDC_LOG_CACHE: dict[tuple[int, str], str] = {}
-
-
 @query(
     "streaming_cdc_latest_state",
     oracle="""
@@ -1573,6 +1570,9 @@ def q_streaming_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
+    from pyspark import SparkFiles
+
+    from cartography_spark.session import memo
     from cartography_spark.sources.parquet import load_table
     from cartography_spark.streaming.events import cdc_latest_state, run_available_now
 
@@ -1590,16 +1590,16 @@ def q_streaming_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("D").alias("op"),
     )
     log = ins.unionByName(upd).unionByName(dele)
-    # write the synthesized changelog ONCE per (session, sf_dir): bench's
-    # best-of-5 and the oracle gate re-invoke this builder, and a fresh
-    # mkdtemp per call both leaks /tmp disk and folds the write into the
-    # measured query time
-    cache_key = (id(spark), sf_dir)
-    if cache_key not in _CDC_LOG_CACHE:
-        path = tempfile.mkdtemp(prefix="cdc_log_")
+    # write the synthesized changelog ONCE per (application, sf_dir): bench's
+    # best-of-5 and the oracle gate re-invoke this builder, and a write per
+    # call would fold into the measured query time. The directory sits under
+    # the driver's SparkFiles root, so it goes when the context stops.
+    def write_log() -> str:
+        path = tempfile.mkdtemp(prefix="cdc_log_", dir=SparkFiles.getRootDirectory())
         log.write.mode("overwrite").parquet(path)
-        _CDC_LOG_CACHE[cache_key] = path
-    path = _CDC_LOG_CACHE[cache_key]
+        return path
+
+    path = memo(spark, ("cdc_log", sf_dir), write_log)
     stream = spark.readStream.schema(log.schema).parquet(path)
     state = cdc_latest_state(stream, "c_custkey")
     name = f"stream_cdc_{uuid.uuid4().hex[:8]}"

@@ -37,6 +37,7 @@ from cartography_spark.operators.graph import (
     triangle_count,
 )
 from cartography_spark.plans.registry import query
+from cartography_spark.session import finalize_iterative
 from cartography_spark.sources.parquet import load_table as T
 
 PAGERANK_ITERATIONS = 5
@@ -521,7 +522,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = symmetrize(_trade_edges(spark, sf_dir), "a", "b")
     edges.persist()
     labels = label_propagation(edges, rounds=LPA_ROUNDS)
-    return modularity_exact(edges, labels)
+    return finalize_iterative(modularity_exact(edges, labels), edges)
 
 
 def _ppr_oracle() -> str:

@@ -20,22 +20,18 @@ from cartography_spark.operators.closure import transitive_closure
 from cartography_spark.operators.upsert import load
 from cartography_spark.plans.registry import query
 from cartography_spark.schema import NodeSchema, PropertyRef, RelSchema, TargetNodeMatcher
+from cartography_spark.session import memo
 from cartography_spark.sources.parquet import load_table
 
 T1, T2 = 100, 200
 
-_BASE_CACHE: dict[tuple[int, str], GraphCatalog] = {}
-
 
 def base_catalog(spark: SparkSession, sf_dir: str) -> GraphCatalog:
-    """Build (once per session+sf_dir) the FIXTURES §B catalog at T1 and
-    hand out cheap copies."""
-    key = (id(spark), sf_dir)
-    if key not in _BASE_CACHE:
-        from cartography_spark.plans.graph_fixture import build_catalog
+    """Build (once per application and sf_dir) the FIXTURES §B catalog at
+    T1 and hand out cheap copies."""
+    from cartography_spark.plans.graph_fixture import build_catalog
 
-        _BASE_CACHE[key] = build_catalog(spark, sf_dir, T1)
-    return _BASE_CACHE[key].copy()
+    return memo(spark, ("base_catalog", sf_dir), lambda: build_catalog(spark, sf_dir, T1)).copy()
 
 
 def _supplier_batches(spark: SparkSession, sf_dir: str):

@@ -18,6 +18,7 @@ from cartography_spark.operators import multimodal as mm
 from cartography_spark.operators import similarity as sim
 from cartography_spark.operators import textstats as ts
 from cartography_spark.plans.registry import query
+from cartography_spark.session import memo
 from cartography_spark.sources.parquet import load_table
 
 KCENTER_K = 5
@@ -434,32 +435,29 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # IVF index-build/probe split: quantizer training AND stored-vector cell
 # assignment depend only on the corpus (sf_dir) and training params, so both
-# are built ONCE and reused by every probe — exactly how production IVF
-# works (inverted lists are built at index time, never per query). The
-# k x dim centroid table is driver-small (16 x 64 doubles): collected and
-# replayed as a literal broadcast frame (plain Python rows, so it survives
-# session restarts). The assigned inverted lists are corpus-sized: kept as
-# a localCheckpointed frame keyed by applicationId (rebuilt on a new
-# session — same deterministic values).
-_IVF_CENTROID_CACHE: dict[str, list] = {}
-_IVF_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# are built ONCE per application and reused by every probe — exactly how
+# production IVF works (inverted lists are built at index time, never per
+# query). The k x dim centroid table is driver-small (16 x 64 doubles):
+# collected and replayed as a literal broadcast frame. The assigned inverted
+# lists are corpus-sized: kept as a localCheckpointed frame.
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from cartography_spark.operators.clustering import trained_centroid_frame
 
-    if sf_dir not in _IVF_CENTROID_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _IVF_CENTROID_CACHE[sf_dir] = [
+    emb = load_table(spark, sf_dir, "embeddings")
+
+    def train() -> list:
+        return [
             (r["cid"], list(r["cv"]))
             for r in trained_centroid_frame(emb, sample_mod=10).collect()
         ]
-    cents = spark.createDataFrame(_IVF_CENTROID_CACHE[sf_dir], "cid bigint, cv array<double>")
-    akey = (spark.sparkContext.applicationId, sf_dir)
-    if akey not in _IVF_ASSIGN_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _IVF_ASSIGN_CACHE[akey] = sim.ivf_assign(emb, cents).localCheckpoint(eager=True)
-    return cents, _IVF_ASSIGN_CACHE[akey]
+
+    rows = memo(spark, ("ivf_centroids", sf_dir), train)
+    cents = spark.createDataFrame(rows, "cid bigint, cv array<double>")
+
+    def assign() -> DataFrame:
+        return sim.ivf_assign(emb, cents).localCheckpoint(eager=True)
+
+    return cents, memo(spark, ("ivf_assign", sf_dir), assign)
 
 
 @query(

@@ -282,9 +282,7 @@ def q_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "canonical keep flag. Runs the integer-exact operator "
     "(clustering.kmeans_exact: bigint micro-unit quantization, "
     "floor-division centroid updates) so the whole iterative algorithm is "
-    "hash-identical to the unrolled-CTE oracle; the float operator "
-    "(clustering.kmeans) keeps the same dataflow for callers that want "
-    "true float means.",
+    "hash-identical to the unrolled-CTE oracle.",
     tags=("llm", "similarity"),
 )
 def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:

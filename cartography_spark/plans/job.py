@@ -45,7 +45,8 @@ CHECKPOINT_LEAF_THRESHOLD = 12
 # their session, so id() cannot be recycled while an entry is live); an
 # external dropTempView of an n_*/e_* view under this function's feet is
 # not detected — verifying via catalog.tableExists would re-pay the py4j
-# round-trip per view per statement this memo exists to remove.
+# round-trip per view per statement this memo exists to remove. Not a
+# session.memo: it records which frame a view holds and is overwritten.
 _VIEW_STATE: dict[tuple[str, int, str], DataFrame] = {}
 
 

@@ -8,6 +8,12 @@ pass generates ~540 classes, the inventory queries ~250), not Spark's 100,
 and generated class names leave out the whole-stage codegen stage id, so a
 class is compiled once per session instead of once per query that follows
 an eviction or numbers the same pipeline differently.
+
+State that outlives a query has one lifetime rule. A frame an operator
+persists is released before its query returns (``finalize_iterative``).
+A value deliberately reused by later queries is kept per Spark application
+through ``memo``, and a directory written for such a value sits under the
+driver's ``SparkFiles`` root, which ``SparkContext.stop`` deletes.
 """
 
 from __future__ import annotations
@@ -21,44 +27,39 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
-# Engine session mode. "session" (default) = long-lived process running many
-# queries: iterative operators materialize their final result and release
-# their iteration caches before returning (cache hygiene — nothing leaks into
-# the next query). "oneshot" = bench / single-query runs: the final
-# materialization barrier (~1.5 s/query at sf0.1) is skipped and the lazy
-# plan is returned; the caller's single action consumes the still-persisted
-# iteration caches and the process exits. Identical results either way.
-_SESSION_MODE = os.environ.get("SPARK_GRAFT_MODE", "session")
-
-
-def set_session_mode(mode: str) -> None:
-    global _SESSION_MODE
-    if mode not in ("session", "oneshot"):
-        raise ValueError(f"unknown session mode {mode!r}")
-    _SESSION_MODE = mode
-
-
-def session_mode() -> str:
-    return _SESSION_MODE
-
-
 def finalize_iterative(df, *caches):
-    """Close out an iterative operator: in session mode, checkpoint the
-    result (bounds the returned plan) and unpersist the iteration caches;
-    in oneshot mode, hand back the lazy plan and leave the caches warm."""
-    if _SESSION_MODE == "session":
-        df = df.localCheckpoint(eager=True)
-        for c in caches:
-            c.unpersist()
+    """Close out an iterative operator: checkpoint the result (bounds the
+    returned plan) and unpersist the iteration caches, so nothing it
+    persisted outlives the query."""
+    df = df.localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist()
     return df
+
+
+# Values built by one query and reused by later queries of the same Spark
+# application (lazy scan plans, fixture catalogs, index builds, written
+# inputs): (applicationId, key) -> value. A restarted context never sees
+# another context's values.
+_MEMO: dict[tuple[str, Any], Any] = {}
+
+
+def memo(spark: SparkSession, key: Any, build: Callable[[], Any]) -> Any:
+    """The value stored under ``key`` for this Spark application, calling
+    ``build()`` to make it on the first request."""
+    k = (spark.sparkContext.applicationId, key)
+    if k not in _MEMO:
+        _MEMO[k] = build()
+    return _MEMO[k]
 
 
 def shuffle_partition_count(spark: SparkSession) -> int:
     """``spark.sql.shuffle.partitions`` as an int, falling back to
     ``sparkContext.defaultParallelism`` when the conf is non-numeric
-    (e.g. Databricks sets it to ``"auto"`` under AQE).
+    (e.g. Databricks sets it to ``"auto"`` under AQE). Unset, it reads
+    Spark's default: an explicit fallback would be type-checked and raise.
     """
-    raw = spark.conf.get("spark.sql.shuffle.partitions", "")
+    raw = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         return int(raw)
     except (TypeError, ValueError):

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cartography_spark.session import memo
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -26,40 +28,31 @@ TPCH_TABLES = (
 )
 
 
-# Lazy-DataFrame memo per (application, sf_dir, table). `spark.read.parquet`
-# re-lists the directory and re-reads parquet footers on EVERY call (~0.1 s
-# per call locally); multi-table query builders and the 23-fact rules corpus
-# paid that dozens of times per plan build. The memo holds only the LAZY
-# scan plan — no rows, no persisted blocks: every action still computes from
-# the parquet files (same contract as Spark's own per-session file-index
-# cache, guide §6 "file listing"). Keyed by applicationId so a restarted
-# context never sees another context's plans.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table; normalizes the events table's NANOS
     timestamps (illegal for Spark's vectorized parquet reader) to a proper
     TimestampType column via integer division — ``ts DIV 1000`` keeps exact
     long arithmetic (a double divide would lose microseconds at 1.7e18 ns).
-    """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    got = _TABLE_MEMO.get(key)
-    if got is not None:
-        return got
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = dict(raw.dtypes)["ts"]
-        if ts_type == "bigint":
-            df = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        else:
-            # already a physical timestamp (possibly NTZ); session tz is UTC
-            # so the cast is value-preserving and gives downstream windows/
-            # watermarks the TimestampType they expect
-            df = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_MEMO[key] = df
-    return df
 
+    The lazy frame is memoized per application (``session.memo``):
+    ``spark.read.parquet`` re-lists the directory and re-reads parquet
+    footers on every call (~0.1 s locally), which multi-table query builders
+    and the 23-fact rules corpus paid dozens of times per plan build. Only
+    the lazy scan plan is kept — no rows, no persisted blocks: every action
+    still computes from the parquet files (the same contract as Spark's own
+    per-session file-index cache).
+    """
+    return memo(spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name))
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name != "events":
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    if dict(raw.dtypes)["ts"] == "bigint":
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    # already a physical timestamp (possibly NTZ); session tz is UTC so the
+    # cast is value-preserving and gives downstream windows/watermarks the
+    # TimestampType they expect
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))

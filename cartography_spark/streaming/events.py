@@ -18,16 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cartography_spark.session import memo, shuffle_partition_count
+
 WATERMARK = "2 hours"
 SKETCH_WINDOW = "1 hour"
 
-# (applicationId, path) -> (probed ts type, resolved stream dir); see
-# read_events_stream — setup metadata only, never row data
-_STREAM_SETUP_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 # applicationId -> {source path: bytes on disk}; filled by the probe in
 # read_events_stream, consumed by run_available_now to size the stream's
-# state-store partition count from the input (setup metadata only).
+# state-store partition count from the input (setup metadata only). Not a
+# session.memo: it accumulates every events path the application probed.
 _SOURCE_BYTES: dict[str, dict[str, int]] = {}
 
 # Source bytes per state-store partition (_stream_state_partitions).
@@ -77,8 +76,6 @@ def _stream_state_partitions(spark: SparkSession) -> int | None:
     state below a deliberately large configured ceiling (the actual
     per-micro-batch commit-overhead win on clusters where shuffle
     partitions >> cores) but never single-tasks the state compute."""
-    from cartography_spark.session import shuffle_partition_count
-
     sizes = _SOURCE_BYTES.get(spark.sparkContext.applicationId)
     if not sizes:
         return None
@@ -92,41 +89,41 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """readStream over the events parquet path (file or directory);
     normalizes the NANOS timestamp exactly like the batch loader
     (sources/parquet.py)."""
-    import os
-    import tempfile
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # probe the physical type with a batch read so the stream schema matches
-    # whichever generation of the fixture is on disk (bigint nanos vs
-    # timestamp[us]). Memoized per (application, path): the probe is a
-    # directory listing + footer read that every streaming query repaid
-    # (~0.1 s each); the fixture cannot change under a running app. The
-    # single-file symlink dir is likewise reused — the lazy probe/setup
-    # only, never any row data.
-    key = (spark.sparkContext.applicationId, path)
-    cached = _STREAM_SETUP_CACHE.get(key)
-    if cached is None:
-        probe = spark.read.parquet(path)
-        ts_type = dict(probe.dtypes)["ts"]
-        stream_path = path
-        if os.path.isfile(path):
-            # the file stream source requires a directory: expose the single
-            # file through a symlink dir (read-only testdata stays untouched)
-            d = tempfile.mkdtemp(prefix="events_stream_")
-            os.symlink(os.path.abspath(path), os.path.join(d, os.path.basename(path)))
-            stream_path = d
-        cached = (ts_type, stream_path)
-        _STREAM_SETUP_CACHE[key] = cached
-        _SOURCE_BYTES.setdefault(spark.sparkContext.applicationId, {})[path] = _path_bytes(path)
-    ts_type, path = cached
+    ts_type, stream_path = memo(spark, ("events_stream", path), lambda: _stream_setup(spark, path))
     schema = (
         f"event_id bigint, ts {ts_type}, user_id bigint, event_type string, "
         "value double, props string"
     )
-    raw = spark.readStream.schema(schema).format("parquet").load(path)
+    raw = spark.readStream.schema(schema).format("parquet").load(stream_path)
     if ts_type == "bigint":
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _stream_setup(spark: SparkSession, path: str) -> tuple[str, str]:
+    """(physical ts type, stream directory) of an events path, memoized per
+    application by read_events_stream: the probe is a directory listing +
+    footer read that every streaming query repaid (~0.1 s each), and the
+    fixture cannot change under a running app."""
+    import os
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    # probe the physical type with a batch read so the stream schema matches
+    # whichever generation of the fixture is on disk (bigint nanos vs
+    # timestamp[us])
+    ts_type = dict(spark.read.parquet(path).dtypes)["ts"]
+    stream_path = path
+    if os.path.isfile(path):
+        # the file stream source requires a directory: expose the single
+        # file through a symlink dir (read-only testdata stays untouched)
+        # under the driver's SparkFiles root, which goes when the context stops
+        stream_path = tempfile.mkdtemp(prefix="events_stream_", dir=SparkFiles.getRootDirectory())
+        os.symlink(os.path.abspath(path), os.path.join(stream_path, os.path.basename(path)))
+    _SOURCE_BYTES.setdefault(spark.sparkContext.applicationId, {})[path] = _path_bytes(path)
+    return ts_type, stream_path
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:

@@ -1,6 +1,7 @@
-"""Smoke tests: every registry query runs at sf0.001 and returns a stable,
-non-degenerate schema. (Value-level correctness is covered by the DuckDB
-oracle harness — tools/oracle_check.py — and the driver's gate.)"""
+"""Smoke tests: every registry query runs at sf0.001, returns a stable,
+non-degenerate schema, and leaves nothing in Spark's cache manager.
+(Value-level correctness is covered by the DuckDB oracle harness —
+tools/oracle_check.py — and the driver's gate.)"""
 
 from __future__ import annotations
 
@@ -14,10 +15,14 @@ all_queries()
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_runs(spark, sf_dir, name):
     spec = REGISTRY[name]
+    spark.catalog.clearCache()
     df = spec.spark(spark, sf_dir)
     assert df.columns, f"{name}: no columns"
     rows = df.limit(5).collect()
     assert rows is not None
+    # every frame a query persists is released before it returns
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), f"{name}: left a cached frame"
 
 
 def test_entry_contract(spark):

@@ -1,22 +1,16 @@
-"""Round-3 fixes: session-mode cache hygiene gating, the IVF
-index-build/probe split, fractional as-of tolerance axes, hits_exact
-argument validation, shuffle-partition conf fallback, the host-sized
-driver heap, and the layout and statistics operators of that round. Its
-multimodal codec tests live in test_multimodal.py, its analysis-DSL tests
-in test_analysis_dsl.py."""
+"""Round-3 fixes: the IVF index-build/probe split, fractional as-of
+tolerance axes, hits_exact argument validation, shuffle-partition conf
+fallback, the host-sized driver heap, and the layout and statistics
+operators of that round. Its multimodal codec tests live in
+test_multimodal.py, its analysis-DSL tests in test_analysis_dsl.py, its
+iteration-cache release test in test_session_state.py."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from cartography_spark.session import (
-    driver_memory,
-    finalize_iterative,
-    session_mode,
-    set_session_mode,
-    shuffle_partition_count,
-)
+from cartography_spark.session import driver_memory, shuffle_partition_count
 
 
 def test_shuffle_partition_count_numeric(spark):
@@ -64,52 +58,6 @@ def test_driver_memory_override(tmp_path, monkeypatch):
     meminfo.write_text("MemTotal:       16479424 kB\n")
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert driver_memory(str(meminfo)) == "2g"
-
-
-def test_set_session_mode_rejects_unknown():
-    with pytest.raises(ValueError):
-        set_session_mode("turbo")
-
-
-def test_session_mode_gates_finalize(spark):
-    df = spark.range(10)
-    cache = spark.range(5).persist()
-    try:
-        assert session_mode() == "session"
-        out = finalize_iterative(df, cache)
-        # session mode: result checkpointed (plan becomes an RDD scan) and
-        # the iteration cache released
-        assert "LogicalRDD" in out._jdf.queryExecution().optimizedPlan().toString()
-        assert not cache.is_cached
-        cache2 = spark.range(5).persist()
-        set_session_mode("oneshot")
-        out2 = finalize_iterative(df, cache2)
-        assert out2 is df  # lazy plan returned untouched
-        assert cache2.is_cached  # cache left warm for the single consumer
-        cache2.unpersist()
-    finally:
-        set_session_mode("session")
-
-
-def test_graph_results_identical_across_modes(spark):
-    from cartography_spark.operators.graph import label_propagation, pagerank_exact, symmetrize
-
-    edges = symmetrize(
-        spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (4, 5)], "src long, dst long"
-        )
-    )
-    try:
-        set_session_mode("session")
-        pr_session = {(r.node, r.r) for r in pagerank_exact(edges, iterations=3).collect()}
-        lp_session = {(r.node, r.label) for r in label_propagation(edges, rounds=2).collect()}
-        set_session_mode("oneshot")
-        pr_oneshot = {(r.node, r.r) for r in pagerank_exact(edges, iterations=3).collect()}
-        lp_oneshot = {(r.node, r.label) for r in label_propagation(edges, rounds=2).collect()}
-    finally:
-        set_session_mode("session")
-    assert pr_session == pr_oneshot
-    assert lp_session == lp_oneshot
 
 
 def test_hits_exact_rejects_non_positive_iterations(spark):

@@ -20,7 +20,10 @@ driver Row materialization). One unmeasured warmup per side, then A,B
 alternating ``--runs`` times each; prints per-run times and Janino compile
 counts plus min/median per side and the min-vs-min verdict as one JSON
 line. A run that compiles is paying for classes the generated-class cache
-evicted (or never held), so its wall time is not plan cost alone.
+evicted (or never held), so its wall time is not plan cost alone. A run
+that leaves a persisted frame in Spark's cache manager stops the A/B with
+an error naming its spec, since the next run would time a read of that
+frame instead of the plan.
 """
 
 from __future__ import annotations
@@ -54,13 +57,16 @@ def resolve(spec: str):
     return spec, REGISTRY[spec].spark
 
 
-def _run_once(fn, spark, sf_dir: str) -> tuple[float, int]:
-    """Wall seconds and Janino compiles of one run."""
+def _run_once(label: str, fn, spark, sf_dir: str) -> tuple[float, int]:
+    """Wall seconds and Janino compiles of one run. Exits if the run leaves
+    a persisted frame behind: the next run would time a read of it."""
     from cartography_spark.session import codegen_compiles
 
     c0, t0 = codegen_compiles(spark), time.time()
     fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
     dt, compiles = time.time() - t0, codegen_compiles(spark) - c0
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        sys.exit(f"{label}: the run left a persisted frame in the cache manager")
     # reclaim checkpointed RDD blocks before the other side's timing
     gc.collect()
     spark.sparkContext._jvm.System.gc()
@@ -78,23 +84,25 @@ def main() -> None:
     label_a, fn_a = resolve(args.spec_a)
     label_b, fn_b = resolve(args.spec_b)
 
-    from cartography_spark.session import get_spark, set_session_mode
+    from cartography_spark.session import get_spark
 
-    set_session_mode("oneshot")
     spark = get_spark("ab_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # one unmeasured warmup each (JIT + parquet footer caches), in A,B order
-    _run_once(fn_a, spark, args.sf)
-    _run_once(fn_b, spark, args.sf)
+    _run_once(label_a, fn_a, spark, args.sf)
+    _run_once(label_b, fn_b, spark, args.sf)
 
     times_a: list[float] = []
     times_b: list[float] = []
     compiles_a: list[int] = []
     compiles_b: list[int] = []
     for i in range(args.runs):
-        for fn, times, compiles in ((fn_a, times_a, compiles_a), (fn_b, times_b, compiles_b)):
-            dt, n = _run_once(fn, spark, args.sf)
+        for label, fn, times, compiles in (
+            (label_a, fn_a, times_a, compiles_a),
+            (label_b, fn_b, times_b, compiles_b),
+        ):
+            dt, n = _run_once(label, fn, spark, args.sf)
             times.append(dt)
             compiles.append(n)
         print(

@@ -22,10 +22,9 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from cartography_spark.plans.registry import REGISTRY, all_queries
-    from cartography_spark.session import get_spark, set_session_mode
+    from cartography_spark.session import get_spark
 
     all_queries()
-    set_session_mode("oneshot")
     spark = get_spark("explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.maxMetadataStringLength", "1000")

@@ -29,7 +29,6 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cartography_spark.session import run_concurrently
 
@@ -135,23 +134,6 @@ class GraphCatalog:
                 sl, rl, dl = name.split("__")
                 cat.edges[(sl, rl, dl)] = df
         return cat
-
-    # -- test helpers (ports of reference integration-test asserts,
-    #    tests/integration/util.py:11-80) -----------------------------------
-
-    def check_rels(
-        self,
-        src_label: str,
-        src_attr: str,
-        dst_label: str,
-        dst_attr: str,
-        rel: str,
-    ) -> set[tuple]:
-        e = self.edge(src_label, rel, dst_label).select("src_id", "dst_id")
-        s = self.node(src_label).select(F.col("id").alias("src_id"), F.col(src_attr).alias("_src_attr"))
-        d = self.node(dst_label).select(F.col("id").alias("dst_id"), F.col(dst_attr).alias("_dst_attr"))
-        joined = e.join(s, "src_id").join(d, "dst_id").select("_src_attr", "_dst_attr")
-        return {tuple(r) for r in joined.collect()}
 
 
 def _each_path(spark: SparkSession, calls: list[tuple[str, Callable[[str], Any]]]) -> list[Any]:

@@ -1,10 +1,6 @@
 """Schema introspection: reflection over declared NodeSchema/RelSchema
 objects — the port of cartography/models/introspection.py:160-237
 (``Property`` / ``Node`` / ``Relationship`` records used by docs tooling).
-
-Spark-native addition: ``catalog_summary`` reflects the LIVE catalog
-(labels, row counts, columns) rather than only the declared schemas, since
-our tables are schema-on-read DataFrames.
 """
 
 from __future__ import annotations
@@ -13,7 +9,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from cartography_spark.catalog import GraphCatalog
 from cartography_spark.schema import NodeSchema
 
 
@@ -80,15 +75,3 @@ def schemas_to_df(spark, schemas: list[NodeSchema]) -> DataFrame:
         rows, "label string, property string, source_column string, from_params boolean"
     )
 
-
-def catalog_summary(catalog: GraphCatalog) -> DataFrame:
-    """Live-catalog reflection: (kind, name, n_rows, n_cols, columns)."""
-    spark = catalog.spark
-    rows = []
-    for label, df in sorted(catalog.nodes.items()):
-        rows.append(("node", label, df.count(), len(df.columns), ",".join(df.columns)))
-    for (sl, rl, dl), df in sorted(catalog.edges.items()):
-        rows.append(("edge", f"{sl}-[{rl}]->{dl}", df.count(), len(df.columns), ",".join(df.columns)))
-    return spark.createDataFrame(
-        rows, "kind string, name string, n_rows long, n_cols int, columns string"
-    )

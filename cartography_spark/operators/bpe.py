@@ -152,11 +152,11 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 4) -> DataFrame:
     )
 
 
-def _candidate_pieces(words: DataFrame, max_piece_len: int) -> DataFrame:
+def _candidate_pieces(words: DataFrame) -> DataFrame:
     """(w, s, e, piece) for every 0-indexed span [s, e) of length
-    2..max_piece_len in each distinct word. Both sequence() bounds are
+    2..4 in each distinct word. Both sequence() bounds are
     guaranteed ascending: s <= length-2 and e ranges from s+2 up to
-    least(s+max_piece_len, length) >= s+2."""
+    least(s+4, length) >= s+2."""
     return (
         words.filter(F.length("w") >= 2)
         .select(
@@ -164,7 +164,7 @@ def _candidate_pieces(words: DataFrame, max_piece_len: int) -> DataFrame:
             F.explode(
                 F.expr(
                     "flatten(transform(sequence(0, length(w) - 2),"
-                    f" s -> transform(sequence(s + 2, least(s + {max_piece_len}, length(w))),"
+                    " s -> transform(sequence(s + 2, least(s + 4, length(w))),"
                     "       e -> named_struct('s', s, 'e', e))))"
                 )
             ).alias("se"),
@@ -201,7 +201,7 @@ def subword_viterbi_segment(docs: DataFrame, min_count: int = 20) -> DataFrame:
         F.explode(F.expr(f"regexp_extract_all(lower(text), '{_WORD_RE}', 0)")).alias("w")
     )
     distinct_words = words.distinct()
-    pieces = _candidate_pieces(distinct_words, 4)
+    pieces = _candidate_pieces(distinct_words)
     vocab = (
         pieces.groupBy("piece")
         .agg(F.count(F.lit(1)).alias("n_positions"))

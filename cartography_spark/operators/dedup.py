@@ -97,14 +97,9 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def _ngram_jaccard_dense(
-    sh: DataFrame,
-    vocab: DataFrame,
-    nwords: int,
-    threshold: float,
-    id_col: str,
-    block_cols: tuple[str, ...],
+    sh: DataFrame, vocab: DataFrame, nwords: int, threshold: float
 ) -> DataFrame:
-    """Strategy D of :func:`ngram_jaccard_pairs`: blocked doc×doc join with
+    """Strategy D of :func:`ngram_jaccard_pairs`: ``lang``-blocked doc×doc join with
     the exact popcount jaccard evaluated in-stream over per-doc shingle
     bitsets stored as ``nwords`` SCALAR long columns (scalar bitwise ops
     whole-stage-codegen; array element_at/HOF forms measured 2.7 µs/pair
@@ -116,19 +111,19 @@ def _ngram_jaccard_dense(
     fits the broadcast budget."""
     ided = sh.join(F.broadcast(vocab.select("shingle", "__sid")), "shingle")
     word_bits = ided.groupBy(
-        id_col, *block_cols, (F.col("__sid") / 64).cast("int").alias("__w")
+        "doc_id", "lang", (F.col("__sid") / 64).cast("int").alias("__w")
     ).agg(
         F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__sid % 64 AS INT))")).alias("__bits"),
         F.count("*").alias("__n"),
     )
     sets = (
-        word_bits.groupBy(id_col, *block_cols)
+        word_bits.groupBy("doc_id", "lang")
         .agg(
             F.map_from_entries(F.collect_list(F.struct("__w", "__bits"))).alias("__m"),
             F.sum("__n").alias("__sz"),
         )
         .select(
-            id_col, *block_cols, "__sz",
+            "doc_id", "lang", "__sz",
             *[
                 F.coalesce(F.col("__m")[j], F.lit(0).cast("bigint")).alias(f"__w{j}")
                 for j in range(nwords)
@@ -138,18 +133,16 @@ def _ngram_jaccard_dense(
         .localCheckpoint(eager=False)
     )
     a = sets.select(
-        F.col(id_col).alias("a"), F.col("__sz").alias("__sza"),
+        F.col("doc_id").alias("a"), F.col("__sz").alias("__sza"),
         *[F.col(f"__w{j}").alias(f"__a{j}") for j in range(nwords)],
-        *[F.col(c).alias(f"__ba_{c}") for c in block_cols],
+        F.col("lang").alias("__ba_lang"),
     )
     b = sets.select(
-        F.col(id_col).alias("b"), F.col("__sz").alias("__szb"),
+        F.col("doc_id").alias("b"), F.col("__sz").alias("__szb"),
         *[F.col(f"__w{j}").alias(f"__b{j}") for j in range(nwords)],
-        *[F.col(c).alias(f"__bb_{c}") for c in block_cols],
+        F.col("lang").alias("__bb_lang"),
     )
-    on = F.col("a") < F.col("b")
-    for c in block_cols:
-        on = on & (F.col(f"__ba_{c}") == F.col(f"__bb_{c}"))
+    on = (F.col("a") < F.col("b")) & (F.col("__ba_lang") == F.col("__bb_lang"))
     size_ok = F.least("__sza", "__szb") >= F.lit(threshold) * F.greatest("__sza", "__szb")
     inter = F.lit(0).cast("bigint")
     for j in range(nwords):
@@ -254,7 +247,7 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
             n_docs * (nwords + 3) * 8 <= DENSE_JACCARD_BROADCAST_BYTES
             and cross_pairs * nwords <= inv_index_pairs
         ):
-            return _ngram_jaccard_dense(sh, vocab, nwords, JACCARD_THRESHOLD, "doc_id", ("lang",))
+            return _ngram_jaccard_dense(sh, vocab, nwords, JACCARD_THRESHOLD)
 
     w = Window.partitionBy("doc_id", "lang").orderBy("__sid")
     wsz = Window.partitionBy("doc_id", "lang")

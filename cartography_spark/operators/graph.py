@@ -661,18 +661,17 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     )
 
 
-def _transition_micros(
-    trans, from_col: str, to_col: str, count_col: str
-):
-    """(states, P) for a finite chain from observed transition counts:
+def _transition_micros(trans):
+    """(states, P) for a finite chain from observed transition counts
+    ``(prev_type, event_type, n_transitions)``:
     row-stochastic P quantized once to micros from exact counts, with
     the standard dangling self-loop (p = 1e6) for states that never
     transition out. Shared by markov_stationary and markov_entropy_rate
     so the quantization contract lives in ONE body (the ks/psi _by
     lesson from ADVICE r7)."""
     t = trans.select(
-        F.col(from_col).alias("i"), F.col(to_col).alias("j"),
-        F.col(count_col).cast("long").alias("c"),
+        F.col("prev_type").alias("i"), F.col("event_type").alias("j"),
+        F.col("n_transitions").cast("long").alias("c"),
     )
     # Domain-collapse barrier (r8 opt): t is <= k^2 rows on the event-type
     # domain, but every downstream reference (states x2, out_tot, p_obs,
@@ -733,7 +732,7 @@ def markov_stationary(trans: DataFrame) -> DataFrame:
     join+agg steps run on those bounded broadcast frames. The only
     data-sized work is whatever built `trans` upstream.
     """
-    states, p_full = _transition_micros(trans, "prev_type", "event_type", "n_transitions")
+    states, p_full = _transition_micros(trans)
     return _stationary_iterate(states, p_full, N_ITER)
 
 
@@ -800,7 +799,7 @@ def markov_entropy_rate(trans: DataFrame) -> DataFrame:
     frame here is k or k^2 rows on broadcast joins; the only data-scale
     work built `trans` upstream.
     """
-    states, p_full = _transition_micros(trans, "prev_type", "event_type", "n_transitions")
+    states, p_full = _transition_micros(trans)
     pi = _stationary_iterate(states, p_full, N_ITER)
     lnq = F.round(
         F.lit(1000.0) * F.log(F.col("p").cast("double") / F.lit(1_000_000.0))

@@ -35,10 +35,10 @@ from pyspark.sql import functions as F
 SIG_SCALE = 1_000_000  # fixed-point scale for weights and the link output
 
 
-def _fld(a: Column, b: int) -> Column:
-    """Exact floor division by a positive constant, portable across
-    truncated-'%' engines (see module docstring)."""
-    bb = F.lit(b).cast("long")
+def _fld(a: Column) -> Column:
+    """Exact floor of ``a / 4``, portable across truncated-'%' engines
+    (see module docstring)."""
+    bb = F.lit(4).cast("long")
     pmod = ((a % bb) + bb) % bb
     return (a - pmod) / bb
 
@@ -50,7 +50,7 @@ def hard_sigmoid_micro(z: Column) -> Column:
         F.lit(0).cast("long"),
         F.least(
             F.lit(SIG_SCALE).cast("long"),
-            (_fld(z.cast("long"), 4) + SIG_SCALE // 2).cast("long"),
+            (_fld(z.cast("long")) + SIG_SCALE // 2).cast("long"),
         ),
     )
 

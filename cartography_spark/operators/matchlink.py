@@ -4,9 +4,7 @@ Reference: ``UNWIND $DictList MATCH (from:A {k}) MATCH (to:B {k})
 MERGE (from)-[r:REL]->(to)`` — querybuilder.py:1755-1925, loader
 tx.py:846-921, docs docs/root/dev/matchlinks.md. Spark plan: two inner
 joins resolve src/dst ids, then the edge table merges keyed on
-(src_id, dst_id). Cartesian links (querybuilder.py:1648-1753) are a
-crossJoin — the reference chunks 100x1000 per txn (tx.py:928-930); Spark's
-partitioned execution makes chunking unnecessary.
+(src_id, dst_id).
 """
 
 from __future__ import annotations
@@ -80,24 +78,3 @@ def cleanup_match_links(
     catalog.edges[edge_key] = kept
     return kept
 
-
-def cartesian_link(
-    catalog: GraphCatalog,
-    rel_label: str,
-    src_label: str,
-    dst_label: str,
-    update_tag: int,
-    src_filter=None,
-    dst_filter=None,
-) -> DataFrame:
-    """Every source x every target gets an edge (querybuilder.py:1648-1753)."""
-    src = catalog.node(src_label)
-    dst = catalog.node(dst_label)
-    if src_filter is not None:
-        src = src.filter(src_filter)
-    if dst_filter is not None:
-        dst = dst.filter(dst_filter)
-    edges = src.select(F.col("id").alias("src_id")).crossJoin(dst.select(F.col("id").alias("dst_id")))
-    key = (src_label, rel_label, dst_label)
-    catalog.edges[key] = merged = merge(catalog.edges.get(key), edges, ["src_id", "dst_id"], update_tag)
-    return merged

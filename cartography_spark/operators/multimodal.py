@@ -17,8 +17,8 @@ The decoders are REAL parsers of real containers:
   reconstruction (None/Sub/Up/Average/Paeth);
 - audio is 16-bit PCM mono **WAV** (RIFF/WAVE with ``fmt `` and ``data``
   chunks, parsed by chunk walk — not fixed offsets);
-- video is a concatenation of BMP frames, demuxed by walking the declared
-  per-frame file sizes.
+- video is a Motion-JPEG stream of concatenated baseline JPEG frames,
+  split at each frame's EOI marker.
 
 No codec library is needed: BMP/WAV are byte-layout formats and PNG's
 DEFLATE comes from stdlib zlib. Formats whose codecs are not in the
@@ -341,21 +341,6 @@ def synthesize_audio_column(docs: DataFrame) -> DataFrame:
     return _synthesize(docs, "audio", encode)
 
 
-def synthesize_video_column(docs: DataFrame) -> DataFrame:
-    """Trivial video container: 6 BMP frames concatenated
-    back-to-back (frame f's pixels = digest rolled by f bytes). The demuxer
-    walks the declared BMP file sizes — a real (if minimal) container walk."""
-
-    def encode(dig: bytes) -> bytes:
-        tile = np.frombuffer(dig, dtype=np.uint8)
-        return b"".join(
-            bmp_encode(np.tile(np.roll(tile, fno), IMG_WIDTH * 3 * 4 // 16).reshape(4, IMG_WIDTH, 3))
-            for fno in range(6)
-        )
-
-    return _synthesize(docs, "video", encode)
-
-
 def synthesize_png_column(docs: DataFrame) -> DataFrame:
     """Real compressed PNG per doc: 8 x H grayscale (H = 4*(1 + b0 % 4)),
     pixel bytes = the md5 digest tiled, scanline filter = row % 5 so every
@@ -453,48 +438,6 @@ def extract_audio_features(audio: DataFrame) -> DataFrame:
         "mean_amplitude double, rms double"
     )
     return _map_rows(audio, ["doc_id", "audio"], features, schema)
-
-
-def resize_images(images: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Real nearest-neighbor BMP resize: decode pixels, index-sample rows and
-    columns, re-encode. Every other column passes through; invalid payloads
-    become NULL."""
-    at = images.columns.index("image")
-
-    def resize(*row):
-        px, blob = bmp_decode(row[at]), None
-        if px is not None:
-            h, w, _ = px.shape
-            yi = (np.arange(target_h) * h) // target_h
-            xi = (np.arange(target_w) * w) // target_w
-            blob = bmp_encode(px[yi][:, xi])
-        yield row[:at] + (blob,) + row[at + 1 :]
-
-    return _map_rows(images, images.columns, resize, images.schema)
-
-
-def frame_sample(videos: DataFrame, every_n: int) -> DataFrame:
-    """Demux a concatenated-BMP video by walking each frame's declared file
-    size, keep every ``every_n``-th frame, emit one row per sampled frame
-    with the frame's decoded mean pixel."""
-
-    def sample(doc_id, payload):
-        payload = payload or b""
-        pos = fno = 0
-        while pos + 6 <= len(payload) and payload[pos : pos + 2] == b"BM":
-            (fsize,) = struct.unpack("<I", payload[pos + 2 : pos + 6])
-            if fsize < 54 or pos + fsize > len(payload):
-                break
-            if fno % every_n == 0:
-                frame = payload[pos : pos + fsize]
-                px = bmp_decode(frame)
-                mean = float(px.sum(dtype=np.int64) / px.size) if px is not None else 0.0
-                yield doc_id, fno, mean, frame
-            pos += fsize
-            fno += 1
-
-    schema = "doc_id long, frame_no int, mean_pixel double, frame binary"
-    return _map_rows(videos, ["doc_id", "video"], sample, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -28,12 +28,6 @@ def hash_bucket(col: Column, n_buckets: int = 100, salt: str = "split") -> Colum
     return portable_hash32(col, salt=salt) % n_buckets
 
 
-def hash_sample(df: DataFrame, fraction: float) -> DataFrame:
-    """Deterministic ~fraction sample: keep rows whose hash bucket falls
-    below fraction*1000 (0.1% resolution)."""
-    return df.filter(hash_bucket(F.col("doc_id"), 1000, "sample") < int(fraction * 1000))
-
-
 def assign_splits(df: DataFrame) -> DataFrame:
     """Attach a ``split`` column (train/val/test 80/10/10): bucket ranges
     over a 100-bucket hash."""
@@ -91,7 +85,7 @@ def dsir_importance(docs: DataFrame, target_pred: Column, top_k: int = 100) -> D
     """
     from cartography_spark.operators.textprep import _tokens, _word_ngrams
 
-    base = docs.select(F.col("doc_id"), target_pred.alias("__t"), _tokens("text").alias("__toks"))
+    base = docs.select(F.col("doc_id"), target_pred.alias("__t"), _tokens().alias("__toks"))
     # small single-file parquet scans as ONE split — spread the compact
     # pre-explode rows so the explode work parallelizes (and the exchange
     # lets both passes below reuse the tokenize)
@@ -199,20 +193,6 @@ def _poisson_from_hex_slice(hx: Column) -> Column:
     for k in range(1, len(_POISSON_HEX_CUTS)):
         w = w.when(hx < _POISSON_HEX_CUTS[k], k)
     return w.otherwise(len(_POISSON_HEX_CUTS))
-
-
-def poisson_replicate_weight(col: Column, b: int) -> Column:
-    """Deterministic Poisson(1)-ish bootstrap weight for replicate ``b``:
-    inverse-CDF (truncated at 4) on a 32-bit slice of the salted md5 of
-    the row id. One md5 is 128 bits = FOUR independent 32-bit uniforms,
-    so replicates b = 4g..4g+3 share the hash of salt group g (slicing
-    hex chars 8*slot+1..8*slot+8) — a 4x cut in the per-row hash count,
-    which is the dominant cost of the one-pass bootstrap. Pure function
-    of (id, b): reproducible across runs, engines, and repartitions,
-    which seeded ``df.sample`` is not."""
-    group, slot = divmod(b, 4)
-    h = F.md5(F.concat(F.lit(f"boot{group}:"), col.cast("string")))
-    return _poisson_from_hex_slice(F.substring(h, 1 + 8 * slot, 8))
 
 
 def poisson_bootstrap_ci(df: DataFrame, value: Column, id_col: Column) -> DataFrame:

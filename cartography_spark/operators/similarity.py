@@ -201,7 +201,7 @@ def sparse_token_cosine_pairs(docs: DataFrame, min_cos: float = 0.5, k: int = 20
 
     sc = docs.sparkSession.sparkContext
     grams = docs.repartition(sc.defaultParallelism).select(
-        F.col("doc_id").alias("doc"), F.explode(_word_ngrams(_tokens("text"), 2)).alias("g")
+        F.col("doc_id").alias("doc"), F.explode(_word_ngrams(_tokens(), 2)).alias("g")
     )
     tf = grams.groupBy("doc", "g").agg(F.count("*").cast("bigint").alias("tf"))
     # tf feeds FOUR consumers (norms, the df filter, and both self-join
@@ -573,7 +573,7 @@ def hybrid_rrf_topk(docs: DataFrame, embeddings: DataFrame, query_vec: list[floa
     # (ONE document by contract) and scored scan-locally against every doc
     from collections import Counter
 
-    grams_arr = _word_ngrams(_tokens("text"), 2)
+    grams_arr = _word_ngrams(_tokens(), 2)
     qrow = (
         docs.filter(F.col("doc_id") == QUERY_DOC_ID).select(grams_arr.alias("__g")).first()
     )

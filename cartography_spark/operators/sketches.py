@@ -362,17 +362,19 @@ def quantiles_from_sample(sample: DataFrame, q_pcts: tuple[int, ...]) -> DataFra
     )
 
 
-def weighted_bottomk_sample(
-    df: DataFrame, id_col, weight_col, k: int, salt: str
+def weighted_sample_keys(
+    df: DataFrame, id_col, weight_col, salt: str, extra_cols: tuple[str, ...]
 ) -> DataFrame:
-    """Efraimidis-Spirakis weighted sample without replacement as a
-    mergeable bottom-k sketch: each row draws u = (h32(id:salt)+1)/2^32
-    in (0,1] and keys itself with -ln(u)/w; the k SMALLEST keys are a
-    weight-proportional sample (P(row among first picks) ~ w_i / sum w).
-    This is THE distributed weighted-sampling technique: keys are
-    per-row arithmetic, the sample is one TakeOrdered(k), and the sketch
-    merges exactly like bottomk_sample — union + re-take-k, because a
-    row's key never changes (same associativity as KMV).
+    """Efraimidis-Spirakis keys for a weighted sample without replacement as
+    a mergeable bottom-k sketch: each row draws u = (h32(id:salt)+1)/2^32
+    in (0,1] and keys itself with -ln(u)/w; the k SMALLEST keys,
+    ``.orderBy("key_micros", "h").limit(k)``, are a weight-proportional
+    sample (P(row among first picks) ~ w_i / sum w). Keys are per-row
+    arithmetic, the sample is one TakeOrdered(k), and the sketch merges
+    exactly like bottomk_sample — union + re-take-k, because a row's key
+    never changes (same associativity as KMV). Per-group sketches take
+    their k smallest the same way and re-merge to the direct sample; the
+    merge-equality theorem only holds if every path computes these keys.
 
     Portability: u is a dyadic rational (exact in both engines); the key
     is quantized ONCE to micros with the identical left-associative
@@ -382,36 +384,15 @@ def weighted_bottomk_sample(
     break on the hash, a total order. Rows with w <= 0 are excluded by
     contract (a zero-weight row can never be sampled).
 
-    Returns (key_micros, h, w, id) for the k winners — enough to merge,
-    to audit the weighting, and to join back to the source rows.
+    Returns (key_micros, h, w, *extra_cols): enough to merge, to audit the
+    weighting, and to group or join back to the source rows.
     """
-    return (
-        weighted_sample_keys(df, id_col, weight_col, salt, extra_cols=("id",))
-        .orderBy("key_micros", "h")
-        .limit(k)
-    )
-
-
-def weighted_sample_keys(
-    df: DataFrame, id_col, weight_col, salt: str, extra_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """The per-row key projection behind :func:`weighted_bottomk_sample` —
-    exposed (like :func:`sample_hash`) so callers building PER-GROUP
-    sketches use the identical key convention; the merge-equality theorem
-    only holds if every path computes the same keys. ``extra_cols`` pass
-    through for grouping; ``"id"`` requests the stringified id itself.
-    Rows with weight <= 0 are excluded by contract."""
     h_hex = F.md5(F.concat(id_col.cast("string"), F.lit(":" + salt)))
     h32 = F.conv(F.substring(h_hex, 1, 8), 16, 10).cast("long")
     u = (h32 + 1).cast("double") / F.lit(4294967296.0)
     key = F.round(F.lit(1_000_000.0) * -F.log(u) / weight_col.cast("double")).cast(
         "bigint"
     )
-    cols = [
-        key.alias("key_micros"),
-        h_hex.alias("h"),
-        weight_col.cast("long").alias("w"),
-    ]
-    for c in extra_cols:
-        cols.append(id_col.cast("string").alias("id") if c == "id" else F.col(c))
-    return df.filter(weight_col > 0).select(*cols)
+    return df.filter(weight_col > 0).select(
+        key.alias("key_micros"), h_hex.alias("h"), weight_col.cast("long").alias("w"), *extra_cols
+    )

@@ -1,20 +1,12 @@
 """Skew mitigation: salting helpers for hot keys.
 
 AQE's skew-join splitting (enabled in session.py) handles most skew at
-runtime for sort-merge joins, but two shapes still need explicit salting at
-100 TB:
-
-- aggregations where one key dominates (a single reducer receives the hot
-  key's entire partition): two-phase salted aggregation spreads the partial
-  work over ``salt_buckets`` reducers, then combines the partials — valid
-  for any algebraic aggregate (sum/count/min/max).
-- joins of a skewed fact against a small-but-not-broadcastable dim:
-  salt the fact side, EXPLODE the dim side across all salt values, join on
-  (key, salt). Row multiplication is |dim| x salt_buckets — bounded and
-  chosen by the caller.
-
-Both are plan-level rewrites: no RDDs, no custom partitioners, fully
-codegen'd.
+runtime for sort-merge joins, but an aggregation where one key dominates (a
+single reducer receives the hot key's entire partition) still needs explicit
+salting at 100 TB: two-phase salted aggregation spreads the partial work
+over ``salt_buckets`` reducers, then combines the partials — valid for any
+algebraic aggregate (sum/count/min/max). It is a plan-level rewrite: no
+RDDs, no custom partitioners, fully codegen'd.
 """
 
 from __future__ import annotations
@@ -22,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-SALT_BUCKETS = 4
 N_BUCKETS = 32
 
 
@@ -62,17 +53,6 @@ def salted_agg(
         return F.sum(col).alias(name)
 
     return phase1.groupBy(*keys).agg(*[combiner(n, e) for n, e in aggs.items()])
-
-
-def salted_join(fact: DataFrame, dim: DataFrame, on: list[str]) -> DataFrame:
-    """Skew-safe equi-join: the (possibly skewed) fact side gets a salt;
-    the dim side is replicated across every salt value; the join runs on
-    keys + salt so a hot key's rows spread over ``SALT_BUCKETS`` tasks."""
-    f = with_salt(fact, SALT_BUCKETS)
-    salts = F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)).cast("array<int>")
-    d = dim.withColumn("__salt", F.explode(salts))
-    out = f.join(d, [*on, "__salt"], "inner")
-    return out.drop("__salt")
 
 
 def skew_audit(df: DataFrame, key: Column) -> DataFrame:

@@ -28,8 +28,9 @@ CONTAMINATION_N = 5
 CDC_WINDOW = 8
 
 
-def _tokens(text_col: str) -> Column:
-    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+def _tokens() -> Column:
+    """The whitespace tokens of the lower-cased ``text`` column."""
+    return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
 
 def _word_ngrams(toks: Column, n: int) -> Column:
@@ -46,7 +47,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     taken by the single most frequent token, duplicate word-bigram
     fraction, and the distinct-token ratio. Cheap per-row signals used to
     drop degenerate (looping / boilerplate) documents before training."""
-    toks = _tokens("text")
+    toks = _tokens()
     n_tok = F.greatest(F.size(toks), F.lit(1))
     # occurrences of each distinct token, all computed inside the row
     per_tok_counts = F.transform(
@@ -128,7 +129,7 @@ def chunk_documents(docs: DataFrame) -> DataFrame:
     every 15 tokens, each up to 20 long — the
     standard context-window chunking for retrieval / training). Emits
     (doc_id, chunk_id, n_chunk_tokens, chunk_md5)."""
-    toks = _tokens("text")
+    toks = _tokens()
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(15))
     exploded = docs.select(
         F.col("doc_id"), toks.alias("__toks"), F.posexplode(starts).alias("chunk_id", "__start")
@@ -158,7 +159,7 @@ def length_bucket_batches(docs: DataFrame) -> DataFrame:
     new docs arrive — the property a reproducible training pipeline
     needs).
     """
-    n = F.size(_tokens("text"))
+    n = F.size(_tokens())
     # next power of two >= max(n, min_bucket): 2^ceil(log2(x)); exact for
     # x a power of two (log2 of a power of two is exact in IEEE double)
     x = F.greatest(n, F.lit(16))
@@ -193,7 +194,7 @@ def pack_sequences(docs: DataFrame, budget: int = 256) -> DataFrame:
     the partition key; deterministic across engines and re-runs."""
     from pyspark.sql import Window
 
-    n_tok = F.size(_tokens("text"))
+    n_tok = F.size(_tokens())
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -218,11 +219,11 @@ def contamination_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     def grams(df: DataFrame) -> DataFrame:
         return df.select(
             F.col("doc_id"),
-            F.explode(F.array_distinct(_word_ngrams(_tokens("text"), CONTAMINATION_N))).alias("g"),
+            F.explode(F.array_distinct(_word_ngrams(_tokens(), CONTAMINATION_N))).alias("g"),
         )
 
     bench_grams = benchmark.select(
-        F.explode(F.array_distinct(_word_ngrams(_tokens("text"), CONTAMINATION_N))).alias("g")
+        F.explode(F.array_distinct(_word_ngrams(_tokens(), CONTAMINATION_N))).alias("g")
     ).distinct()
     doc_grams = grams(corpus)
     sizes = doc_grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))

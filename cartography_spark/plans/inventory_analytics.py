@@ -1979,7 +1979,7 @@ def q_stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Efraimidis-Spirakis weighted sample without replacement as a "
     "mergeable bottom-k sketch "
-    "(operators/sketches.py:weighted_bottomk_sample) — THE distributed "
+    "(operators/sketches.py:weighted_sample_keys) — THE distributed "
     "weighted-sampling technique a training-mixture pipeline runs at "
     "100 TB: every row keys itself -ln(u)/w from a portable md5 draw, "
     "the k=512 smallest keys are a weight-proportional sample, and the "

@@ -22,11 +22,10 @@ from pyspark.sql import functions as F
 from cartography_spark.operators import dedup as dd
 from cartography_spark.operators.cleanup import cleanup_rels
 from cartography_spark.operators.matchlink import cleanup_match_links, match_link
+from cartography_spark.plans.inventory_lifecycle import T1, T2
 from cartography_spark.plans.registry import query
 from cartography_spark.schema import PropertyRef, TargetNodeMatcher
 from cartography_spark.sources.parquet import load_table
-
-T1, T2 = 100, 200
 
 
 @query(

@@ -1250,14 +1250,6 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ts.bigram_surprisal(_docs(spark, sf_dir))
 
 
-def _sqd16(a: str, b: str, m: str) -> str:
-    return (
-        f"list_sum([({a}[{m} * 16 + i] - {b}[{m} * 16 + i])"
-        f" * ({a}[{m} * 16 + i] - {b}[{m} * 16 + i])"
-        " FOR i IN generate_series(1, 16)])"
-    )
-
-
 @query(
     "similarity_ivf_pq",
     oracle=f"""
@@ -1283,7 +1275,10 @@ def _sqd16(a: str, b: str, m: str) -> str:
       SELECT vec_id, qvec FROM q WHERE vec_id = 0
     ),
     sub AS (
-      SELECT v.vec_id, mc.m, c.j, {_sqd16('v.qvec', 'c.cvec', 'mc.m')} AS d
+      SELECT v.vec_id, mc.m, c.j,
+             list_sum([(v.qvec[mc.m * 16 + i] - c.cvec[mc.m * 16 + i])
+                       * (v.qvec[mc.m * 16 + i] - c.cvec[mc.m * 16 + i])
+                       FOR i IN generate_series(1, 16)]) AS d
       FROM cand v
       CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS m) mc
       CROSS JOIN cb c

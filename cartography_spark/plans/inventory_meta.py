@@ -22,9 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cartography_spark.plans.inventory_lifecycle import T1, T2
 from cartography_spark.plans.registry import query
-
-T1, T2 = 100, 200
 
 # ---------------------------------------------------------------------------
 # GraphJob JSON round-trip

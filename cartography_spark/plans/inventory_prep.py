@@ -835,17 +835,6 @@ def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_importance(_docs(spark, sf_dir), F.col("lang") == "de")
 
 
-def _cosab(a: str, b: str) -> str:
-    return (
-        f"list_aggregate(list_transform(generate_series(1, 64), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), 'sum') "
-        f"/ (sqrt(list_aggregate(list_transform(generate_series(1, 64), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE)), 'sum')) "
-        f"* sqrt(list_aggregate(list_transform(generate_series(1, 64), "
-        f"i -> CAST({b}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), 'sum')))"
-    )
-
-
 @query(
     "semdedup_within_cluster",
     oracle="""
@@ -867,7 +856,14 @@ def _cosab(a: str, b: str) -> str:
       FROM assign x JOIN assign y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
       JOIN base a ON a.vec_id = x.vec_id
       JOIN base b ON b.vec_id = y.vec_id
-      WHERE round({_cosab('a.embedding', 'b.embedding')}, 4) >= 0.9
+      WHERE round(
+        list_aggregate(list_transform(generate_series(1, 64),
+          i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), 'sum')
+        / (sqrt(list_aggregate(list_transform(generate_series(1, 64),
+             i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)), 'sum'))
+           * sqrt(list_aggregate(list_transform(generate_series(1, 64),
+             i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)), 'sum'))),
+        4) >= 0.9
     )
     SELECT s.vec_id, s.cluster,
            coalesce(p.idb IS NOT NULL, false) AS pruned

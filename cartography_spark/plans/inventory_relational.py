@@ -840,22 +840,15 @@ def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY date_trunc('hour', ts), event_type
     """,
-    doc="Tumbling 1-hour window aggregation over events via F.window — same "
-    "plan Structured Streaming uses (streaming/ has the readStream variant).",
+    doc="Tumbling 1-hour window aggregation over events via F.window — the "
+    "streaming operator (streaming/events.py:tumbling_counts) run on the batch "
+    "table, where Spark drops its watermark.",
     tags=("window", "streaming"),
 )
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = T(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    from cartography_spark.streaming.events import tumbling_counts
+
+    return tumbling_counts(T(spark, sf_dir, "events"))
 
 
 @query(

@@ -23,66 +23,21 @@ from cartography_spark.session import memo, shuffle_partition_count
 WATERMARK = "2 hours"
 SKETCH_WINDOW = "1 hour"
 
-# applicationId -> {source path: bytes on disk}; filled by the probe in
-# read_events_stream, consumed by run_available_now to size the stream's
-# state-store partition count from the input (setup metadata only). Not a
-# session.memo: it accumulates every events path the application probed.
-_SOURCE_BYTES: dict[str, dict[str, int]] = {}
 
-# Source bytes per state-store partition (_stream_state_partitions).
-BYTES_PER_STATE_PARTITION = 64 * 1024 * 1024
+def _stream_state_partitions(spark: SparkSession) -> int:
+    """State-store partition count for a stream start: the session's
+    shuffle partitions, capped at its core parallelism.
 
-
-def _path_bytes(path: str) -> int:
-    import os
-
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
-
-
-def _stream_state_partitions(spark: SparkSession) -> int | None:
-    """Scale-adaptive state-store partition count for a stream start.
-
-    Batch shuffles get AQE coalescing (tiny inputs collapse to a few
-    post-shuffle partitions); streaming state is pinned to
-    ``spark.sql.shuffle.partitions`` at first query start and AQE never
-    touches it, so a small input pays per-micro-batch state-store
-    commit/provider overhead on every one of those partitions. Apply the
-    same rule AQE uses, at start time: ceil(source bytes / advisory
-    partition size), clamped to [1, configured shuffle partitions] — i.e.
-    this can only COALESCE relative to today's behavior, exactly like AQE,
-    and grows with the input until the configured ceiling takes over (at
-    cluster scale the ceiling is the deliberately-sized shuffle partition
-    count). Bytes per partition is ``BYTES_PER_STATE_PARTITION`` (64 MB,
-    AQE's advisory default). Returns None when no source probe was
-    recorded (caller keeps the session default).
-
-    FLOOR (r8 opt, sf1 evidence): the derivation never drops below the
-    session's core parallelism. State-operator COMPUTE scales with rows
-    per partition, not with shuffle bytes the way AQE's advisory sizing
-    assumes — the sf1 rehearsal measured the session-window merge at
-    13.7 s on the byte-derived 1 partition vs 3.4 s on the pinned count
-    (4x), a loss that GROWS with input until the byte rule crosses the
-    ceiling. With the floor the rule still coalesces a small stream's
-    state below a deliberately large configured ceiling (the actual
-    per-micro-batch commit-overhead win on clusters where shuffle
-    partitions >> cores) but never single-tasks the state compute."""
-    sizes = _SOURCE_BYTES.get(spark.sparkContext.applicationId)
-    if not sizes:
-        return None
-    total = sum(sizes.values())
-    ceiling = shuffle_partition_count(spark)
-    floor = min(ceiling, spark.sparkContext.defaultParallelism)
-    return max(floor, min(ceiling, -(-total // BYTES_PER_STATE_PARTITION)))
+    Streaming state is pinned to ``spark.sql.shuffle.partitions`` at first
+    query start and AQE never coalesces it, so every state partition pays
+    per-micro-batch state-store commit overhead, and partitions beyond the
+    cores add that overhead without adding parallelism. Going below the
+    cores costs more than it saves: state-operator compute scales with rows
+    per partition (the sf1 rehearsal measured the session-window merge at
+    13.7 s on one partition vs 3.4 s on the pinned count). The count
+    depends on the session only, not on which inputs the application read
+    before."""
+    return min(shuffle_partition_count(spark), spark.sparkContext.defaultParallelism)
 
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -122,13 +77,13 @@ def _stream_setup(spark: SparkSession, path: str) -> tuple[str, str]:
         # under the driver's SparkFiles root, which goes when the context stops
         stream_path = tempfile.mkdtemp(prefix="events_stream_", dir=SparkFiles.getRootDirectory())
         os.symlink(os.path.abspath(path), os.path.join(stream_path, os.path.basename(path)))
-    _SOURCE_BYTES.setdefault(spark.sparkContext.applicationId, {})[path] = _path_bytes(path)
     return ts_type, stream_path
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:
-    """1-hour tumbling windows with late-data handling via watermark —
-    identical logic to the batch query events_tumbling_window."""
+    """1-hour tumbling windows with late-data handling via watermark. The
+    batch query events_tumbling_window runs it on the events table, where
+    Spark drops the watermark, so the batch result is the stream's oracle."""
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -207,12 +162,11 @@ def run_available_now(stream_df: DataFrame, query_name: str, output_mode: str = 
     spark = stream_df.sparkSession
     # State-store partition count is captured from spark.sql.shuffle.
     # partitions at query start (fresh temp checkpoint each run) and AQE
-    # cannot coalesce it later — derive it from the probed source size
-    # (see _stream_state_partitions) and restore the session value after.
+    # cannot coalesce it later — set it for the stream's lifetime (see
+    # _stream_state_partitions) and restore the session value after.
     derived = _stream_state_partitions(spark)
-    prior = spark.conf.get("spark.sql.shuffle.partitions", None) if derived else None
-    if derived is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(derived))
+    prior = spark.conf.get("spark.sql.shuffle.partitions", None)
+    spark.conf.set("spark.sql.shuffle.partitions", str(derived))
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -223,14 +177,13 @@ def run_available_now(stream_df: DataFrame, query_name: str, output_mode: str = 
         )
         q.awaitTermination()
     finally:
-        if derived is not None:
-            if prior is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", prior)
-            else:
-                # the session had no explicit setting: unset rather than
-                # leaving the (possibly very small) derived count to leak
-                # into every later batch query in the session
-                spark.conf.unset("spark.sql.shuffle.partitions")
+        if prior is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prior)
+        else:
+            # the session had no explicit setting: unset rather than
+            # leaving the derived count to leak into every later batch
+            # query in the session
+            spark.conf.unset("spark.sql.shuffle.partitions")
     return spark.sql(f"SELECT * FROM {query_name}")
 
 

@@ -1,10 +1,15 @@
-"""Every module-level name in ``cartography_spark/`` has a caller.
+"""Every module-level name in ``cartography_spark/`` has a product caller.
 
-A function, class or assignment at module level that no code references is
-dead code. A reference is an ``ast`` node, so a name mentioned only in a
-docstring or comment stays dead: a loaded ``Name``, an ``Attribute`` of that
-name, or an imported alias. ``@query``-registered builders are reached
-through the registry, and dunders through the runtime, so both are skipped.
+A function, class or assignment at module level that no product code
+references is dead code. Product code is the package, the tools, the
+benchmark and the two entry points (``bench.py``, ``__spark_entry__.py``);
+tests check code, they do not keep it alive. A reference is an ``ast``
+node, so a name mentioned only in a docstring or comment stays dead: a
+loaded ``Name``, an ``Attribute`` of that name, or an imported alias.
+References from a definition whose names are all dead do not count, nor a
+definition's references to its own name, so a name reached only from dead
+names is dead too. ``@query``-registered functions are reached through the
+registry, and dunders through the runtime, so both are skipped.
 """
 
 from __future__ import annotations
@@ -15,9 +20,9 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "cartography_spark"
-# where a caller can live: the package, its tests and tools, the benchmark,
-# and the two entry points (bench CLI, driver contract)
-TREES = ("cartography_spark", "tests", "tools", "perfbench", "bench.py", "__spark_entry__.py")
+# where a product caller can live: the package, its tools, the benchmark,
+# and the two entry points
+TREES = ("cartography_spark", "tools", "perfbench", "bench.py", "__spark_entry__.py")
 
 
 def _sources(tree: str) -> list[Path]:
@@ -34,37 +39,62 @@ def _is_query(node: ast.AST) -> bool:
     return False
 
 
-def _defined_names(source: Path) -> list[str]:
-    names = []
-    for node in ast.parse(source.read_text(encoding="utf-8")).body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            if not _is_query(node):
-                names.append(node.name)
-        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
-            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-            for target in targets:
-                names.extend(n.id for n in ast.walk(target) if isinstance(n, ast.Name))
+def _defined(node: ast.stmt) -> list[str]:
+    """The non-dunder names a module-level statement defines."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        names = [] if _is_query(node) else [node.name]
+    elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    else:
+        names = []
     return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
 
 
-def _references(source: Path) -> list[str]:
+def _references(node: ast.AST) -> list[str]:
     refs = []
-    for node in ast.walk(ast.parse(source.read_text(encoding="utf-8"))):
-        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
-            refs.append(node.id)
-        elif isinstance(node, ast.Attribute):
-            refs.append(node.attr)
-        elif isinstance(node, ast.alias):
-            refs.append(node.name.rsplit(".", 1)[-1])
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name) and isinstance(sub.ctx, ast.Load):
+            refs.append(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            refs.append(sub.attr)
+        elif isinstance(sub, ast.alias):
+            refs.append(sub.name.rsplit(".", 1)[-1])
     return refs
 
 
+def dead_names() -> list[str]:
+    # each top-level statement is one unit: the names it defines (none for
+    # imports and bare code, which always run) and the other names it
+    # references, so a recursive function does not keep itself alive
+    units = []
+    for tree in TREES:
+        for source in _sources(tree):
+            path = source.relative_to(ROOT).as_posix()
+            for node in ast.parse(source.read_text(encoding="utf-8")).body:
+                names = _defined(node)
+                units.append((path, names, [r for r in _references(node) if r not in names]))
+    dead: set[tuple[str, str]] = set()
+    while True:
+        # a unit whose names are all dead no longer references anything
+        refs = Counter(
+            ref
+            for path, names, unit_refs in units
+            if not names or any((path, n) not in dead for n in names)
+            for ref in unit_refs
+        )
+        now = {
+            (path, name)
+            for path, names, _ in units
+            if path.startswith("cartography_spark/")
+            for name in names
+            if not refs[name]
+        }
+        if now == dead:
+            return sorted(f"{path}:{name}" for path, name in dead)
+        dead = now
+
+
 def test_every_module_level_name_is_used():
-    refs = Counter(name for tree in TREES for source in _sources(tree) for name in _references(source))
-    dead = sorted(
-        f"{source.relative_to(ROOT)}:{name}"
-        for source in sorted(PACKAGE.rglob("*.py"))
-        for name in _defined_names(source)
-        if not refs[name]
-    )
-    assert not dead, f"module-level names nothing references: {dead}"
+    dead = dead_names()
+    assert not dead, f"module-level names no product code references: {dead}"

@@ -61,27 +61,6 @@ def test_cluster_min_label_no_pairs(spark):
     assert got == {(1, 1, True), (2, 2, True)}
 
 
-def test_jsonl_roundtrip_with_split_partitions(spark, tmp_path):
-    """Export a split corpus as partitioned JSONL and read one split back
-    with an explicit schema (partition pruning on the split column)."""
-    from cartography_spark.operators.sampling import assign_splits
-    from cartography_spark.sources.jsonl import read_jsonl, write_jsonl
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(200)], "doc_id long, text string"
-    )
-    out = str(tmp_path / "corpus")
-    write_jsonl(assign_splits(docs), out)
-    back = read_jsonl(spark, out, schema="doc_id long, text string, split string")
-    assert back.count() == 200
-    train = read_jsonl(spark, f"{out}/split=train", schema="doc_id long, text string")
-    n_train = assign_splits(docs).filter(F.col("split") == "train").count()
-    assert train.count() == n_train
-    # missing keys become typed nulls with an explicit schema
-    extra = read_jsonl(spark, out, schema="doc_id long, missing_col string, split string")
-    assert extra.filter(F.col("missing_col").isNull()).count() == 200
-
-
 def test_matcher_one_to_many_null_list(spark):
     """one_to_many matcher with a null list column drops the row (matches
     OPTIONAL MATCH + null-filter semantics), it must not throw."""

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from cartography_spark.catalog import GraphCatalog
 from cartography_spark.operators.cleanup import cleanup_cascade, cleanup_nodes, cleanup_rels
 from cartography_spark.operators.closure import transitive_closure
-from cartography_spark.operators.matchlink import cartesian_link, cleanup_match_links, match_link
+from cartography_spark.operators.matchlink import cleanup_match_links, match_link
 from cartography_spark.operators.upsert import load, upsert_nodes
 from cartography_spark.plans.graph_fixture import (
     SUPPLIER_SCHEMA,
@@ -20,6 +20,16 @@ from cartography_spark.schema import LinkDirection, NodeSchema, PropertyRef, Rel
 from cartography_spark.sources.parquet import load_table
 
 T1, T2 = 100, 200
+
+
+def check_rels(cat, src_label, src_attr, dst_label, dst_attr, rel) -> set[tuple]:
+    """(src_attr, dst_attr) of every ``rel`` edge — the reference's
+    integration-test assert (tests/integration/util.py:11-80)."""
+    e = cat.edge(src_label, rel, dst_label).select("src_id", "dst_id")
+    s = cat.node(src_label).select(F.col("id").alias("src_id"), F.col(src_attr).alias("_src_attr"))
+    d = cat.node(dst_label).select(F.col("id").alias("dst_id"), F.col(dst_attr).alias("_dst_attr"))
+    joined = e.join(s, "src_id").join(d, "dst_id").select("_src_attr", "_dst_attr")
+    return {tuple(r) for r in joined.collect()}
 
 
 def _supplier_batch(spark, sf_dir):
@@ -102,7 +112,7 @@ def test_extra_labels_and_check_helpers(spark, sf_dir):
     for r in labeled:
         assert r.hb == (r.acctbal > 0)
     # check_rels helper: supplier LOCATED_IN nation pairs match raw data
-    pairs = cat.check_rels("Supplier", "s_suppkey", "Nation", "n_nationkey", "LOCATED_IN")
+    pairs = check_rels(cat, "Supplier", "s_suppkey", "Nation", "n_nationkey", "LOCATED_IN")
     raw = {
         (r.s_suppkey, r.s_nationkey)
         for r in load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey").collect()
@@ -146,12 +156,12 @@ def test_matcher_modes(spark, sf_dir):
         "pid string, uname string, frag string, supp_list array<bigint>",
     )
     load(cat, schema, rows, T1)
-    ci = cat.check_rels("Probe", "id", "Customer", "name", "CI_MATCH")
+    ci = check_rels(cat, "Probe", "id", "Customer", "name", "CI_MATCH")
     assert ci == {("p1", "Customer#000000007")}
-    fuzzy = cat.check_rels("Probe", "id", "Nation", "name", "FUZZY_MATCH")
+    fuzzy = check_rels(cat, "Probe", "id", "Nation", "name", "FUZZY_MATCH")
     # NATION_2 plus NATION_2x (contains 'nation_2' case-insensitively)
     assert ("p1", "NATION_2") in fuzzy and all(n.startswith("NATION_2") for _, n in fuzzy)
-    lst = cat.check_rels("Probe", "id", "Supplier", "s_suppkey", "LIST_MATCH")
+    lst = check_rels(cat, "Probe", "id", "Supplier", "s_suppkey", "LIST_MATCH")
     assert lst == {("p1", 1), ("p1", 2), ("p1", 3)}
 
 
@@ -211,15 +221,7 @@ def test_matchlink_honours_matcher_flags(spark):
         dst_matcher=TargetNodeMatcher({"number": PropertyRef("ports", one_to_many=True)}),
         update_tag=T1,
     )
-    assert cat.check_rels("Host", "id", "Port", "id", "EXPOSES") == {("h1", "p2")}
-
-
-def test_cartesian_link(spark, sf_dir):
-    cat = build_catalog(spark, sf_dir, T1)
-    cartesian_link(cat, "SEES", "Region", "Nation", T1)
-    n_regions = cat.node("Region").count()
-    n_nations = cat.node("Nation").count()
-    assert cat.edge("Region", "SEES", "Nation").count() == n_regions * n_nations
+    assert check_rels(cat, "Host", "id", "Port", "id", "EXPOSES") == {("h1", "p2")}
 
 
 def test_transitive_closure_ring(spark):

@@ -160,7 +160,7 @@ def test_fld_exact_for_negatives(spark):
     from cartography_spark.operators.linear import _fld
 
     df = spark.createDataFrame([(-7,), (-8,), (7,), (0,)], "a long")
-    got = [int(r.f) for r in df.select(_fld(F.col("a"), 4).alias("f")).collect()]
+    got = [int(r.f) for r in df.select(_fld(F.col("a")).alias("f")).collect()]
     assert got == [-2, -2, 1, 0]  # true floor, not truncation
 
 
@@ -432,10 +432,7 @@ def test_poisson_bootstrap_ci_statistical_sanity(spark):
     """The one-pass bootstrap CI brackets the true mean on a synthetic
     population, the point mean is exact, and replicate weights follow
     the truncated-Poisson(1) distribution within tolerance."""
-    from cartography_spark.operators.sampling import (
-        poisson_bootstrap_ci,
-        poisson_replicate_weight,
-    )
+    from cartography_spark.operators.sampling import _poisson_from_hex_slice, poisson_bootstrap_ci
 
     n = 4000
     df = spark.createDataFrame(
@@ -448,8 +445,10 @@ def test_poisson_bootstrap_ci_statistical_sanity(spark):
     assert out["ci_lo"] < true_mean < out["ci_hi"]
     # CI width ~ 2*1.96*sigma/sqrt(n): sigma ~ 288 for uniform(0,1000)
     assert 0 < out["ci_hi"] - out["ci_lo"] < 60
-    # weight distribution: mean weight ~ 1, P(w=0) ~ e^-1
-    wdf = df.select(poisson_replicate_weight(F.col("rid"), 0).alias("w"))
+    # replicate 0's weights, drawn as the bootstrap draws them (first hex
+    # slice of md5("boot0:" + id)): mean weight ~ 1, P(w=0) ~ e^-1
+    h = F.md5(F.concat(F.lit("boot0:"), F.col("rid")))
+    wdf = df.select(_poisson_from_hex_slice(F.substring(h, 1, 8)).alias("w"))
     stats = wdf.agg(
         F.avg("w").alias("mw"), F.avg((F.col("w") == 0).cast("int")).alias("p0")
     ).collect()[0]

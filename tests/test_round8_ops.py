@@ -102,20 +102,19 @@ def test_mann_whitney_degenerate_single_value_null_z(spark):
 
 
 def test_weighted_bottomk_merge_and_weight_bias(spark):
-    from cartography_spark.operators.sketches import (
-        weighted_bottomk_sample,
-        weighted_sample_keys,
-    )
+    from pyspark.sql import Window
+
+    from cartography_spark.operators.sketches import weighted_sample_keys
 
     # 200 light rows (w=1) + 200 heavy rows (w=100): the heavy class must
-    # dominate a k=40 ES-sample; merged-by-class == direct exactly
+    # dominate a k=40 ES-sample; merged-by-class == direct exactly (the
+    # two paths of sampling_weighted_bottomk)
     rows = [(i, "light", 1) for i in range(200)] + [
         (1000 + i, "heavy", 100) for i in range(200)
     ]
     df = spark.createDataFrame(rows, "id long, cls string, w long")
-    direct = weighted_bottomk_sample(df, F.col("id"), F.col("w"), 40, "t8")
     keyed = weighted_sample_keys(df, F.col("id"), F.col("w"), "t8", extra_cols=("cls",))
-    from pyspark.sql import Window
+    direct = keyed.orderBy("key_micros", "h").limit(40)
 
     per = (
         keyed.withColumn(
@@ -134,13 +133,14 @@ def test_weighted_bottomk_merge_and_weight_bias(spark):
 
 
 def test_weighted_bottomk_zero_weight_never_sampled(spark):
-    from cartography_spark.operators.sketches import weighted_bottomk_sample
+    from cartography_spark.operators.sketches import weighted_sample_keys
 
     df = spark.createDataFrame(
         [(1, 0), (2, -5), (3, 7)], "id long, w long"
     )
-    got = weighted_bottomk_sample(df, F.col("id"), F.col("w"), 10, "t8").collect()
-    assert [r.id for r in got] == ["3"]
+    keyed = weighted_sample_keys(df, F.col("id"), F.col("w"), "t8", extra_cols=("id",))
+    got = keyed.orderBy("key_micros", "h").limit(10).collect()
+    assert [r.id for r in got] == [3]
 
 
 def test_kendall_tau_b_hand_computed(spark):

@@ -48,31 +48,6 @@ def test_stream_dedupe_drops_replays(spark, sf_dir, tmp_path):
     assert result.count() == n_unique
 
 
-def test_stream_upsert_into_catalog(spark, sf_dir):
-    """readStream -> foreachBatch -> the real upsert: after the stream
-    drains, the catalog holds one EventUser node per distinct user with
-    engine lifecycle columns."""
-    from pyspark.sql import functions as F
-
-    from cartography_spark.catalog import GraphCatalog
-    from cartography_spark.schema import NodeSchema, PropertyRef
-    from cartography_spark.sources.parquet import load_table
-    from cartography_spark.streaming.ingest import run_stream_upsert
-
-    schema = NodeSchema(
-        label="EventUser",
-        properties={"id": PropertyRef("user_id")},
-        scoped_cleanup=False,
-    )
-    cat = GraphCatalog(spark)
-    stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    run_stream_upsert(cat, schema, stream)
-    node = cat.node("EventUser")
-    n_expected = load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-    assert node.count() == n_expected
-    assert {"id", "firstseen", "lastupdated"} <= set(node.columns)
-
-
 def test_stateful_totals_match_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -200,39 +175,6 @@ def test_streaming_countmin_cells_equal_batch(spark, sf_dir):
     }
 
 
-def test_stream_lsh_dedup_matches_batch(spark, sf_dir, tmp_path):
-    """Streaming near-dup detection == the one-shot batch delta run: every
-    pair is discovered exactly once, when its later member arrives."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from cartography_spark.operators.dedup import lsh_delta_pairs
-    from cartography_spark.sources.parquet import load_table
-    from cartography_spark.streaming.ingest import run_stream_lsh_dedup
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.filter(F.col("doc_id") % 3 == 0)
-    arriving = docs.filter(F.col("doc_id") % 3 != 0)
-
-    d = tmp_path / "docs_stream"
-    d.mkdir()
-    # two files -> two micro-batches with maxFilesPerTrigger=1
-    arriving.filter(F.col("doc_id") % 3 == 1).coalesce(1).write.parquet(str(d / "p1"))
-    arriving.filter(F.col("doc_id") % 3 == 2).coalesce(1).write.parquet(str(d / "p2"))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(d))
-    )
-    pairs, merged = run_stream_lsh_dedup(base, stream)
-    got = {(r.a, r.b) for r in pairs.collect()}
-    want = {(r.a, r.b) for r in lsh_delta_pairs(base, arriving).collect()}
-    assert got == want and len(got) > 0
-    assert merged.count() == docs.count()
-
-
 def test_streaming_dedup_watermark_query_matches_batch(spark, sf_dir):
     """The registry's self-union at-least-once dedup: doubled delivery
     collapses back to the exact batch per-type aggregate."""
@@ -317,37 +259,59 @@ def test_value_count_stream_equals_batch(spark, sf_dir):
     )
 
 
-def test_stream_state_partitions_derived_and_restored(spark, sf_dir, monkeypatch):
-    """The state-store partition count is derived from the probed source
-    size (AQE-style coalesce: ceil(bytes/bpp) clamped to the configured
-    shuffle-partition ceiling), applied only for the stream's lifetime,
-    and never changes what the stream computes."""
+def test_stream_state_partitions_derived_and_restored(spark, sf_dir):
+    """The state-store partition count is the session's shuffle partitions
+    capped at its cores, applied only for the stream's lifetime, and never
+    changes what the stream computes."""
     from cartography_spark.session import shuffle_partition_count
     from cartography_spark.streaming import events as ev
 
-    stream = ev.read_events_stream(spark, f"{sf_dir}/events.parquet")
-    sizes = ev._SOURCE_BYTES.get(spark.sparkContext.applicationId)
-    assert sizes and all(v > 0 for v in sizes.values())
-
-    ceiling = shuffle_partition_count(spark)
-    floor = min(ceiling, spark.sparkContext.defaultParallelism)
-    total = sum(sizes.values())
-    derived = ev._stream_state_partitions(spark)
-    assert derived == max(floor, min(ceiling, -(-total // (64 * 1024 * 1024))))
-    # coalesce-only, like AQE — but never below the core parallelism
-    # (r8 sf1 evidence: state COMPUTE scales with rows per partition; a
-    # byte-derived single partition 4x'd the session-window merge)
-    assert floor <= derived <= ceiling
-
-    # the bytes-per-partition constant is honoured (tiny bpp -> ceiling clamp)
-    with monkeypatch.context() as mp:
-        mp.setattr(ev, "BYTES_PER_STATE_PARTITION", 1)
-        assert ev._stream_state_partitions(spark) == ceiling
+    cores = spark.sparkContext.defaultParallelism
+    assert ev._stream_state_partitions(spark) == min(shuffle_partition_count(spark), cores)
 
     # run_available_now applies the derived value only while the stream runs
+    stream = ev.read_events_stream(spark, f"{sf_dir}/events.parquet")
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     result = run_available_now(tumbling_counts(stream), "state_part_test")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prior
     got = {tuple(r) for r in result.collect()}
     expect = {tuple(r) for r in q_events_tumbling(spark, sf_dir).collect()}
     assert got == expect
+
+
+def test_stream_state_partitions_ignore_other_probed_paths(spark, sf_dir, tmp_path, monkeypatch):
+    """A stream's state operator gets the same partition count before and
+    after the application probes another events path: the count depends on
+    the session, not on which inputs were read before."""
+    import os
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from cartography_spark.streaming import events as ev
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+
+    def state_partitions(name: str) -> set[int]:
+        stream = ev.read_events_stream(spark, f"{sf_dir}/events.parquet")
+        run_available_now(tumbling_counts(stream), name).collect()
+        return {
+            op["numShufflePartitions"]
+            for progress in started[-1].recentProgress
+            for op in progress["stateOperators"]
+        }
+
+    before = state_partitions("state_part_before")
+    other = tmp_path / "more_events"
+    other.mkdir()
+    for name in ("a.parquet", "b.parquet", "c.parquet"):
+        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), other / name)
+    ev.read_events_stream(spark, str(other))
+    after = state_partitions("state_part_after")
+    assert before == after == {ev._stream_state_partitions(spark)}
